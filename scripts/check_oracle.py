@@ -15,6 +15,11 @@ for p in glob.glob(os.path.join(sf, "*.parquet")):
 
 oracles = json.load(open(os.path.join(out, "oracle_sql.json")))
 ok = fail = 0
+# a query that threw in Verify leaves no output directory: name it
+for name in sorted(oracles):
+    if not os.path.isdir(os.path.join(out, name)):
+        print(f"{name}: FAIL  no output")
+        fail += 1
 for name in sorted(os.listdir(out)):
     d = os.path.join(out, name)
     if not os.path.isdir(d):

@@ -172,8 +172,7 @@ object Queries2 {
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
 
   /** Min-label propagation over the near-dup graph; oracle = recursive
-    * CTE transitive closure in DuckDB. This is the exact kernel the
-    * canonicalization stage runs (SURVEY.md §7.2 step 9). */
+    * CTE transitive closure in DuckDB. */
   private def q12(s: SparkSession, dir: String): DataFrame =
     Components.connectedComponents(nearDupEdges(s, dir))
       .select(col("id"), col("component")).orderBy("id")

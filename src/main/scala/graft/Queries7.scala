@@ -406,11 +406,9 @@ object Queries7 {
     * tokens collapse in the set), the truncated `big` links to
     * `big data` at JW 0.8542 — the gate pins those resolutions.
     *
-    * Canonicalization: the link graph is bipartite stars (one edge
-    * per mention node), so a component's canonical subject —
-    * lexicographic min over its node strings — is 'e:<qid>' when
-    * linked ('e:' < 'm:') and the mention node itself when NIL,
-    * exactly Triples.materialize's min(node) over stringComponents. */
+    * Canonicalization: the subject is 'e:<qid>' when linked and
+    * 'm:<tag>:<ltext>' when NIL, per row — the same column expression
+    * as Triples.materialize. */
   private def o52: String =
     s"""WITH $fullDecodeCte,
        |men AS (

@@ -4,9 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Connected components by iterative hash-partitioned min-label
-  * propagation over a DataFrame edge list (SURVEY.md §4 custom piece 3;
-  * the canonicalization stage the north rule adds on top of the
-  * reference's per-string vote dictionaries, post_process.py:294-313).
+  * propagation over a DataFrame edge list (SURVEY.md §4 custom piece 3),
+  * used to cluster the near-duplicate document graph (q12, q53).
+  * Entity canonicalization needs no graph: the linker's entity id is a
+  * function of the mention key, so [[graft.triples.Triples]] states the
+  * canonical subject as a column expression.
   *
   * Algorithm (public; the classic Pregel-style min propagation):
   * every vertex starts labeled with its own id; each round every vertex
@@ -19,24 +21,15 @@ import org.apache.spark.sql.functions._
   *    (100-round lineage would OOM the driver at scale);
   *  - convergence check piggybacks on the aggregation (one `count`
   *    of changed labels), not a collect of labels.
-  *
-  * Entity-canonicalization graphs are near-star-shaped (mentions ↔ KB
-  * ids), so diameter — and round count — is small (≤ ~4) regardless of
-  * corpus size.
   */
 object Components {
 
   /** @param edges two LongType columns `src`, `dst` (undirected pairs)
-    * @param exactRounds when the caller KNOWS the graph diameter
-    *        (e.g. the linker's mention↔entity edges form bipartite
-    *        stars — diameter 2), run exactly that many rounds with no
-    *        convergence-count jobs: same labels, ~half the scheduling
-    *        overhead per round
     * @return (id: Long, component: Long) — component = min vertex id
     *         reachable; isolated vertices absent from `edges` are
     *         the caller's to union in. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      exactRounds: Option[Int] = None): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50)
+      : DataFrame = {
     val spark = edges.sparkSession
     // symmetrize + dedup once
     val sym = edges.select(col("src"), col("dst"))
@@ -46,19 +39,6 @@ object Components {
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint(true)
-    exactRounds.foreach { n =>
-      var i = 0
-      while (i < n) {
-        val fromNeighbors = sym
-          .join(labels, sym("dst") === labels("id"))
-          .select(sym("src").as("id"), col("component"))
-        labels = fromNeighbors.union(labels)
-          .groupBy("id").agg(min("component").as("component"))
-          .localCheckpoint(i == n - 1) // eager only on the last round
-        i += 1
-      }
-      return labels
-    }
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -93,9 +73,9 @@ object Components {
     *
     * This is the scale path for adversarial graphs (a 10^9-node chain
     * is 10^9 propagation rounds but ~60 contraction rounds); the
-    * propagation variant stays the default because canonicalization
-    * graphs are near-stars (diameter ≤ ~4), where its single
-    * shuffle-per-round beats contraction's three.
+    * propagation variant stays the default because on shallow graphs
+    * (diameter ≤ ~4) its single shuffle-per-round beats contraction's
+    * three.
     *
     *  - large-star: every node links its larger neighbors to the min
     *    of its neighborhood — emitted edges always point high→low;
@@ -180,50 +160,14 @@ object Components {
         coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Closed-form components of a STAR FOREST (r6): when every `src`
-    * node carries exactly one edge and `dst` nodes never appear as a
-    * `src` (self-loops allowed) — the exact shape of the linker's
-    * mention↔entity graph — a component is one `dst` group, and its
-    * label is min(dst, min(src over the group)). One map-side-combined
-    * aggregation + one (AQE-broadcastable) join replaces the generic
-    * loop's symmetrize-distinct + 2 × (join + groupBy) + three
-    * localCheckpoint materializations: same labels (min reachable id),
-    * ~6 fewer jobs per call. Callers must guarantee the shape — the
-    * generic [[connectedComponents]] stays the arbitrary-graph path,
-    * and ComponentsSpec pins equality on star fixtures. */
-  def starComponents(edges: DataFrame): DataFrame = {
-    val comp = edges.groupBy("dst")
-      .agg(least(min(col("src")), first(col("dst"))).as("component"))
-    val leaves = edges.join(comp, "dst")
-      .select(col("src").as("id"), col("component"))
-    val centers = comp.select(col("dst").as("id"), col("component"))
-    // a self-loop contributes its node as both leaf and center (same
-    // label) — collapse to the generic contract's one row per id
-    leaves.unionByName(centers)
-      .groupBy("id").agg(min("component").as("component"))
-  }
-
-  /** [[stringComponents]] over a star forest (see [[starComponents]]
-    * for the shape contract). */
-  def stringStarComponents(spark: SparkSession, edgePairs: DataFrame)
-      : DataFrame = {
-    val e = edgePairs.select(
-      xxhash64(col("a")).as("src"), xxhash64(col("b")).as("dst"))
-    val comps = starComponents(e)
-    val nodes = edgePairs.select(col("a").as("node"))
-      .union(edgePairs.select(col("b").as("node"))).distinct()
-      .withColumn("id", xxhash64(col("node")))
-    nodes.join(comps, "id").select(col("node"), col("component"))
-  }
-
   /** Map arbitrary string node ids to stable Longs (xxhash64 — 64-bit
     * collision odds negligible at any realistic node count) and back. */
-  def stringComponents(spark: SparkSession, edgePairs: DataFrame,
-      exactRounds: Option[Int] = None): DataFrame = {
+  def stringComponents(spark: SparkSession, edgePairs: DataFrame)
+      : DataFrame = {
     // edgePairs: (a: String, b: String)
     val e = edgePairs.select(
       xxhash64(col("a")).as("src"), xxhash64(col("b")).as("dst"))
-    val comps = connectedComponents(e, exactRounds = exactRounds)
+    val comps = connectedComponents(e)
     val nodes = edgePairs.select(col("a").as("node"))
       .union(edgePairs.select(col("b").as("node"))).distinct()
       .withColumn("id", xxhash64(col("node")))

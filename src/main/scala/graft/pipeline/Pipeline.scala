@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *   corpus → segment → featurize → Viterbi → spans      (narrow, fused)
   *          → post-process (vote/fix-up/insert shuffles on doc/text key)
   *          → link (broadcast dict, narrow)
-  *          → canonicalize (iterative min-label propagation)
-  *          → (subj, pred, obj) triples
+  *          → canonicalize + (subj, pred, obj) triples
+  *            (subject is a column expression; two distincts)
   *
   * Scale notes: the decode stage is shuffle-free and embarrassingly
   * parallel; post-processing keys by (repo, path) — mega-repos are
@@ -150,11 +150,8 @@ object Pipeline {
     val spark = files.sparkSession
     import spark.implicits._
     val sents = Segmenter.sentences(files)
-    val rawDf =
-      if (lang == "eng") Spans.fromTagged(Crf.tag(sents)).toDF()
-      else mentions(files, lang).toDF()
-    val rawM = TableIO.writeStage(rawDf, root, "mentions_raw", snapshot)
-      .as[Mention]
+    val rawM = TableIO.writeStage(mentions(files, lang).toDF(), root,
+      "mentions_raw", snapshot).as[Mention]
     val postDs =
       if (lang == "eng") PostProcess(sents, rawM)
       else {

@@ -1,7 +1,7 @@
 package graft.spans
 
 import graft.core.{Mention, TaggedSentence}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * (post_process.py:363-414) is unnecessary (SURVEY.md §2.5).
   *
   * Two implementations with identical results:
-  *  - [[fromTagged]]: typed flatMap inside the decode stage (no shuffle);
+  *  - [[extract]]: per-sentence FSM called inside the fused decode
+  *    (no shuffle);
   *  - [[fromTokenTable]]: relational window form over an exploded
   *    (doc, sent, idx, token, tag) table — the SQL-expressible twin used
   *    by the DuckDB oracle (`isStart` via lag, span id via running sum,
@@ -54,11 +55,6 @@ object Spans {
     }
     flush(t.tags.length - 1)
     out.result()
-  }
-
-  def fromTagged(tagged: Dataset[TaggedSentence]): Dataset[Mention] = {
-    import tagged.sparkSession.implicits._
-    tagged.flatMap(extract)
   }
 
   /** Relational twin over a token table with columns

@@ -1,6 +1,5 @@
 package graft.triples
 
-import graft.canon.Components
 import graft.link.Linker.LinkedMention
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -10,80 +9,46 @@ import org.apache.spark.sql.functions._
   * The reference's terminal output is the 8-field EDL record — in
   * effect (doc:span, type, NIL) triples (post_process.py:29-33,
   * utils/Convert_to_darpa_xml.py:6-12). The north star widens this to a
-  * canonicalized knowledge graph: mentions with the same canonical
-  * entity collapse to one subject via connected components over the
-  * mention-text ↔ KB-id link graph, then four predicates materialize:
-  * hasType, label, mentionedIn, sameAs (SURVEY.md §7.2 steps 9-10).
+  * canonicalized knowledge graph: mentions of the same entity collapse
+  * to one subject, then four predicates materialize: hasType, label,
+  * mentionedIn, sameAs (SURVEY.md §7.2 steps 9-10).
   */
 object Triples {
 
-  // Canonical node keys: mention nodes are "m:<tag>:<lower(text)>" so
-  // homonyms of different types never merge; entity nodes "e:<kbId>".
-  // Built inline over the deduped frame in materialize().
-
   /** Build the full triple table from linked mentions.
-    * Stages: edge build (narrow) → connected components (iterative,
-    * see [[Components]]) → canonical-subject join → triple union.
+    *
+    * Canonical subject, per row: `e:<kbId>` for a linked mention and
+    * `m:<tag>:<lower(text)>` for a NIL one — type-scoped, so NIL
+    * homonyms of different types never merge. [[graft.link.Linker]]
+    * makes the entity id a function of (tag, lower(text)), so this is
+    * exactly the lexicographic-min node of the mention ↔ KB-id link
+    * graph's component ('e:' < 'm:'), with no graph to build.
+    *
+    * One linear chain: a map-side-combined distinct collapses the
+    * mention multiset to entity × doc rows, each explodes into its four
+    * predicates, and a final distinct merges rows that share a subject.
     * The docId carries repo/path so output can partition by repo. */
   def materialize(linked: Dataset[LinkedMention]): DataFrame = {
-    val spark = linked.sparkSession
-    // ONE full-width pass over the mention stream, period. Everything
-    // a triple can mention is a function of (tag, lower(text),
-    // entityId, doc) — so a single map-side-combining distinct
-    // collapses the mention multiset to the compact frame D, and the
-    // node graph, the CC, the subject assignment and all four
-    // predicates derive from D. (TriplesProbe measured the old shape:
-    // four full scans of 5.6 M checkpointed rows to reach 18 distinct
-    // nodes — memory-bandwidth-bound and flat from 2→8 cores. The
-    // upstream pipeline now has exactly ONE consumer, so the old
-    // anti-race input checkpoint is unnecessary too.)
-    val D = linked.toDF()
-      .select(col("tag"), lower(col("text")).as("ltext"),
-        col("entityId"),
+    val ltext = lower(col("text"))
+    val isLinked = col("entityId") =!= "NIL"
+    linked.toDF()
+      .select(
+        when(isLinked, concat(lit("e:"), col("entityId")))
+          .otherwise(concat(lit("m:"), col("tag"), lit(":"), ltext))
+          .as("subj"),
+        col("tag"), ltext.as("ltext"), col("entityId"),
         concat(col("repo"), lit("/"), col("path")).as("doc"))
       .distinct()
-      // D is consumed by two subtrees (entity dims + placements);
-      // eager localCheckpoint materializes it once, entity×doc-sized
-      .localCheckpoint(true)
-    val node = concat(lit("m:"), col("tag"), lit(":"), col("ltext"))
-    // entity-sized frames from here on
-    val ents = D.select(col("tag"), col("ltext"), col("entityId"))
-      .distinct()
-      .withColumn("node", node)
-    val nodes = ents.select(col("node").as("a"),
-      when(col("entityId") =!= "NIL",
-        concat(lit("e:"), col("entityId"))).otherwise(col("node"))
-        .as("b"))
-    // the link graph is bipartite stars by construction (every mention
-    // node has exactly one edge: to its entity node, or a self-loop;
-    // entity nodes are never a source) — components have the closed
-    // form min-over-star, so the iterative propagation (r5: 2 rounds +
-    // 3 checkpoint materializations) collapses to one aggregation +
-    // one join (Components.starComponents; same labels, spec-pinned)
-    val comps = Components.stringStarComponents(spark, nodes)
-    // canonical subject = lexicographically-min node string of the
-    // component (stable across runs and partitionings, unlike raw
-    // hash ids)
-    val canon = comps.groupBy("component")
-      .agg(min("node").as("subj"))
-    val subjOf = comps.join(canon, "component") // node → subj, tiny
-      .select(col("node"), col("subj"))
-    // comps/canon/subjOf are entity-sized → these joins broadcast
-    val dims = ents.join(subjOf, "node")
-    val places = D.withColumn("node", node)
-      .join(subjOf, "node")
-      .select(col("subj"), col("doc").as("obj")).distinct()
-    dims.select(col("subj"), explode(array(
+      .select(col("subj"), explode(array(
         struct(lit("hasType").as("pred"), col("tag").as("obj")),
         struct(lit("label").as("pred"), col("ltext").as("obj")),
         struct(lit("sameAs").as("pred"),
-          when(col("entityId") =!= "NIL", col("entityId")).as("obj"))))
+          when(isLinked, col("entityId")).as("obj")),
+        struct(lit("mentionedIn").as("pred"), col("doc").as("obj"))))
         .as("po"))
       .select(col("subj"), col("po.pred").as("pred"),
         col("po.obj").as("obj"))
       .filter(col("obj").isNotNull) // drops sameAs rows for NIL mentions
-      .distinct() // distinct ents can share one canonical subject
-      .unionByName(places
-        .select(col("subj"), lit("mentionedIn").as("pred"), col("obj")))
+      .distinct()
   }
 }

@@ -25,60 +25,6 @@ class ComponentsSpec extends SparkTestBase {
     assert(got.length == 31)
   }
 
-  test("exactRounds=2 equals the converging loop on bipartite stars") {
-    val s = spark
-    import s.implicits._
-    // stars: center 100 with leaves 1..4; center 200 with leaves 10,11
-    val edges = Seq((1L, 100L), (2L, 100L), (3L, 100L), (4L, 100L),
-      (10L, 200L), (11L, 200L), (30L, 30L)).toDF("src", "dst")
-    val general = Components.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bounded = Components.connectedComponents(edges,
-        exactRounds = Some(2))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bounded == general)
-    assert(bounded(100L) == 1L && bounded(4L) == 1L)
-    assert(bounded(200L) == 10L && bounded(30L) == 30L)
-  }
-
-  test("closed-form starComponents == converging loop on star forests " +
-      "(incl. self-loops and leaf-id < center-id)") {
-    val s = spark
-    import s.implicits._
-    // the linker-graph shape: every src has exactly one edge, dsts are
-    // only ever targets; leaf ids both above and below their center's,
-    // plus NIL-style self-loops
-    val edges = Seq((1L, 100L), (2L, 100L), (3L, 100L), (4L, 100L),
-      (10L, 200L), (11L, 200L), (300L, 5L), (301L, 5L),
-      (30L, 30L), (42L, 42L)).toDF("src", "dst")
-    val general = Components.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Components.starComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == general)
-    assert(star(100L) == 1L && star(5L) == 5L && star(300L) == 5L)
-    assert(star(30L) == 30L && star(42L) == 42L)
-    // deterministic seeded random star forests
-    val rnd = new scala.util.Random(7)
-    (1 to 3).foreach { _ =>
-      val centers = (0 until 8).map(_ => rnd.nextLong().abs % 10000)
-      val e2 = centers.flatMap { c =>
-        (0 until rnd.nextInt(5)).map(_ => (rnd.nextLong().abs % 10000, c))
-      }.distinct
-        // star-forest contract: one edge per src, dst never a src
-        .groupBy(_._1).map(_._2.head).toSeq
-        .filterNot { case (a, b) => centers.contains(a) && a != b }
-      if (e2.nonEmpty) {
-        val df = e2.toDF("src", "dst")
-        val g = Components.connectedComponents(df)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val st = Components.starComponents(df)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(st == g)
-      }
-    }
-  }
-
   test("star contraction == propagation on known / chain / random graphs") {
     val s = spark
     import s.implicits._

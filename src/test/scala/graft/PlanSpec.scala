@@ -88,6 +88,30 @@ class PlanSpec extends SparkTestBase {
       m.text != "Acme" || m.tag == "ORG"))
   }
 
+  test("triples are one linear chain: no join, no checkpoint, at most " +
+      "two aggregate exchanges") {
+    val s = spark
+    import s.implicits._
+    val linked = Seq(
+      graft.link.Linker.LinkedMention("r", "p1", 0, 0, 12, "Ada Lovelace",
+        "PER", "Q00001", "ada lovelace", 1.0),
+      graft.link.Linker.LinkedMention("r", "p2", 0, 0, 11, "ada Lovelac",
+        "PER", "Q00001", "ada lovelace", 0.98),
+      graft.link.Linker.LinkedMention("r", "p2", 1, 0, 5, "Zorro",
+        "PER", "NIL", null, 0.0))
+      .toDS().repartition(4) // barrier: a realistic shuffled upstream
+    val out = graft.triples.Triples.materialize(linked)
+    // the subject is a column expression: no component graph joined
+    // back, no localCheckpoint (a LogicalRDD scan)
+    val analyzed = out.queryExecution.analyzed.toString
+    assert(!analyzed.contains("Join"), analyzed)
+    assert(!analyzed.contains("LogicalRDD"), analyzed)
+    val plan = out.queryExecution.executedPlan.toString
+    // the repartition above + the two distincts
+    assert("Exchange".r.findAllIn(plan).size <= 3, plan)
+    assert(out.count() == 9)
+  }
+
   test("canonical vocab ids carry no single-partition window " +
       "(q02/q72 scale path, r5 verdict #3)") {
     assume(available)

@@ -1,8 +1,11 @@
 package graft
 
-import graft.core.{Corpus, Dict, SourceFile}
+import graft.canon.Components
+import graft.core.{Corpus, Dict, Mention, SourceFile}
 import graft.io.TableIO
+import graft.link.Linker
 import graft.pipeline.Pipeline
+import graft.triples.Triples
 import org.apache.spark.sql.functions._
 
 class TriplesSpec extends SparkTestBase {
@@ -25,6 +28,61 @@ class TriplesSpec extends SparkTestBase {
       .filter(col("n") > 1).count()
     assert(multiType == 0)
     triples.unpersist()
+  }
+
+  test("closed-form subject == min node of the link graph's components") {
+    val s = spark
+    import s.implicits._
+    // a synthetic corpus's mentions plus: a misspelt surface that links
+    // to the same KB id as the exact one, a text tagged with two types
+    // (one linked, one NIL) and NIL mentions of two types
+    val extra = Seq(
+      Mention("x", "a", 0, 0, 12, "Ada Lovelace", "PER", 1.0),
+      Mention("x", "b", 0, 0, 11, "ada Lovelac", "PER", 1.0),
+      Mention("x", "b", 1, 0, 11, "Alan Turing", "PER", 1.0),
+      Mention("x", "c", 0, 0, 11, "Alan Turing", "ORG", 1.0),
+      Mention("x", "c", 1, 0, 5, "Zorro", "PER", 1.0),
+      Mention("x", "d", 0, 0, 5, "zorro", "ORG", 1.0)).toDS()
+    val linked = Linker.link(
+      Pipeline.postProcessed(Corpus.synthesize(spark, 60)).union(extra))
+      .cache()
+    val keyed = linked.toDF()
+      .select(col("tag"), lower(col("text")).as("ltext"), col("entityId"))
+      .distinct().cache()
+    // the input holds every case the closed form must get right
+    assert(keyed.filter(col("entityId") === "NIL").count() >= 3)
+    assert(keyed.filter(col("entityId") =!= "NIL").groupBy("entityId")
+      .agg(countDistinct("ltext").as("n")).filter(col("n") > 1).count() > 0)
+    assert(keyed.groupBy("ltext").agg(countDistinct("tag").as("n"))
+      .filter(col("n") > 1).count() > 0)
+    // the precondition: the linker maps a (tag, ltext) to one entity id
+    assert(keyed.groupBy("tag", "ltext").agg(countDistinct("entityId")
+      .as("n")).filter(col("n") > 1).count() == 0)
+    // the previous definition: mention node → entity node (NIL: a
+    // self-loop), connected components, subject = min node per component
+    val node = concat(lit("m:"), col("tag"), lit(":"), lower(col("text")))
+    val edges = linked.toDF().select(node.as("a"),
+      when(col("entityId") =!= "NIL", concat(lit("e:"), col("entityId")))
+        .otherwise(node).as("b")).distinct()
+    val comps = Components.stringComponents(spark, edges)
+    val subjOf = comps.join(
+      comps.groupBy("component").agg(min("node").as("subj")), "component")
+      .select("node", "subj")
+    val withSubj = linked.toDF().withColumn("node", node).join(subjOf, "node")
+    val want = withSubj.select(col("subj"), lit("hasType"), col("tag"))
+      .union(withSubj.select(col("subj"), lit("label"), lower(col("text"))))
+      .union(withSubj.filter(col("entityId") =!= "NIL")
+        .select(col("subj"), lit("sameAs"), col("entityId")))
+      .union(withSubj.select(col("subj"), lit("mentionedIn"),
+        concat(col("repo"), lit("/"), col("path"))))
+      .distinct()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
+    val (got, old) = (rows(Triples.materialize(linked)), rows(want))
+    assert(got == old, s"only new: ${got.diff(old).take(5)}; " +
+      s"only old: ${old.diff(got).take(5)}")
+    assert(got.contains(("m:ORG:alan turing", "hasType", "ORG")))
+    keyed.unpersist(); linked.unpersist()
   }
 
   test("triples P/R vs reference-semantics golden >= 0.95 (BASELINE gate)") {

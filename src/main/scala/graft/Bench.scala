@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * Headline metric = end-to-end KG pipeline throughput in triples/sec
   * (BASELINE.json metric) over the documents-derived corpus, replicated
   * [[Bench.replication]]× so compute dominates fixed job overhead at
-  * small SF; per-query wall times ride along in `queries`.
+  * small SF; per-query wall times ride along in `queries`, and a query
+  * that throws is listed in `failed` (name, exception class and
+  * message) with no time.
   */
 object Bench {
 
@@ -61,15 +63,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
     // JIT + codegen + parquet-footer warm-up at the smallest SF so the
     // first timed queries don't carry one-time JVM costs; skipped if
     // the warm-up dir is absent (or IS the bench dir).
@@ -79,11 +73,19 @@ object Bench {
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+    // a query that throws is reported under `failed` and gets no time:
+    // a time would read as a fast query
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).count()
+        Right(name -> (System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(name -> e) }
+    }
+    val results = runs.collect { case Right(r) => r }
+    val failed = runs.collect { case Left((name, e)) =>
+      s"""{"query":${Verify.jsonString(name)},"error":""" +
+        Verify.jsonString(s"${e.getClass.getName}: ${e.getMessage}") + "}"
     }
     // the per-query loop materialized session-lifetime shared views
     // (localCheckpoint blocks, new in round 3) — drop and unpersist
@@ -110,7 +112,8 @@ object Bench {
       s""""unit":"triples/sec","pipeline_sec":$pipeSec,""" +
       s""""samples":$samplesJson,""" +
       s""""triples":$triples,"replication":$replication,""" +
-      s""""cpus":$cpus,"queries":$qs,"sf":"$sfDir"}"""
+      s""""cpus":$cpus,"queries":$qs,""" +
+      s""""failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     println(json)
     // Driver contract: the full line above is ~3.7 KB and the driver's
     // tail window has truncated it mid-line two rounds running

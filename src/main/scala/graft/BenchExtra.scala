@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper (guide §1.4): times each declared query
   * against a noop sink — every column of every row computed, nothing
   * written — and optionally dumps `explain("formatted")` to
@@ -22,15 +20,7 @@ object BenchExtra {
     val names: Seq[String] =
       if (args.length > 2) args(2).split(',').toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
     val qs = SparkEntry.queries
     names.foreach { n =>
       val fn = qs(n)

@@ -2,7 +2,6 @@ package graft
 
 import graft.conll.ConllOps
 import graft.features.Brown
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Train Brown clusters on the in-tree eng.train and write the
@@ -19,15 +18,11 @@ object BrownTrain {
     val out = args.headOption.getOrElse("models/eng.brown.tsv")
     val c = args.lift(1).map(_.toInt).getOrElse(256)
     val passes = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     import spark.implicits._
-    val sents = ConllOps.conllFileSentences(spark, FitEval.trainPath)
+    val sents = ConllOps.conllFileSentences(spark,
+      graft.core.RefData.engTrain.existing)
       .map(_.words)
     val t0 = System.nanoTime()
     val tsv = Brown.cluster(sents, numClusters = c, passes = passes)

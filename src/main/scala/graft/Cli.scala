@@ -1,7 +1,7 @@
 package graft
 
 import graft.conll.ConllOps
-import graft.core.{Dict, Sentence}
+import graft.core.{Dict, RefData, Sentence}
 import graft.crf.FitCrf
 import graft.eval.SpanPRF1
 import graft.io.ModelIO
@@ -52,20 +52,6 @@ object Cli {
   private def req(args: Array[String], name: String): String =
     arg(args, name).getOrElse(
       sys.error(s"missing required flag $name <value>"))
-
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** Decode a CoNLL file under a fitted model → tagged token table
     * (sentId, tokenIdx, word, tag). */
@@ -143,10 +129,12 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Cli <fit|train|tag|eval|kg> ...")
-    val spark = session()
+    val spark = Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     args(0) match {
       case "fit" =>
-        val trainPath = arg(args, "--train").getOrElse(FitEval.trainPath)
+        val trainPath = arg(args, "--train")
+          .getOrElse(RefData.engTrain.existing)
         val out = req(args, "--out")
         val model = FitCrf.fit(FitEval.labeled(spark, trainPath),
           k = arg(args, "--k").map(_.toDouble).getOrElse(0.1),
@@ -208,9 +196,8 @@ object Cli {
         val gaz =
           if (args.contains("--gaz"))
             Some(graft.core.LangDict.loadGaz(
-              graft.core.LangDict.gazCsvRows(
-                arg(args, "--gaz-csv")
-                  .getOrElse("/root/reference/utils/gaz.csv")))(lang))
+              graft.core.LangDict.gazCsvRows(arg(args, "--gaz-csv")
+                .getOrElse(RefData.gaz.existing)))(lang))
           else None
         featuresFrame(spark, lang, req(args, "--in"), gaz)
           .write.mode("overwrite").parquet(out)

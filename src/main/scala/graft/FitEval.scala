@@ -1,7 +1,7 @@
 package graft
 
 import graft.conll.ConllOps
-import graft.core.{Dict, Sentence}
+import graft.core.{Dict, RefData, Sentence}
 import graft.crf.FitCrf
 import graft.spans.Spans
 import graft.eval.SpanPRF1
@@ -18,13 +18,10 @@ import org.apache.spark.sql.functions._
   */
 object FitEval {
 
-  /** Fit/eval corpora — overridable (GRAFT_ENG_TRAIN / GRAFT_ENG_TEST)
-    * so fit/train runs against a copied corpus without touching
-    * /root/reference; defaults stay the in-tree reference data. */
-  val trainPath: String = sys.env.getOrElse("GRAFT_ENG_TRAIN",
-    "/root/reference/datasets/english/eng.train.bio.conll")
-  val testPath: String = sys.env.getOrElse("GRAFT_ENG_TEST",
-    "/root/reference/datasets/english/eng.test.bio.conll")
+  /** Fit/eval corpora ([[RefData.engTrain]]/[[RefData.engTest]]),
+    * unchecked: callers probe them; readers use `RefData.*.existing`. */
+  val trainPath: String = RefData.engTrain.path.toString
+  val testPath: String = RefData.engTest.path.toString
 
   /** The pinned English model: best configuration of the sweep below
     * (measured span F1 = 0.7269 on eng.test's 5648 gold spans, P=0.731
@@ -35,8 +32,8 @@ object FitEval {
     * 300 epochs, 0.7528 at 600) at iterative-training cost; the
     * closed-form fit stays the default (seconds, no iteration). */
   def engModel(spark: SparkSession): FitCrf.FittedModel =
-    FitCrf.fit(labeled(spark, trainPath), k = 0.1, minCount = 2,
-      rareMax = 2, lambda = 0f)
+    FitCrf.fit(labeled(spark, RefData.engTrain.existing), k = 0.1,
+      minCount = 2, rareMax = 2, lambda = 0f)
 
   /** Discriminatively trained full English model: φ = §2.3 features ∪
     * word identity ∪ LEARNED shape-backoff rows (singleton training
@@ -79,7 +76,7 @@ object FitEval {
           .distinct.sorted
       else Array.empty
     val rowIds = rowKeys.zipWithIndex.toMap
-    val train = labeled(spark, trainPath)
+    val train = labeled(spark, RefData.engTrain.existing)
     val wordFreq = train.flatMap(_.words).groupBy("value").count()
     val vocab = wordFreq.filter(col("count") >= 2)
       .select("value").as[String].collect().sorted
@@ -220,7 +217,8 @@ object FitEval {
       : Map[String, String] = {
     import spark.implicits._
     graft.features.Brown.cluster(
-      ConllOps.conllFileSentences(spark, trainPath).map(_.words),
+      ConllOps.conllFileSentences(spark, RefData.engTrain.existing)
+        .map(_.words),
       numClusters = numClusters)
       .select("word", "bits").as[(String, String)].collect().toMap
   }
@@ -283,23 +281,19 @@ object FitEval {
       : Map[String, Int] = {
     import spark.implicits._
     graft.features.Brown.clusterMapByBits(graft.features.Brown.cluster(
-      ConllOps.conllFileSentences(spark, trainPath).map(_.words),
+      ConllOps.conllFileSentences(spark, RefData.engTrain.existing)
+        .map(_.words),
       numClusters = numClusters))
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(16)
     import spark.implicits._
 
-    val train = labeled(spark, trainPath).cache()
+    val train = labeled(spark, RefData.engTrain.existing).cache()
     println(s"train sentences: ${train.count()}")
 
-    val testSents = ConllOps.conllFileSentences(spark, testPath)
+    val testSents = ConllOps.conllFileSentences(spark, RefData.engTest.existing)
       .map(s => (s.sentId, s.words, s.tags.map(tagIdOf)))
       .cache()
     println(s"test sentences: ${testSents.count()}")

@@ -21,11 +21,7 @@ object IsoBench {
     val samples = if (args.length > 1) args(1).toInt else 2
 
     def once(cpus: Int, r: Int): Double = {
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = Sessions.local(cpus)
       try {
         spark.sparkContext.setLogLevel("ERROR")
         import spark.implicits._

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off profiler for the q23 brute-force ANN gate (VERDICT round 1
   * item: 30 s at sf0.1 unexplained). Times each stage separately. */
 object ProfileQ23 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f

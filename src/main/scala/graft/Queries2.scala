@@ -3,7 +3,7 @@ package graft
 import graft.canon.Components
 import graft.core.{Corpus, Dict, SourceFile}
 import graft.eval.SpanPRF1
-import graft.pipeline.Pipeline
+import graft.pipeline.{LangPack, Pipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -279,15 +279,14 @@ object Queries2 {
   }
 
   /** Full KG: linked + canonicalized (subj, pred, obj) triples —
-    * [[Pipeline.triples]]'s eng stages over the same shared
+    * [[Pipeline.triples]]'s eng stage list over the same shared
     * checkpoints (identical inputs ⇒ identical output; the oracle
     * hash re-confirms every round). */
   private def q52(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sents = Queries7.sentsV(s, dir).as[graft.core.Sentence]
     val ms = Queries7.mentionsV(s, dir).as[graft.core.Mention]
-    graft.triples.Triples.materialize(graft.link.Linker.link(
-        graft.postprocess.PostProcess(sents, ms)))
+    Pipeline.stages(sents, ms, LangPack("eng"))
       .orderBy("subj", "pred", "obj")
   }
 

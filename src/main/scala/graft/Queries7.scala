@@ -471,7 +471,8 @@ object Queries7 {
     // the gated output is a pure function of the bigram counts, so only
     // the bigram aggregation runs — the featurize/vocab aggregations of
     // the full countStats are skipped (guide §1.2; OPTIMIZATION_r06.md)
-    val bigram = FitCrf.bigramStats(FitEval.labeled(s, FitEval.trainPath))
+    val bigram = FitCrf.bigramStats(
+      FitEval.labeled(s, graft.core.RefData.engTrain.existing))
     val trans = FitCrf.transWeights(bigram, k = 0.5)
     val names = (Dict.tags :+ "START") :+ "END"
     val rows = for {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.LangDict
+import graft.core.{LangDict, RefData}
 import graft.features.LangFeatures
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object Queries8 {
 
-  private val gazCsv = "/root/reference/utils/gaz.csv"
+  private val gazCsv = RefData.gaz.path
 
   private def esc(s: String) = s.replace("'", "''")
   private def inList(ws: Iterable[String]): String =

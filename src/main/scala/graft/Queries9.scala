@@ -128,7 +128,7 @@ object Queries9 {
 
   /** The full per-language KG terminal (r5, beyond the verdict asks):
     * routed decode → [[graft.link.Linker]] with the LANGUAGE's entity
-    * index ([[graft.crf.LangModel.linkIndex]], language-scoped
+    * index ([[graft.pipeline.LangPack]]'s `index`, language-scoped
     * `lang:Qxxxxx` ids) → [[graft.triples.Triples.materialize]], per
     * language over the q66 eligible corpus. On that subset every
     * mention's text IS its matched gaz entry, the argmax is unique at
@@ -138,17 +138,16 @@ object Queries9 {
     * relationally, exactly like the eng q58. */
   private def q69(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val g = graft.crf.LangModel.refGaz
     val eligible = Queries8.eligibleLangSentsCached
     Seq("tir", "orm").map { lang =>
       val files = eligible.collect { case (`lang`, sid, toks) =>
         graft.core.SourceFile(lang, f"$lang/$sid%05d.txt", "c0", lang,
           toks.mkString(" "))
       }.toDS()
+      val pack = graft.pipeline.LangPack(lang)
       val linked = graft.link.Linker.link(
         graft.pipeline.Pipeline.mentions(files, lang),
-        index = graft.crf.LangModel.linkIndex(g(lang)),
-        kbId = graft.crf.LangModel.kbId(lang))
+        index = pack.index, kbId = pack.kbId)
       graft.triples.Triples.materialize(linked)
     }.reduce(_ unionByName _)
       .orderBy("subj", "pred", "obj")
@@ -257,7 +256,7 @@ object Queries9 {
     insertionEligibleSents(graft.crf.LangModel.refGaz)
 
   /** The REAL [[graft.postprocess.PostProcess.insertFromLookup]] with
-    * the LANGUAGE's lookup tables ([[graft.crf.LangModel.lookupIndex]])
+    * the LANGUAGE's lookup index ([[graft.pipeline.LangPack]]'s)
     * over the insertion-eligible q66 corpus, with every mention of
     * sid % 7 == 0 docs dropped first (simulated model misses, the eng
     * q57 recipe): insertion must restore exactly the dropped mentions
@@ -265,7 +264,6 @@ object Queries9 {
     * and the restore identity relationally. */
   private def q70(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val g = graft.crf.LangModel.refGaz
     val eligible = insertionEligibleSentsCached
     Seq("tir", "orm").map { lang =>
       val files = eligible.collect { case (`lang`, sid, toks) =>
@@ -277,7 +275,7 @@ object Queries9 {
         .filter(m =>
           m.path.split('/')(1).takeWhile(_.isDigit).toInt % 7 != 0)
       graft.postprocess.PostProcess.insertFromLookup(sents, kept,
-        lookupIndex = graft.crf.LangModel.lookupIndex(g(lang))).toDF()
+        lookupIndex = graft.pipeline.LangPack(lang).lookupIndex).toDF()
     }.reduce(_ unionByName _)
       .as[graft.core.Mention]
       .map(m => (m.repo, m.path.split('/')(1).takeWhile(_.isDigit).toInt,

@@ -21,19 +21,6 @@ import org.apache.spark.sql.SparkSession
   */
 object ScalingBench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val lo = sys.env.getOrElse("SPARK_GRAFT_SCALE_LO", "8").toInt
@@ -42,7 +29,7 @@ object ScalingBench {
     val rounds = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROUNDS", "3").toInt
 
     def once(cpus: Int): (Double, Double, Long) = {
-      val spark = session(cpus)
+      val spark = Sessions.local(cpus)
       try {
         import spark.implicits._
         val files = Bench.corpus(spark, sfDir, rep).as[SourceFile]

@@ -1,7 +1,6 @@
 package graft
 
 import graft.io.ModelIO
-import org.apache.spark.sql.SparkSession
 
 /** Regenerate the SHIPPED English model artifact (VERDICT r2 ask 3):
   * the 300-epoch discriminative `trainWords` fit with OOV-gated
@@ -22,12 +21,7 @@ object ShipModel {
     val out = args.headOption.getOrElse(defaultPath)
     val epochs = args.lift(1).map(_.toInt).getOrElse(300)
     val numC = args.lift(2).map(_.toInt).getOrElse(256)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(16)
     import spark.implicits._
     val t0 = System.nanoTime()
     val cmap = FitEval.engClusters(spark, numC)
@@ -40,7 +34,7 @@ object ShipModel {
     // measure the artifact as loaded (round-trip included)
     val loaded = ModelIO.loadFitted(spark, out)
     val testSents = graft.conll.ConllOps
-      .conllFileSentences(spark, FitEval.testPath)
+      .conllFileSentences(spark, graft.core.RefData.engTest.existing)
       .map(x => (x.sentId, x.words, x.tags.map(FitEval.tagIdOf)))
     val gold = FitEval.spansOf(testSents.map { case (id, words, tags) =>
       graft.core.TaggedSentence("eng", "test", id.toInt, words,

@@ -16,13 +16,7 @@ object StageBench {
     val rep = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICATION", "256").toInt
 
     def once(cpus: Int): Seq[(String, Double)] = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Sessions.local(cpus)
       try {
         import spark.implicits._
         val out = Seq.newBuilder[(String, Double)]

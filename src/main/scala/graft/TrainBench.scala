@@ -3,7 +3,6 @@ package graft
 import graft.core.SourceFile
 import graft.crf.{Crf, CrfTrainer}
 import graft.segment.Segmenter
-import org.apache.spark.sql.SparkSession
 
 /** CRF-training throughput: sentences/sec/epoch of the treeAggregate
   * gradient pass at `SPARK_GRAFT_CPUS` over the sfDir corpus
@@ -13,12 +12,7 @@ object TrainBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rep = sys.env.getOrElse("SPARK_GRAFT_REPLICATION", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val sentences = Segmenter.sentences(

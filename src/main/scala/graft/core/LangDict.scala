@@ -283,7 +283,7 @@ object LangDict {
     * skipped. Empty cells surface as "" (the loader's null/empty
     * checks treat both alike). Driver-side plain-file read: the file
     * is a 1.3k-row dimension table. */
-  def gazCsvRows(path: String = "/root/reference/utils/gaz.csv")
+  def gazCsvRows(path: String = RefData.gaz.existing)
       : Seq[(String, String, String, String)] = {
     val text = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),

@@ -135,7 +135,7 @@ object Morph {
     * ('.'-joined). Driver-side load (the lexicon is dictionary-sized),
     * broadcast by callers like every other dictionary. */
   def lexiconAnalyzer(
-      path: String = "/root/reference/utils/orm_norm/orm_lexicon.txt")
+      path: String = graft.core.RefData.ormLexicon.existing)
       : LexiconAnalyzer = {
     val src = scala.io.Source.fromFile(path, "UTF-8")
     val stems =

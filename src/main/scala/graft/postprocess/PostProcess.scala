@@ -233,7 +233,7 @@ object PostProcess {
 
   /** Full reference post-processing chain (main.py:357-376 order).
     * `lookup`/`lookupIndex` default to the eng dictionary; the
-    * language-routed pipeline passes the per-language tables
+    * pipeline passes its [[graft.pipeline.LangPack]]'s tables
     * ([[graft.crf.LangModel.lookupTable]]/`lookupIndex`) so a non-eng
     * corpus is never fixed up or back-filled against English entries
     * (the reference builds its lookup per language from setE data). */

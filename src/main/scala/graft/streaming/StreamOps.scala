@@ -100,22 +100,15 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Streaming mention detection: the fused segment→featurize→Viterbi→
-    * extract kernel is stateless per file, so it lifts onto a
-    * `readStream` source unchanged — ingest-time entity extraction
-    * with no state store and no watermark needed (north-star ingest
-    * path; batch remains the contract). */
-  def streamingMentions(files: org.apache.spark.sql.Dataset[graft.core.SourceFile])
-      : org.apache.spark.sql.Dataset[graft.core.Mention] =
-    graft.pipeline.Pipeline.mentions(files)
-
-  /** Language-routed streaming decode: the per-language fused kernel
-    * ([[graft.pipeline.Pipeline.mentions]](files, lang) — per-language
-    * features + gaz + fitted model, broadcast) is equally stateless
-    * and narrow, so any of the six languages tags an unbounded stream
-    * unchanged. */
+    * extract kernel ([[graft.pipeline.Pipeline.mentions]] over the
+    * language's [[graft.pipeline.LangPack]] — broadcast model + gaz) is
+    * stateless per file, so it lifts onto a `readStream` source
+    * unchanged for any of the six languages — ingest-time entity
+    * extraction with no state store and no watermark needed (north-star
+    * ingest path; batch remains the contract). */
   def streamingMentions(
       files: org.apache.spark.sql.Dataset[graft.core.SourceFile],
-      lang: String)
+      lang: String = "eng")
       : org.apache.spark.sql.Dataset[graft.core.Mention] =
     graft.pipeline.Pipeline.mentions(files, lang)
 

@@ -16,6 +16,7 @@ class LangModelSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val files = Corpus.synthesize(spark, 80)
+    // pins that the default language of the one decode entry is eng
     val a = Pipeline.mentions(files).collect().toSet
     val b = Pipeline.mentions(files, "eng").collect().toSet
     assert(a == b && a.nonEmpty)

@@ -49,7 +49,7 @@ class MorphSpec extends AnyFunSuite {
 
   test("lexicon-backed analyzer: shipped-lexicon stems parse with " +
       "real suffix glosses (orm_lexicon.txt)") {
-    val path = "/root/reference/utils/orm_norm/orm_lexicon.txt"
+    val path = graft.core.RefData.ormLexicon.path.toString
     assume(new java.io.File(path).exists())
     val a = Morph.lexiconAnalyzer(path)
     // 'aadaa' = culture (lexicon row); normalization folds aa→a

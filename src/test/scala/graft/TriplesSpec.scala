@@ -132,6 +132,10 @@ class TriplesSpec extends SparkTestBase {
     val t2 = Pipeline.triplesCheckpointed(files, root, "snap1")
       .orderBy("subj", "pred", "obj").collect()
     assert(t1.map(_.toString).toSeq == t2.map(_.toString).toSeq)
+    // checkpointing is only a materialisation policy: same triples
+    val direct = Pipeline.triples(files)
+      .orderBy("subj", "pred", "obj").collect()
+    assert(t1.map(_.toString).toSeq == direct.map(_.toString).toSeq)
   }
 
   test("checkpointed pipeline routes lang: orm checkpoints == direct " +

@@ -263,10 +263,12 @@ object Queries2 {
 
   // ---- full-pipeline rows-only entries ------------------------------
 
-  /** Post-processed mentions (vote/fix-up/insert chain). Consumes the
+  /** Post-processed mentions (the Dataset-level fix-up/vote/insert
+    * chain, as [[Pipeline.triplesCheckpointed]] runs it; on a corpus
+    * with one row per (repo, path) it equals
+    * [[Pipeline.postProcessed]]'s fused pass). Consumes the
     * session-shared segmentation + fused-decode checkpoints
-    * ([[Queries7.sentsV]]/[[Queries7.mentionsV]] — the same
-    * derivations [[Pipeline.postProcessed]] runs inline): round 5
+    * ([[Queries7.sentsV]]/[[Queries7.mentionsV]]): round 5
     * re-decoded the whole corpus here even though q50 had just
     * materialized the identical mention stream, so the q51 number
     * now measures the post-process chain, not a repeated decode. */
@@ -279,7 +281,7 @@ object Queries2 {
   }
 
   /** Full KG: linked + canonicalized (subj, pred, obj) triples —
-    * [[Pipeline.triples]]'s eng stage list over the same shared
+    * the eng Dataset-level stage list over the same shared
     * checkpoints (identical inputs ⇒ identical output; the oracle
     * hash re-confirms every round). */
   private def q52(s: SparkSession, dir: String): DataFrame = {

@@ -2,7 +2,10 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.Verify.jsonString
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Iceberg-contract table layer over directory-partitioned Parquet
   * (SURVEY.md §7.4 — no Iceberg runtime jar ships offline, so the
@@ -14,7 +17,8 @@ import java.nio.file.{Files, Paths}
   *  - `_lineage.json` sidecar: snapshot id (caller-supplied content
   *    hash of the input), stage name, wall latency, total rows and
   *    per-partition row counts — the per-partition lineage + metrics
-  *    the north rule requires;
+  *    the north rule requires. It is escaped JSON, written to a temp
+  *    file and renamed into place, so a reader never sees half of it;
   *  - idempotent resume: writeStage with a snapshot id that already
   *    committed is a no-op returning the stored table (checkpointed
   *    pipelines restart from the last finished stage).
@@ -28,14 +32,15 @@ object TableIO {
   private def lineagePath(root: String, table: String) =
     Paths.get(root, table, "_lineage.json")
 
-  /** Committed snapshot id of a table, if any. */
+  /** Committed snapshot id of a table, if any. A sidecar that does not
+    * parse (written before it was escaped JSON) proves no commit. */
   def committedSnapshot(root: String, table: String): Option[String] = {
     val p = lineagePath(root, table)
-    if (Files.exists(p)) {
-      val s = Files.readString(p)
-      "\"snapshot\"\\s*:\\s*\"([^\"]*)\"".r
-        .findFirstMatchIn(s).map(_.group(1))
-    } else None
+    if (Files.exists(p))
+      try Option(new ObjectMapper().readTree(p.toFile).get("snapshot"))
+        .map(_.asText())
+      catch { case _: JsonProcessingException => None }
+    else None
   }
 
   def read(spark: SparkSession, root: String, table: String): DataFrame =
@@ -80,12 +85,17 @@ object TableIO {
     val rows = partCounts.values.sum
     val latency = (System.nanoTime() - t0) / 1000000
     val parts = partCounts.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${k.replace("\"", "'")}": $v""" }
+      .map { case (k, v) => s"${jsonString(k)}: $v" }
       .mkString("{", ", ", "}")
-    Files.createDirectories(Paths.get(root, table))
-    Files.writeString(lineagePath(root, table),
-      s"""{"table": "$table", "snapshot": "$snapshot", "rows": $rows,
-         | "latencyMs": $latency, "partitions": $parts}""".stripMargin)
+    val dir = Files.createDirectories(Paths.get(root, table))
+    // '_'-prefixed: the parquet reader skips it like the sidecar itself
+    val tmp = Files.createTempFile(dir, "_lineage.", ".tmp")
+    Files.writeString(tmp,
+      s"""{"table": ${jsonString(table)}, "snapshot": ${jsonString(snapshot)},
+         | "rows": $rows, "latencyMs": $latency, "partitions": $parts}"""
+        .stripMargin)
+    Files.move(tmp, lineagePath(root, table),
+      StandardCopyOption.ATOMIC_MOVE)
     written
   }
 }

@@ -7,22 +7,29 @@ import graft.postprocess.PostProcess
 import graft.segment.Segmenter
 import graft.spans.Spans
 import graft.triples.Triples
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG construction (SURVEY.md §3.1 lifecycle, §7.2 modules),
   * stated once for every language:
   *
-  *   corpus → segment → featurize → Viterbi → spans      (narrow, fused)
-  *          → post-process (vote/fix-up/insert shuffles on doc/text key)
+  *   corpus → per file: segment → featurize → Viterbi → spans
+  *            → fix-up → within-doc vote → insertion   (narrow, fused)
+  *          → cross-doc vote (one exchange on (repo, path), read by the
+  *            (key, tag) count and the broadcast relabel)
   *          → link (broadcast dict, narrow)
   *          → canonicalize + (subj, pred, obj) triples
   *            (subject is a column expression; two distincts)
   *
-  * What varies by language comes from one [[LangPack]]; how each stage
-  * is materialised is a separate `keep(df, table)` policy at every stage
-  * boundary: the identity in [[triples]], a [[TableIO]] checkpoint
-  * (resume + per-partition lineage) in [[triplesCheckpointed]].
+  * What varies by language comes from one [[LangPack]]. [[triples]] and
+  * [[postProcessed]] run the doc-local post-process stages inside the
+  * decode pass ([[PostProcess.docKernel]]), so one input row is one
+  * document: two rows with the same (repo, path) are not merged by the
+  * vote or the insertion (ROADMAP item 1, document identity).
+  * [[triplesCheckpointed]] keeps the Dataset-level stage list
+  * ([[stages]]), with a `keep(df, table)` policy at every stage
+  * boundary that lands it in a [[TableIO]] checkpoint (resume +
+  * per-partition lineage), `mentions_raw` included.
   */
 object Pipeline {
 
@@ -36,16 +43,37 @@ object Pipeline {
   def mentions(files: Dataset[SourceFile],
       lang: String = "eng"): Dataset[Mention] = {
     import files.sparkSession.implicits._
-    val decoder = LangPack(lang).decoder(files.sparkSession.sparkContext)
+    perFile(files, LangPack(lang), () => (_, ms) => ms.iterator)
+  }
+
+  /** One mapPartitions pass: each file is segmented once and decoded,
+    * and `kernel`'s per-file function (made once per partition) gets
+    * its sentences and mentions. */
+  private def perFile[T: Encoder](files: Dataset[SourceFile],
+      pack: LangPack,
+      kernel: () => (Seq[Sentence], Seq[Mention]) => Iterator[T])
+      : Dataset[T] = {
+    val decoder = pack.decoder(files.sparkSession.sparkContext)
     files.mapPartitions { it =>
       val decode = decoder()
+      val post = kernel()
       it.flatMap { f =>
-        Segmenter.segment(f.content).iterator.flatMap {
-          case (i, toks, ss, es) => Spans.extract(
-            decode(Sentence(f.repo, f.path, i, toks, ss, es)))
+        val sents = Segmenter.segment(f.content).map {
+          case (i, toks, ss, es) => Sentence(f.repo, f.path, i, toks, ss, es)
         }
+        post(sents, sents.flatMap(s => Spans.extract(decode(s))))
       }
     }
+  }
+
+  /** Post-processed mentions from the fused pass: [[perFile]] with
+    * [[PostProcess.docKernel]], then the cross-doc vote. */
+  private def fused(files: Dataset[SourceFile], pack: LangPack,
+      authors: Set[String]): Dataset[Mention] = {
+    import files.sparkSession.implicits._
+    PostProcess.crossDocVoteFlagged(perFile(files, pack,
+      PostProcess.docKernel(files.sparkSession.sparkContext, authors,
+        pack.lookup, pack.lookupIndex)))
   }
 
   /** The stage list up to post-process, over segmented + decoded input. */
@@ -57,28 +85,33 @@ object Pipeline {
       lookupIndex = pack.lookupIndex).toDF(), "mentions_post").as[Mention]
   }
 
-  /** The whole stage list: [[post]] → link → triples. */
-  private[graft] def stages(sents: Dataset[Sentence],
-      decoded: Dataset[Mention], pack: LangPack,
-      authors: Set[String] = Set.empty, keep: Keep = direct): DataFrame = {
-    import sents.sparkSession.implicits._
-    val linked = keep(Linker.link(post(sents, decoded, pack, authors, keep),
-      index = pack.index, kbId = pack.kbId).toDF(), "mentions_linked")
+  /** The stages after post-process: link → triples. */
+  private def linkTriples(post: Dataset[Mention], pack: LangPack,
+      keep: Keep): DataFrame = {
+    import post.sparkSession.implicits._
+    val linked = keep(Linker.link(post, index = pack.index,
+      kbId = pack.kbId).toDF(), "mentions_linked")
     keep(Triples.materialize(linked.as[Linker.LinkedMention]), "triples")
   }
 
-  /** Post-processed mentions: the stage list cut after post-process. */
+  /** The whole Dataset-level stage list: [[post]] → link → triples. */
+  private[graft] def stages(sents: Dataset[Sentence],
+      decoded: Dataset[Mention], pack: LangPack,
+      authors: Set[String] = Set.empty, keep: Keep = direct): DataFrame =
+    linkTriples(post(sents, decoded, pack, authors, keep), pack, keep)
+
+  /** Post-processed mentions: the fused pass cut after post-process. */
   def postProcessed(files: Dataset[SourceFile],
       authors: Set[String] = Set.empty, lang: String = "eng")
       : Dataset[Mention] =
-    post(Segmenter.sentences(files), mentions(files, lang), LangPack(lang),
-      authors, direct)
+    fused(files, LangPack(lang), authors)
 
   /** Terminal KG: (subj, pred, obj) triples, nothing materialised. */
   def triples(files: Dataset[SourceFile], authors: Set[String] = Set.empty,
-      lang: String = "eng"): DataFrame =
-    stages(Segmenter.sentences(files), mentions(files, lang),
-      LangPack(lang), authors)
+      lang: String = "eng"): DataFrame = {
+    val pack = LangPack(lang)
+    linkTriples(fused(files, pack, authors), pack, direct)
+  }
 
   /** The same stages, each landing in `root/<stage>` with a
     * `_lineage.json` sidecar; a re-run with the same snapshot id

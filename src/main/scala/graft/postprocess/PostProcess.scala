@@ -1,49 +1,201 @@
 package graft.postprocess
 
 import graft.core.{Dict, Mention, Sentence}
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** The reference's post-processing stage as pure dataflow
   * (post_process.py:83-414; SURVEY.md §2.5, §7.6).
   *
   * Order of stages matches the reference pipeline: lookup fix-up →
-  * within-doc majority-vote relabel → cross-doc top-K vote
-  * relabel/delete → dictionary-driven span insertion with greedy
-  * overlap suppression. Deterministic replacements for the reference's
-  * order-sensitive bits are pinned:
+  * within-doc majority-vote relabel → cross-doc top-K vote relabel →
+  * dictionary-driven span insertion with greedy overlap suppression.
+  * No stage deletes a mention. Each stage's rule is written once, as a
+  * per-document (or per-mention) function; the Dataset-level stage
+  * functions apply it to a stream keyed by (repo, path), and
+  * [[docKernel]] applies fix-up, within-doc vote and insertion to one
+  * file inside the per-file decode pass, leaving the cross-doc count as
+  * the only step that reads more than one document
+  * ([[crossDocVoteFlagged]]). Deterministic replacements for the
+  * reference's order-sensitive bits are pinned:
   *  - vote ties broken by (count desc, tag asc) — the reference's
   *    first-seen-wins `>` scan (post_process.py:253-261) is
   *    dict-order-dependent;
   *  - top-K n-gram ties broken by (count desc, ngram asc)
   *    (post_process.py:294 relies on Python sort stability);
   *  - greedy insertion runs per doc in (sentIdx, start, end, text)
-  *    order inside a cogroup (the reference mutates its span list in
-  *    file order, post_process.py:176-193);
+  *    order (the reference mutates its span list in file order,
+  *    post_process.py:176-193);
   *  - the mutation-during-iteration skip bug at post_process.py:327-334
-  *    is NOT copied: all matches are relabeled/deleted (intended
-  *    semantics, SURVEY.md §7.6.3).
+  *    is NOT copied: all matches are relabeled (intended semantics,
+  *    SURVEY.md §7.6.3).
   */
 /** Candidate span for dictionary-driven insertion. Public: Spark's
   * generated code calls the accessors directly, so the encoder class
   * cannot be private. */
 final case class Cand(sIdx: Int, s0: Int, e0: Int, text: String, tag: String)
 
+/** A mention out of [[PostProcess.docKernel]]: `inserted` marks a
+  * dictionary insertion, which the cross-doc vote neither counts nor
+  * relabels (in the reference it runs after that vote). */
+final case class Flagged(repo: String, path: String, sentIdx: Int,
+    start: Int, end: Int, text: String, tag: String, conf: Double,
+    inserted: Boolean)
+
 object PostProcess {
 
-  /** Stage 1: lookup-table fix-up with the reference's full precedence
-    * (post_process.py:117-122, 139-157): for DF-genre docs a span found
-    * in the author list relabels to PER BEFORE the general lookup table
-    * is consulted; otherwise lookup > predicted. Genre is derived from
-    * the doc id exactly as the reference does (`doc_id.split('_')[1]`,
-    * post_process.py:146) — our doc id is the mention's `path`; paths
-    * without a second '_' field carry no genre and skip the author
-    * branch. Authors match on exact surface (the reference's
-    * `span in author_lookup` — WL XML author values, extract_authors.py
-    * :6-26); the lookup table stays canonicalized-lowercase as
-    * established. Both tables are corpus-size-independent broadcasts;
-    * the stage is narrow. */
+  private def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
+
+  /** The stages' defaults: votes a within-doc winner needs to exceed,
+    * top-K keys of the cross-doc vote, longest inserted n-gram. */
+  private val ConfNum = 2
+  private val TopK = 20
+  private val MaxN = 5
+
+  /** Stage 1's rule for one mention: lookup-table fix-up with the
+    * reference's full precedence (post_process.py:117-122, 139-157):
+    * for DF-genre docs a span found in the author list relabels to PER
+    * BEFORE the general lookup table is consulted; otherwise lookup >
+    * predicted. Genre is derived from the doc id exactly as the
+    * reference does (`doc_id.split('_')[1]`, post_process.py:146) —
+    * our doc id is the mention's `path`; paths without a second '_'
+    * field carry no genre and skip the author branch. Authors match on
+    * exact surface (the reference's `span in author_lookup` — WL XML
+    * author values, extract_authors.py:6-26); the lookup table stays
+    * canonicalized-lowercase as established. */
+  private def fixup(m: Mention, lookup: Map[String, String],
+      authors: Set[String]): Mention = {
+    val genre = {
+      val f = m.path.split('_')
+      if (f.length > 1) f(1) else ""
+    }
+    val fixed =
+      if (genre == "DF" && authors.contains(m.text)) Some("PER")
+      else lookup.get(lc(m.text))
+    fixed match {
+      case Some(tag) if tag != m.tag => m.copy(tag = tag)
+      case _ => m
+    }
+  }
+
+  /** Stage 2's rule for one document's mentions, order kept
+    * (post_process.py:245-261 + relabel): for every span text
+    * (lowercased) whose winning tag by (count desc, tag asc) has
+    * count > confNum, relabel all its occurrences to that tag. */
+  private def voteDoc(ms: Seq[Mention], confNum: Int): Seq[Mention] =
+    if (ms.size <= confNum) ms // no tag can have more than confNum votes
+    else {
+      val winners = ms.groupBy(m => lc(m.text)).flatMap { case (k, g) =>
+        val (tag, n) = g.groupBy(_.tag).iterator
+          .map { case (t, xs) => (t, xs.size) }
+          .minBy { case (t, n) => (-n, t) }
+        if (n > confNum) Some(k -> tag) else None
+      }
+      if (winners.isEmpty) ms
+      else ms.map { m =>
+        winners.get(lc(m.text)) match {
+          case Some(tag) if tag != m.tag => m.copy(tag = tag)
+          case _ => m
+        }
+      }
+    }
+
+  /** Stage 4's probe for one sentence: every n-gram (n ≤ maxN) whose
+    * lowercased text is a dictionary entry. First-token-indexed, so a
+    * position whose token starts no entry costs one map lookup and no
+    * allocation (the naive per-position n-gram enumeration builds maxN
+    * strings per token — profiled as the pipeline's top CPU sink at 32
+    * threads). */
+  private def candidates(s: Sentence, maxN: Int,
+      idx: Map[String, Vector[(Vector[String], String)]]): Vector[Cand] = {
+    val lower = s.tokens.map(lc)
+    val out = Vector.newBuilder[Cand]
+    var i = 0
+    while (i < lower.length) {
+      idx.get(lower(i)).foreach { entries =>
+        entries.foreach { case (toks, tag) =>
+          val n = toks.length
+          if (n <= maxN && i + n <= lower.length) {
+            var k = 1
+            var ok = true
+            while (ok && k < n) { ok = lower(i + k) == toks(k); k += 1 }
+            if (ok)
+              out += Cand(s.sentIdx, s.starts(i), s.ends(i + n - 1),
+                s.tokens.slice(i, i + n).mkString(" "), tag)
+          }
+        }
+      }
+      i += 1
+    }
+    out.result()
+  }
+
+  /** Stage 4's greedy scan for one document: the candidates, in
+    * canonical (sentIdx, start, end, text) order, that overlap neither
+    * an existing mention nor an earlier insertion, as new mentions.
+    * Overlap = s1 < e2 && s2 < e1 on [start, end) offsets (reference
+    * predicate `not (e1 < s2 or e2 < s1)` on inclusive ends,
+    * post_process.py:124-134). */
+  private def insertDoc(repo: String, path: String, existing: Seq[Mention],
+      cands: Seq[Cand]): Vector[Mention] =
+    if (cands.isEmpty) Vector.empty
+    else {
+      val accepted = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
+      existing.foreach(m => accepted += ((m.sentIdx, m.start, m.end)))
+      val inserted = Vector.newBuilder[Mention]
+      cands.sortBy(c => (c.sIdx, c.s0, c.e0, c.text)).foreach { c =>
+        val overlaps = accepted.exists { case (si, s0, e0) =>
+          si == c.sIdx && c.s0 < e0 && s0 < c.e0
+        }
+        if (!overlaps) {
+          accepted += ((c.sIdx, c.s0, c.e0))
+          inserted += Mention(repo, path, c.sIdx, c.s0, c.e0, c.text,
+            c.tag, 1.0)
+        }
+      }
+      inserted.result()
+    }
+
+  /** Stages 1, 2 and 4 on one document inside a per-file pass. Broadcasts
+    * the tables on the driver and returns the task-side factory (called
+    * once per partition) of the per-document function, which takes the
+    * document's sentences and decoded mentions and returns the
+    * fixed-up, voted mentions, then the insertions flagged. Insertion
+    * runs before the cross-doc vote here, which matches the reference
+    * order (cross vote, then insertion): insertion tests only span
+    * positions, the cross vote changes only tags, and the flag keeps
+    * inserted mentions out of its counts and relabel. One call is one
+    * document: two input rows with the same (repo, path) are not merged
+    * by the vote or the insertion, unlike the Dataset-level stages. */
+  def docKernel(sc: SparkContext, authors: Set[String] = Set.empty,
+      lookup: Map[String, String] = Dict.lookupTable,
+      lookupIndex: Map[String, Vector[(Vector[String], String)]] =
+        Dict.lookupIndex)
+      : () => (Seq[Sentence], Seq[Mention]) => Iterator[Flagged] = {
+    val bLookup = sc.broadcast(lookup)
+    val bAuthors = sc.broadcast(authors)
+    val bIdx = sc.broadcast(lookupIndex)
+    () => {
+      val lookup = bLookup.value; val auth = bAuthors.value
+      val idx = bIdx.value
+      (sents, decoded) => {
+        val voted = voteDoc(decoded.map(fixup(_, lookup, auth)), ConfNum)
+        val ins = sents.headOption.fold(Vector.empty[Mention]) { s =>
+          insertDoc(s.repo, s.path, voted,
+            sents.flatMap(candidates(_, MaxN, idx)))
+        }
+        voted.iterator.map(flag(_, inserted = false)) ++
+          ins.iterator.map(flag(_, inserted = true))
+      }
+    }
+  }
+
+  private def flag(m: Mention, inserted: Boolean) = Flagged(m.repo,
+    m.path, m.sentIdx, m.start, m.end, m.text, m.tag, m.conf, inserted)
+
+  /** Stage 1 over a mention stream: [[fixup]] per mention. Both tables
+    * are corpus-size-independent broadcasts; the stage is narrow. */
   def lookupFixup(mentions: Dataset[Mention],
       authors: Set[String] = Set.empty,
       lookup: Map[String, String] = Dict.lookupTable)
@@ -55,63 +207,17 @@ object PostProcess {
     mentions.mapPartitions { it =>
       val lookup = bLookup.value
       val auth = bAuthors.value
-      it.map { m =>
-        val genre = {
-          val f = m.path.split('_')
-          if (f.length > 1) f(1) else ""
-        }
-        val fixed =
-          if (genre == "DF" && auth.contains(m.text)) Some("PER")
-          else lookup.get(m.text.toLowerCase(java.util.Locale.ROOT))
-        fixed match {
-          case Some(tag) if tag != m.tag => m.copy(tag = tag)
-          case _ => m
-        }
-      }
+      it.map(fixup(_, lookup, auth))
     }
   }
 
-  /** Stage 2: within-document majority vote (post_process.py:245-261 +
-    * relabel): for every (doc, span text) occurring with >1 distinct
-    * tag, relabel all occurrences to the majority tag when the winning
-    * count > confNum; ties (count desc, tag asc) — the reference's
-    * first-seen `>` scan is dict-order-dependent, ours is pinned.
-    *
-    * Pure window form: per-(doc, key, tag) counts, then the winner per
-    * (doc, key) by (count desc, tag asc). The input is consumed ONCE —
-    * no self-join, no materialization barrier — so the stage is two
-    * keyed exchanges of the mention stream and nothing else (the old
-    * agg + relabel-join shape needed a localCheckpoint to avoid
-    * recomputing the whole decode per consumer). */
-  def withinDocVote(mentions: Dataset[Mention], confNum: Int = 2)
+  /** Stage 2 over a mention stream: [[voteDoc]] per (repo, path)
+    * group — one keyed exchange of the stream. */
+  def withinDocVote(mentions: Dataset[Mention], confNum: Int = ConfNum)
       : Dataset[Mention] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    // ONE exchange for the whole stage: the per-(doc, key, tag) count
-    // is a peers-frame count (RANGE CURRENT ROW..CURRENT ROW over
-    // ORDER BY tag groups equal tags) on the SAME (doc, key)
-    // partitioning the winner windows need — partitioning by
-    // (doc, key, tag) for the count would force a second exchange.
-    // The key is materialized ONCE ("vkey"): inline lower(text) would
-    // be re-derived as a fresh _w attribute per window layer, and the
-    // partitionings would no longer line up.
-    val wKey =
-      Window.partitionBy(col("repo"), col("path"), col("vkey"))
-    val wPeers = wKey.orderBy(col("tag"))
-      .rangeBetween(Window.currentRow, Window.currentRow)
-    val wBest = wKey.orderBy(desc("n"), asc("tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    mentions.toDF()
-      .withColumn("vkey", lower(col("text")))
-      .withColumn("n", count(lit(1)).over(wPeers))
-      .withColumn("bestTag", first(col("tag")).over(wBest))
-      .withColumn("bestN", max(col("n")).over(wKey))
-      .select(col("repo"), col("path"), col("sentIdx"), col("start"),
-        col("end"), col("text"),
-        when(col("bestN") > confNum, col("bestTag"))
-          .otherwise(col("tag")).as("tag"),
-        col("conf"))
-      .as[Mention]
+    import mentions.sparkSession.implicits._
+    mentions.groupByKey(m => (m.repo, m.path))
+      .flatMapGroups((_, ms) => voteDoc(ms.toVector, confNum))
   }
 
   /** Stage 3: cross-document vote over the top-K most frequent span
@@ -119,21 +225,18 @@ object PostProcess {
     * docs; matching mentions relabeled (intended semantics — no
     * skip-next bug).
     *
-    * Counts-only shape: the mention stream feeds ONE narrow aggregate
-    * — per-(key, tag) counts — and everything the vote needs (per-key
-    * frequency for top-K membership, per-key winner) derives from that
-    * frame; the vote dictionary is broadcast back onto the ORIGINAL
-    * stream. The full stream is never materialized (round 3's
-    * localCheckpoint is gone): the aggregate branch and the output
-    * branch reference the identical upstream subplan, so within one
-    * action the upstream exchange is computed once and re-read
-    * (ReusedExchange — PlanSpec asserts no checkpoint scan survives in
-    * the plan). At 100 TB the only stream-sized cost is that single
-    * (key, tag) map-side-combined aggregate. */
-  def crossDocVote(mentions: Dataset[Mention], topK: Int = 20)
+    * Counts-only shape: the mention stream feeds ONE map-side-combined
+    * aggregate — per-(key, tag) counts — and everything the vote needs
+    * (per-key frequency for top-K membership, per-key winner) derives
+    * from that frame; the vote dictionary is broadcast back onto the
+    * ORIGINAL stream. The full stream is never materialized: the
+    * aggregate branch and the output branch reference the identical
+    * upstream subplan, so within one action the upstream exchange is
+    * computed once and re-read (ReusedExchange — PlanSpec asserts no
+    * checkpoint scan survives in the plan). */
+  def crossDocVote(mentions: Dataset[Mention], topK: Int = TopK)
       : Dataset[Mention] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
+    import mentions.sparkSession.implicits._
     // typed identity barrier: column pruning cannot cross the object
     // boundary, so BOTH branches keep the identical full-width subtree
     // below it — without this, the aggregate branch prunes to
@@ -141,104 +244,80 @@ object PostProcess {
     // sameResult, and the whole decode chain runs twice instead of the
     // exchange being reused (measured: headline 4.57 s vs 4.17 s at
     // rep 8)
-    val df = mentions.map(identity).toDF()
-      .withColumn("key", lower(col("text")))
-    val agg = df.groupBy("key", "tag").agg(count(lit(1)).as("n"))
-    // winner per key by (n desc, tag asc); top-K keys by total
-    // frequency (freq desc, key asc) — both windows share the one
-    // materialized-key exchange of the tiny counts frame
-    val winners = agg
-      .withColumn("freq", sum(col("n")).over(Window.partitionBy("key")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("key").orderBy(desc("n"), asc("tag"))))
-      .filter(col("rk") === 1)
+    crossVote(mentions.map(identity).toDF()
+      .withColumn("inserted", lit(false)), topK)
+  }
+
+  /** Stage 3 over [[docKernel]]'s output, the only cross-file step of
+    * the fused pass: ONE exchange of the stream on (repo, path), read
+    * by both the (key, tag) count and the broadcast relabel (the typed
+    * barrier above it keeps both subtrees identical, so the per-file
+    * pass below runs once per action). Inserted mentions are neither
+    * counted nor relabeled. */
+  def crossDocVoteFlagged(flagged: Dataset[Flagged]): Dataset[Mention] = {
+    import flagged.sparkSession.implicits._
+    crossVote(flagged.repartition(col("repo"), col("path"))
+      .map(identity).toDF(), TopK)
+  }
+
+  /** The cross-doc vote over a mention frame with an `inserted`
+    * column. */
+  private def crossVote(df: DataFrame, topK: Int): Dataset[Mention] = {
+    import df.sparkSession.implicits._
+    val keyed = df.withColumn("key", lower(col("text")))
+    // per-(key, tag) counts, then per key its total frequency and its
+    // winner by (n desc, tag asc) as the min of (-n, tag); top-K keys
+    // by (freq desc, key asc)
+    val winners = keyed.filter(!col("inserted"))
+      .groupBy("key", "tag").agg(count(lit(1)).as("n"))
+      .groupBy("key").agg(sum(col("n")).as("freq"),
+        min(struct((-col("n")).as("negN"), col("tag"))).as("best"))
       .orderBy(desc("freq"), asc("key")).limit(topK)
-      .select(col("key"), col("tag").as("voteTag"))
-    df.join(broadcast(winners), Seq("key"), "left")
+      .select(col("key"), col("best.tag").as("voteTag"))
+    keyed.join(broadcast(winners), Seq("key"), "left")
       .select(col("repo"), col("path"), col("sentIdx"), col("start"),
         col("end"), col("text"),
-        coalesce(col("voteTag"), col("tag")).as("tag"), col("conf"))
+        when(col("inserted"), col("tag"))
+          .otherwise(coalesce(col("voteTag"), col("tag"))).as("tag"),
+        col("conf"))
       .as[Mention]
   }
 
-
-  /** Stage 4: dictionary-driven span insertion
-    * (post_process.py:176-193, 214-233): every doc n-gram (n ≤ 5)
+  /** Stage 4 over sentence and mention streams
+    * (post_process.py:176-193, 214-233): every doc n-gram (n ≤ maxN)
     * whose lowercased text is in the lookup table becomes a new
     * mention unless it overlaps an already-predicted or
-    * already-inserted span — greedy, per doc, in canonical
-    * (sentIdx, start, end, text) order (SURVEY.md §7.6.1). Overlap =
-    * s1 < e2 && s2 < e1 on [start, end) offsets (reference predicate
-    * `not (e1 < s2 or e2 < s1)` on inclusive ends,
-    * post_process.py:124-134). Cogroup shuffles both sides by doc key
-    * once; the greedy scan is per-doc local. */
+    * already-inserted span (SURVEY.md §7.6.1). A narrow per-sentence
+    * [[candidates]] probe, a cogroup of candidates and mentions by
+    * (repo, path), then [[insertDoc]] per doc. */
   def insertFromLookup(sentences: Dataset[Sentence],
-      mentions: Dataset[Mention], maxN: Int = 5,
+      mentions: Dataset[Mention], maxN: Int = MaxN,
       lookupIndex: Map[String, Vector[(Vector[String], String)]] =
         Dict.lookupIndex): Dataset[Mention] = {
     val spark = sentences.sparkSession
     import spark.implicits._
     val bIdx = spark.sparkContext.broadcast(lookupIndex)
-    val cands = sentences.flatMap { s =>
-      // first-token-indexed probe: a position whose token starts no
-      // dictionary entry costs one map lookup and ZERO allocations.
-      // (The naive per-position n-gram enumeration builds maxN strings
-      // per token — allocation-bound: profiled as the pipeline's top
-      // CPU sink at 32 threads.)
+    val cands = sentences.mapPartitions { it =>
       val idx = bIdx.value
-      val lower = s.tokens.map(_.toLowerCase(java.util.Locale.ROOT))
-      val out = Vector.newBuilder[(String, String, Cand)]
-      var i = 0
-      while (i < lower.length) {
-        idx.get(lower(i)).foreach { entries =>
-          entries.foreach { case (toks, tag) =>
-            val n = toks.length
-            if (n <= maxN && i + n <= lower.length) {
-              var k = 1
-              var ok = true
-              while (ok && k < n) { ok = lower(i + k) == toks(k); k += 1 }
-              if (ok)
-                out += ((s.repo, s.path, Cand(s.sentIdx, s.starts(i),
-                  s.ends(i + n - 1),
-                  s.tokens.slice(i, i + n).mkString(" "), tag): Cand))
-            }
-          }
-        }
-        i += 1
-      }
-      out.result()
+      it.flatMap(s =>
+        candidates(s, maxN, idx).map(c => (s.repo, s.path, c)))
     }
     val byDocCands = cands.groupByKey { case (r, p, _) => (r, p) }
     val byDocMentions = mentions.groupByKey(m => (m.repo, m.path))
     byDocCands.cogroup(byDocMentions) { case ((repo, path), cs, ms) =>
       val existing = ms.toVector
-      val accepted = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
-      existing.foreach(m => accepted += ((m.sentIdx, m.start, m.end)))
-      val inserted = Vector.newBuilder[Mention]
-      cs.map(_._3).toVector
-        .sortBy(c => (c.sIdx, c.s0, c.e0, c.text))
-        .foreach { c =>
-          val overlaps = accepted.exists { case (si, s0, e0) =>
-            si == c.sIdx && c.s0 < e0 && s0 < c.e0
-          }
-          if (!overlaps) {
-            accepted += ((c.sIdx, c.s0, c.e0))
-            inserted += Mention(repo, path, c.sIdx, c.s0, c.e0,
-              c.text, c.tag, 1.0)
-          }
-        }
-      existing ++ inserted.result()
+      existing ++ insertDoc(repo, path, existing, cs.map(_._3).toVector)
     }
   }
 
-  /** Full reference post-processing chain (main.py:357-376 order).
-    * `lookup`/`lookupIndex` default to the eng dictionary; the
-    * pipeline passes its [[graft.pipeline.LangPack]]'s tables
-    * ([[graft.crf.LangModel.lookupTable]]/`lookupIndex`) so a non-eng
-    * corpus is never fixed up or back-filled against English entries
-    * (the reference builds its lookup per language from setE data). */
+  /** Full reference post-processing chain (main.py:357-376 order), one
+    * Dataset-level stage after another. `lookup`/`lookupIndex` default
+    * to the eng dictionary; the checkpointed pipeline passes its
+    * [[graft.pipeline.LangPack]]'s tables so a non-eng corpus is never
+    * fixed up or back-filled against English entries (the reference
+    * builds its lookup per language from setE data). */
   def apply(sentences: Dataset[Sentence], mentions: Dataset[Mention],
-      confNum: Int = 2, topK: Int = 20,
+      confNum: Int = ConfNum, topK: Int = TopK,
       authors: Set[String] = Set.empty,
       lookup: Map[String, String] = Dict.lookupTable,
       lookupIndex: Map[String, Vector[(Vector[String], String)]] =

@@ -52,10 +52,11 @@ class PlanSpec extends SparkTestBase {
       graft.core.Mention("r", "p", 0, 0, 4, "Acme", "ORG", 1.0),
       graft.core.Mention("r", "p", 0, 9, 13, "Acme", "PER", 1.0),
       graft.core.Mention("r", "p", 1, 2, 6, "Acme", "ORG", 1.0))
-      .toDS().repartition(4) // barrier: keep the windows in the plan
+      .toDS().repartition(4) // barrier: keep the vote exchange in the plan
     val plan = graft.postprocess.PostProcess.withinDocVote(ms)
       .queryExecution.executedPlan.toString
-    // the repartition above + exactly ONE window exchange
+    // the repartition above + exactly ONE keyed exchange (the per-doc
+    // vote is a groupByKey; the windows this name describes are gone)
     assert("Exchange".r.findAllIn(plan).size == 2, plan.take(800))
   }
 
@@ -86,6 +87,32 @@ class PlanSpec extends SparkTestBase {
     // and the vote itself still holds: Acme -> ORG everywhere
     assert(out.collect().forall(m =>
       m.text != "Acme" || m.tag == "ORG"))
+  }
+
+  test("Pipeline.triples runs post-process in the per-file pass: no " +
+      "Window, CoGroup or SortMergeJoin, and one mention-stream " +
+      "exchange read by both cross-vote branches") {
+    val out = graft.pipeline.Pipeline.triples(
+      graft.core.Corpus.synthesize(spark, 50))
+    assert(out.collect().nonEmpty) // AQE finalizes the executed plan
+    val plan = out.queryExecution.executedPlan.toString
+    Seq("Window", "CoGroup", "SortMergeJoin").foreach { op =>
+      assert(!plan.contains(op), s"$op in plan:\n$plan")
+    }
+    val fin = plan.split("== Initial Plan ==")(0)
+    // the per-file pass appears once: each file is decoded once per action
+    assert("MapPartitions graft\\.pipeline\\.Pipeline".r
+      .findAllIn(fin).size == 1, fin)
+    // it feeds one exchange on (repo, path) …
+    val stream = "Exchange hashpartitioning\\(repo#\\d+, path#\\d+, \\d+\\)"
+    assert(s"(?m)^[\\s:+-]*$stream".r.findAllIn(fin).size == 1, fin)
+    // … whose one stage both the (key, tag) count and the relabel read:
+    // a ReusedExchange of it, or under AQE its stage id appearing twice
+    val stageIds = s"ShuffleQueryStage (\\d+)\\s*\\n[\\s:+-]*$stream".r
+      .findAllMatchIn(fin).map(_.group(1)).toSet
+    assert(s"ReusedExchange [^\\n]*$stream".r.findFirstIn(fin).isDefined ||
+      stageIds.exists(id => s"ShuffleQueryStage $id\\s".r
+        .findAllIn(fin).size > 1), fin)
   }
 
   test("triples are one linear chain: no join, no checkpoint, at most " +

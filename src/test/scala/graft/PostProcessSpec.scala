@@ -2,6 +2,7 @@ package graft
 
 import graft.core.{Mention, Sentence}
 import graft.postprocess.PostProcess
+import org.apache.spark.sql.Dataset
 
 class PostProcessSpec extends SparkTestBase {
 
@@ -157,5 +158,116 @@ class PostProcessSpec extends SparkTestBase {
     val got = PostProcess.insertFromLookup(sents,
       spark.emptyDataset[Mention]).collect()
     assert(got.map(_.text).toSeq == Seq("Lake Tana"))
+  }
+
+  // ---- the per-document kernel against the Dataset-level chain ----------
+
+  private def sent(path: String, idx: Int, text: String): Sentence = {
+    val toks = text.split(' ')
+    var pos = 0
+    val starts = toks.map { t => val p = pos; pos += t.length + 1; p }
+    val ends = toks.zip(starts).map { case (t, st) => st + t.length }
+    Sentence("r", path, idx, toks, starts, ends)
+  }
+
+  /** The mention over tokens [i, i + n) of `s`. */
+  private def over(s: Sentence, i: Int, n: Int, tag: String) =
+    Mention(s.repo, s.path, s.sentIdx, s.starts(i), s.ends(i + n - 1),
+      s.tokens.slice(i, i + n).mkString(" "), tag, 1.0)
+
+  /** Decoder output with planted errors, one kind per stage:
+    *  - fix-up: a dictionary name with the wrong type;
+    *  - within-doc vote: one text tagged ORG three times and PER once
+    *    in one doc;
+    *  - cross-doc vote: a text held once per doc, ORG in four docs and
+    *    PER in two;
+    *  - insertion: dictionary names with no mention.
+    * And the named case: "Addis Ababa" is an author, so in DF-genre
+    * docs fix-up makes it PER, which wins its cross-doc vote; a dropped
+    * occurrence in a news doc is inserted with its lookup tag (GPE). */
+  private val authors = Set("Addis Ababa")
+  private val planted: Seq[(Sentence, Seq[Mention])] = {
+    val a0 = sent("a", 0, "Ada Lovelace met Zorblax")
+    val a1 = sent("a", 1, "Zorblax and Zorblax saw Zorblax")
+    val a2 = sent("a", 2, "near Lake Tana today")
+    val cross = (1 to 6).map { i =>
+      val s = sent(s"c$i", 0, "Quuxcorp is here")
+      s -> Seq(over(s, 0, 1, if (i <= 4) "ORG" else "PER"))
+    }
+    val df = (1 to 3).map { i =>
+      val s = sent(s"x_DF_$i", 0, "Addis Ababa spoke")
+      s -> Seq(over(s, 0, 2, "GPE"))
+    }
+    val nw1 = sent("n_NW_1", 0, "visit Addis Ababa now")
+    val nw2 = sent("n_NW_2", 0, "Addis Ababa again")
+    Seq(
+      a0 -> Seq(over(a0, 0, 2, "ORG"), over(a0, 3, 1, "ORG")),
+      a1 -> Seq(over(a1, 0, 1, "ORG"), over(a1, 2, 1, "ORG"),
+        over(a1, 4, 1, "PER")),
+      a2 -> Nil,
+      nw1 -> Nil,
+      nw2 -> Seq(over(nw2, 0, 2, "GPE"))) ++ cross ++ df
+  }
+
+  /** [[PostProcess.docKernel]] per doc, then the flagged cross vote —
+    * the post-process half of the fused pipeline pass. */
+  private def kernelChain(docs: Seq[(Sentence, Seq[Mention])])
+      : Dataset[Mention] = {
+    val s = spark
+    import s.implicits._
+    val kernel = PostProcess.docKernel(spark.sparkContext, authors)
+    val byDoc = docs.groupBy(_._1.path).values.toSeq.map { d =>
+      val ordered = d.sortBy(_._1.sentIdx)
+      (ordered.map(_._1), ordered.flatMap(_._2))
+    }
+    PostProcess.crossDocVoteFlagged(byDoc.toDS().mapPartitions { it =>
+      val post = kernel()
+      it.flatMap { case (ss, ms) => post(ss, ms) }
+    })
+  }
+
+  private def changed[T](a: Dataset[T], b: Dataset[T]): Long =
+    a.exceptAll(b).count()
+
+  private def key(m: Mention) = (m.path, m.sentIdx, m.start, m.end, m.text,
+    m.tag)
+
+  test("per-doc kernel + flagged cross vote equals lookupFixup → " +
+      "withinDocVote → crossDocVote → insertFromLookup on planted " +
+      "decoder errors") {
+    val s = spark
+    import s.implicits._
+    val sents = planted.map(_._1).toDS()
+    val raw = planted.flatMap(_._2).toDS()
+    val fix = PostProcess.lookupFixup(raw, authors)
+    val within = PostProcess.withinDocVote(fix)
+    val cross = PostProcess.crossDocVote(within)
+    val ins = PostProcess.insertFromLookup(sents, cross)
+    // every stage acts on the planted errors
+    assert(changed(fix, raw) > 0)
+    assert(changed(within, fix) > 0)
+    assert(changed(cross, within) > 0)
+    assert(ins.count() > cross.count())
+    val want = ins.collect().map(key).sorted.toSeq
+    val got = kernelChain(planted).collect().map(key).sorted.toSeq
+    assert(got == want)
+    // and the stages gave the intended answers
+    val tags = got.map(k => (k._1, k._5) -> k._6).groupMap(_._1)(_._2)
+    assert(tags(("a", "Ada Lovelace")) == Seq("PER"))
+    assert(tags(("a", "Zorblax")).forall(_ == "ORG"))
+    assert((1 to 6).forall(i => tags((s"c$i", "Quuxcorp")) == Seq("ORG")))
+    assert(tags(("a", "Lake Tana")) == Seq("LOC"))
+  }
+
+  test("an inserted mention whose text won a different tag in the " +
+      "cross-doc vote keeps its lookup tag") {
+    val got = kernelChain(planted).collect()
+      .filter(_.text == "Addis Ababa").map(m => m.path -> m.tag).toMap
+    // DF docs: the author branch → PER, 3 of 4 votes: PER wins the key
+    assert((1 to 3).forall(i => got(s"x_DF_$i") == "PER"))
+    // a decoded mention in a news doc is relabeled by the vote …
+    assert(got("n_NW_2") == "PER")
+    // … an inserted one is not: the reference inserts after the vote
+    assert(got("n_NW_1") == "GPE")
   }
 }

@@ -15,4 +15,14 @@ class RefDataSpec extends AnyFunSuite {
     assert(e.getMessage.contains("probe table") &&
       e.getMessage.contains(e.absolutePath), e.getMessage)
   }
+
+  test("GRAFT_REF_ROOT overrides the reference root, and a missing " +
+      "input's message names the variable") {
+    val alt = Paths.get("elsewhere/reference")
+    assert(RefData.rootFrom(Map(RefData.RootVar -> alt.toString)) == alt)
+    assert(RefData.rootFrom(Map.empty) != alt)
+    val e = intercept[RefData.Missing](
+      RefData.Input("gaz", alt.resolve("utils/gaz.csv")).existing)
+    assert(e.getMessage.contains("GRAFT_REF_ROOT"), e.getMessage)
+  }
 }

@@ -4,6 +4,7 @@ import graft.conll.ConllOps
 import graft.core.Corpus
 import graft.io.TableIO
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class TableIOSnapshotSpec extends SparkTestBase {
 
@@ -33,5 +34,36 @@ class TableIOSnapshotSpec extends SparkTestBase {
     assert(got("Paris") == (Some(Seq(1.0, 0.0)), false)) // exact wins
     assert(got("Tokyo") == (Some(Seq(0.0, 1.0)), true))  // fallback
     assert(got("unknown")._1.isEmpty)
+  }
+
+  test("lineage sidecar is escaped JSON: a partition value with a quote " +
+      "and a backslash parses, and the snapshot reads back") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_lineage")
+      .toString
+    val odd = "a\"b\\c"
+    val snap = "snap\"1\\x"
+    val df = Seq((1, odd), (2, odd), (3, "plain")).toDF("v", "part")
+    TableIO.writeStage(df, root, "t", snap, Seq("part"))
+    val dir = java.nio.file.Paths.get(root, "t")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(dir.resolve("_lineage.json").toFile)
+    assert(json.get("snapshot").asText() == snap)
+    assert(json.get("partitions").get(odd).asLong() == 2)
+    assert(json.get("partitions").get("plain").asLong() == 1)
+    assert(json.get("rows").asLong() == 3)
+    assert(TableIO.committedSnapshot(root, "t").contains(snap))
+    // the temp file was renamed into place, not left behind
+    val left = java.nio.file.Files.list(dir)
+    try assert(!left.iterator().asScala.exists(
+      _.getFileName.toString.endsWith(".tmp")))
+    finally left.close()
+    // and the committed snapshot resumes
+    assert(TableIO.writeStage(df, root, "t", snap, Seq("part")).count() == 3)
+    // a sidecar in the old unescaped form does not parse: no commit
+    java.nio.file.Files.writeString(dir.resolve("_lineage.json"),
+      "{\"snapshot\": \"s\", \"partitions\": {\"a'b\\c\": 2}}")
+    assert(TableIO.committedSnapshot(root, "t").isEmpty)
   }
 }

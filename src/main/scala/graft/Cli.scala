@@ -1,9 +1,10 @@
 package graft
 
 import graft.conll.ConllOps
-import graft.core.{Dict, RefData, Sentence}
+import graft.core.{RefData, Sentence}
 import graft.crf.FitCrf
 import graft.eval.SpanPRF1
+import graft.features.Brown
 import graft.io.ModelIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,7 +19,10 @@ import org.apache.spark.sql.functions._
   * fit   --train <conll> --out <modelDir> [--k 0.1] [--min-count 2]
   *       [--rare-max 2] [--lambda 0]          closed-form fit (seconds)
   * train --out <modelDir> [--epochs 300] [--lr 1.0] [--l2 3e-5]
-  *       discriminative trainWords over the in-tree eng data
+  *       [--clusters <C>]
+  *       discriminative trainWords over the in-tree eng data; with
+  *       --clusters, OOV-gated rows of C Brown clusters of eng.train
+  *       (the shipped models/eng.fitted: --clusters 256)
   * tag   [--model <modelDir>] --in <conll> --out <dir>
   *       decode + write `word NNP NP tag` prediction lines (main.py
   *       sink format); --model defaults to the shipped
@@ -32,12 +36,19 @@ import org.apache.spark.sql.functions._
   *       line text> --out <dir> [--gaz [--gaz-csv <path>]]
   *       per-token segnerfts.extract parity rows (15-dim type/token,
   *       24-dim with --gaz's case-sensitive B/I/O match) → parquet
+  * brown [--out models/eng.brown.tsv] [--clusters 256] [--passes 3]
+  *       Brown clusters of eng.train as the 3-column TSV the
+  *       reference's `--brown_cluster_path` reads (features.py:16-29)
   * }}}
   *
-  * All modes read/write CoNLL text or parquet; MISC maps to the GPE
+  * All modes read/write CoNLL text, TSV or parquet; MISC maps to the GPE
   * slot as everywhere (FitEval.tagIdOf).
   */
 object Cli {
+
+  private val modes =
+    Seq("fit", "train", "tag", "eval", "kg", "features", "brown")
+  private val usage = s"usage: Cli <${modes.mkString("|")}> ..."
 
   private def arg(args: Array[String], name: String): Option[String] = {
     val i = args.indexOf(name)
@@ -81,27 +92,10 @@ object Cli {
     * micro line. */
   def evalModel(spark: SparkSession, model: FitCrf.FittedModel,
       testPath: String): DataFrame = {
-    import spark.implicits._
-    val testSents = ConllOps.conllFileSentences(spark, testPath)
-      .map(s => (s.sentId, s.words, s.tags.map(FitEval.tagIdOf)))
-    val gold = FitEval.spansOf(testSents.map { case (id, words, tags) =>
-      graft.core.TaggedSentence("eng", "test", id.toInt, words,
-        Array.tabulate(words.length)(i => i),
-        Array.tabulate(words.length)(i => i + 1),
-        tags.map(Dict.tags))
-    })
-    val pred = FitEval.spansOf(
-      FitCrf.tag(FitEval.toSentences(testSents), model))
-    val perType = SpanPRF1.evaluate(pred, gold)
-    val rows = perType.collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    val tp = rows.map(_._1).sum.toDouble
-    val fp = rows.map(_._2).sum
-    val fn = rows.map(_._3).sum
-    val p = tp / math.max(tp + fp, 1)
-    val rc = tp / math.max(tp + fn, 1)
-    val f1 = if (p + rc == 0) 0.0 else 2 * p * rc / (p + rc)
-    println(f"micro P=$p%.4f R=$rc%.4f F1=$f1%.4f")
+    val perType =
+      FitEval.perTypeConll(spark, testPath, FitCrf.tag(_, model))
+    val c = SpanPRF1.micro(perType)
+    println(f"micro P=${c.precision}%.4f R=${c.recall}%.4f F1=${c.f1}%.4f")
     perType
   }
 
@@ -128,7 +122,8 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: Cli <fit|train|tag|eval|kg> ...")
+    require(args.nonEmpty, usage)
+    require(modes.contains(args(0)), s"unknown mode: ${args(0)}; $usage")
     val spark = Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     args(0) match {
@@ -148,21 +143,25 @@ object Cli {
         val model = FitEval.trainFullModel(spark,
           epochs = arg(args, "--epochs").map(_.toInt).getOrElse(300),
           lr = arg(args, "--lr").map(_.toDouble).getOrElse(1.0),
-          l2 = arg(args, "--l2").map(_.toDouble).getOrElse(3e-5))
+          l2 = arg(args, "--l2").map(_.toDouble).getOrElse(3e-5),
+          clusters = arg(args, "--clusters")
+            .map(c => FitEval.engClusters(spark, c.toInt))
+            .getOrElse(Map.empty))
         ModelIO.saveFitted(spark, model, out)
-        println(s"trained model (vocab ${model.wordW.size}) -> $out")
+        println(s"trained model (vocab ${model.wordW.size}, clusters " +
+          s"${model.clusterW.size}) -> $out")
       case "tag" =>
-        // default = the shipped in-repo artifact (ShipModel), so the
-        // best trained model serves without --model or retraining
+        // default = the shipped in-repo artifact, so the best trained
+        // model serves without --model or retraining
         val model = ModelIO.loadFitted(spark,
-          arg(args, "--model").getOrElse(ShipModel.defaultPath))
+          arg(args, "--model").getOrElse(ModelIO.defaultFittedPath))
         val out = req(args, "--out")
         writePredictions(tagFile(spark, model, req(args, "--in")),
           out)
         println(s"predictions -> $out")
       case "eval" =>
         val model = ModelIO.loadFitted(spark,
-          arg(args, "--model").getOrElse(ShipModel.defaultPath))
+          arg(args, "--model").getOrElse(ModelIO.defaultFittedPath))
         evalModel(spark, model, req(args, "--test"))
           .orderBy("tag").show(20, truncate = false)
       case "kg" =>
@@ -203,7 +202,23 @@ object Cli {
           .write.mode("overwrite").parquet(out)
         println(s"features($lang${if (gaz.isDefined) "+gaz" else ""})" +
           s" -> $out")
-      case other => sys.error(s"unknown mode: $other")
+      case "brown" =>
+        import spark.implicits._
+        val out = arg(args, "--out").getOrElse("models/eng.brown.tsv")
+        val c = arg(args, "--clusters").map(_.toInt).getOrElse(256)
+        val lines = Brown.cluster(
+          ConllOps.conllFileSentences(spark, RefData.engTrain.existing)
+            .map(_.words),
+          numClusters = c,
+          passes = arg(args, "--passes").map(_.toInt).getOrElse(3))
+          .orderBy(desc("freq"), col("word")).collect()
+          .map(r => s"${r.getString(0)}\t${r.getString(1)}\t${r.getLong(2)}")
+        val p = java.nio.file.Paths.get(out)
+        if (p.getParent != null)
+          java.nio.file.Files.createDirectories(p.getParent)
+        java.nio.file.Files.write(p,
+          lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+        println(s"brown: ${lines.length} words in $c clusters -> $out")
     }
     spark.stop()
   }

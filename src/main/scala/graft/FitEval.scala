@@ -1,20 +1,19 @@
 package graft
 
 import graft.conll.ConllOps
-import graft.core.{Dict, RefData, Sentence}
+import graft.core.{Dict, RefData, Sentence, TaggedSentence}
 import graft.crf.FitCrf
 import graft.spans.Spans
 import graft.eval.SpanPRF1
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Measure the closed-form fit (SURVEY.md §7.3) on the reference's
-  * in-tree English CoNLL data: fit on eng.train, decode eng.test,
-  * report span P/R/F1 per hyperparameter setting. The CoNLL-2003 MISC
-  * type occupies the engine's 4th type slot (GPE) through an explicit
-  * bijection — span F1 is invariant under the renaming.
-  *
-  * Run: sbt "runMain graft.FitEval" — prints one line per config.
+/** The English model on the reference's in-tree CoNLL data: the
+  * closed-form fit (SURVEY.md §7.3) and the discriminative trainer on
+  * eng.train, and span P/R/F1 of a tagger on a gold CoNLL file
+  * ([[evalConll]]). The CoNLL-2003 MISC type occupies the engine's 4th
+  * type slot (GPE) through an explicit bijection — span F1 is invariant
+  * under the renaming.
   */
 object FitEval {
 
@@ -23,11 +22,12 @@ object FitEval {
   val trainPath: String = RefData.engTrain.path.toString
   val testPath: String = RefData.engTest.path.toString
 
-  /** The pinned English model: best configuration of the sweep below
-    * (measured span F1 = 0.7269 on eng.test's 5648 gold spans, P=0.731
-    * R=0.723 — the classic closed-form HMM-with-shape-backoff operating
-    * point; the reference's BiLSTM-CRF sits near 0.90 and is replaced
-    * by design, SURVEY.md §7.3). Gated at F1 ≥ 0.70 by EngModelSpec.
+  /** The pinned English model: best configuration of the closed-form
+    * sweep recorded in COVERAGE.md (measured span F1 = 0.7269 on
+    * eng.test's 5648 gold spans, P=0.731 R=0.723 — the classic
+    * closed-form HMM-with-shape-backoff operating point; the
+    * reference's BiLSTM-CRF sits near 0.90 and is replaced by design,
+    * SURVEY.md §7.3). Gated at F1 ≥ 0.70 by EngModelSpec.
     * The discriminative [[trainFullModel]] edges past it (0.7483 at
     * 300 epochs, 0.7528 at 600) at iterative-training cost; the
     * closed-form fit stays the default (seconds, no iteration). */
@@ -39,43 +39,15 @@ object FitEval {
     * word identity ∪ LEARNED shape-backoff rows (singleton training
     * words share per-shape-class ids, so the trainer fits the OOV
     * emission rows the way the closed-form fit estimates them from
-    * rare words). Serves through the same [[FitCrf.FittedModel]] path.
-    * Measured on eng.test: F1 0.7230 @20 epochs, 0.7483 @300
-    * (lr=1, l2=3e-5), 0.7528 @600 — vs the closed form's 0.7269. */
+    * rare words) ∪ optional Brown-cluster rows (`clusters`, see
+    * [[engClusters]]). Serves through the same [[FitCrf.FittedModel]]
+    * path. Measured on eng.test: F1 0.7230 @20 epochs, 0.7483 @300
+    * (lr=1, l2=3e-5), 0.7528 @600 — vs the closed form's 0.7269; with
+    * 256 clusters, 0.7561 @300 (the shipped artifact). */
   def trainFullModel(spark: SparkSession, epochs: Int = 300,
       lr: Double = 1.0, l2: Double = 3e-5,
-      clusters: Map[String, Int] = Map.empty,
-      clustersForAll: Boolean = false,
-      clusterBits: Map[String, String] = Map.empty,
-      prefixLens: Seq[Int] = Nil): FitCrf.FittedModel = {
+      clusters: Map[String, Int] = Map.empty): FitCrf.FittedModel = {
     import spark.implicits._
-    // Prefix mode (Koo et al. 2008-style): pass `clusterBits`
-    // (word → Brown BITSTRING) + `prefixLens`; each token then fires
-    // one trained row per DISTINCT bit-prefix of its cluster path
-    // (short paths dedup — '010'.take(6) == '010'.take(4)). Serving
-    // collapses the prefix rows per full bitstring into ONE summed
-    // vector, so the FittedModel/artifact format is unchanged.
-    val usePrefix = clusterBits.nonEmpty && prefixLens.nonEmpty
-    require(prefixLens.forall(_ > 0),
-      s"prefixLens must be positive bit depths, got $prefixLens")
-    // distinct prefix VALUES only, keyed by the first length that
-    // produces each — a short path must not fire at several lengths
-    def prefixKeys(bits: String): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      var prev: String = null
-      prefixLens.foreach { l =>
-        val p = bits.take(l)
-        if (p != prev) out += s"$l:$p"
-        prev = p
-      }
-      out.result()
-    }
-    val rowKeys: Array[String] =
-      if (usePrefix)
-        clusterBits.values.toArray.distinct.flatMap(prefixKeys)
-          .distinct.sorted
-      else Array.empty
-    val rowIds = rowKeys.zipWithIndex.toMap
     val train = labeled(spark, RefData.engTrain.existing)
     val wordFreq = train.flatMap(_.words).groupBy("value").count()
     val vocab = wordFreq.filter(col("count") >= 2)
@@ -85,26 +57,10 @@ object FitEval {
       .map(w => FitCrf.shapeOf(graft.features.Features.tokenBits(w)))
       .distinct.sorted
     val V = vocab.length; val S = rareShapes.length
-    val C =
-      if (usePrefix) rowKeys.length
-      else if (clusters.isEmpty) 0
-      else clusters.values.max + 1
-    val stride = if (usePrefix) prefixLens.length else 1
-    // single source of truth for a bitstring's trained rows: the SAME
-    // prefixKeys expansion feeds training (via this map) and the
-    // serving-time collapse below — the two cannot drift
-    val bitsToRows: Map[String, Array[Int]] =
-      if (usePrefix)
-        clusterBits.values.toVector.distinct.map { b =>
-          b -> prefixKeys(b).map(k => V + S + 1 + rowIds(k)).toArray
-        }.toMap
-      else Map.empty
+    val C = if (clusters.isEmpty) 0 else clusters.values.max + 1
     val bV = spark.sparkContext.broadcast(vocab.zipWithIndex.toMap)
     val bS = spark.sparkContext.broadcast(rareShapes.zipWithIndex.toMap)
     val bC = spark.sparkContext.broadcast(clusters)
-    val bBits = spark.sparkContext.broadcast(clusterBits)
-    val bBitsRows = spark.sparkContext.broadcast(bitsToRows)
-    val strideB = stride
     val data = train.map { t =>
       val vmap = bV.value; val smap = bS.value; val cmap = bC.value
       val masks =
@@ -116,7 +72,7 @@ object FitEval {
       }
       // Brown-cluster rows live after the word/shape/default block in
       // the same weight matrix (exact-then-lowercase lookup, matching
-      // FitCrf.emit's serving policy). Default is OOV-GATED: cluster
+      // FitCrf.emit's serving policy). They are OOV-GATED: cluster
       // features fire only for tokens WITHOUT a vocab row, so the
       // cluster rows train on exactly the backoff population they
       // serve (additive-everywhere measured 0.7414 vs 0.7483 baseline
@@ -125,38 +81,17 @@ object FitEval {
       // resolution: a case-variant of an in-vocab word serves the
       // lowercase word row, so its cluster row must not also train.
       def gated(w2: String): Boolean =
-        !clustersForAll &&
-          (vmap.contains(w2) ||
-            vmap.contains(w2.toLowerCase(java.util.Locale.ROOT)))
+        vmap.contains(w2) ||
+          vmap.contains(w2.toLowerCase(java.util.Locale.ROOT))
       val cids =
-        if (usePrefix) {
-          val bmap = bBits.value; val rowsOf = bBitsRows.value
-          val out = Array.fill(t.words.length * strideB)(-1)
-          var i = 0
-          while (i < t.words.length) {
-            val w2 = t.words(i)
-            if (!gated(w2)) {
-              bmap.get(w2)
-                .orElse(bmap.get(w2.toLowerCase(java.util.Locale.ROOT)))
-                .flatMap(rowsOf.get).foreach { rows =>
-                  var slot = 0
-                  while (slot < rows.length) {
-                    out(i * strideB + slot) = rows(slot)
-                    slot += 1
-                  }
-                }
-            }
-            i += 1
-          }
-          out
-        } else if (cmap.isEmpty) Array.empty[Int]
+        if (cmap.isEmpty) Array.empty[Int]
         else Array.tabulate(t.words.length) { i =>
           if (gated(t.words(i))) -1
           else cmap.get(t.words(i))
             .orElse(cmap.get(t.words(i).toLowerCase(java.util.Locale.ROOT)))
             .map(V + S + 1 + _).getOrElse(-1)
         }
-      graft.crf.CrfTrainer.WordSentence(masks, ids, t.tags, cids, stride)
+      graft.crf.CrfTrainer.WordSentence(masks, ids, t.tags, cids)
     }
     val (w, wv, tr, _) =
       graft.crf.CrfTrainer.trainWords(data, V + S + 1 + C, epochs, lr, l2)
@@ -172,35 +107,10 @@ object FitEval {
     // mirror fitWithClusters' double-form gate (FitCrf emit resolves
     // exact-then-lowercase, so both forms must be absent for the
     // cluster row to serve)
-    def gateServed(m: Map[String, Int]): Map[String, Int] =
-      if (clustersForAll) m
-      else m.filter { case (w2, _) =>
-        !vocabSet.contains(w2) &&
-          !vocabSet.contains(w2.toLowerCase(java.util.Locale.ROOT))
-      }
-    val (servedClusters, servedClusterW) =
-      if (usePrefix) {
-        // collapse: the serving-time cluster vector of a full bitstring
-        // is the SUM of its trained prefix rows (same bitsToRows map
-        // the training closure used) — emit then adds one vector per
-        // token exactly as in the single-row form, so the artifact
-        // format doesn't change
-        val denseId =
-          graft.features.Brown.denseIdsByBits(clusterBits.values)
-        val cw = denseId.map { case (b, id) =>
-          val v2 = new Array[Float](Dict.K)
-          bitsToRows(b).foreach { rowId =>
-            val row = wv(rowId)
-            var k = 0
-            while (k < v2.length) { v2(k) += row(k); k += 1 }
-          }
-          id -> v2
-        }
-        (gateServed(clusterBits.view.mapValues(denseId).toMap), cw)
-      } else {
-        (gateServed(clusters),
-          (0 until C).map(j => j -> wv(V + S + 1 + j)).toMap)
-      }
+    val servedClusters = clusters.filter { case (w2, _) =>
+      !vocabSet.contains(w2) &&
+        !vocabSet.contains(w2.toLowerCase(java.util.Locale.ROOT))
+    }
     FitCrf.FittedModel(w,
       vocab.zipWithIndex.map { case (word, i) => word -> wv(i) }.toMap,
       rareShapes.zipWithIndex.map { case (sh, i) =>
@@ -208,19 +118,7 @@ object FitEval {
       }.toMap,
       closedForm.shapeDefault, tr, 1f,
       clusters = servedClusters,
-      clusterW = servedClusterW)
-  }
-
-  /** Word → Brown BITSTRING map of eng.train (prefix-feature input;
-    * same trained hierarchy as [[engClusters]]). */
-  def engClusterBits(spark: SparkSession, numClusters: Int = 128)
-      : Map[String, String] = {
-    import spark.implicits._
-    graft.features.Brown.cluster(
-      ConllOps.conllFileSentences(spark, RefData.engTrain.existing)
-        .map(_.words),
-      numClusters = numClusters)
-      .select("word", "bits").as[(String, String)].collect().toMap
+      clusterW = (0 until C).map(j => j -> wv(V + S + 1 + j)).toMap)
   }
 
   /** CoNLL-2003 tag string → engine tag id. MISC ↔ GPE bijection. */
@@ -233,42 +131,32 @@ object FitEval {
       .map(s => FitCrf.TaggedTokens(s.words, s.tags.map(tagIdOf)))
   }
 
-  /** Token-index spans of a labeled set via the shared BIO FSM. */
-  def spansOf(pred: org.apache.spark.sql.Dataset[
-      graft.core.TaggedSentence]): DataFrame = {
-    val spark = pred.sparkSession
+  /** Per-type span counts of `tagger` on a gold CoNLL file, in the
+    * frame of [[SpanPRF1.evaluate]]: the file's sentences are decoded
+    * by `tagger` and scored against the file's own tags (exact spans
+    * through the shared BIO FSM, conlleval semantics). */
+  def perTypeConll(spark: SparkSession, path: String,
+      tagger: Dataset[Sentence] => Dataset[TaggedSentence]): DataFrame = {
     import spark.implicits._
-    pred.flatMap(ts => Spans.extract(ts))
-      .select(col("path").as("doc"), col("sentIdx").as("sent"),
-        col("start"), col("end"), col("tag"))
+    val test = ConllOps.conllFileSentences(spark, path)
+    def spans(ts: Dataset[TaggedSentence]): DataFrame =
+      ts.flatMap(t => Spans.extract(t))
+        .select(col("path").as("doc"), col("sentIdx").as("sent"),
+          col("start"), col("end"), col("tag"))
+    val gold = test.map(s => TaggedSentence("eng", "test", s.sentId.toInt,
+      s.words, s.words.indices.toArray, s.words.indices.map(_ + 1).toArray,
+      s.tags.map(t => Dict.tags(tagIdOf(t)))))
+    val pred = tagger(test.map(s => Sentence("eng", "test", s.sentId.toInt,
+      s.words, s.words.indices.toArray, s.words.indices.map(_ + 1).toArray)))
+    SpanPRF1.evaluate(spans(pred), spans(gold))
   }
 
-  def toSentences(data: org.apache.spark.sql.Dataset[
-      (Long, Array[String], Array[Int])]): org.apache.spark.sql.Dataset[
-      Sentence] = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    data.map { case (id, words, _) =>
-      Sentence("eng", "test", id.toInt, words,
-        Array.tabulate(words.length)(i => i),
-        Array.tabulate(words.length)(i => i + 1))
-    }
-  }
-
-  /** Micro P/R/F1 of a fitted model against cached gold spans. */
-  def microF1(model: FitCrf.FittedModel,
-      sents: org.apache.spark.sql.Dataset[Sentence], gold: DataFrame)
-      : (Double, Double, Double) = {
-    val perType = SpanPRF1.evaluate(spansOf(FitCrf.tag(sents, model)),
-      gold).collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    val tp = perType.map(_._1).sum.toDouble
-    val fp = perType.map(_._2).sum
-    val fn = perType.map(_._3).sum
-    val p = tp / math.max(tp + fp, 1)
-    val r = tp / math.max(tp + fn, 1)
-    (p, r, if (p + r == 0) 0.0 else 2 * p * r / (p + r))
-  }
+  /** Micro span P/R/F1 of `tagger` on a gold CoNLL file
+    * ([[perTypeConll]] summed over types). */
+  def evalConll(spark: SparkSession, path: String,
+      tagger: Dataset[Sentence] => Dataset[TaggedSentence])
+      : SpanPRF1.Counts =
+    SpanPRF1.micro(perTypeConll(spark, path, tagger))
 
   /** Brown clusters of eng.train (trained in-session, ~12 s — the
     * reference's external `--brown_cluster_path` input, built by
@@ -284,187 +172,5 @@ object FitEval {
       ConllOps.conllFileSentences(spark, RefData.engTrain.existing)
         .map(_.words),
       numClusters = numClusters))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = Sessions.local(16)
-    import spark.implicits._
-
-    val train = labeled(spark, RefData.engTrain.existing).cache()
-    println(s"train sentences: ${train.count()}")
-
-    val testSents = ConllOps.conllFileSentences(spark, RefData.engTest.existing)
-      .map(s => (s.sentId, s.words, s.tags.map(tagIdOf)))
-      .cache()
-    println(s"test sentences: ${testSents.count()}")
-
-    // gold spans via the same FSM, from gold tag ids
-    val gold = spansOf(testSents.map { case (id, words, tags) =>
-      graft.core.TaggedSentence("eng", "test", id.toInt, words,
-        Array.tabulate(words.length)(i => i),
-        Array.tabulate(words.length)(i => i + 1),
-        tags.map(Dict.tags))
-    }).cache()
-    println(s"gold spans: ${gold.count()}")
-
-    val sents = toSentences(testSents).cache()
-    sents.count()
-
-    val configs = Seq(
-      // (k, minCount, rareMax, lambda)
-      (0.1, 2L, 1L, 0f),
-      (0.05, 2L, 1L, 0f),
-      (0.02, 2L, 1L, 0f),
-      (0.1, 2L, 2L, 0f),
-      (0.05, 2L, 2L, 0f),
-      (0.1, 2L, 1L, 0.05f),
-      (0.1, 2L, 2L, 0.05f),
-      (0.2, 2L, 1L, 0f))
-
-    // Iterative CrfTrainer on the same real data (24 discrete features
-    // only — no word identity, by construction of the trainer's
-    // feature space): reported next to the closed-form fit so the two
-    // training paths are comparable on eng.test.
-    if (args.contains("--trainer")) {
-      val data = train.map(t => graft.crf.CrfTrainer.LabeledSentence(
-        graft.features.Features.sentenceBits(t.words, Dict.gazIndex),
-        t.tags))
-      val t0 = System.nanoTime()
-      val (w, tr, hist) =
-        graft.crf.CrfTrainer.train(data, epochs = 12)
-      println(f"trainer: 12 epochs in ${(System.nanoTime() - t0) / 1e9}%.1f s, " +
-        f"NLL ${hist.head}%.3f -> ${hist.last}%.3f")
-      val pred = spansOf(graft.crf.Crf.tag(sents, w, tr))
-      val perType = SpanPRF1.evaluate(pred, gold).collect()
-        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-      val tp = perType.map(_._1).sum.toDouble
-      val fp = perType.map(_._2).sum
-      val fn = perType.map(_._3).sum
-      val p = tp / math.max(tp + fp, 1)
-      val r = tp / math.max(tp + fn, 1)
-      val f1 = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
-      println(f"trainer (features-only): P=$p%.4f R=$r%.4f F1=$f1%.4f")
-    }
-
-    // Discriminative full model: iterative training over
-    // φ = §2.3 features ∪ word identity (the trainer counterpart of
-    // the closed-form fit), served through the same FittedModel path.
-    if (args.contains("--train-full")) {
-      val epochsList = {
-        val e = args.filter(_.startsWith("--epochs="))
-          .map(_.drop(9).toInt)
-        if (e.nonEmpty) e.toSeq else Seq(300)
-      }
-      val lr = args.filter(_.startsWith("--lr="))
-        .map(_.drop(5).toDouble).headOption.getOrElse(1.0)
-      val l2 = args.filter(_.startsWith("--l2="))
-        .map(_.drop(5).toDouble).headOption.getOrElse(3e-5)
-      for (epochs <- epochsList) {
-        val t0 = System.nanoTime()
-        val model = trainFullModel(spark, epochs, lr, l2)
-        println(f"train-full: $epochs epochs lr=$lr l2=$l2 in " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-        val pred = spansOf(FitCrf.tag(sents, model))
-        val perType = SpanPRF1.evaluate(pred, gold).collect()
-          .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-        val tp = perType.map(_._1).sum.toDouble
-        val fp = perType.map(_._2).sum
-        val fn = perType.map(_._3).sum
-        val f1 = if (tp == 0) 0.0 else 2 * tp / (2 * tp + fp + fn)
-        val p = tp / math.max(tp + fp, 1)
-        val r = tp / math.max(tp + fn, 1)
-        println(f"train-full (word+features): P=$p%.4f R=$r%.4f " +
-          f"F1=$f1%.4f")
-      }
-    }
-
-    // Brown-cluster delta: closed form and discriminative, with and
-    // without cluster features, on identical data (VERDICT r2 ask 2).
-    if (args.contains("--clusters")) {
-      val numC = args.filter(_.startsWith("--num-clusters="))
-        .map(_.drop(15).toInt).headOption.getOrElse(128)
-      val t0 = System.nanoTime()
-      val cmap = engClusters(spark, numC)
-      println(f"brown: $numC clusters over ${cmap.size} words in " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      // the pinned engModel configuration (k=0.1, rareMax=2, λ=0)
-      val base = FitCrf.fit(train, k = 0.1, minCount = 2, rareMax = 2,
-        lambda = 0f)
-      val (p0, r0, f0) = microF1(base, sents, gold)
-      println(f"closed-form  no-clusters: P=$p0%.4f R=$r0%.4f F1=$f0%.4f")
-      val withC = FitCrf.fitWithClusters(train, cmap, k = 0.1,
-        minCount = 2, rareMax = 2, lambda = 0f)
-      val (p1, r1, f1c) = microF1(withC, sents, gold)
-      println(f"closed-form with-clusters: P=$p1%.4f R=$r1%.4f F1=$f1c%.4f")
-      val epochs = args.filter(_.startsWith("--epochs="))
-        .map(_.drop(9).toInt).headOption.getOrElse(300)
-      val t1 = System.nanoTime()
-      val trained = trainFullModel(spark, epochs, clusters = cmap)
-      println(f"train-full+clusters: $epochs epochs in " +
-        f"${(System.nanoTime() - t1) / 1e9}%.1f s")
-      val (p2, r2, f2) = microF1(trained, sents, gold)
-      println(f"train-full with-clusters: P=$p2%.4f R=$r2%.4f F1=$f2%.4f")
-    }
-
-    // Brown PREFIX features (Koo et al. 2008 recipe; VERDICT r3 ask 4):
-    // OOV-gated rows at several bitstring prefix depths vs the single
-    // full-depth row baseline, identical hierarchy + data + epochs.
-    if (args.contains("--prefix")) {
-      val numC = args.filter(_.startsWith("--num-clusters="))
-        .map(_.drop(15).toInt).headOption.getOrElse(256)
-      val epochs = args.filter(_.startsWith("--epochs="))
-        .map(_.drop(9).toInt).headOption.getOrElse(300)
-      val lens = args.filter(_.startsWith("--lens="))
-        .map(_.drop(7)).headOption.getOrElse("4,6,10,20")
-        .split(',').map(_.toInt).toSeq
-      val t0 = System.nanoTime()
-      val bits = engClusterBits(spark, numC)
-      println(f"brown: $numC clusters over ${bits.size} words in " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      val denseByBits = {
-        val vs = graft.features.Brown.denseIdsByBits(bits.values)
-        bits.view.mapValues(vs).toMap
-      }
-      val t1 = System.nanoTime()
-      val base = trainFullModel(spark, epochs, clusters = denseByBits)
-      val (p0, r0, f0) = microF1(base, sents, gold)
-      println(f"full-depth C=$numC ($epochs ep, " +
-        f"${(System.nanoTime() - t1) / 1e9}%.0f s): " +
-        f"P=$p0%.4f R=$r0%.4f F1=$f0%.4f")
-      val t2 = System.nanoTime()
-      val pref = trainFullModel(spark, epochs, clusterBits = bits,
-        prefixLens = lens)
-      val (p1, r1, f1p) = microF1(pref, sents, gold)
-      println(f"prefix C=$numC lens=${lens.mkString(",")} ($epochs ep, " +
-        f"${(System.nanoTime() - t2) / 1e9}%.0f s): " +
-        f"P=$p1%.4f R=$r1%.4f F1=$f1p%.4f")
-    }
-
-    val sweepConfigs =
-      if (args.exists(_.startsWith("--train")) ||
-        args.contains("--clusters") ||
-        args.contains("--prefix")) Seq.empty else configs
-    for ((k, mc, rm, lam) <- sweepConfigs) {
-      val t0 = System.nanoTime()
-      val model = FitCrf.fit(train, k, mc, rm, lam)
-      val fitSec = (System.nanoTime() - t0) / 1e9
-      val pred = spansOf(FitCrf.tag(sents, model))
-      val perType = SpanPRF1.evaluate(pred, gold)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3)))
-      val tp = perType.map(_._2).sum.toDouble
-      val fp = perType.map(_._3).sum
-      val fn = perType.map(_._4).sum
-      val p = tp / math.max(tp + fp, 1)
-      val r = tp / math.max(tp + fn, 1)
-      val f1 = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
-      println(f"k=$k%.3f minCount=$mc rareMax=$rm lambda=$lam%.2f " +
-        f"vocab=${model.wordW.size} P=$p%.4f R=$r%.4f F1=$f1%.4f " +
-        f"(fit ${fitSec}%.1f s)")
-      perType.sortBy(_._1).foreach { case (t, a, b, c) =>
-        println(f"  $t%-6s tp=$a fp=$b fn=$c")
-      }
-    }
-    spark.stop()
   }
 }

@@ -209,8 +209,7 @@ object CrfTrainer {
     * discriminative fit handles the correlation that the closed form
     * must gate away). −1 = no cluster. */
   final case class WordSentence(masks: Array[Int], wordIds: Array[Int],
-      tags: Array[Int], clusterIds: Array[Int] = Array.empty,
-      clusterStride: Int = 1)
+      tags: Array[Int], clusterIds: Array[Int] = Array.empty)
 
   /** Forward–backward NLL + gradients for one sentence under
     * emission(t, tag) = featW·mask(t) + wordW(wordId(t))(tag),
@@ -222,10 +221,7 @@ object CrfTrainer {
       wv: Array[Array[Float]], tr: Array[Array[Float]],
       aw: Array[Double], at: Array[Double], av: Array[Double]): Double = {
     val T = s.masks.length
-    // `clusterStride` rows per token (Brown prefix features fire one
-    // row per prefix length); stride 1 = the classic single-row form
-    val stride = s.clusterStride
-    val hasClusters = s.clusterIds.length == T * stride
+    val hasClusters = s.clusterIds.length == T
     val em = Array.tabulate(T) { t =>
       val e = Crf.emit(s.masks(t), w)
       val wid = s.wordIds(t)
@@ -233,16 +229,10 @@ object CrfTrainer {
         var k = 0
         while (k < K) { e(k) += wv(wid)(k); k += 1 }
       }
-      if (hasClusters) {
-        var r = 0
-        while (r < stride) {
-          val cid = s.clusterIds(t * stride + r)
-          if (cid >= 0) {
-            var k = 0
-            while (k < K) { e(k) += wv(cid)(k); k += 1 }
-          }
-          r += 1
-        }
+      val cid = if (hasClusters) s.clusterIds(t) else -1
+      if (cid >= 0) {
+        var k = 0
+        while (k < K) { e(k) += wv(cid)(k); k += 1 }
       }
       e
     }
@@ -287,6 +277,7 @@ object CrfTrainer {
     t = 0
     while (t < T) {
       val wid = s.wordIds(t)
+      val cid = if (hasClusters) s.clusterIds(t) else -1
       k = 0
       while (k < K) {
         val gamma = math.exp(alpha(t)(k) + beta(t)(k) - logZ)
@@ -299,14 +290,7 @@ object CrfTrainer {
             mm &= mm - 1
           }
           if (wid >= 0) av(wid * K + k) += diff
-          if (hasClusters) {
-            var r = 0
-            while (r < stride) {
-              val cid = s.clusterIds(t * stride + r)
-              if (cid >= 0) av(cid * K + k) += diff
-              r += 1
-            }
-          }
+          if (cid >= 0) av(cid * K + k) += diff
         }
         k += 1
       }

@@ -79,4 +79,11 @@ object SpanPRF1 {
       round(col("tp") / greatest(col("tp") + col("fn"), lit(1)), 4)
         .as("recall"))
   }
+
+  /** Micro counts of a per-type frame of [[evaluate]]: its tp/fp/fn
+    * summed over the types. */
+  def micro(perType: DataFrame): Counts =
+    perType.select("tp", "fp", "fn").collect()
+      .map(r => Counts(r.getLong(0), r.getLong(1), r.getLong(2)))
+      .foldLeft(agg.zero)(agg.merge)
 }

@@ -10,6 +10,12 @@ import org.apache.spark.sql.SparkSession
   * Loaded driver-side and broadcast, as everywhere else. */
 object ModelIO {
 
+  /** The shipped English model artifact: the 300-epoch discriminative
+    * fit with OOV-gated Brown-cluster features
+    * (`Cli train --out models/eng.fitted --clusters 256`), which
+    * `Cli tag/eval` serve by default and EngModelSpec gates. */
+  val defaultFittedPath = "models/eng.fitted"
+
   def save(spark: SparkSession, model: Model, path: String): Unit = {
     import spark.implicits._
     val rows =

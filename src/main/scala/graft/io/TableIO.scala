@@ -46,17 +46,17 @@ object TableIO {
   def read(spark: SparkSession, root: String, table: String): DataFrame =
     spark.read.parquet(s"$root/$table")
 
-  /** Content-derived snapshot id of an input corpus: order-independent
-    * fold (sum of xxhash64) over the per-row sha256(content) invariant
-    * column — the same input always resumes, any changed row forces
-    * recompute (north rule: per-row sha256 invariant + resumability,
-    * tied together). */
+  /** Snapshot id of an input corpus: order-independent fold (sum of
+    * xxhash64) over each row's identity (repo, path, commit) and its
+    * sha256(content) invariant column — the same input always resumes;
+    * a changed, renamed or re-committed row forces recompute, so a
+    * resume never serves stale `mentionedIn` objects (north rule:
+    * per-row sha256 invariant + resumability, tied together). */
   def snapshotId(files: DataFrame): String = {
-    import org.apache.spark.sql.functions._
     // decimal sum: a long sum overflows under ANSI mode at corpus scale
     val r = files
-      .select(xxhash64(sha2(col("content"), 256))
-        .cast("decimal(38,0)").as("h"))
+      .select(xxhash64(col("repo"), col("path"), col("commit"),
+        sha2(col("content"), 256)).cast("decimal(38,0)").as("h"))
       .agg(sum("h").as("s"), count(lit(1)).as("n"))
       .collect()(0)
     s"sha-${r.getDecimal(0).toBigInteger.toString(16)}-${r.getLong(1)}"

@@ -1,7 +1,10 @@
 package graft
 
 import graft.crf.FitCrf
+import graft.eval.SpanPRF1
 import graft.io.ModelIO
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The CLI façade end-to-end: fit → save → load → tag → eval on a
   * real (small) CoNLL file — the workflow a reference user runs via
@@ -18,7 +21,7 @@ class CliSpec extends SparkTestBase {
     // not generalization; EngModelSpec gates real train/test quality
     val model = FitCrf.fit(FitEval.labeled(spark, testPath),
       k = 0.1, minCount = 2, rareMax = 2, lambda = 0f)
-    val dir = java.nio.file.Files.createTempDirectory("cli").toString
+    val dir = Files.createTempDirectory("cli").toString
     ModelIO.saveFitted(spark, model, s"$dir/m")
     val loaded = ModelIO.loadFitted(spark, s"$dir/m")
     // tag writes the reference's prediction-line format — exercise the
@@ -32,11 +35,7 @@ class CliSpec extends SparkTestBase {
     assert(written.take(5).forall(_.split('\t').length == 4))
     // eval on the fit file: train==test here, so F1 must be high —
     // this checks the whole serve+score path, not model quality
-    val perType = Cli.evalModel(spark, loaded, testPath).collect()
-    val tp = perType.map(_.getLong(1)).sum.toDouble
-    val fp = perType.map(_.getLong(2)).sum
-    val fn = perType.map(_.getLong(3)).sum
-    val f1 = 2 * tp / (2 * tp + fp + fn)
+    val f1 = SpanPRF1.micro(Cli.evalModel(spark, loaded, testPath)).f1
     info(f"self-fit self-eval F1=$f1%.4f")
     assert(f1 >= 0.85, f"self-eval F1 $f1%.4f unexpectedly low")
   }
@@ -44,8 +43,8 @@ class CliSpec extends SparkTestBase {
   test("the shipped artifact serves through the CLI default path " +
       "(tag without --model)") {
     assume(available)
-    assume(new java.io.File(ShipModel.defaultPath).exists())
-    val loaded = ModelIO.loadFitted(spark, ShipModel.defaultPath)
+    assume(new java.io.File(ModelIO.defaultFittedPath).exists())
+    val loaded = ModelIO.loadFitted(spark, ModelIO.defaultFittedPath)
     assert(loaded.clusterW.nonEmpty) // the Brown block rode along
     val tagged = Cli.tagFile(spark, loaded, testPath)
     assert(tagged.filter("tag <> 'O'").count() > 3000)
@@ -64,12 +63,33 @@ class CliSpec extends SparkTestBase {
     assert(e2.getMessage.contains("missing required flag --out"))
   }
 
+  test("usage and unknown-mode errors list every mode") {
+    val modes = Seq("fit", "train", "tag", "eval", "kg", "features", "brown")
+    val usage = intercept[IllegalArgumentException](Cli.main(Array()))
+    assert(modes.forall(usage.getMessage.contains), usage.getMessage)
+    val unknown = intercept[IllegalArgumentException](Cli.main(Array("x")))
+    assert(unknown.getMessage.contains("unknown mode: x"))
+    assert(modes.forall(unknown.getMessage.contains), unknown.getMessage)
+  }
+
+  test("the program's entry points are Bench, Cli, ScalingBench and " +
+      "Verify; every other command is a Cli mode") {
+    val files = Files.walk(Paths.get("src/main/scala"))
+    val mains =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(f => Files.readString(f).contains("def main("))
+        .map(_.getFileName.toString.stripSuffix(".scala")).toSeq.sorted
+      finally files.close()
+    assert(mains == Seq("Bench", "Cli", "ScalingBench", "Verify"))
+  }
+
   test("features mode: segnerfts parity rows over line-per-sentence " +
       "text, 15-dim plain and 24-dim with gaz") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("clifeat")
+    val dir = Files.createTempDirectory("clifeat")
     val in = dir.resolve("deu.txt")
-    java.nio.file.Files.writeString(in,
+    Files.writeString(in,
       "Vereinigten Arabischen Republik\nHerr Schwarzwald\n")
     val plain = Cli.featuresFrame(spark, "deu", in.toString).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2),

@@ -17,6 +17,14 @@ class TableIOSnapshotSpec extends SparkTestBase {
       when(col("path").endsWith(".md"),
         concat(col("content"), lit("x"))).otherwise(col("content")))
     assert(TableIO.snapshotId(changed) != id1)
+    // same content under a new path or a new commit: a new snapshot
+    val first = col("path") === a.select(min("path")).head().getString(0)
+    val renamed = a.withColumn("path",
+      when(first, concat(lit("moved/"), col("path"))).otherwise(col("path")))
+    assert(TableIO.snapshotId(renamed) != id1)
+    val recommitted = a.withColumn("commit",
+      when(first, concat(col("commit"), lit("'"))).otherwise(col("commit")))
+    assert(TableIO.snapshotId(recommitted) != id1)
   }
 
   test("embedding lookup uses exact first, lowercase fallback second " +

@@ -138,6 +138,26 @@ class TriplesSpec extends SparkTestBase {
     assert(t1.map(_.toString).toSeq == direct.map(_.toString).toSeq)
   }
 
+  test("checkpointed rerun after a file rename recomputes: mentionedIn " +
+      "carries the new path") {
+    val s = spark
+    import s.implicits._
+    val root = graft.core.TempDirs.create("graft_ckpt_rename")
+    val files = Corpus.synthesize(spark, 40).cache()
+    def mentionedIn(fs: org.apache.spark.sql.Dataset[SourceFile]) =
+      Pipeline.triplesCheckpointed(fs, root, TableIO.snapshotId(fs.toDF()))
+        .filter(col("pred") === "mentionedIn")
+        .select("obj").distinct().as[String].collect().toSet
+    val before = mentionedIn(files)
+    val moved = files.collect().find(f => before(s"${f.repo}/${f.path}")).get
+    val renamed = files.map(f =>
+      if (f == moved) f.copy(path = s"moved/${f.path}") else f)
+    val after = mentionedIn(renamed)
+    assert(after(s"${moved.repo}/moved/${moved.path}"))
+    assert(!after(s"${moved.repo}/${moved.path}"))
+    files.unpersist()
+  }
+
   test("checkpointed pipeline routes lang: orm checkpoints == direct " +
       "routed triples, and resume still holds") {
     val s = spark

@@ -8,6 +8,7 @@ import graft.features.Brown
 import graft.io.ModelIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The reference's command-line surface (main.py `--mode train/test`
   * and the commands shell scripts), Spark-first: a spark-submit-able
@@ -87,16 +88,20 @@ object Cli {
       .select("line")
       .coalesce(1).write.mode("overwrite").text(out)
 
-  /** Span P/R/F1 of a fitted model on a gold CoNLL file: returns the
-    * per-type frame (same shape as SpanPRF1.evaluate) and prints the
-    * micro line. */
+  /** Span P/R/F1 of a fitted model on a gold CoNLL file: prints the
+    * micro line and returns the per-type rows (same shape as
+    * SpanPRF1.evaluate, ordered by tag) as a local frame. The rows are
+    * collected once, so the micro line and a table printed from the
+    * result decode the file once. */
   def evalModel(spark: SparkSession, model: FitCrf.FittedModel,
       testPath: String): DataFrame = {
     val perType =
       FitEval.perTypeConll(spark, testPath, FitCrf.tag(_, model))
-    val c = SpanPRF1.micro(perType)
+    val rows = spark.createDataFrame(
+      perType.collect().sortBy(_.getString(0)).toSeq.asJava, perType.schema)
+    val c = SpanPRF1.micro(rows)
     println(f"micro P=${c.precision}%.4f R=${c.recall}%.4f F1=${c.f1}%.4f")
-    perType
+    rows
   }
 
   /** The per-language `segnerfts.extract` surface over
@@ -126,6 +131,12 @@ object Cli {
     require(modes.contains(args(0)), s"unknown mode: ${args(0)}; $usage")
     val spark = Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    run(spark, args)
+    spark.stop()
+  }
+
+  /** One mode of [[main]] in a running session. */
+  private[graft] def run(spark: SparkSession, args: Array[String]): Unit =
     args(0) match {
       case "fit" =>
         val trainPath = arg(args, "--train")
@@ -163,7 +174,7 @@ object Cli {
         val model = ModelIO.loadFitted(spark,
           arg(args, "--model").getOrElse(ModelIO.defaultFittedPath))
         evalModel(spark, model, req(args, "--test"))
-          .orderBy("tag").show(20, truncate = false)
+          .show(20, truncate = false)
       case "kg" =>
         val corpus = req(args, "--corpus")
         val out = req(args, "--out")
@@ -220,6 +231,4 @@ object Cli {
           lines.mkString("", "\n", "\n").getBytes("UTF-8"))
         println(s"brown: ${lines.length} words in $c clusters -> $out")
     }
-    spark.stop()
-  }
 }

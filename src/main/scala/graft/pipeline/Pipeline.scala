@@ -7,7 +7,11 @@ import graft.postprocess.PostProcess
 import graft.segment.Segmenter
 import graft.spans.Spans
 import graft.triples.Triples
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, GraftBridge}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG construction (SURVEY.md §3.1 lifecycle, §7.2 modules),
@@ -19,7 +23,7 @@ import org.apache.spark.sql.functions._
   *            (key, tag) count and the broadcast relabel)
   *          → link (broadcast dict, narrow)
   *          → canonicalize + (subj, pred, obj) triples
-  *            (subject is a column expression; two distincts)
+  *            (subject is a column expression; explode, one distinct)
   *
   * What varies by language comes from one [[LangPack]]. [[triples]] and
   * [[postProcessed]] run the doc-local post-process stages inside the
@@ -67,14 +71,45 @@ object Pipeline {
   }
 
   /** Post-processed mentions from the fused pass: [[perFile]] with
-    * [[PostProcess.docKernel]], then the cross-doc vote. */
+    * [[PostProcess.docKernel]] over [[fusedInput]], then the
+    * cross-doc vote. */
   private def fused(files: Dataset[SourceFile], pack: LangPack,
       authors: Set[String]): Dataset[Mention] = {
     import files.sparkSession.implicits._
-    PostProcess.crossDocVoteFlagged(perFile(files, pack,
+    PostProcess.crossDocVoteFlagged(perFile(fusedInput(files), pack,
       PostProcess.docKernel(files.sparkSession.sparkContext, authors,
         pack.lookup, pack.lookupIndex)))
   }
+
+  /** The fused pass's input. Under adaptive execution a cached scan
+    * becomes a `TableCacheQueryStageExec`; Spark 4.1 never reuses one,
+    * and its copies canonicalize apart, so the (repo, path) exchange
+    * that both cross-vote branches read is built twice and the
+    * per-file pass runs twice per action. A batch input whose RDD
+    * builds without running a job ([[lazyRdd]]: a scan, a loaded
+    * cache, narrow operators over them) is re-rooted at that RDD
+    * ([[GraftBridge.reRoot]]): one leaf, one exchange, one pass per
+    * action. Any other input keeps its leaf, because building its RDD
+    * would run jobs at definition time; an uncached one with an
+    * exchange, such as `Corpus.fromDocuments`, already decodes once. */
+  private def fusedInput(files: Dataset[SourceFile]): Dataset[SourceFile] =
+    if (files.isStreaming || !lazyRdd(files.queryExecution.executedPlan))
+      files
+    else GraftBridge.reRoot(files)
+
+  /** True when building `p`'s RDD runs no job: `p` holds no exchange
+    * or subquery, and every cache it reads is loaded or, outside
+    * adaptive execution (which runs an unloaded cache as a query
+    * stage), builds lazily itself. */
+  private def lazyRdd(p: SparkPlan, adaptive: Boolean = false): Boolean =
+    !p.exists {
+      case a: AdaptiveSparkPlanExec => !lazyRdd(a.inputPlan, adaptive = true)
+      case _: Exchange => true
+      case s: InMemoryTableScanExec =>
+        !s.relation.cacheBuilder.isCachedColumnBuffersLoaded &&
+          (adaptive || !lazyRdd(s.relation.cachedPlan))
+      case n => n.subqueries.nonEmpty
+    }
 
   /** The stage list up to post-process, over segmented + decoded input. */
   private def post(sents: Dataset[Sentence], decoded: Dataset[Mention],
@@ -116,7 +151,9 @@ object Pipeline {
   /** The same stages, each landing in `root/<stage>` with a
     * `_lineage.json` sidecar; a re-run with the same snapshot id
     * resumes from the last committed stage. No `authors`: the snapshot
-    * id hashes content only, so an author set would resume stale. */
+    * id ([[TableIO.snapshotId]]) hashes each row's (repo, path, commit,
+    * sha256(content)) and nothing else, so an author set would resume
+    * stale. */
   def triplesCheckpointed(files: Dataset[SourceFile], root: String,
       snapshot: String, lang: String = "eng"): DataFrame =
     stages(Segmenter.sentences(files), mentions(files, lang),

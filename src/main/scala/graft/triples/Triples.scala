@@ -24,10 +24,11 @@ object Triples {
     * exactly the lexicographic-min node of the mention ↔ KB-id link
     * graph's component ('e:' < 'm:'), with no graph to build.
     *
-    * One linear chain: a map-side-combined distinct collapses the
-    * mention multiset to entity × doc rows, each explodes into its four
-    * predicates, and a final distinct merges rows that share a subject.
-    * The docId carries repo/path so output can partition by repo. */
+    * One linear chain: each mention explodes into its four predicate
+    * rows and one map-side-combined distinct merges them. The map-side
+    * combine collapses a partition's repeats first, so the one exchange
+    * carries entity × doc rows; the docId carries repo/path so output
+    * can partition by repo. */
   def materialize(linked: Dataset[LinkedMention]): DataFrame = {
     val ltext = lower(col("text"))
     val isLinked = col("entityId") =!= "NIL"
@@ -36,16 +37,14 @@ object Triples {
         when(isLinked, concat(lit("e:"), col("entityId")))
           .otherwise(concat(lit("m:"), col("tag"), lit(":"), ltext))
           .as("subj"),
-        col("tag"), ltext.as("ltext"), col("entityId"),
-        concat(col("repo"), lit("/"), col("path")).as("doc"))
-      .distinct()
-      .select(col("subj"), explode(array(
-        struct(lit("hasType").as("pred"), col("tag").as("obj")),
-        struct(lit("label").as("pred"), col("ltext").as("obj")),
-        struct(lit("sameAs").as("pred"),
-          when(isLinked, col("entityId")).as("obj")),
-        struct(lit("mentionedIn").as("pred"), col("doc").as("obj"))))
-        .as("po"))
+        explode(array(
+          struct(lit("hasType").as("pred"), col("tag").as("obj")),
+          struct(lit("label").as("pred"), ltext.as("obj")),
+          struct(lit("sameAs").as("pred"),
+            when(isLinked, col("entityId")).as("obj")),
+          struct(lit("mentionedIn").as("pred"),
+            concat(col("repo"), lit("/"), col("path")).as("obj"))))
+          .as("po"))
       .select(col("subj"), col("po.pred").as("pred"),
         col("po.obj").as("obj"))
       .filter(col("obj").isNotNull) // drops sameAs rows for NIL mentions

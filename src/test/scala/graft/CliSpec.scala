@@ -1,9 +1,14 @@
 package graft
 
+import graft.conll.ConllFixture
+import graft.core.TempDirs
 import graft.crf.FitCrf
 import graft.eval.SpanPRF1
 import graft.io.ModelIO
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import scala.jdk.CollectionConverters._
 
 /** The CLI façade end-to-end: fit → save → load → tag → eval on a
@@ -21,7 +26,7 @@ class CliSpec extends SparkTestBase {
     // not generalization; EngModelSpec gates real train/test quality
     val model = FitCrf.fit(FitEval.labeled(spark, testPath),
       k = 0.1, minCount = 2, rareMax = 2, lambda = 0f)
-    val dir = Files.createTempDirectory("cli").toString
+    val dir = TempDirs.create("cli")
     ModelIO.saveFitted(spark, model, s"$dir/m")
     val loaded = ModelIO.loadFitted(spark, s"$dir/m")
     // tag writes the reference's prediction-line format — exercise the
@@ -38,6 +43,56 @@ class CliSpec extends SparkTestBase {
     val f1 = SpanPRF1.micro(Cli.evalModel(spark, loaded, testPath)).f1
     info(f"self-fit self-eval F1=$f1%.4f")
     assert(f1 >= 0.85, f"self-eval F1 $f1%.4f unexpectedly low")
+  }
+
+  test("eval decodes the test file once: the micro line and the " +
+      "per-type table come from one evaluation") {
+    val dir = TempDirs.create("clieval")
+    val test = s"$dir/test.conll"
+    Files.write(Paths.get(test), ConllFixture.lines.asJava)
+    val model = FitCrf.fit(FitEval.labeled(spark, test),
+      k = 0.1, minCount = 2, rareMax = 2, lambda = 0f)
+    ModelIO.saveFitted(spark, model, s"$dir/m")
+    // stages that read the test file while `body` runs
+    def fileStages(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val n = new AtomicInteger
+      val listener = new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted)
+            : Unit =
+          if (e.stageInfo.rddInfos.exists(_.name == test)) {
+            n.incrementAndGet(); ()
+          }
+      }
+      sc.addSparkListener(listener)
+      try { body; GraftTestBus.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      n.get
+    }
+    val once = fileStages(
+      FitEval.perTypeConll(spark, test, FitCrf.tag(_, model)).collect())
+    val out = new java.io.ByteArrayOutputStream
+    val eval = fileStages(Console.withOut(out)(Cli.run(spark,
+      Array("eval", "--model", s"$dir/m", "--test", test))))
+    assert(once > 0 && eval == once,
+      s"eval read the test file in $eval stages, one evaluation in $once")
+    val printed = out.toString("UTF-8")
+    assert(printed.contains("micro P="), printed)
+    Seq("LOC", "ORG", "PER").foreach(t =>
+      assert(printed.contains(s"|$t"), printed))
+  }
+
+  test("specs make temp dirs through TempDirs, which deletes them on " +
+      "exit") {
+    val files = Files.walk(Paths.get("src/test"))
+    val leaks =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(f => """createTempDirectory\(""".r
+          .findFirstIn(Files.readString(f)).isDefined)
+        .map(_.getFileName.toString).toSeq.sorted
+      finally files.close()
+    assert(leaks.isEmpty, s"Files.createTempDirectory in $leaks")
   }
 
   test("the shipped artifact serves through the CLI default path " +
@@ -87,7 +142,7 @@ class CliSpec extends SparkTestBase {
   test("features mode: segnerfts parity rows over line-per-sentence " +
       "text, 15-dim plain and 24-dim with gaz") {
     val s = spark
-    val dir = Files.createTempDirectory("clifeat")
+    val dir = Paths.get(TempDirs.create("clifeat"))
     val in = dir.resolve("deu.txt")
     Files.writeString(in,
       "Vereinigten Arabischen Republik\nHerr Schwarzwald\n")

@@ -87,8 +87,7 @@ class CrfTrainerSpec extends SparkTestBase {
     assert(acc > 0.97, s"token accuracy $acc (n=$tot)")
 
     // train -> save -> load -> serve: the full model lifecycle
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-trained").toString + "/model"
+    val dir = graft.core.TempDirs.create("graft-trained") + "/model"
     graft.io.ModelIO.save(spark, graft.crf.Ensemble.Model(w, tr), dir)
     val loaded = graft.io.ModelIO.load(spark, dir)
     val served = Crf.tag(sentences, loaded.emissions, loaded.transitions)

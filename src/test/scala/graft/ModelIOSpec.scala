@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
 class ModelIOSpec extends SparkTestBase {
 
   test("model save/load round-trips exactly (model_builder.py:30-43)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_model")
-      .toString + "/m"
+    val dir = graft.core.TempDirs.create("graft_model") + "/m"
     val m = Ensemble.Model(Crf.emissionWeights, Crf.transitions)
     ModelIO.save(spark, m, dir)
     val back = ModelIO.load(spark, dir)
@@ -34,8 +33,7 @@ class ModelIOSpec extends SparkTestBase {
 
   test("fitted model save/load roundtrip (word + shape dictionaries)") {
     val m = graft.crf.DefaultModel.fitted
-    val tmp = java.nio.file.Files
-      .createTempDirectory("fitted-model").toString + "/m"
+    val tmp = graft.core.TempDirs.create("fitted-model") + "/m"
     graft.io.ModelIO.saveFitted(spark, m, tmp)
     val m2 = graft.io.ModelIO.loadFitted(spark, tmp)
     assert(m2.featW.map(_.toSeq).toSeq == m.featW.map(_.toSeq).toSeq)

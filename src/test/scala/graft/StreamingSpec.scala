@@ -171,8 +171,7 @@ class StreamingSpec extends SparkTestBase {
     // a CLUSTER-bearing model, round-tripped through ModelIO like the
     // shipped artifact — parity must hold through both the cluster
     // emission term and the save/load path
-    val dir = java.nio.file.Files
-      .createTempDirectory("stream-model").toString
+    val dir = graft.core.TempDirs.create("stream-model")
     graft.io.ModelIO.saveFitted(spark,
       graft.crf.DefaultModel.fitted.copy(
         clusters = Map("customer" -> 0, "spark" -> 1),

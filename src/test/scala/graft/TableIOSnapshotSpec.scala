@@ -48,8 +48,7 @@ class TableIOSnapshotSpec extends SparkTestBase {
       "and a backslash parses, and the snapshot reads back") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_lineage")
-      .toString
+    val root = graft.core.TempDirs.create("graft_lineage")
     val odd = "a\"b\\c"
     val snap = "snap\"1\\x"
     val df = Seq((1, odd), (2, odd), (3, "plain")).toDF("v", "part")

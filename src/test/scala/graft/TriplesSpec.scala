@@ -118,8 +118,7 @@ class TriplesSpec extends SparkTestBase {
   test("checkpointed pipeline resumes and writes lineage sidecars") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ckpt").toString
+    val root = graft.core.TempDirs.create("graft_ckpt")
     val files = Corpus.synthesize(spark, 40)
     val t1 = Pipeline.triplesCheckpointed(files, root, "snap1")
       .orderBy("subj", "pred", "obj").collect()
@@ -162,8 +161,7 @@ class TriplesSpec extends SparkTestBase {
       "routed triples, and resume still holds") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_orm").toString
+    val root = graft.core.TempDirs.create("graft_ckpt_orm")
     val g = graft.core.LangDict.loadGaz(graft.core.LangDict.gazCsvRows())
     val files = Queries8.eligibleLangSents(g)
       .collect { case ("orm", sid, toks) =>

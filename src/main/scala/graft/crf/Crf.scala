@@ -6,6 +6,11 @@ import org.apache.spark.sql.Dataset
 
 /** Linear-CRF scoring + BIO-constrained Viterbi decoding.
   *
+  * Serving decodes through [[kernel]] ([[DecodeKernel]]: per-task token
+  * memo, flat Viterbi); [[emit]] and [[viterbi]] are the per-sentence
+  * definitions it is bit-identical to, kept for training, specs and
+  * [[FitCrf]]'s word-identity emissions.
+  *
   * Re-derivation of the reference's CRF decode path (SURVEY.md §2.8,
   * §7.3): emission scores are a linear model over the discrete feature
   * templates (replacing the BiLSTM — models/decoders.py:121-154), the
@@ -67,57 +72,17 @@ object Crf {
     out
   }
 
-  /** Viterbi decode over per-token emission vectors (length K each).
-    * Exact semantics of decoders.py:156-196: init START=0 / else −2000;
-    * DP over all K+2 source tags; real tags only as targets; first-max
-    * argmax; terminal step adds T(·, END). Returns tag ids. */
+  /** Viterbi decode over per-token emission vectors (length K each):
+    * the rows flattened into [[DecodeKernel.viterbi]], the one DP (exact
+    * semantics of decoders.py:156-196). Returns tag ids. */
   def viterbi(emissions: Array[Array[Float]],
       trans: Array[Array[Float]]): Array[Int] = {
     val T = emissions.length
-    if (T == 0) return Array.empty
-    val prev = new Array[Float](K + 2)
-    java.util.Arrays.fill(prev, NEG)
-    prev(START) = 0f
-    val back = Array.ofDim[Int](T, K)
-    val cur = new Array[Float](K + 2)
+    val em = new Array[Float](T * K)
     var t = 0
-    while (t < T) {
-      val em = emissions(t)
-      var to = 0
-      while (to < K) {
-        var bestFrom = 0
-        var best = prev(0) + trans(0)(to)
-        var from = 1
-        while (from < K + 2) {
-          val s = prev(from) + trans(from)(to)
-          if (s > best) { best = s; bestFrom = from } // first max wins
-          from += 1
-        }
-        cur(to) = best + em(to)
-        back(t)(to) = bestFrom
-        to += 1
-      }
-      cur(START) = NEG; cur(END) = NEG
-      System.arraycopy(cur, 0, prev, 0, K + 2)
-      t += 1
-    }
-    // terminal transition to END (decoders.py:184-187)
-    var bestTag = 0
-    var best = prev(0) + trans(0)(END)
-    var tag = 1
-    while (tag < K) {
-      val s = prev(tag) + trans(tag)(END)
-      if (s > best) { best = s; bestTag = tag }
-      tag += 1
-    }
-    val path = new Array[Int](T)
-    path(T - 1) = bestTag
-    var i = T - 1
-    while (i > 0) {
-      path(i - 1) = back(i)(path(i))
-      i -= 1
-    }
-    path
+    while (t < T) { System.arraycopy(emissions(t), 0, em, t * K, K); t += 1 }
+    DecodeKernel.viterbi(em, T, DecodeKernel.realTransitions(trans),
+      DecodeKernel.endTransitions(trans), new Array[Int](T * K))
   }
 
   private def logSumExp(xs: Array[Double]): Double = {
@@ -279,23 +244,20 @@ object Crf {
     (bestPath, bestScore)
   }
 
-  /** Decode one sentence in place: features → emissions → Viterbi.
-    * Shared by [[tag]] and the fully-fused corpus kernel in
-    * [[graft.pipeline.Pipeline]]. */
-  def decodeSentence(s: Sentence, w: Array[Array[Float]],
-      tr: Array[Array[Float]],
+  /** The eng decode kernel over explicit weights and gazetteer index:
+    * [[Features.tokenBits]] memoized per token, [[Features.gazMarks]]
+    * per sentence. Shared by [[tag]], [[Ensemble]] and the eng
+    * [[graft.pipeline.LangPack]]; one per task. */
+  def kernel(w: Array[Array[Float]], tr: Array[Array[Float]],
       gaz: Map[String, Vector[(Vector[String], String, Int)]])
-      : TaggedSentence = {
-    val masks = Features.sentenceBits(s.tokens, gaz)
-    val em = masks.map(emit(_, w))
-    val path = viterbi(em, tr)
-    TaggedSentence(s.repo, s.path, s.sentIdx, s.tokens, s.starts,
-      s.ends, path.map(Dict.tags))
-  }
+      : DecodeKernel =
+    new DecodeKernel(Features.tokenBits,
+      (_, lower) => Features.gazMarks(lower, gaz), w, tr)
 
   /** The fused featurize→emit→Viterbi kernel: one narrow mapPartitions
     * stage, broadcast weights, no shuffle (SURVEY.md §4 custom piece 1).
-    * Scales linearly with cores — zero cross-sentence state. */
+    * Scales linearly with cores — zero cross-sentence state beyond the
+    * per-task [[DecodeKernel]] memo. */
   def tag(sentences: Dataset[Sentence]): Dataset[TaggedSentence] =
     tag(sentences, emissionWeights, transitions)
 
@@ -309,8 +271,8 @@ object Crf {
     val bT = spark.sparkContext.broadcast(tr)
     val bGaz = spark.sparkContext.broadcast(Dict.gazIndex)
     sentences.mapPartitions { it =>
-      val w0 = bW.value; val tr0 = bT.value; val gaz = bGaz.value
-      it.map(decodeSentence(_, w0, tr0, gaz))
+      val k = kernel(bW.value, bT.value, bGaz.value)
+      it.map(k.decode)
     }
   }
 }

@@ -1,0 +1,167 @@
+package graft.crf
+
+import graft.core.{Dict, Memo, Sentence, TaggedSentence}
+import graft.features.Features
+
+/** The decode kernel every serve path runs (the eng and non-eng
+  * [[graft.pipeline.LangPack]] decoders, [[Crf.tag]] and [[Ensemble]]):
+  * features → emissions → Viterbi for one sentence at a time, with the
+  * per-token work memoized across the sentences of a task.
+  *
+  * Tokens are Zipfian, so per token string a [[Memo]] keeps its
+  * lowercase form and its partial emission vector over its type/token
+  * bits (0–14, from `typeBits`, computed once). Per sentence only the
+  * gazetteer bits (15–23, from `gazBits` over the tokens and their
+  * lowercase forms) are computed, and their weights are added to the
+  * partial in ascending bit order. [[Crf.emit]] sums the set bits of the
+  * full mask in ascending order too, and every type bit is below every
+  * gazetteer bit, so each emission is the same float additions in the
+  * same order: scores and paths are bit-identical to [[Crf.emit]] over
+  * the full mask followed by [[Crf.viterbi]].
+  *
+  * The emission rows and back-pointers live in flat buffers reused
+  * across sentences (grown for a longer one). Make one per task: the
+  * memo and the buffers are not thread-safe.
+  */
+final class DecodeKernel(typeBits: String => Int,
+    gazBits: (Array[String], Array[String]) => Array[Int],
+    w: Array[Array[Float]], tr: Array[Array[Float]]) {
+  import DecodeKernel._
+
+  private val wT = Array.tabulate(Features.numFeatures * K)(i =>
+    w(i % K)(i / K))
+  private val trans = realTransitions(tr)
+  private val toEnd = endTransitions(tr)
+  private val memo = new Memo[String, Tok]
+  private var em = new Array[Float](InitTokens * K)
+  private var back = new Array[Int](InitTokens * K)
+
+  /** Adds w(t)(f) for each set bit f of `mask`, lowest bit first, to
+    * `out(off + t)` for every tag t. */
+  private def addBits(out: Array[Float], off: Int, mask: Int): Unit = {
+    var m = mask
+    while (m != 0) {
+      val f = java.lang.Integer.numberOfTrailingZeros(m) * K
+      var t = 0
+      while (t < K) { out(off + t) += wT(f + t); t += 1 }
+      m &= m - 1
+    }
+  }
+
+  private def tok(s: String): Tok = memo.getOrElseUpdate(s, {
+    val bits = typeBits(s)
+    require(bits >>> Features.B_GAZ == 0, s"type bits of '$s' reach " +
+      s"the gazetteer range: ${bits.toBinaryString}")
+    val partial = new Array[Float](K)
+    addBits(partial, 0, bits)
+    new Tok(s.toLowerCase(java.util.Locale.ROOT), partial)
+  })
+
+  /** Tag ids of one sentence. */
+  def tags(tokens: Array[String]): Array[Int] = {
+    val n = tokens.length
+    if (n == 0) return Array.emptyIntArray
+    if (n * K > em.length) {
+      val cap = Integer.highestOneBit(n - 1) * 2 * K
+      em = new Array[Float](cap); back = new Array[Int](cap)
+    }
+    val toks = tokens.map(tok)
+    val gaz = gazBits(tokens, toks.map(_.lower))
+    var i = 0
+    while (i < n) {
+      System.arraycopy(toks(i).partial, 0, em, i * K, K)
+      addBits(em, i * K, gaz(i))
+      i += 1
+    }
+    viterbi(em, n, trans, toEnd, back)
+  }
+
+  def decode(s: Sentence): TaggedSentence =
+    TaggedSentence(s.repo, s.path, s.sentIdx, s.tokens, s.starts, s.ends,
+      tags(s.tokens).map(Dict.tags))
+}
+
+object DecodeKernel {
+
+  private val K = Crf.K
+  private val InitTokens = 256
+
+  /** A token's lowercase form and the emission of its type bits. */
+  private final class Tok(val lower: String, val partial: Array[Float])
+
+  /** T(from)(to) for every source (real and virtual) into the K real
+    * tags, flat as `from * K + to`. */
+  private[crf] def realTransitions(tr: Array[Array[Float]]): Array[Float] =
+    Array.tabulate((K + 2) * K)(i => tr(i / K)(i % K))
+
+  /** T(tag)(END) for the K real tags. */
+  private[crf] def endTransitions(tr: Array[Array[Float]]): Array[Float] =
+    Array.tabulate(K)(t => tr(t)(Crf.END))
+
+  /** The one Viterbi DP, over `T` emission rows of `em` (flat,
+    * `t * K + tag`), with [[realTransitions]] `trans` and
+    * [[endTransitions]] `toEnd`; `back` holds at least T * K.
+    * Exact semantics of decoders.py:156-196: init START=0 / else −2000;
+    * DP over all K+2 source tags; real tags only as targets; first-max
+    * argmax; terminal step adds T(·, END). Returns tag ids.
+    *
+    * Each step sweeps the sources in ascending order and keeps a running
+    * best per target, replaced only on a strictly greater score: the
+    * first max wins, exactly as a per-target scan over the sources, but
+    * the inner loop runs over contiguous targets and its compare is a
+    * select rather than an unpredictable branch. */
+  private[crf] def viterbi(em: Array[Float], T: Int, trans: Array[Float],
+      toEnd: Array[Float], back: Array[Int]): Array[Int] = {
+    if (T == 0) return Array.emptyIntArray
+    val prev = new Array[Float](K + 2)
+    java.util.Arrays.fill(prev, Crf.NEG)
+    prev(Crf.START) = 0f
+    val best = new Array[Float](K)
+    val arg = new Array[Int](K)
+    var t = 0
+    while (t < T) {
+      val row = t * K
+      var to = 0
+      while (to < K) { best(to) = prev(0) + trans(to); arg(to) = 0; to += 1 }
+      var from = 1
+      while (from < K + 2) {
+        val p = prev(from)
+        val off = from * K
+        to = 0
+        while (to < K) {
+          val s = p + trans(off + to)
+          val gt = s > best(to) // first max wins
+          best(to) = if (gt) s else best(to)
+          arg(to) = if (gt) from else arg(to)
+          to += 1
+        }
+        from += 1
+      }
+      to = 0
+      while (to < K) {
+        prev(to) = best(to) + em(row + to)
+        back(row + to) = arg(to)
+        to += 1
+      }
+      prev(Crf.START) = Crf.NEG; prev(Crf.END) = Crf.NEG
+      t += 1
+    }
+    // terminal transition to END (decoders.py:184-187)
+    var bestTag = 0
+    var bestEnd = prev(0) + toEnd(0)
+    var tag = 1
+    while (tag < K) {
+      val s = prev(tag) + toEnd(tag)
+      if (s > bestEnd) { bestEnd = s; bestTag = tag }
+      tag += 1
+    }
+    val path = new Array[Int](T)
+    path(T - 1) = bestTag
+    var i = T - 1
+    while (i > 0) {
+      path(i - 1) = back(i * K + path(i))
+      i -= 1
+    }
+    path
+  }
+}

@@ -44,8 +44,9 @@ object Ensemble {
     val bM = spark.sparkContext.broadcast(avg)
     val bGaz = spark.sparkContext.broadcast(Dict.gazIndex)
     sentences.mapPartitions { it =>
-      val m = bM.value; val gaz = bGaz.value
-      it.map(Crf.decodeSentence(_, m.emissions, m.transitions, gaz))
+      val m = bM.value
+      val k = Crf.kernel(m.emissions, m.transitions, bGaz.value)
+      it.map(k.decode)
     }
   }
 
@@ -59,11 +60,9 @@ object Ensemble {
     val bM = spark.sparkContext.broadcast(models)
     val bGaz = spark.sparkContext.broadcast(Dict.gazIndex)
     sentences.mapPartitions { it =>
-      val ms = bM.value; val gaz = bGaz.value
-      it.map { s =>
-        val m = ms(selector(s))
-        Crf.decodeSentence(s, m.emissions, m.transitions, gaz)
-      }
+      val gaz = bGaz.value
+      val ks = bM.value.map(m => Crf.kernel(m.emissions, m.transitions, gaz))
+      it.map(s => ks(selector(s)).decode(s))
     }
   }
 }

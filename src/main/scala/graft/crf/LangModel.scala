@@ -1,6 +1,6 @@
 package graft.crf
 
-import graft.core.{Dict, LangDict, Sentence, TaggedSentence}
+import graft.core.{Dict, LangDict}
 import graft.features.LangFeatures
 
 /** Per-language decode models for the language-generic KG pipeline
@@ -201,18 +201,13 @@ object LangModel {
   def kbId(lang: String)(entryId: Int): String =
     f"$lang%s:Q${entryId + 1}%05d"
 
-  /** Decode one sentence with a language's features + gaz + model:
-    * the per-language twin of [[Crf.decodeSentence]], shared by the
-    * routed pipeline kernel and tests. */
-  def decodeSentence(s: Sentence, lang: String, gaz: LangDict.Gaz,
-      m: Ensemble.Model): TaggedSentence = {
-    val gbits = LangFeatures.gazBits(s.tokens, gaz)
-    val em = Array.tabulate(s.tokens.length) { i =>
-      Crf.emit(LangFeatures.typeTokenBits(lang, s.tokens(i)) | gbits(i),
-        m.emissions)
-    }
-    val path = Crf.viterbi(em, m.transitions)
-    TaggedSentence(s.repo, s.path, s.sentIdx, s.tokens, s.starts,
-      s.ends, path.map(Dict.tags))
-  }
+  /** The decode kernel of a language's features + gaz + model: the
+    * per-language twin of [[Crf.kernel]] ([[LangFeatures.typeTokenBits]]
+    * memoized per token, [[LangFeatures.gazBits]] per sentence), used by
+    * the non-eng [[graft.pipeline.LangPack]] decoder; one per task. */
+  def kernel(lang: String, gaz: LangDict.Gaz, m: Ensemble.Model)
+      : DecodeKernel =
+    new DecodeKernel(LangFeatures.typeTokenBits(lang, _),
+      (tokens, _) => LangFeatures.gazBits(tokens, gaz),
+      m.emissions, m.transitions)
 }

@@ -11,10 +11,14 @@ import graft.core.Dict
   * eng (segnerfts.py:88-94) and out of scope (SURVEY.md §7.6).
   *
   * Packed as an Int bitmask per token (bit f = feature f fired) — the
-  * emission dot product then walks set bits only. Pure Scala, used
-  * inside the fused segment→featurize→Viterbi mapPartitions kernel; a
-  * Column-expression twin for the relational/oracle path lives in
-  * [[graft.SparkEntry]] queries.
+  * emission dot product then walks set bits only. Every type/token bit
+  * is below every gazetteer bit, which lets the decode kernel
+  * ([[graft.crf.DecodeKernel]]) memoize a token's [[tokenBits]]
+  * emission and add the sentence's [[gazMarks]] after it with the same
+  * float result as [[graft.crf.Crf.emit]] over the full mask. Pure
+  * Scala, used inside the fused segment→featurize→Viterbi
+  * mapPartitions kernel; a Column-expression twin for the
+  * relational/oracle path lives in [[graft.SparkEntry]] queries.
   */
 object Features {
 
@@ -75,22 +79,33 @@ object Features {
     m
   }
 
-  /** Full 24-bit masks for a sentence: token bits + gazetteer B/I/O
-    * marking via the broadcast n-gram index (longest entry first, all
-    * matches marked — reference marks every matching entry's positions
-    * independently, segnerfts.py:55-85). */
+  /** Full 24-bit masks for a sentence: [[tokenBits]] per token plus
+    * [[gazMarks]] over the lowercased tokens. */
   def sentenceBits(
       tokens: Array[String],
       gazIndex: Map[String, Vector[(Vector[String], String, Int)]])
       : Array[Int] = {
-    val n = tokens.length
-    val masks = new Array[Int](n)
-    val lower = new Array[String](n)
+    val masks =
+      gazMarks(tokens.map(_.toLowerCase(java.util.Locale.ROOT)), gazIndex)
     var i = 0
-    while (i < n) { masks(i) = tokenBits(tokens(i))
-      lower(i) = tokens(i).toLowerCase(java.util.Locale.ROOT); i += 1 }
+    while (i < masks.length) { masks(i) |= tokenBits(tokens(i)); i += 1 }
+    masks
+  }
+
+  /** Gazetteer B/I/O bits (15-23) of a sentence from its lowercased
+    * tokens, via the broadcast n-gram index (longest entry first, all
+    * matches marked — reference marks every matching entry's positions
+    * independently, segnerfts.py:55-85). The one eng gazetteer marker:
+    * [[sentenceBits]] and the decode kernel ([[graft.crf.Crf.kernel]])
+    * both call it. */
+  def gazMarks(
+      lower: Array[String],
+      gazIndex: Map[String, Vector[(Vector[String], String, Int)]])
+      : Array[Int] = {
+    val n = lower.length
+    val masks = new Array[Int](n)
     val covered = new Array[Boolean](n)
-    i = 0
+    var i = 0
     while (i < n) {
       gazIndex.get(lower(i)).foreach { entries =>
         entries.foreach { case (toks, label, _) =>

@@ -1,6 +1,6 @@
 package graft.link
 
-import graft.core.{Dict, Mention}
+import graft.core.{Dict, Memo, Mention}
 import org.apache.spark.sql.Dataset
 
 /** Entity linking: mention → candidate generation + similarity scoring
@@ -93,6 +93,36 @@ object Linker {
 
   val defaultThreshold = 0.85
 
+  /** A resolved link: KB id (or NIL), entry name and rounded score. */
+  private final case class Link(id: String, name: String, score: Double)
+  private val NilLink = Link("NIL", null, 0.0)
+
+  /** The best entry for a mention of `tag` whose lowercased text is
+    * `lowerText`: candidates share its first token and its label,
+    * highest [[similarity]] wins, ties go to the lowest entry id. */
+  private def resolve(tag: String, lowerText: String,
+      idx: Map[String, Vector[(Vector[String], String, Int)]],
+      threshold: Double, kbId: Int => String): Link = {
+    val toks = lowerText.split(' ')
+    val cands = idx.getOrElse(toks(0), Vector.empty)
+    var bestScore = -1.0
+    var bestId = -1
+    var bestName: Vector[String] = null
+    cands.foreach { case (entryToks, label, id) =>
+      if (label == tag) {
+        val s = similarity(toks, entryToks)
+        if (s > bestScore ||
+            (s == bestScore && bestId >= 0 && id < bestId)) {
+          bestScore = s; bestId = id; bestName = entryToks
+        }
+      }
+    }
+    if (bestScore >= threshold && bestId >= 0)
+      Link(kbId(bestId), bestName.mkString(" "),
+        math.rint(bestScore * 10000) / 10000)
+    else NilLink
+  }
+
   /** Link mentions. Unlinked mentions keep entityId = "NIL" (the
     * reference emits NIL for every mention — post_process.py:29-33;
     * linking is the north-star extension). `index` is an entity index:
@@ -100,7 +130,13 @@ object Linker {
     * id) — [[Dict.gazIndex]] is the default (eng);
     * [[graft.crf.LangModel.linkIndex]] builds one per language from
     * the reference gazetteer. `kbId` renders an entry id as the KB
-    * identifier (defaults to the Qxxxxx space). */
+    * identifier (defaults to the Qxxxxx space).
+    *
+    * A link depends only on the mention's tag and lowercased text, and
+    * mention texts repeat (Zipfian), so each task memoizes [[resolve]]
+    * by (tag, lower(text)) in a [[graft.core.Memo]]: the candidate
+    * scan, [[similarity]] and `kbId` run once per distinct key, not
+    * once per mention. Each row keeps its own original-case `text`. */
   def link(mentions: Dataset[Mention],
       threshold: Double = defaultThreshold,
       index: Map[String, Vector[(Vector[String], String, Int)]] =
@@ -111,28 +147,13 @@ object Linker {
     val bIdx = spark.sparkContext.broadcast(index)
     mentions.mapPartitions { it =>
       val idx = bIdx.value
+      val memo = new Memo[(String, String), Link]
       it.map { m =>
-        val toks = m.text.toLowerCase(java.util.Locale.ROOT).split(' ')
-        val cands = idx.getOrElse(toks(0), Vector.empty)
-        var bestScore = -1.0
-        var bestId = -1
-        var bestName: Vector[String] = null
-        cands.foreach { case (entryToks, label, id) =>
-          if (label == m.tag) {
-            val s = similarity(toks, entryToks)
-            if (s > bestScore ||
-                (s == bestScore && bestId >= 0 && id < bestId)) {
-              bestScore = s; bestId = id; bestName = entryToks
-            }
-          }
-        }
-        if (bestScore >= threshold && bestId >= 0)
-          LinkedMention(m.repo, m.path, m.sentIdx, m.start, m.end,
-            m.text, m.tag, kbId(bestId), bestName.mkString(" "),
-            math.rint(bestScore * 10000) / 10000)
-        else
-          LinkedMention(m.repo, m.path, m.sentIdx, m.start, m.end,
-            m.text, m.tag, "NIL", null, 0.0)
+        val key = (m.tag, m.text.toLowerCase(java.util.Locale.ROOT))
+        val l = memo.getOrElseUpdate(key,
+          resolve(key._1, key._2, idx, threshold, kbId))
+        LinkedMention(m.repo, m.path, m.sentIdx, m.start, m.end,
+          m.text, m.tag, l.id, l.name, l.score)
       }
     }
   }

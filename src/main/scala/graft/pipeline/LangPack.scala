@@ -12,8 +12,9 @@ import org.apache.spark.SparkContext
   * pieces from here:
   *  - `decoder`: broadcasts the model and gaz on the driver and returns
   *    the task-side factory, which reads the broadcasts once per
-  *    partition and yields the per-sentence decode. Only broadcast
-  *    handles are captured, never the model itself.
+  *    partition and yields the per-sentence decode of a fresh
+  *    [[graft.crf.DecodeKernel]] (its token memo lives for the task).
+  *    Only broadcast handles are captured, never the model itself.
   *  - `lookup`/`lookupIndex`: the post-process fix-up table and its
   *    first-token index (fix-up and insertion never consult English
   *    entries on a non-eng corpus).
@@ -40,10 +41,7 @@ object LangPack {
           val bW = sc.broadcast(Crf.emissionWeights)
           val bT = sc.broadcast(Crf.transitions)
           val bGaz = sc.broadcast(Dict.gazIndex)
-          () => {
-            val w = bW.value; val tr = bT.value; val gaz = bGaz.value
-            s => Crf.decodeSentence(s, w, tr, gaz)
-          }
+          () => Crf.kernel(bW.value, bT.value, bGaz.value).decode
         },
         Dict.lookupTable, Dict.lookupIndex, Dict.gazIndex, Dict.kbId)
     else {
@@ -52,10 +50,7 @@ object LangPack {
         sc => {
           val bM = sc.broadcast(LangModel.fitted(lang))
           val bG = sc.broadcast(gaz)
-          () => {
-            val m = bM.value; val g = bG.value
-            s => LangModel.decodeSentence(s, lang, g, m)
-          }
+          () => LangModel.kernel(lang, bG.value, bM.value).decode
         },
         LangModel.lookupTable(gaz), LangModel.lookupIndex(gaz),
         LangModel.linkIndex(gaz), LangModel.kbId(lang))

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *   corpus → per file: segment → featurize → Viterbi → spans
   *            → fix-up → within-doc vote → insertion   (narrow, fused)
   *          → cross-doc vote (one exchange on (repo, path), read by the
-  *            (key, tag) count and the broadcast relabel)
+  *            (key, tag) count in a scalar subquery and the relabel)
   *          → link (broadcast dict, narrow)
   *          → canonicalize + (subj, pred, obj) triples
   *            (subject is a column expression; explode, one distinct)

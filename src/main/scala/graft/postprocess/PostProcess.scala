@@ -228,12 +228,12 @@ object PostProcess {
     * Counts-only shape: the mention stream feeds ONE map-side-combined
     * aggregate — per-(key, tag) counts — and everything the vote needs
     * (per-key frequency for top-K membership, per-key winner) derives
-    * from that frame; the vote dictionary is broadcast back onto the
-    * ORIGINAL stream. The full stream is never materialized: the
-    * aggregate branch and the output branch reference the identical
-    * upstream subplan, so within one action the upstream exchange is
-    * computed once and re-read (ReusedExchange — PlanSpec asserts no
-    * checkpoint scan survives in the plan). */
+    * from that frame; the vote dictionary comes back onto the ORIGINAL
+    * stream as a scalar-subquery map ([[crossVote]]). The full stream is
+    * never materialized: the subquery and the output reference the
+    * identical upstream subplan, so within one action the upstream
+    * exchange is computed once and re-read (ReusedExchange — PlanSpec
+    * asserts no checkpoint scan survives in the plan). */
   def crossDocVote(mentions: Dataset[Mention], topK: Int = TopK)
       : Dataset[Mention] = {
     import mentions.sparkSession.implicits._
@@ -250,10 +250,10 @@ object PostProcess {
 
   /** Stage 3 over [[docKernel]]'s output, the only cross-file step of
     * the fused pass: ONE exchange of the stream on (repo, path), read
-    * by both the (key, tag) count and the broadcast relabel (the typed
-    * barrier above it keeps both subtrees identical, so the per-file
-    * pass below runs once per action). Inserted mentions are neither
-    * counted nor relabeled. */
+    * by both the (key, tag) count in the vote subquery and the relabel
+    * (the typed barrier above it keeps both subtrees identical, so the
+    * per-file pass below runs once per action). Inserted mentions are
+    * neither counted nor relabeled. */
   def crossDocVoteFlagged(flagged: Dataset[Flagged]): Dataset[Mention] = {
     import flagged.sparkSession.implicits._
     crossVote(flagged.repartition(col("repo"), col("path"))
@@ -261,24 +261,29 @@ object PostProcess {
   }
 
   /** The cross-doc vote over a mention frame with an `inserted`
-    * column. */
+    * column. The at most `topK` winners become one `key → tag` map,
+    * computed by a scalar subquery over the same frame (which reuses
+    * its upstream exchange), and the relabel is a column expression
+    * over it: `try_element_at(map, key)` per row. No join, so no
+    * broadcast hash relation is built for a handful of rows. */
   private def crossVote(df: DataFrame, topK: Int): Dataset[Mention] = {
     import df.sparkSession.implicits._
     val keyed = df.withColumn("key", lower(col("text")))
     // per-(key, tag) counts, then per key its total frequency and its
     // winner by (n desc, tag asc) as the min of (-n, tag); top-K keys
     // by (freq desc, key asc)
-    val winners = keyed.filter(!col("inserted"))
+    val votes = keyed.filter(!col("inserted"))
       .groupBy("key", "tag").agg(count(lit(1)).as("n"))
       .groupBy("key").agg(sum(col("n")).as("freq"),
         min(struct((-col("n")).as("negN"), col("tag"))).as("best"))
       .orderBy(desc("freq"), asc("key")).limit(topK)
-      .select(col("key"), col("best.tag").as("voteTag"))
-    keyed.join(broadcast(winners), Seq("key"), "left")
-      .select(col("repo"), col("path"), col("sentIdx"), col("start"),
+      .agg(map_from_entries(collect_list(
+        struct(col("key"), col("best.tag")))))
+      .scalar()
+    keyed.select(col("repo"), col("path"), col("sentIdx"), col("start"),
         col("end"), col("text"),
-        when(col("inserted"), col("tag"))
-          .otherwise(coalesce(col("voteTag"), col("tag"))).as("tag"),
+        when(col("inserted"), col("tag")).otherwise(
+          coalesce(try_element_at(votes, col("key")), col("tag"))).as("tag"),
         col("conf"))
       .as[Mention]
   }

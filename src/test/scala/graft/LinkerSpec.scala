@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Dict, Mention}
+import graft.core.{Dict, Memo, Mention}
 import graft.link.Linker
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,5 +45,58 @@ class LinkerSpec extends AnyFunSuite {
     val got = Linker.link(ms).collect().head
     assert(got.entityId != "NIL")
     assert(got.entityName == "ada lovelace")
+  }
+
+  /** Per-mention link, written out from [[Linker.similarity]]: the
+    * same-label candidates sharing the first token, best score, lowest
+    * entry id on ties, NIL below the threshold. */
+  private def linkOne(m: Mention): Linker.LinkedMention = {
+    val toks = m.text.toLowerCase(java.util.Locale.ROOT).split(' ')
+    val scored = Dict.gazIndex.getOrElse(toks(0), Vector.empty)
+      .filter(_._2 == m.tag)
+      .map { case (e, _, id) => (Linker.similarity(toks, e), id, e) }
+    val best = scored.sortBy { case (s, id, _) => (-s, id) }.headOption
+    best.filter(_._1 >= Linker.defaultThreshold) match {
+      case Some((s, id, e)) => Linker.LinkedMention(m.repo, m.path,
+        m.sentIdx, m.start, m.end, m.text, m.tag, Dict.kbId(id),
+        e.mkString(" "), math.rint(s * 10000) / 10000)
+      case None => Linker.LinkedMention(m.repo, m.path, m.sentIdx,
+        m.start, m.end, m.text, m.tag, "NIL", null, 0.0)
+    }
+  }
+
+  test("the (tag, lower(text)) link memo equals per-mention linking " +
+      "across a partition larger than its cap") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // one text in mixed case under two tags, linked and NIL, repeated
+    val repeated = for {
+      text <- Seq("Ada Lovelace", "ada lovelace", "ADA LOVELACE",
+        "Ada Lovelac", "Addis Ababa", "zzzzzz", "hash join")
+      tag <- Seq("PER", "ORG", "GPE")
+    } yield (text, tag)
+    // distinct near-misses of one first token, past the memo cap, with
+    // the repeated mentions before, among and after them
+    val distinct = (0 until Memo.Cap + 2000).map { i =>
+      (if (i % 2 == 0) s"Ada Lovelace$i" else s"ada x$i", "PER")
+    }
+    val texts = repeated ++ distinct.take(Memo.Cap / 2) ++ repeated ++
+      distinct.drop(Memo.Cap / 2) ++ repeated
+    val ms = texts.zipWithIndex.map { case ((text, tag), i) =>
+      Mention("r", s"p${i % 7}", i, 0, text.length, text, tag, 1.0)
+    }
+    val got = Linker.link(ms.toDS().coalesce(1)).collect()
+    assert(got.length == ms.length)
+    val want = ms.map(linkOne)
+    assert(got.sortBy(_.sentIdx).toSeq == want)
+    // every row keeps its own original-case text
+    assert(got.map(l => l.sentIdx -> l.text).toMap ==
+      ms.map(m => m.sentIdx -> m.text).toMap)
+    // both outcomes occur for the mixed-case text, under PER only
+    val ada = got.filter(_.text.equalsIgnoreCase("ada lovelace"))
+    assert(ada.filter(_.tag == "PER").forall(_.entityId != "NIL"))
+    assert(ada.filter(_.tag != "PER").forall(_.entityId == "NIL"))
+    assert(got.exists(l => l.text.startsWith("ada x") &&
+      l.entityId == "NIL"))
   }
 }

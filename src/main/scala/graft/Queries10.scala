@@ -171,15 +171,45 @@ object Queries10 {
 
   private def o77: String = Queries7.oracles("q58_triples_oracle")
 
+  // ---- q80/q81: the fused path the headline runs -----------------------
+
+  /** [[graft.pipeline.Pipeline.postProcessed]]: decode, the per-file
+    * post-process kernel and the cross-doc vote in one pass over the
+    * whole `documents` corpus, the input q51 reads. `fromDocuments`
+    * keys each path by its doc id, so one (repo, path) is one input
+    * row and the fused pass's documents are q51's: the q51 oracle
+    * pins it. */
+  private def q80(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    graft.pipeline.Pipeline.postProcessed(
+      graft.core.Corpus.fromDocuments(s, dir).as[graft.core.SourceFile])
+      .toDF().orderBy("repo", "path", "sentIdx", "start")
+  }
+
+  /** [[graft.pipeline.Pipeline.triples]], the action Bench, `Cli kg`
+    * and perfbench time: the fused pass with each document folded to
+    * its (text, tag, inserted) keys, the vote over their counts, link
+    * and triples, against the q52 oracle over the same corpus. */
+  private def q81(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    graft.pipeline.Pipeline.triples(
+      graft.core.Corpus.fromDocuments(s, dir).as[graft.core.SourceFile])
+      .orderBy("subj", "pred", "obj")
+  }
+
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q74_token_accuracy" -> (q74 _),
     "q75_tag_id_encode" -> (q75 _),
     "q76_streaming_decode" -> (q76 _),
-    "q77_checkpointed_triples" -> (q77 _))
+    "q77_checkpointed_triples" -> (q77 _),
+    "q80_fused_mentions" -> (q80 _),
+    "q81_fused_triples" -> (q81 _))
 
   val oracles: Map[String, String] = Map(
     "q74_token_accuracy" -> o74,
     "q75_tag_id_encode" -> o75,
     "q76_streaming_decode" -> o76,
-    "q77_checkpointed_triples" -> o77)
+    "q77_checkpointed_triples" -> o77,
+    "q80_fused_mentions" -> Queries7.oracles("q51_postprocess_mentions"),
+    "q81_fused_triples" -> Queries7.oracles("q52_kg_triples"))
 }

@@ -101,9 +101,16 @@ object DecodeKernel {
   /** The one Viterbi DP, over `T` emission rows of `em` (flat,
     * `t * K + tag`), with [[realTransitions]] `trans` and
     * [[endTransitions]] `toEnd`; `back` holds at least T * K.
-    * Exact semantics of decoders.py:156-196: init START=0 / else −2000;
-    * DP over all K+2 source tags; real tags only as targets; first-max
-    * argmax; terminal step adds T(·, END). Returns tag ids.
+    * Semantics of decoders.py:156-196: init START=0 / else −2000; real
+    * tags only as targets; first-max argmax; terminal step adds
+    * T(·, END). Returns real tag ids. The first step sweeps all K+2
+    * source tags; later steps sweep only the K real ones. From the
+    * second step on START and END hold the pinned −2000, and a virtual
+    * source can win a cell only where every real path scores lower; a
+    * decoded path through such a cell names a virtual tag, which is no
+    * tag (the reference's id → tag map throws on it). Leaving them out
+    * gives every path that names real tags only unchanged and makes a
+    * long sentence of low scores decode to real tags.
     *
     * Each step sweeps the sources in ascending order and keeps a running
     * best per target, replaced only on a strictly greater score: the
@@ -123,8 +130,9 @@ object DecodeKernel {
       val row = t * K
       var to = 0
       while (to < K) { best(to) = prev(0) + trans(to); arg(to) = 0; to += 1 }
+      val sources = if (t == 0) K + 2 else K
       var from = 1
-      while (from < K + 2) {
+      while (from < sources) {
         val p = prev(from)
         val off = from * K
         to = 0
@@ -143,7 +151,6 @@ object DecodeKernel {
         back(row + to) = arg(to)
         to += 1
       }
-      prev(Crf.START) = Crf.NEG; prev(Crf.END) = Crf.NEG
       t += 1
     }
     // terminal transition to END (decoders.py:184-187)

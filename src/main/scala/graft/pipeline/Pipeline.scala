@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   * stated once for every language:
   *
   *   corpus → per file: segment → featurize → Viterbi → spans
-  *            → fix-up → within-doc vote → insertion   (narrow, fused)
+  *            → fix-up → within-doc vote → insertion
+  *            [→ fold to one row per (text, tag, inserted), with its
+  *               count n and no offsets: triples only]  (narrow, fused)
   *          → cross-doc vote (one exchange on (repo, path), read by the
-  *            (key, tag) count in a scalar subquery and the relabel)
+  *            (key, tag) vote sum in a scalar subquery and the relabel)
   *          → link (broadcast dict, narrow)
   *          → canonicalize + (subj, pred, obj) triples
   *            (subject is a column expression; explode, one distinct)
@@ -30,6 +32,11 @@ import org.apache.spark.sql.functions._
   * decode pass ([[PostProcess.docKernel]]), so one input row is one
   * document: two rows with the same (repo, path) are not merged by the
   * vote or the insertion (ROADMAP item 1, document identity).
+  * [[triples]] reads no mention's offsets, so its per-file pass folds
+  * each document's rows to its distinct keys ([[PostProcess.docKeys]]):
+  * the exchange, the vote, the link and the explode carry one row per
+  * (document, text, tag, inserted), without offsets, instead of one per
+  * mention (docs-x64: half the rows and half the exchange bytes).
   * [[triplesCheckpointed]] keeps the Dataset-level stage list
   * ([[stages]]), with a `keep(df, table)` policy at every stage
   * boundary that lands it in a [[TableIO]] checkpoint (resume +
@@ -72,13 +79,20 @@ object Pipeline {
 
   /** Post-processed mentions from the fused pass: [[perFile]] with
     * [[PostProcess.docKernel]] over [[fusedInput]], then the
-    * cross-doc vote. */
+    * cross-doc vote. With `fold`, each document's rows are folded to
+    * its (text, tag, inserted) keys ([[PostProcess.docKeys]]) inside the
+    * pass: the rows are keys, not mentions. */
   private def fused(files: Dataset[SourceFile], pack: LangPack,
-      authors: Set[String]): Dataset[Mention] = {
+      authors: Set[String], fold: Boolean): Dataset[Mention] = {
     import files.sparkSession.implicits._
+    val kernel = PostProcess.docKernel(files.sparkSession.sparkContext,
+      authors, pack.lookup, pack.lookupIndex)
     PostProcess.crossDocVoteFlagged(perFile(fusedInput(files), pack,
-      PostProcess.docKernel(files.sparkSession.sparkContext, authors,
-        pack.lookup, pack.lookupIndex)))
+      if (!fold) kernel
+      else () => {
+        val post = kernel()
+        (sents, ms) => PostProcess.docKeys(post(sents, ms))
+      }))
   }
 
   /** The fused pass's input. Under adaptive execution a cached scan
@@ -139,13 +153,13 @@ object Pipeline {
   def postProcessed(files: Dataset[SourceFile],
       authors: Set[String] = Set.empty, lang: String = "eng")
       : Dataset[Mention] =
-    fused(files, LangPack(lang), authors)
+    fused(files, LangPack(lang), authors, fold = false)
 
   /** Terminal KG: (subj, pred, obj) triples, nothing materialised. */
   def triples(files: Dataset[SourceFile], authors: Set[String] = Set.empty,
       lang: String = "eng"): DataFrame = {
     val pack = LangPack(lang)
-    linkTriples(fused(files, pack, authors), pack, direct)
+    linkTriples(fused(files, pack, authors, fold = true), pack, direct)
   }
 
   /** The same stages, each landing in `root/<stage>` with a

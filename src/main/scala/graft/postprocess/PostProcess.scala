@@ -1,8 +1,8 @@
 package graft.postprocess
 
-import graft.core.{Dict, Mention, Sentence}
+import graft.core.{Dict, Memo, Mention, Sentence}
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** The reference's post-processing stage as pure dataflow
@@ -24,24 +24,34 @@ import org.apache.spark.sql.functions._
   *    dict-order-dependent;
   *  - top-K n-gram ties broken by (count desc, ngram asc)
   *    (post_process.py:294 relies on Python sort stability);
-  *  - greedy insertion runs per doc in (sentIdx, start, end, text)
-  *    order (the reference mutates its span list in file order,
+  *  - greedy insertion runs per doc in (sentIdx, start, end) order
+  *    (the reference mutates its span list in file order,
   *    post_process.py:176-193);
   *  - the mutation-during-iteration skip bug at post_process.py:327-334
   *    is NOT copied: all matches are relabeled (intended semantics,
   *    SURVEY.md §7.6.3).
   */
-/** Candidate span for dictionary-driven insertion. Public: Spark's
-  * generated code calls the accessors directly, so the encoder class
-  * cannot be private. */
+/** What stage 4's greedy scan reads of a candidate: the span
+  * [s0, e0) of sentence `sIdx` is a dictionary entry of `tag`. */
+sealed trait Candidate {
+  def sIdx: Int; def s0: Int; def e0: Int; def text: String; def tag: String
+}
+
+/** Candidate span for dictionary-driven insertion, text built, as the
+  * Dataset-level stage shuffles it. Public: Spark's generated code
+  * calls the accessors directly, so the encoder class cannot be
+  * private. */
 final case class Cand(sIdx: Int, s0: Int, e0: Int, text: String, tag: String)
+    extends Candidate
 
 /** A mention out of [[PostProcess.docKernel]]: `inserted` marks a
   * dictionary insertion, which the cross-doc vote neither counts nor
-  * relabels (in the reference it runs after that vote). */
+  * relabels (in the reference it runs after that vote); `n` is the
+  * number of the document's mentions the row stands for (1, or more
+  * after [[PostProcess.docKeys]]). */
 final case class Flagged(repo: String, path: String, sentIdx: Int,
     start: Int, end: Int, text: String, tag: String, conf: Double,
-    inserted: Boolean)
+    inserted: Boolean, n: Int)
 
 object PostProcess {
 
@@ -101,29 +111,37 @@ object PostProcess {
       }
     }
 
+  /** Stage 4's candidate inside one document: tokens [i, i + n) of `s`.
+    * Its text is built only when [[insertDoc]] accepts it. */
+  private final class Hit(s: Sentence, i: Int, n: Int, val tag: String)
+      extends Candidate {
+    def sIdx: Int = s.sentIdx
+    def s0: Int = s.starts(i)
+    def e0: Int = s.ends(i + n - 1)
+    def text: String = s.tokens.slice(i, i + n).mkString(" ")
+  }
+
   /** Stage 4's probe for one sentence: every n-gram (n ≤ maxN) whose
     * lowercased text is a dictionary entry. First-token-indexed, so a
     * position whose token starts no entry costs one map lookup and no
     * allocation (the naive per-position n-gram enumeration builds maxN
     * strings per token — profiled as the pipeline's top CPU sink at 32
-    * threads). */
+    * threads). `lower` is the task's memo of lowercase token forms. */
   private def candidates(s: Sentence, maxN: Int,
-      idx: Map[String, Vector[(Vector[String], String)]]): Vector[Cand] = {
-    val lower = s.tokens.map(lc)
-    val out = Vector.newBuilder[Cand]
+      idx: Map[String, Vector[(Vector[String], String)]],
+      lower: Memo[String, String]): Vector[Hit] = {
+    val low = s.tokens.map(t => lower.getOrElseUpdate(t, lc(t)))
+    val out = Vector.newBuilder[Hit]
     var i = 0
-    while (i < lower.length) {
-      idx.get(lower(i)).foreach { entries =>
-        entries.foreach { case (toks, tag) =>
-          val n = toks.length
-          if (n <= maxN && i + n <= lower.length) {
-            var k = 1
-            var ok = true
-            while (ok && k < n) { ok = lower(i + k) == toks(k); k += 1 }
-            if (ok)
-              out += Cand(s.sentIdx, s.starts(i), s.ends(i + n - 1),
-                s.tokens.slice(i, i + n).mkString(" "), tag)
-          }
+    while (i < low.length) {
+      val entries = idx.getOrElse(low(i), null)
+      if (entries != null) entries.foreach { case (toks, tag) =>
+        val n = toks.length
+        if (n <= maxN && i + n <= low.length) {
+          var k = 1
+          var ok = true
+          while (ok && k < n) { ok = low(i + k) == toks(k); k += 1 }
+          if (ok) out += new Hit(s, i, n, tag)
         }
       }
       i += 1
@@ -131,20 +149,31 @@ object PostProcess {
     out.result()
   }
 
+  /** Candidates in canonical (sIdx, s0, e0) order. Within a sentence
+    * (s0, e0) fixes the token slice and so the text: no text compare. */
+  private val byPosition: Ordering[Candidate] = (a, b) => {
+    val c = Integer.compare(a.sIdx, b.sIdx)
+    if (c != 0) c
+    else {
+      val d = Integer.compare(a.s0, b.s0)
+      if (d != 0) d else Integer.compare(a.e0, b.e0)
+    }
+  }
+
   /** Stage 4's greedy scan for one document: the candidates, in
-    * canonical (sentIdx, start, end, text) order, that overlap neither
-    * an existing mention nor an earlier insertion, as new mentions.
-    * Overlap = s1 < e2 && s2 < e1 on [start, end) offsets (reference
-    * predicate `not (e1 < s2 or e2 < s1)` on inclusive ends,
-    * post_process.py:124-134). */
+    * canonical (sentIdx, start, end) order ([[byPosition]]; the sort is
+    * stable), that overlap neither an existing mention nor an earlier
+    * insertion, as new mentions. Overlap = s1 < e2 && s2 < e1 on
+    * [start, end) offsets (reference predicate `not (e1 < s2 or e2 <
+    * s1)` on inclusive ends, post_process.py:124-134). */
   private def insertDoc(repo: String, path: String, existing: Seq[Mention],
-      cands: Seq[Cand]): Vector[Mention] =
+      cands: Seq[Candidate]): Vector[Mention] =
     if (cands.isEmpty) Vector.empty
     else {
       val accepted = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
       existing.foreach(m => accepted += ((m.sentIdx, m.start, m.end)))
       val inserted = Vector.newBuilder[Mention]
-      cands.sortBy(c => (c.sIdx, c.s0, c.e0, c.text)).foreach { c =>
+      cands.sorted(byPosition).foreach { c =>
         val overlaps = accepted.exists { case (si, s0, e0) =>
           si == c.sIdx && c.s0 < e0 && s0 < c.e0
         }
@@ -179,11 +208,12 @@ object PostProcess {
     () => {
       val lookup = bLookup.value; val auth = bAuthors.value
       val idx = bIdx.value
+      val lower = new Memo[String, String]
       (sents, decoded) => {
         val voted = voteDoc(decoded.map(fixup(_, lookup, auth)), ConfNum)
         val ins = sents.headOption.fold(Vector.empty[Mention]) { s =>
           insertDoc(s.repo, s.path, voted,
-            sents.flatMap(candidates(_, MaxN, idx)))
+            sents.flatMap(candidates(_, MaxN, idx, lower)))
         }
         voted.iterator.map(flag(_, inserted = false)) ++
           ins.iterator.map(flag(_, inserted = true))
@@ -192,7 +222,54 @@ object PostProcess {
   }
 
   private def flag(m: Mention, inserted: Boolean) = Flagged(m.repo,
-    m.path, m.sentIdx, m.start, m.end, m.text, m.tag, m.conf, inserted)
+    m.path, m.sentIdx, m.start, m.end, m.text, m.tag, m.conf, inserted, 1)
+
+  /** One document's [[docKernel]] rows folded to one row per exact
+    * (text, tag, inserted), in first-occurrence order, its `n` the sum of
+    * the folded rows' `n`. What follows in the triples action reads no
+    * more than that: the cross-doc vote counts `sum(n)` per
+    * (lower(text), tag) over rows not inserted and relabels by
+    * (lower(text), tag, inserted); the link is a function of
+    * (tag, lower(text)); the triples read repo, path, text, tag and the
+    * link, and are a set. So the triples are the same from fewer rows.
+    *
+    * A key row stands for mentions at several positions, so it has none:
+    * its sentIdx, start and end are 0 (the first occurrence's conf is
+    * kept). Offsets were the one per-mention field left in the
+    * (repo, path) exchange, and they do not compress; zeroed, the
+    * exchange writes about half the bytes. Mention-level output needs
+    * the rows unfolded.
+    *
+    * A document has few rows: one open-addressing table of key numbers,
+    * at most half full, and no tuple keys. */
+  def docKeys(rows: Iterator[Flagged]): Iterator[Flagged] = {
+    val in = rows.toArray
+    val mask = Integer.highestOneBit(in.length) * 4 - 1
+    val slots = Array.fill(mask + 1)(-1) // key number, or -1
+    val first = new Array[Int](in.length) // key number → its first row
+    val counts = new Array[Int](in.length)
+    var keys = 0
+    var i = 0
+    while (i < in.length) {
+      val r = in(i)
+      val h = (r.text.hashCode * 31 + r.tag.hashCode) * 31 +
+        java.lang.Boolean.hashCode(r.inserted)
+      var at = (h ^ (h >>> 16)) & mask
+      var k = slots(at)
+      while (k >= 0 && { val f = in(first(k))
+          f.inserted != r.inserted || f.tag != r.tag || f.text != r.text }) {
+        at = (at + 1) & mask
+        k = slots(at)
+      }
+      if (k >= 0) counts(k) += r.n
+      else {
+        slots(at) = keys; first(keys) = i; counts(keys) = r.n; keys += 1
+      }
+      i += 1
+    }
+    Iterator.tabulate(keys)(k =>
+      in(first(k)).copy(sentIdx = 0, start = 0, end = 0, n = counts(k)))
+  }
 
   /** Stage 1 over a mention stream: [[fixup]] per mention. Both tables
     * are corpus-size-independent broadcasts; the stage is narrow. */
@@ -245,35 +322,38 @@ object PostProcess {
     // exchange being reused (measured: headline 4.57 s vs 4.17 s at
     // rep 8)
     crossVote(mentions.map(identity).toDF()
-      .withColumn("inserted", lit(false)), topK)
+      .withColumn("inserted", lit(false)), topK, count(lit(1)))
   }
 
   /** Stage 3 over [[docKernel]]'s output, the only cross-file step of
     * the fused pass: ONE exchange of the stream on (repo, path), read
     * by both the (key, tag) count in the vote subquery and the relabel
     * (the typed barrier above it keeps both subtrees identical, so the
-    * per-file pass below runs once per action). Inserted mentions are
-    * neither counted nor relabeled. */
+    * per-file pass below runs once per action). Inserted rows are
+    * neither counted nor relabeled; a row counts `n` votes, so rows
+    * folded by [[docKeys]] vote as the mentions they stand for. */
   def crossDocVoteFlagged(flagged: Dataset[Flagged]): Dataset[Mention] = {
     import flagged.sparkSession.implicits._
     crossVote(flagged.repartition(col("repo"), col("path"))
-      .map(identity).toDF(), TopK)
+      .map(identity).toDF(), TopK, sum(col("n")))
   }
 
   /** The cross-doc vote over a mention frame with an `inserted`
-    * column. The at most `topK` winners become one `key → tag` map,
+    * column; `tally` aggregates a (key, tag) group's rows to its vote
+    * count. The at most `topK` winners become one `key → tag` map,
     * computed by a scalar subquery over the same frame (which reuses
     * its upstream exchange), and the relabel is a column expression
     * over it: `try_element_at(map, key)` per row. No join, so no
     * broadcast hash relation is built for a handful of rows. */
-  private def crossVote(df: DataFrame, topK: Int): Dataset[Mention] = {
+  private def crossVote(df: DataFrame, topK: Int, tally: Column)
+      : Dataset[Mention] = {
     import df.sparkSession.implicits._
     val keyed = df.withColumn("key", lower(col("text")))
     // per-(key, tag) counts, then per key its total frequency and its
     // winner by (n desc, tag asc) as the min of (-n, tag); top-K keys
     // by (freq desc, key asc)
     val votes = keyed.filter(!col("inserted"))
-      .groupBy("key", "tag").agg(count(lit(1)).as("n"))
+      .groupBy("key", "tag").agg(tally.as("n"))
       .groupBy("key").agg(sum(col("n")).as("freq"),
         min(struct((-col("n")).as("negN"), col("tag"))).as("best"))
       .orderBy(desc("freq"), asc("key")).limit(topK)
@@ -304,8 +384,9 @@ object PostProcess {
     val bIdx = spark.sparkContext.broadcast(lookupIndex)
     val cands = sentences.mapPartitions { it =>
       val idx = bIdx.value
-      it.flatMap(s =>
-        candidates(s, maxN, idx).map(c => (s.repo, s.path, c)))
+      val lower = new Memo[String, String]
+      it.flatMap(s => candidates(s, maxN, idx, lower).map(h =>
+        (s.repo, s.path, Cand(h.sIdx, h.s0, h.e0, h.text, h.tag))))
     }
     val byDocCands = cands.groupByKey { case (r, p, _) => (r, p) }
     val byDocMentions = mentions.groupByKey(m => (m.repo, m.path))

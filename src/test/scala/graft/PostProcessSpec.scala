@@ -209,20 +209,27 @@ class PostProcessSpec extends SparkTestBase {
       nw2 -> Seq(over(nw2, 0, 2, "GPE"))) ++ cross ++ df
   }
 
-  /** [[PostProcess.docKernel]] per doc, then the flagged cross vote —
-    * the post-process half of the fused pipeline pass. */
-  private def kernelChain(docs: Seq[(Sentence, Seq[Mention])])
-      : Dataset[Mention] = {
-    val s = spark
-    import s.implicits._
-    val kernel = PostProcess.docKernel(spark.sparkContext, authors)
-    val byDoc = docs.groupBy(_._1.path).values.toSeq.map { d =>
+  /** The planted docs grouped per document, sentences in order. */
+  private def byDoc(docs: Seq[(Sentence, Seq[Mention])])
+      : Seq[(Seq[Sentence], Seq[Mention])] =
+    docs.groupBy(_._1.path).values.toSeq.sortBy(_.head._1.path).map { d =>
       val ordered = d.sortBy(_._1.sentIdx)
       (ordered.map(_._1), ordered.flatMap(_._2))
     }
-    PostProcess.crossDocVoteFlagged(byDoc.toDS().mapPartitions { it =>
+
+  /** [[PostProcess.docKernel]] per doc (then [[PostProcess.docKeys]]
+    * with `fold`), then the flagged cross vote — the post-process half
+    * of the fused pipeline pass. */
+  private def kernelChain(docs: Seq[(Sentence, Seq[Mention])],
+      fold: Boolean = false): Dataset[Mention] = {
+    val s = spark
+    import s.implicits._
+    val kernel = PostProcess.docKernel(spark.sparkContext, authors)
+    PostProcess.crossDocVoteFlagged(byDoc(docs).toDS().mapPartitions { it =>
       val post = kernel()
-      it.flatMap { case (ss, ms) => post(ss, ms) }
+      it.flatMap { case (ss, ms) =>
+        if (fold) PostProcess.docKeys(post(ss, ms)) else post(ss, ms)
+      }
     })
   }
 
@@ -269,5 +276,104 @@ class PostProcessSpec extends SparkTestBase {
     assert(got("n_NW_2") == "PER")
     // … an inserted one is not: the reference inserts after the vote
     assert(got("n_NW_1") == "GPE")
+  }
+
+  // ---- the per-document key fold of Pipeline.triples ---------------------
+
+  /** [[planted]] plus one document with mixed case and a text that is
+    * both decoded and inserted: "Zorblax"/"ZORBLAX"/"zorblax" share the
+    * vote key of doc a's "Zorblax", and "Addis Ababa" is decoded in one
+    * sentence (relabeled by the cross vote) and inserted in the next
+    * (kept at its lookup tag). "Blorf" is ORG twice in doc m and PER
+    * once in each of two other docs: 2 to 2, ORG wins the tie, and a
+    * vote that counted folded rows (1 to 2) would give PER. */
+  private val foldDocs: Seq[(Sentence, Seq[Mention])] = {
+    val m0 = sent("m", 0, "Zorblax met ZORBLAX and zorblax and Zorblax")
+    val m1 = sent("m", 1, "Addis Ababa left")
+    val m2 = sent("m", 2, "then Addis Ababa again")
+    val m3 = sent("m", 3, "Blorf and Blorf")
+    val blorf = (1 to 2).map { i =>
+      val s = sent(s"b$i", 0, "Blorf is here")
+      s -> Seq(over(s, 0, 1, "PER"))
+    }
+    planted ++ blorf ++ Seq(
+      m0 -> Seq(over(m0, 0, 1, "ORG"), over(m0, 2, 1, "ORG"),
+        over(m0, 4, 1, "PER"), over(m0, 6, 1, "ORG")),
+      m1 -> Seq(over(m1, 0, 2, "GPE")),
+      m2 -> Nil,
+      m3 -> Seq(over(m3, 0, 1, "ORG"), over(m3, 2, 1, "ORG")))
+  }
+
+  /** The kernel's rows, computed locally per document, unfolded. */
+  private def kernelRows(docs: Seq[(Sentence, Seq[Mention])])
+      : Seq[Seq[graft.postprocess.Flagged]] = {
+    val post = PostProcess.docKernel(spark.sparkContext, authors)()
+    byDoc(docs).map { case (ss, ms) => post(ss, ms).toVector }
+  }
+
+  /** Cross-doc vote counts per (lower(text), tag), `n` per row. */
+  private def voteCounts(rows: Seq[graft.postprocess.Flagged]) =
+    rows.filter(!_.inserted).groupMapReduce(r =>
+      (r.text.toLowerCase(java.util.Locale.ROOT), r.tag))(_.n)(_ + _)
+
+  test("folding each doc to (text, tag, inserted) keys keeps the vote " +
+      "counts and the triples of the unfolded kernel chain") {
+    val s = spark
+    import s.implicits._
+    val docs = kernelRows(foldDocs)
+    val folded = docs.map(d => PostProcess.docKeys(d.iterator).toVector)
+    // the fold folds: repeated keys, and both the decoded and the
+    // inserted "Addis Ababa" of doc m survive as two keys
+    assert(folded.map(_.size).sum < docs.map(_.size).sum)
+    assert(folded.flatten.exists(_.n > 1))
+    val m = folded.flatten.filter(r => r.path == "m" &&
+      r.text == "Addis Ababa")
+    assert(m.map(_.inserted).sorted == Seq(false, true))
+    // every stage fires on these docs
+    val raw = foldDocs.flatMap(_._2).toDS()
+    val fix = PostProcess.lookupFixup(raw, authors)
+    val within = PostProcess.withinDocVote(fix)
+    assert(changed(fix, raw) > 0 && changed(within, fix) > 0)
+    assert(changed(PostProcess.crossDocVote(within), within) > 0)
+    assert(docs.flatten.exists(_.inserted))
+    // the vote counts equal the unfolded counts
+    assert(voteCounts(folded.flatten) == voteCounts(docs.flatten))
+    // and the triples are the same multiset
+    def triples(ms: Dataset[Mention]) = graft.triples.Triples
+      .materialize(graft.link.Linker.link(ms)).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .sorted.toSeq
+    val want = triples(kernelChain(foldDocs))
+    assert(want.nonEmpty)
+    assert(triples(kernelChain(foldDocs, fold = true)) == want)
+    // the relabels happened: the decoded "Addis Ababa" of doc m took
+    // the cross-vote winner, the inserted one kept its lookup tag; the
+    // Blorf vote counted mentions, not rows
+    val got = kernelChain(foldDocs, fold = true).collect()
+    val tags = got.filter(r => r.path == "m" && r.text == "Addis Ababa")
+      .map(_.tag)
+    assert(tags.sorted.toSeq == Seq("GPE", "PER"))
+    assert(got.filter(_.text == "Blorf").forall(_.tag == "ORG"))
+  }
+
+  test("docKeys keeps each key's first row without its position and " +
+      "sums n, across colliding and growing tables") {
+    val r = new java.util.Random(5)
+    val texts = Array("Ab", "BA", "ab", "Aa", "BB", "x", "y y", "")
+    val tags = Array("ORG", "PER", "GPE")
+    (1 to 200).foreach { c =>
+      val rows = Vector.tabulate(r.nextInt(if (c % 10 == 0) 3000 else 40)) {
+        i =>
+          graft.postprocess.Flagged("r", "p", i, i, i + 1,
+            texts(r.nextInt(texts.length)), tags(r.nextInt(tags.length)),
+            1.0, r.nextInt(4) == 0, 1 + r.nextInt(3))
+      }
+      val got = PostProcess.docKeys(rows.iterator).toVector
+      val key = (f: graft.postprocess.Flagged) => (f.text, f.tag, f.inserted)
+      val want = rows.groupBy(key).values.toVector.sortBy(_.head.sentIdx)
+        .map(g => g.head.copy(sentIdx = 0, start = 0, end = 0,
+          n = g.map(_.n).sum))
+      assert(got == want, s"case $c")
+    }
   }
 }

@@ -44,6 +44,23 @@ class ViterbiSpec extends AnyFunSuite {
     }
   }
 
+  test("a long sentence scoring below the pinned -2000 of START decodes " +
+      "to real tag ids only") {
+    // 500 tokens of emission -5: from about token 380 on every real
+    // path scores below START's pinned -2000, which a DP over virtual
+    // sources then picked, naming tag id START (not a tag)
+    val em = Array.fill(500)(Array.fill(K)(-5f))
+    val path = Crf.viterbi(em, Crf.transitions)
+    assert(path.length == 500)
+    assert(path.forall(t => t >= 0 && t < K),
+      s"virtual tag ids at ${path.indices.filter(path(_) >= K).take(5)}")
+    path.map(Dict.tags)
+    // the best real path scores at least as high as all-O
+    val allO = Array.fill(500)(Dict.tags.indexOf("O"))
+    assert(Crf.goldScore(em, Crf.transitions, path) >=
+      Crf.goldScore(em, Crf.transitions, allO) - 1e-2)
+  }
+
   test("BIO constraints: decoded paths are structurally valid") {
     val r = rng(13)
     (1 to 300).foreach { _ =>

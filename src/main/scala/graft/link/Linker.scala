@@ -123,6 +123,30 @@ object Linker {
     else NilLink
   }
 
+  /** A task's link rule: (tag, text) → the mention's [[Link]]. A link
+    * depends only on the tag and the lowercased text, and mention texts
+    * repeat (Zipfian), so [[resolve]] (the candidate scan, [[similarity]]
+    * and `kbId`) runs once per distinct (tag, lower(text)), memoized in a
+    * [[graft.core.Memo]]. Not thread-safe: make one per task. */
+  private def linker(idx: Map[String, Vector[(Vector[String], String, Int)]],
+      threshold: Double, kbId: Int => String): (String, String) => Link = {
+    val memo = new Memo[(String, String), Link]
+    (tag, text) => {
+      val key = (tag, text.toLowerCase(java.util.Locale.ROOT))
+      memo.getOrElseUpdate(key, resolve(key._1, key._2, idx, threshold, kbId))
+    }
+  }
+
+  /** [[link]]'s rule as a task-side function that returns the entity id
+    * only (a KB id, or "NIL"): what the triples read of a link. One per
+    * task, over the broadcast index. */
+  def entityIds(idx: Map[String, Vector[(Vector[String], String, Int)]],
+      threshold: Double = defaultThreshold,
+      kbId: Int => String = Dict.kbId): (String, String) => String = {
+    val l = linker(idx, threshold, kbId)
+    (tag, text) => l(tag, text).id
+  }
+
   /** Link mentions. Unlinked mentions keep entityId = "NIL" (the
     * reference emits NIL for every mention — post_process.py:29-33;
     * linking is the north-star extension). `index` is an entity index:
@@ -130,13 +154,8 @@ object Linker {
     * id) — [[Dict.gazIndex]] is the default (eng);
     * [[graft.crf.LangModel.linkIndex]] builds one per language from
     * the reference gazetteer. `kbId` renders an entry id as the KB
-    * identifier (defaults to the Qxxxxx space).
-    *
-    * A link depends only on the mention's tag and lowercased text, and
-    * mention texts repeat (Zipfian), so each task memoizes [[resolve]]
-    * by (tag, lower(text)) in a [[graft.core.Memo]]: the candidate
-    * scan, [[similarity]] and `kbId` run once per distinct key, not
-    * once per mention. Each row keeps its own original-case `text`. */
+    * identifier (defaults to the Qxxxxx space). Each task links through
+    * one [[linker]]; each row keeps its own original-case `text`. */
   def link(mentions: Dataset[Mention],
       threshold: Double = defaultThreshold,
       index: Map[String, Vector[(Vector[String], String, Int)]] =
@@ -146,14 +165,11 @@ object Linker {
     import spark.implicits._
     val bIdx = spark.sparkContext.broadcast(index)
     mentions.mapPartitions { it =>
-      val idx = bIdx.value
-      val memo = new Memo[(String, String), Link]
+      val l = linker(bIdx.value, threshold, kbId)
       it.map { m =>
-        val key = (m.tag, m.text.toLowerCase(java.util.Locale.ROOT))
-        val l = memo.getOrElseUpdate(key,
-          resolve(key._1, key._2, idx, threshold, kbId))
+        val k = l(m.tag, m.text)
         LinkedMention(m.repo, m.path, m.sentIdx, m.start, m.end,
-          m.text, m.tag, l.id, l.name, l.score)
+          m.text, m.tag, k.id, k.name, k.score)
       }
     }
   }

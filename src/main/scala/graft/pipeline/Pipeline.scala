@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   *            (key, tag) vote sum in a scalar subquery and the relabel)
   *          → link (broadcast dict, narrow)
   *          → canonicalize + (subj, pred, obj) triples
-  *            (subject is a column expression; explode, one distinct)
+  *            (per task: a document-free triple once per key, mentionedIn
+  *             per row; one distinct) — [[triples]] links and emits in
+  *            one narrow pass
   *
   * What varies by language comes from one [[LangPack]]. [[triples]] and
   * [[postProcessed]] run the doc-local post-process stages inside the
@@ -54,13 +56,22 @@ object Pipeline {
   def mentions(files: Dataset[SourceFile],
       lang: String = "eng"): Dataset[Mention] = {
     import files.sparkSession.implicits._
-    perFile(files, LangPack(lang), () => (_, ms) => ms.iterator)
+    perFile(texts(files), LangPack(lang), () => (_, ms) => ms.iterator)
+  }
+
+  /** What the per-file pass reads of a file: (repo, path, content). The
+    * other columns are never scanned or decoded. */
+  private def texts(files: Dataset[SourceFile])
+      : Dataset[(String, String, String)] = {
+    import files.sparkSession.implicits._
+    files.select(col("repo"), col("path"), col("content"))
+      .as[(String, String, String)]
   }
 
   /** One mapPartitions pass: each file is segmented once and decoded,
     * and `kernel`'s per-file function (made once per partition) gets
     * its sentences and mentions. */
-  private def perFile[T: Encoder](files: Dataset[SourceFile],
+  private def perFile[T: Encoder](files: Dataset[(String, String, String)],
       pack: LangPack,
       kernel: () => (Seq[Sentence], Seq[Mention]) => Iterator[T])
       : Dataset[T] = {
@@ -68,9 +79,9 @@ object Pipeline {
     files.mapPartitions { it =>
       val decode = decoder()
       val post = kernel()
-      it.flatMap { f =>
-        val sents = Segmenter.segment(f.content).map {
-          case (i, toks, ss, es) => Sentence(f.repo, f.path, i, toks, ss, es)
+      it.flatMap { case (repo, path, content) =>
+        val sents = Segmenter.segment(content).map {
+          case (i, toks, ss, es) => Sentence(repo, path, i, toks, ss, es)
         }
         post(sents, sents.flatMap(s => Spans.extract(decode(s))))
       }
@@ -87,7 +98,7 @@ object Pipeline {
     import files.sparkSession.implicits._
     val kernel = PostProcess.docKernel(files.sparkSession.sparkContext,
       authors, pack.lookup, pack.lookupIndex)
-    PostProcess.crossDocVoteFlagged(perFile(fusedInput(files), pack,
+    PostProcess.crossDocVoteFlagged(perFile(fusedInput(texts(files)), pack,
       if (!fold) kernel
       else () => {
         val post = kernel()
@@ -106,7 +117,7 @@ object Pipeline {
     * action. Any other input keeps its leaf, because building its RDD
     * would run jobs at definition time; an uncached one with an
     * exchange, such as `Corpus.fromDocuments`, already decodes once. */
-  private def fusedInput(files: Dataset[SourceFile]): Dataset[SourceFile] =
+  private def fusedInput[T](files: Dataset[T]): Dataset[T] =
     if (files.isStreaming || !lazyRdd(files.queryExecution.executedPlan))
       files
     else GraftBridge.reRoot(files)
@@ -134,14 +145,19 @@ object Pipeline {
       lookupIndex = pack.lookupIndex).toDF(), "mentions_post").as[Mention]
   }
 
-  /** The stages after post-process: link → triples. */
+  /** The stages after post-process: link → triples. With nothing kept,
+    * one pass links and emits ([[Triples.ofMentions]]): no linked row is
+    * built. */
   private def linkTriples(post: Dataset[Mention], pack: LangPack,
-      keep: Keep): DataFrame = {
-    import post.sparkSession.implicits._
-    val linked = keep(Linker.link(post, index = pack.index,
-      kbId = pack.kbId).toDF(), "mentions_linked")
-    keep(Triples.materialize(linked.as[Linker.LinkedMention]), "triples")
-  }
+      keep: Keep): DataFrame =
+    if (keep eq direct)
+      Triples.ofMentions(post, index = pack.index, kbId = pack.kbId)
+    else {
+      import post.sparkSession.implicits._
+      val linked = keep(Linker.link(post, index = pack.index,
+        kbId = pack.kbId).toDF(), "mentions_linked")
+      keep(Triples.materialize(linked.as[Linker.LinkedMention]), "triples")
+    }
 
   /** The whole Dataset-level stage list: [[post]] → link → triples. */
   private[graft] def stages(sents: Dataset[Sentence],

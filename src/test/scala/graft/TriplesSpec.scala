@@ -1,7 +1,7 @@
 package graft
 
 import graft.canon.Components
-import graft.core.{Corpus, Dict, Mention, SourceFile}
+import graft.core.{Corpus, Dict, Memo, Mention, SourceFile}
 import graft.io.TableIO
 import graft.link.Linker
 import graft.pipeline.Pipeline
@@ -192,5 +192,57 @@ class TriplesSpec extends SparkTestBase {
       .collect().toSet
     val tp = (pred intersect gold).size.toDouble
     assert(tp / pred.size >= 0.95 && tp / gold.size >= 0.95)
+  }
+
+  test("one-pass link + emit == the explode of each linked mention, " +
+      "past a task's key cap") {
+    val s = spark
+    import s.implicits._
+    // mixed case, linked and NIL, one text under several tags, over
+    // several docs, repeated before, among and after more distinct NIL
+    // keys than a task keeps
+    val repeated = for {
+      text <- Seq("Ada Lovelace", "ada lovelace", "Ada Lovelac",
+        "Addis Ababa", "Zorro", "hash join")
+      tag <- Seq("PER", "ORG", "GPE")
+      doc <- Seq("p1", "p2")
+    } yield (doc, text, tag)
+    val distinct = (0 until Memo.Cap + 2000).map { i =>
+      (s"q${i % 5}", s"zz$i", if (i % 2 == 0) "PER" else "LOC")
+    }
+    val rows = repeated ++ distinct.take(Memo.Cap / 2) ++ repeated ++
+      distinct.drop(Memo.Cap / 2) ++ repeated
+    val ms = rows.zipWithIndex.map { case ((doc, text, tag), i) =>
+      Mention("r", doc, i, 0, text.length, text, tag, 1.0)
+    }.toDS().coalesce(1)
+    // the triple rules as column expressions: each linked mention
+    // explodes into its four predicate rows
+    val linked = Linker.link(ms).toDF()
+    val ltext = lower(col("text"))
+    val isLinked = col("entityId") =!= "NIL"
+    val exploded = linked
+      .select(
+        when(isLinked, concat(lit("e:"), col("entityId")))
+          .otherwise(concat(lit("m:"), col("tag"), lit(":"), ltext))
+          .as("subj"),
+        explode(array(
+          struct(lit("hasType").as("pred"), col("tag").as("obj")),
+          struct(lit("label").as("pred"), ltext.as("obj")),
+          struct(lit("sameAs").as("pred"),
+            when(isLinked, col("entityId")).as("obj")),
+          struct(lit("mentionedIn").as("pred"),
+            concat(col("repo"), lit("/"), col("path")).as("obj"))))
+          .as("po"))
+      .select(col("subj"), col("po.pred"), col("po.obj"))
+      .filter(col("obj").isNotNull)
+      .as[(String, String, String)].collect().toSet
+    assert(exploded.exists(_._2 == "sameAs"))
+    assert(exploded.exists(t => t._1.startsWith("m:") && t._2 == "label"))
+    for (out <- Seq(Triples.ofMentions(ms),
+        Triples.materialize(Linker.link(ms)))) {
+      val got = out.as[(String, String, String)].collect()
+      assert(got.length == got.toSet.size)
+      assert(got.toSet == exploded)
+    }
   }
 }

@@ -150,9 +150,10 @@ object Queries10 {
 
   // ---- q77: checkpointed pipeline end-to-end ---------------------------
 
-  /** [[graft.pipeline.Pipeline.triplesCheckpointed]] — decode →
-    * parquet stage → post-process → stage → link → stage → triples
-    * partitioned by pred → read-back — over the eligible corpus, where
+  /** [[graft.pipeline.Pipeline.triplesCheckpointed]] — raw decode →
+    * parquet stage; the fused per-file pass (decode, doc kernel,
+    * cross-doc vote) → stage; link → stage; triples partitioned by
+    * pred → read-back — over the eligible corpus, where
     * post-processing is the identity (the q56-gated argument), so the
     * q58 relational link+triples oracle pins the WHOLE resumable
     * chain: any value/type loss in a stage checkpoint or a

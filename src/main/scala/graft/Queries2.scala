@@ -263,10 +263,10 @@ object Queries2 {
 
   // ---- full-pipeline rows-only entries ------------------------------
 
-  /** Post-processed mentions (the Dataset-level fix-up/vote/insert
-    * chain, as [[Pipeline.triplesCheckpointed]] runs it; on a corpus
-    * with one row per (repo, path) it equals
-    * [[Pipeline.postProcessed]]'s fused pass). Consumes the
+  /** Post-processed mentions by the reference chain (the Dataset-level
+    * fix-up/vote/insert stages, which no pipeline action runs; on a
+    * corpus with one row per (repo, path) it equals
+    * [[Pipeline.postProcessed]]'s fused pass, q80). Consumes the
     * session-shared segmentation + fused-decode checkpoints
     * ([[Queries7.sentsV]]/[[Queries7.mentionsV]]): round 5
     * re-decoded the whole corpus here even though q50 had just
@@ -280,15 +280,19 @@ object Queries2 {
       .toDF().orderBy("repo", "path", "sentIdx", "start")
   }
 
-  /** Full KG: linked + canonicalized (subj, pred, obj) triples —
-    * the eng Dataset-level stage list over the same shared
-    * checkpoints (identical inputs ⇒ identical output; the oracle
-    * hash re-confirms every round). */
+  /** Full KG: linked + canonicalized (subj, pred, obj) triples — the
+    * eng reference chain (post-process → link → triples) over the same
+    * shared checkpoints (identical inputs ⇒ identical output; the
+    * oracle hash re-confirms every round). */
   private def q52(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sents = Queries7.sentsV(s, dir).as[graft.core.Sentence]
     val ms = Queries7.mentionsV(s, dir).as[graft.core.Mention]
-    Pipeline.stages(sents, ms, LangPack("eng"))
+    val pack = LangPack("eng")
+    graft.triples.Triples.materialize(graft.link.Linker.link(
+        graft.postprocess.PostProcess(sents, ms, lookup = pack.lookup,
+          lookupIndex = pack.lookupIndex),
+        index = pack.index, kbId = pack.kbId))
       .orderBy("subj", "pred", "obj")
   }
 

@@ -63,14 +63,17 @@ object TableIO {
   }
 
   /** Write a pipeline stage. Returns the (re-)read table so downstream
-    * stages consume the checkpoint, not the lineage-heavy plan. */
-  def writeStage(df: DataFrame, root: String, table: String,
+    * stages consume the checkpoint, not the lineage-heavy plan. `df` is
+    * built only when the stage is not committed, so a resume plans and
+    * broadcasts nothing for the stages it skips. */
+  def writeStage(df: => DataFrame, root: String, table: String,
       snapshot: String, partitionCols: Seq[String] = Nil): DataFrame = {
-    val spark = df.sparkSession
-    if (committedSnapshot(root, table).contains(snapshot))
-      return read(spark, root, table) // resume: stage already committed
+    if (committedSnapshot(root, table).contains(snapshot)) // resume
+      return read(SparkSession.active, root, table)
+    val frame = df
+    val spark = frame.sparkSession
     val t0 = System.nanoTime()
-    val writer = df.write.mode(SaveMode.Overwrite)
+    val writer = frame.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
      else writer).parquet(s"$root/$table")
     val written = read(spark, root, table)

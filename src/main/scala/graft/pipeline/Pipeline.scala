@@ -29,25 +29,21 @@ import org.apache.spark.sql.functions._
   *             per row; one distinct) — [[triples]] links and emits in
   *            one narrow pass
   *
-  * What varies by language comes from one [[LangPack]]. [[triples]] and
-  * [[postProcessed]] run the doc-local post-process stages inside the
-  * decode pass ([[PostProcess.docKernel]]), so one input row is one
-  * document: two rows with the same (repo, path) are not merged by the
-  * vote or the insertion (ROADMAP item 1, document identity).
-  * [[triples]] reads no mention's offsets, so its per-file pass folds
-  * each document's rows to its distinct keys ([[PostProcess.docKeys]]):
-  * the exchange, the vote, the link and the explode carry one row per
-  * (document, text, tag, inserted), without offsets, instead of one per
-  * mention (docs-x64: half the rows and half the exchange bytes).
-  * [[triplesCheckpointed]] keeps the Dataset-level stage list
-  * ([[stages]]), with a `keep(df, table)` policy at every stage
-  * boundary that lands it in a [[TableIO]] checkpoint (resume +
-  * per-partition lineage), `mentions_raw` included.
+  * What varies by language comes from one [[LangPack]]. Every action
+  * runs the doc-local post-process stages inside the decode pass
+  * ([[PostProcess.docKernel]]), so one input row is one document: two
+  * rows with the same (repo, path) are not merged by the vote or the
+  * insertion. [[triples]] reads no mention's offsets, so its per-file
+  * pass folds each document's rows to its distinct keys
+  * ([[PostProcess.docKeys]]): the exchange, the vote, the link and the
+  * explode carry one row per (document, text, tag, inserted), without
+  * offsets, instead of one per mention (docs-x64: half the rows and half
+  * the exchange bytes). [[triplesCheckpointed]] runs the same pass
+  * unfolded and lands each stage boundary in a [[TableIO]] checkpoint
+  * (resume + per-partition lineage): `mentions_raw`, `mentions_post`,
+  * `mentions_linked`, `triples`.
   */
 object Pipeline {
-
-  private type Keep = (DataFrame, String) => DataFrame
-  private val direct: Keep = (df, _) => df
 
   /** Fully-fused decode: SourceFile → segment → featurize → Viterbi →
     * span-extract inside ONE mapPartitions closure over the language's
@@ -136,35 +132,6 @@ object Pipeline {
       case n => n.subqueries.nonEmpty
     }
 
-  /** The stage list up to post-process, over segmented + decoded input. */
-  private def post(sents: Dataset[Sentence], decoded: Dataset[Mention],
-      pack: LangPack, authors: Set[String], keep: Keep): Dataset[Mention] = {
-    import sents.sparkSession.implicits._
-    val raw = keep(decoded.toDF(), "mentions_raw").as[Mention]
-    keep(PostProcess(sents, raw, authors = authors, lookup = pack.lookup,
-      lookupIndex = pack.lookupIndex).toDF(), "mentions_post").as[Mention]
-  }
-
-  /** The stages after post-process: link → triples. With nothing kept,
-    * one pass links and emits ([[Triples.ofMentions]]): no linked row is
-    * built. */
-  private def linkTriples(post: Dataset[Mention], pack: LangPack,
-      keep: Keep): DataFrame =
-    if (keep eq direct)
-      Triples.ofMentions(post, index = pack.index, kbId = pack.kbId)
-    else {
-      import post.sparkSession.implicits._
-      val linked = keep(Linker.link(post, index = pack.index,
-        kbId = pack.kbId).toDF(), "mentions_linked")
-      keep(Triples.materialize(linked.as[Linker.LinkedMention]), "triples")
-    }
-
-  /** The whole Dataset-level stage list: [[post]] → link → triples. */
-  private[graft] def stages(sents: Dataset[Sentence],
-      decoded: Dataset[Mention], pack: LangPack,
-      authors: Set[String] = Set.empty, keep: Keep = direct): DataFrame =
-    linkTriples(post(sents, decoded, pack, authors, keep), pack, keep)
-
   /** Post-processed mentions: the fused pass cut after post-process. */
   def postProcessed(files: Dataset[SourceFile],
       authors: Set[String] = Set.empty, lang: String = "eng")
@@ -175,23 +142,34 @@ object Pipeline {
   def triples(files: Dataset[SourceFile], authors: Set[String] = Set.empty,
       lang: String = "eng"): DataFrame = {
     val pack = LangPack(lang)
-    linkTriples(fused(files, pack, authors, fold = true), pack, direct)
+    Triples.ofMentions(fused(files, pack, authors, fold = true),
+      index = pack.index, kbId = pack.kbId)
   }
 
-  /** The same stages, each landing in `root/<stage>` with a
+  /** The same pipeline, each stage landing in `root/<stage>` with a
     * `_lineage.json` sidecar; a re-run with the same snapshot id
-    * resumes from the last committed stage. No `authors`: the snapshot
-    * id ([[TableIO.snapshotId]]) hashes each row's (repo, path, commit,
+    * resumes from the last committed stage, building no frame for it.
+    * `mentions_raw` is [[mentions]], `mentions_post` [[postProcessed]]'s
+    * frame (each write decodes once). No `authors`: the snapshot id
+    * ([[TableIO.snapshotId]]) hashes each row's (repo, path, commit,
     * sha256(content)) and nothing else, so an author set would resume
     * stale. */
   def triplesCheckpointed(files: Dataset[SourceFile], root: String,
-      snapshot: String, lang: String = "eng"): DataFrame =
-    stages(Segmenter.sentences(files), mentions(files, lang),
-      LangPack(lang), keep = (df, table) =>
-        TableIO.writeStage(df, root, table, snapshot, partitionCols =
-          if (table == "triples") Seq("pred") else Nil))
+      snapshot: String, lang: String = "eng"): DataFrame = {
+    import files.sparkSession.implicits._
+    val pack = LangPack(lang)
+    def keep(df: => DataFrame, table: String,
+        partitionCols: Seq[String] = Nil) =
+      TableIO.writeStage(df, root, table, snapshot, partitionCols)
+    keep(mentions(files, lang).toDF(), "mentions_raw")
+    val post = keep(fused(files, pack, Set.empty, fold = false).toDF(),
+      "mentions_post").as[Mention]
+    val linked = keep(Linker.link(post, index = pack.index,
+      kbId = pack.kbId).toDF(), "mentions_linked").as[Linker.LinkedMention]
+    keep(Triples.materialize(linked), "triples", Seq("pred"))
       // partitioned parquet moves `pred` last on read-back
       .select("subj", "pred", "obj")
+  }
 
   /** Author set for [[PostProcess.lookupFixup]]'s DF-genre precedence
     * branch from a directory of WL XML files (extract_authors.py input).

@@ -12,12 +12,15 @@ import org.apache.spark.sql.functions._
   * within-doc majority-vote relabel → cross-doc top-K vote relabel →
   * dictionary-driven span insertion with greedy overlap suppression.
   * No stage deletes a mention. Each stage's rule is written once, as a
-  * per-document (or per-mention) function; the Dataset-level stage
-  * functions apply it to a stream keyed by (repo, path), and
-  * [[docKernel]] applies fix-up, within-doc vote and insertion to one
-  * file inside the per-file decode pass, leaving the cross-doc count as
-  * the only step that reads more than one document
-  * ([[crossDocVoteFlagged]]). Deterministic replacements for the
+  * per-document (or per-mention) function. Every pipeline action runs
+  * [[docKernel]], which applies fix-up, within-doc vote and insertion to
+  * one file inside the per-file decode pass, leaving the cross-doc count
+  * as the only step that reads more than one document
+  * ([[crossDocVoteFlagged]]). The Dataset-level stages, chained by
+  * [[apply]], are the reference chain: they apply the same rules to a
+  * stream keyed by (repo, path), and no pipeline action runs them
+  * (callers: q51, q52, q56, q57, q70, PostProcessSpec, perfbench's
+  * traced pass). Deterministic replacements for the
   * reference's order-sensitive bits are pinned:
   *  - vote ties broken by (count desc, tag asc) — the reference's
   *    first-seen-wins `>` scan (post_process.py:253-261) is
@@ -165,26 +168,64 @@ object PostProcess {
     * stable), that overlap neither an existing mention nor an earlier
     * insertion, as new mentions. Overlap = s1 < e2 && s2 < e1 on
     * [start, end) offsets (reference predicate `not (e1 < s2 or e2 <
-    * s1)` on inclusive ends, post_process.py:124-134). */
+    * s1)` on inclusive ends, post_process.py:124-134).
+    *
+    * Spans overlap only within a sentence, so a candidate is tested
+    * against its own sentence's spans alone, in O(log k):
+    *  - the existing mentions, sorted by (sentIdx, start) once, with the
+    *    running max of their ends per sentence: one of them overlaps
+    *    [s0, e0) iff those starting before e0 reach past s0 (one
+    *    binary search);
+    *  - the earlier insertions of the sentence: they are disjoint and
+    *    start at or before s0, so only the last can overlap, and it
+    *    does iff it ends past s0 (a candidate spans a token: s0 < e0). */
   private def insertDoc(repo: String, path: String, existing: Seq[Mention],
       cands: Seq[Candidate]): Vector[Mention] =
     if (cands.isEmpty) Vector.empty
     else {
-      val accepted = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
-      existing.foreach(m => accepted += ((m.sentIdx, m.start, m.end)))
+      val spans = existing.iterator.map(m => (m.sentIdx, m.start, m.end))
+        .toArray.sorted
+      val sIdx = spans.map(_._1)
+      val starts = spans.map(_._2)
+      val reach = new Array[Int](spans.length) // max end since sentence start
+      var i = 0
+      while (i < spans.length) {
+        reach(i) = if (i > 0 && sIdx(i - 1) == sIdx(i))
+          math.max(reach(i - 1), spans(i)._3) else spans(i)._3
+        i += 1
+      }
       val inserted = Vector.newBuilder[Mention]
+      var sent = -1; var lo = 0; var hi = 0 // spans(lo until hi): its spans
+      var lastEnd = Int.MinValue // end of the sentence's last insertion
       cands.sorted(byPosition).foreach { c =>
-        val overlaps = accepted.exists { case (si, s0, e0) =>
-          si == c.sIdx && c.s0 < e0 && s0 < c.e0
+        if (c.sIdx != sent) {
+          sent = c.sIdx
+          lo = firstAtLeast(sIdx, 0, spans.length, sent)
+          hi = firstAtLeast(sIdx, lo, spans.length, sent + 1)
+          lastEnd = Int.MinValue
         }
+        val before = firstAtLeast(starts, lo, hi, c.e0) // starts < e0
+        val overlaps = lastEnd > c.s0 ||
+          before > lo && reach(before - 1) > c.s0
         if (!overlaps) {
-          accepted += ((c.sIdx, c.s0, c.e0))
+          lastEnd = c.e0
           inserted += Mention(repo, path, c.sIdx, c.s0, c.e0, c.text,
             c.tag, 1.0)
         }
       }
       inserted.result()
     }
+
+  /** The first index in [lo, hi) of ascending `xs` holding a value >= x,
+    * or hi. */
+  private def firstAtLeast(xs: Array[Int], lo: Int, hi: Int, x: Int): Int = {
+    var l = lo; var h = hi
+    while (l < h) {
+      val m = (l + h) >>> 1
+      if (xs(m) < x) l = m + 1 else h = m
+    }
+    l
+  }
 
   /** Stages 1, 2 and 4 on one document inside a per-file pass. Broadcasts
     * the tables on the driver and returns the task-side factory (called
@@ -195,8 +236,9 @@ object PostProcess {
     * order (cross vote, then insertion): insertion tests only span
     * positions, the cross vote changes only tags, and the flag keeps
     * inserted mentions out of its counts and relabel. One call is one
-    * document: two input rows with the same (repo, path) are not merged
-    * by the vote or the insertion, unlike the Dataset-level stages. */
+    * document: two input rows with the same (repo, path) are two
+    * documents to the vote and the insertion (the reference chain,
+    * [[apply]], keys by (repo, path) and merges them). */
   def docKernel(sc: SparkContext, authors: Set[String] = Set.empty,
       lookup: Map[String, String] = Dict.lookupTable,
       lookupIndex: Map[String, Vector[(Vector[String], String)]] =
@@ -397,8 +439,9 @@ object PostProcess {
   }
 
   /** Full reference post-processing chain (main.py:357-376 order), one
-    * Dataset-level stage after another. `lookup`/`lookupIndex` default
-    * to the eng dictionary; the checkpointed pipeline passes its
+    * Dataset-level stage after another: the reference the fused pass is
+    * checked against; no pipeline action runs it. `lookup`/`lookupIndex`
+    * default to the eng dictionary; a caller passes a
     * [[graft.pipeline.LangPack]]'s tables so a non-eng corpus is never
     * fixed up or back-filled against English entries (the reference
     * builds its lookup per language from setE data). */

@@ -278,6 +278,39 @@ class PostProcessSpec extends SparkTestBase {
     assert(got("n_NW_1") == "GPE")
   }
 
+  test("insertion in a document of thousands of lines tests each " +
+      "candidate against its own sentence only") {
+    // one decoded mention per line; each line's dictionary candidates
+    // overlap it or not, and some sit at offsets that another line's
+    // mention or insertion covers
+    val lines = Vector(
+      ("Ada Lovelace met Addis Ababa", 0, 2), // "Ada Lovelace" blocked
+      ("Addis Ababa met Ada Lovelace", 2, 1), // both inserted
+      ("then Ada Lovelace left", 2, 2),       // overlapped: blocked
+      ("Lake Tana and Lake Tana", 2, 1))      // both inserted
+    val n = 4000
+    val sents = (0 until n).map(i => sent("big", i, lines(i % 4)._1))
+    val decoded = sents.map { s =>
+      val (_, at, len) = lines(s.sentIdx % 4)
+      over(s, at, len, "ORG")
+    }
+    val post = PostProcess.docKernel(spark.sparkContext)()
+    val got = post(sents, decoded).filter(_.inserted)
+      .map(r => (r.sentIdx, r.start, r.end, r.text, r.tag)).toSet
+    val want = (0 until n).flatMap { i =>
+      i % 4 match {
+        case 0 => Seq((i, 17, 28, "Addis Ababa", "GPE"))
+        case 1 => Seq((i, 0, 11, "Addis Ababa", "GPE"),
+          (i, 16, 28, "Ada Lovelace", "PER"))
+        case 2 => Nil
+        case _ => Seq((i, 0, 9, "Lake Tana", "LOC"),
+          (i, 14, 23, "Lake Tana", "LOC"))
+      }
+    }.toSet
+    assert(got == want, s"only got: ${(got -- want).take(5)}; " +
+      s"only wanted: ${(want -- got).take(5)}")
+  }
+
   // ---- the per-document key fold of Pipeline.triples ---------------------
 
   /** [[planted]] plus one document with mixed case and a text that is

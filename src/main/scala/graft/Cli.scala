@@ -2,7 +2,7 @@ package graft
 
 import graft.conll.ConllOps
 import graft.core.{RefData, Sentence}
-import graft.crf.FitCrf
+import graft.crf.{DecodeKernel, FitCrf}
 import graft.eval.SpanPRF1
 import graft.features.Brown
 import graft.io.ModelIO
@@ -74,7 +74,7 @@ object Cli {
       .map(s => Sentence("cli", "in", s.sentId.toInt, s.words,
         Array.tabulate(s.words.length)(i => i),
         Array.tabulate(s.words.length)(i => i + 1)))
-    FitCrf.tag(sents, model)
+    DecodeKernel.tag(sents, DecodeKernel.fitted(model))
       .flatMap(ts => ts.tokens.indices.map(i =>
         (ts.sentIdx.toLong, i, ts.tokens(i), ts.tags(i))))
       .toDF("sentId", "tokenIdx", "word", "tag")
@@ -95,8 +95,8 @@ object Cli {
     * result decode the file once. */
   def evalModel(spark: SparkSession, model: FitCrf.FittedModel,
       testPath: String): DataFrame = {
-    val perType =
-      FitEval.perTypeConll(spark, testPath, FitCrf.tag(_, model))
+    val perType = FitEval.perTypeConll(spark, testPath,
+      DecodeKernel.tag(_, DecodeKernel.fitted(model)))
     val rows = spark.createDataFrame(
       perType.collect().sortBy(_.getString(0)).toSeq.asJava, perType.schema)
     val c = SpanPRF1.micro(rows)

@@ -340,13 +340,6 @@ object Queries8 {
     * (the q55 enabler, generalized per language; LangModelSpec checks
     * the property corpus-wide). The oracle recomputes corpus, sliding
     * matches, eligibility and char offsets relationally in DuckDB. */
-  /** Distinct (pos, len, label) sliding matches of a token array —
-    * independent of the decode kernel: the eligibility side of the
-    * q66/q69 subset pin. */
-  private[graft] def slidingMatches(g: Map[String, LangDict.Gaz],
-      lang: String, toks: Array[String]): Set[(Int, Int, String)] =
-    slidingMatchesIdx(entryIndex(g, lang), toks)
-
   /** First-token index over a language's distinct labeled entries
     * (loadGaz guarantees entries non-empty): probing by toks(i) makes
     * the per-sentence sliding scan O(len × bucket) instead of
@@ -362,6 +355,9 @@ object Queries8 {
     } yield (entry, label))
       .groupBy(_._1.head).view.mapValues(_.toVector).toMap
 
+  /** Distinct (pos, len, label) sliding matches of a token array over
+    * [[entryIndex]] — independent of the decode kernel: the eligibility
+    * side of the q66/q69 subset pin. */
   private[graft] def slidingMatchesIdx(
       idx: Map[String, Vector[(Vector[String], String)]],
       toks: Array[String]): Set[(Int, Int, String)] =

@@ -6,10 +6,11 @@ import org.apache.spark.sql.Dataset
 
 /** Linear-CRF scoring + BIO-constrained Viterbi decoding.
   *
-  * Serving decodes through [[kernel]] ([[DecodeKernel]]: per-task token
-  * memo, flat Viterbi); [[emit]] and [[viterbi]] are the per-sentence
-  * definitions it is bit-identical to, kept for training, specs and
-  * [[FitCrf]]'s word-identity emissions.
+  * Serving decodes through [[DecodeKernel]] (per-task token memo, flat
+  * Viterbi) for every model kind; [[emit]] and [[viterbi]] are the
+  * per-sentence definitions it is bit-identical to, kept for training
+  * and specs. [[emit]]'s one serve-time caller is the classifier rule
+  * ([[classifyTag]]), which has no Viterbi.
   *
   * Re-derivation of the reference's CRF decode path (SURVEY.md §2.8,
   * §7.3): emission scores are a linear model over the discrete feature
@@ -182,24 +183,17 @@ object Crf {
     s / tags.length
   }
 
-  /** Classifier decode over a sentence stream — same fused narrow
-    * kernel shape as [[tag]], transitions unused. */
+  /** Classifier decode over a sentence stream through the one decode
+    * shell ([[DecodeKernel.tag]]), transitions unused. */
   def classifyTag(sentences: Dataset[Sentence],
-      w: Array[Array[Float]]): Dataset[TaggedSentence] = {
-    val spark = sentences.sparkSession
-    import spark.implicits._
-    val bW = spark.sparkContext.broadcast(w)
-    val bGaz = spark.sparkContext.broadcast(Dict.gazIndex)
-    sentences.mapPartitions { it =>
-      val w0 = bW.value; val gaz = bGaz.value
-      it.map { s =>
-        val masks = Features.sentenceBits(s.tokens, gaz)
-        val path = classify(masks.map(emit(_, w0)))
+      w: Array[Array[Float]]): Dataset[TaggedSentence] =
+    DecodeKernel.tag(sentences, DecodeKernel.decoder((w, Dict.gazIndex)) {
+      case (w, gaz) => s =>
+        val path = classify(Features.sentenceBits(s.tokens, gaz)
+          .map(emit(_, w)))
         TaggedSentence(s.repo, s.path, s.sentIdx, s.tokens, s.starts,
           s.ends, path.map(Dict.tags))
-      }
-    }
-  }
+    })
 
   /** Brute-force exact decode for property tests (enumerates all K^T
     * paths). Tie-break matches the DP's first-max backtrace exactly:
@@ -244,35 +238,13 @@ object Crf {
     (bestPath, bestScore)
   }
 
-  /** The eng decode kernel over explicit weights and gazetteer index:
-    * [[Features.tokenBits]] memoized per token, [[Features.gazMarks]]
-    * per sentence. Shared by [[tag]], [[Ensemble]] and the eng
-    * [[graft.pipeline.LangPack]]; one per task. */
-  def kernel(w: Array[Array[Float]], tr: Array[Array[Float]],
-      gaz: Map[String, Vector[(Vector[String], String, Int)]])
-      : DecodeKernel =
-    new DecodeKernel(Features.tokenBits,
-      (_, lower) => Features.gazMarks(lower, gaz), w, tr)
-
-  /** The fused featurize→emit→Viterbi kernel: one narrow mapPartitions
-    * stage, broadcast weights, no shuffle (SURVEY.md §4 custom piece 1).
-    * Scales linearly with cores — zero cross-sentence state beyond the
-    * per-task [[DecodeKernel]] memo. */
+  /** Decode with the default model ([[DecodeKernel.crf]]). */
   def tag(sentences: Dataset[Sentence]): Dataset[TaggedSentence] =
     tag(sentences, emissionWeights, transitions)
 
-  /** Same kernel with explicit weights — the serve path for a model
+  /** Same decode with explicit weights — the serve path for a model
     * trained by [[CrfTrainer]] / loaded via [[graft.io.ModelIO]]. */
   def tag(sentences: Dataset[Sentence], w: Array[Array[Float]],
-      tr: Array[Array[Float]]): Dataset[TaggedSentence] = {
-    val spark = sentences.sparkSession
-    import spark.implicits._
-    val bW = spark.sparkContext.broadcast(w)
-    val bT = spark.sparkContext.broadcast(tr)
-    val bGaz = spark.sparkContext.broadcast(Dict.gazIndex)
-    sentences.mapPartitions { it =>
-      val k = kernel(bW.value, bT.value, bGaz.value)
-      it.map(k.decode)
-    }
-  }
+      tr: Array[Array[Float]]): Dataset[TaggedSentence] =
+    DecodeKernel.tag(sentences, DecodeKernel.crf(w, tr))
 }

@@ -1,23 +1,27 @@
 package graft.crf
 
-import graft.core.{Dict, Memo, Sentence, TaggedSentence}
-import graft.features.Features
+import graft.core.{Dict, LangDict, Memo, Sentence, TaggedSentence}
+import graft.features.{Features, LangFeatures}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.Dataset
+import scala.reflect.ClassTag
 
-/** The decode kernel every serve path runs (the eng and non-eng
-  * [[graft.pipeline.LangPack]] decoders, [[Crf.tag]] and [[Ensemble]]):
-  * features → emissions → Viterbi for one sentence at a time, with the
-  * per-token work memoized across the sentences of a task.
+/** The one serve-time decode, for every model kind: features →
+  * emissions → Viterbi for one sentence at a time, with the per-token
+  * work memoized across the sentences of a task. [[DecodeKernel.Decoder]]
+  * is its one shell and [[DecodeKernel.tag]] the one map of a sentence
+  * stream through it.
   *
-  * Tokens are Zipfian, so per token string a [[Memo]] keeps its
-  * lowercase form and its partial emission vector over its type/token
-  * bits (0–14, from `typeBits`, computed once). Per sentence only the
-  * gazetteer bits (15–23, from `gazBits` over the tokens and their
-  * lowercase forms) are computed, and their weights are added to the
-  * partial in ascending bit order. [[Crf.emit]] sums the set bits of the
-  * full mask in ascending order too, and every type bit is below every
-  * gazetteer bit, so each emission is the same float additions in the
-  * same order: scores and paths are bit-identical to [[Crf.emit]] over
-  * the full mask followed by [[Crf.viterbi]].
+  * Per token string a [[Memo]] keeps its lowercase form and its partial
+  * emission: the model's `term` (zero for a weights-only model,
+  * [[FitCrf.tokenTerm]] for a fitted one) plus λ·w over its type bits
+  * (0–14, `typeBits`) in ascending order. Per sentence, λ·w of the
+  * gazetteer bits (15–23, `gazBits` over the tokens and their lowercase
+  * forms) is added in ascending order; λ = 0 adds no feature weight.
+  * Every type bit is below every gazetteer bit, so each emission is the
+  * float additions of [[Crf.emit]] (λ = 1) or [[FitCrf.emit]] over the
+  * full mask in the same order: paths are bit-identical to those
+  * followed by [[Crf.viterbi]].
   *
   * The emission rows and back-pointers live in flat buffers reused
   * across sentences (grown for a longer one). Make one per task: the
@@ -25,21 +29,24 @@ import graft.features.Features
   */
 final class DecodeKernel(typeBits: String => Int,
     gazBits: (Array[String], Array[String]) => Array[Int],
-    w: Array[Array[Float]], tr: Array[Array[Float]]) {
+    term: (String, Int) => Array[Float],
+    w: Array[Array[Float]], lambda: Float, tr: Array[Array[Float]]) {
   import DecodeKernel._
 
-  private val wT = Array.tabulate(Features.numFeatures * K)(i =>
-    w(i % K)(i / K))
+  private val wT =
+    if (lambda == 0f) null
+    else Array.tabulate(Features.numFeatures * K)(i =>
+      lambda * w(i % K)(i / K))
   private val trans = realTransitions(tr)
   private val toEnd = endTransitions(tr)
   private val memo = new Memo[String, Tok]
   private var em = new Array[Float](InitTokens * K)
   private var back = new Array[Int](InitTokens * K)
 
-  /** Adds w(t)(f) for each set bit f of `mask`, lowest bit first, to
+  /** Adds λ·w(t)(f) for each set bit f of `mask`, lowest bit first, to
     * `out(off + t)` for every tag t. */
   private def addBits(out: Array[Float], off: Int, mask: Int): Unit = {
-    var m = mask
+    var m = if (wT == null) 0 else mask
     while (m != 0) {
       val f = java.lang.Integer.numberOfTrailingZeros(m) * K
       var t = 0
@@ -52,11 +59,10 @@ final class DecodeKernel(typeBits: String => Int,
     val bits = typeBits(s)
     require(bits >>> Features.B_GAZ == 0, s"type bits of '$s' reach " +
       s"the gazetteer range: ${bits.toBinaryString}")
-    val partial = new Array[Float](K)
+    val partial = term(s, bits)
     addBits(partial, 0, bits)
     new Tok(s.toLowerCase(java.util.Locale.ROOT), partial)
   })
-
   /** Tag ids of one sentence. */
   def tags(tokens: Array[String]): Array[Int] = {
     val n = tokens.length
@@ -86,7 +92,74 @@ object DecodeKernel {
   private val K = Crf.K
   private val InitTokens = 256
 
-  /** A token's lowercase form and the emission of its type bits. */
+  /** A served model: on the driver it broadcasts the model's parts; the
+    * task-side factory it returns reads the broadcast once per partition
+    * and yields the per-sentence decode of a fresh kernel (its token memo
+    * lives for the task). Only broadcast handles are captured, never the
+    * model itself. */
+  type Decoder = SparkContext => () => Sentence => TaggedSentence
+
+  /** The decoder over `parts`, which `open` turns into a task's
+    * per-sentence decode. */
+  def decoder[A: ClassTag](parts: A)(open: A => Sentence => TaggedSentence)
+      : Decoder = sc => {
+    val b = sc.broadcast(parts)
+    () => open(b.value)
+  }
+
+  /** A weights-only eng CRF (the synthetic default, an [[Ensemble.Model]]
+    * or a [[graft.io.ModelIO]] artifact) over the eng gazetteer index. */
+  def crf(w: Array[Array[Float]], tr: Array[Array[Float]]): Decoder =
+    decoder((w, tr, Dict.gazIndex)) { case (w, tr, g) =>
+      crfKernel(w, tr, g).decode
+    }
+
+  /** A [[FitCrf.FittedModel]] artifact over the eng gazetteer index. */
+  def fitted(m: FitCrf.FittedModel): Decoder =
+    decoder((m, Dict.gazIndex)) { case (m, g) => fittedKernel(m, g).decode }
+
+  /** A language's [[LangModel]] fit over its gazetteer. */
+  def lang(lang: String, gaz: LangDict.Gaz, m: Ensemble.Model): Decoder =
+    decoder((gaz, m)) { case (g, m) => langKernel(lang, g, m).decode }
+
+  /** The one map of a sentence stream through a decoder: one narrow
+    * mapPartitions stage, no shuffle. */
+  def tag(sentences: Dataset[Sentence], d: Decoder)
+      : Dataset[TaggedSentence] = {
+    import sentences.sparkSession.implicits._
+    val open = d(sentences.sparkSession.sparkContext)
+    sentences.mapPartitions { it => val decode = open(); it.map(decode) }
+  }
+
+  private def zeroTerm(s: String, bits: Int): Array[Float] =
+    new Array[Float](K)
+
+  /** The eng kernel of [[crf]]: [[Features.tokenBits]] memoized per
+    * token, [[Features.gazMarks]] per sentence. */
+  def crfKernel(w: Array[Array[Float]], tr: Array[Array[Float]],
+      gaz: Map[String, Vector[(Vector[String], String, Int)]])
+      : DecodeKernel =
+    new DecodeKernel(Features.tokenBits,
+      (_, lower) => Features.gazMarks(lower, gaz), zeroTerm, w, 1f, tr)
+
+  /** The kernel of [[fitted]]: [[crfKernel]]'s features, the model's
+    * [[FitCrf.tokenTerm]] and λ-scaled feature weights. */
+  def fittedKernel(m: FitCrf.FittedModel,
+      gaz: Map[String, Vector[(Vector[String], String, Int)]])
+      : DecodeKernel =
+    new DecodeKernel(Features.tokenBits,
+      (_, lower) => Features.gazMarks(lower, gaz),
+      FitCrf.tokenTerm(_, _, m), m.featW, m.lambda, m.trans)
+
+  /** The kernel of [[lang]]: [[LangFeatures.typeTokenBits]] memoized per
+    * token, the case-sensitive [[LangFeatures.gazBits]] per sentence. */
+  def langKernel(lang: String, gaz: LangDict.Gaz, m: Ensemble.Model)
+      : DecodeKernel =
+    new DecodeKernel(LangFeatures.typeTokenBits(lang, _),
+      (tokens, _) => LangFeatures.gazBits(tokens, gaz), zeroTerm,
+      m.emissions, 1f, m.transitions)
+
+  /** A token's lowercase form and its partial emission. */
   private final class Tok(val lower: String, val partial: Array[Float])
 
   /** T(from)(to) for every source (real and virtual) into the K real

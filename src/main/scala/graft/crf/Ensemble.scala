@@ -38,31 +38,20 @@ object Ensemble {
 
   def ensembleTag(sentences: Dataset[Sentence], models: Seq[Model])
       : Dataset[TaggedSentence] = {
-    val spark = sentences.sparkSession
-    import spark.implicits._
     val avg = average(models)
-    val bM = spark.sparkContext.broadcast(avg)
-    val bGaz = spark.sparkContext.broadcast(Dict.gazIndex)
-    sentences.mapPartitions { it =>
-      val m = bM.value
-      val k = Crf.kernel(m.emissions, m.transitions, bGaz.value)
-      it.map(k.decode)
-    }
+    DecodeKernel.tag(sentences,
+      DecodeKernel.crf(avg.emissions, avg.transitions))
   }
 
   /** Route each sentence to one of `models` by `selector` (e.g. genre
-    * from the doc id — main.py:388-401's SN check). One kernel, no
-    * branching in the plan. */
+    * from the doc id — main.py:388-401's SN check). One kernel per model
+    * and task, no branching in the plan. */
   def routedTag(sentences: Dataset[Sentence], models: IndexedSeq[Model],
-      selector: Sentence => Int): Dataset[TaggedSentence] = {
-    val spark = sentences.sparkSession
-    import spark.implicits._
-    val bM = spark.sparkContext.broadcast(models)
-    val bGaz = spark.sparkContext.broadcast(Dict.gazIndex)
-    sentences.mapPartitions { it =>
-      val gaz = bGaz.value
-      val ks = bM.value.map(m => Crf.kernel(m.emissions, m.transitions, gaz))
-      it.map(s => ks(selector(s)).decode(s))
-    }
-  }
+      selector: Sentence => Int): Dataset[TaggedSentence] =
+    DecodeKernel.tag(sentences, DecodeKernel.decoder((models, Dict.gazIndex)) {
+      case (ms, gaz) =>
+        val ks = ms.map(m =>
+          DecodeKernel.crfKernel(m.emissions, m.transitions, gaz))
+        s => ks(selector(s)).decode(s)
+    })
 }

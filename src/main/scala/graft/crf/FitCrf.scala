@@ -1,6 +1,6 @@
 package graft.crf
 
-import graft.core.{Dict, Sentence, TaggedSentence}
+import graft.core.Dict
 import graft.features.Features
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.{col, count, lit, sum, first}
@@ -43,8 +43,8 @@ object FitCrf {
       bigram: Array[Array[Long]])           // (K+2)²: tag-pair counts
 
   /** The fitted model. `featW`/`trans` have the exact shapes
-    * [[Crf.emissionWeights]]/[[Crf.transitions]] serve, so the fused
-    * decode kernels run unchanged on fitted weights. */
+    * [[Crf.emissionWeights]]/[[Crf.transitions]] serve; [[DecodeKernel]]
+    * serves it with [[tokenTerm]] as the memoized per-token term. */
   final case class FittedModel(
       featW: Array[Array[Float]],           // K × F log-odds
       wordW: Map[String, Array[Float]],     // word → per-tag log-odds
@@ -333,61 +333,30 @@ object FitCrf {
 
   // ---- serving ---------------------------------------------------------
 
-  /** Emission vector of one token under a fitted model: word-identity
-    * score (exact surface, then lowercase fallback — util.py:97-110
-    * policy — then shape-class backoff) + λ · discrete-feature
-    * log-odds. */
-  def emit(word: String, mask: Int, m: FittedModel): Array[Float] = {
-    val base = m.wordW.getOrElse(word,
-      m.wordW.getOrElse(word.toLowerCase(java.util.Locale.ROOT),
-        m.shapeW.getOrElse(shapeOf(mask), m.shapeDefault)))
-    // Brown-cluster term (same exact-then-lowercase policy as words);
-    // null when the model carries no clusters or the word none
-    val cw: Array[Float] =
-      if (m.clusters.isEmpty) null
-      else {
-        val cid = m.clusters.get(word)
-          .orElse(m.clusters.get(word.toLowerCase(java.util.Locale.ROOT)))
-        cid.flatMap(m.clusterW.get).orNull
-      }
-    val out = new Array[Float](K)
-    var t = 0
-    while (t < K) {
-      var s = base(t)
-      if (cw != null) s += cw(t)
-      if (m.lambda != 0f) {
-        var mm = mask
-        while (mm != 0) {
-          val f = java.lang.Integer.numberOfTrailingZeros(mm)
-          s += m.lambda * m.featW(t)(f)
-          mm &= mm - 1
-        }
-      }
-      out(t) = s
-      t += 1
-    }
+  /** The token term of a fitted model: word-identity score (exact
+    * surface, then lowercase fallback — util.py:97-110 policy — then
+    * shape-class backoff on the type bits), plus the Brown-cluster row
+    * (same exact-then-lowercase policy) when the word has one. The
+    * back-off chain [[emit]] and [[DecodeKernel.fittedKernel]] share. */
+  def tokenTerm(word: String, bits: Int, m: FittedModel): Array[Float] = {
+    val lower = word.toLowerCase(java.util.Locale.ROOT)
+    val out = m.wordW.getOrElse(word, m.wordW.getOrElse(lower,
+      m.shapeW.getOrElse(shapeOf(bits), m.shapeDefault))).clone()
+    m.clusters.get(word).orElse(m.clusters.get(lower))
+      .flatMap(m.clusterW.get)
+      .foreach(cw => for (t <- 0 until K) out(t) += cw(t))
     out
   }
 
-  /** Fused decode under a fitted model — same narrow mapPartitions
-    * shape as [[Crf.tag]]; the model broadcasts once (vocab is
-    * minCount-pruned and corpus-size-independent in the row limit). */
-  def tag(sentences: Dataset[Sentence], m: FittedModel)
-      : Dataset[TaggedSentence] = {
-    val spark = sentences.sparkSession
-    import spark.implicits._
-    val bM = spark.sparkContext.broadcast(m)
-    val bGaz = spark.sparkContext.broadcast(Dict.gazIndex)
-    sentences.mapPartitions { it =>
-      val model = bM.value; val gaz = bGaz.value
-      it.map { s =>
-        val masks = Features.sentenceBits(s.tokens, gaz)
-        val em = Array.tabulate(s.tokens.length)(i =>
-          emit(s.tokens(i), masks(i), model))
-        val path = Crf.viterbi(em, model.trans)
-        TaggedSentence(s.repo, s.path, s.sentIdx, s.tokens, s.starts,
-          s.ends, path.map(Dict.tags))
-      }
-    }
+  /** Emission vector of one token under a fitted model: [[tokenTerm]]
+    * + λ · discrete-feature log-odds over the set bits of `mask`, lowest
+    * first. The per-token definition [[DecodeKernel]] is bit-identical
+    * to. */
+  def emit(word: String, mask: Int, m: FittedModel): Array[Float] = {
+    val out = tokenTerm(word, mask, m)
+    if (m.lambda != 0f)
+      for (t <- 0 until K; f <- 0 until F if (mask >>> f & 1) != 0)
+        out(t) += m.lambda * m.featW(t)(f)
+    out
   }
 }

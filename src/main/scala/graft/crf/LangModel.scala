@@ -200,14 +200,4 @@ object LangModel {
     * id space carries the language (`tir:Q00001`). */
   def kbId(lang: String)(entryId: Int): String =
     f"$lang%s:Q${entryId + 1}%05d"
-
-  /** The decode kernel of a language's features + gaz + model: the
-    * per-language twin of [[Crf.kernel]] ([[LangFeatures.typeTokenBits]]
-    * memoized per token, [[LangFeatures.gazBits]] per sentence), used by
-    * the non-eng [[graft.pipeline.LangPack]] decoder; one per task. */
-  def kernel(lang: String, gaz: LangDict.Gaz, m: Ensemble.Model)
-      : DecodeKernel =
-    new DecodeKernel(LangFeatures.typeTokenBits(lang, _),
-      (tokens, _) => LangFeatures.gazBits(tokens, gaz),
-      m.emissions, m.transitions)
 }

@@ -15,7 +15,8 @@ import graft.core.Dict
   * is below every gazetteer bit, which lets the decode kernel
   * ([[graft.crf.DecodeKernel]]) memoize a token's [[tokenBits]]
   * emission and add the sentence's [[gazMarks]] after it with the same
-  * float result as [[graft.crf.Crf.emit]] over the full mask. Pure
+  * float result as [[graft.crf.Crf.emit]] (or
+  * [[graft.crf.FitCrf.emit]]) over the full mask. Pure
   * Scala, used inside the fused segment→featurize→Viterbi
   * mapPartitions kernel; a Column-expression twin for the
   * relational/oracle path lives in [[graft.SparkEntry]] queries.
@@ -96,8 +97,8 @@ object Features {
     * tokens, via the broadcast n-gram index (longest entry first, all
     * matches marked — reference marks every matching entry's positions
     * independently, segnerfts.py:55-85). The one eng gazetteer marker:
-    * [[sentenceBits]] and the decode kernel ([[graft.crf.Crf.kernel]])
-    * both call it. */
+    * [[sentenceBits]] and the eng decode kernels
+    * ([[graft.crf.DecodeKernel.crfKernel]]) both call it. */
   def gazMarks(
       lower: Array[String],
       gazIndex: Map[String, Vector[(Vector[String], String, Int)]])

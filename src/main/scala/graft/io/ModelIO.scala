@@ -2,6 +2,7 @@ package graft.io
 
 import graft.crf.Ensemble.Model
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StringType
 
 /** Model save/load as a Parquet artifact (replaces the reference's
   * DyNet model.save/populate, models/model_builder.py:30-43, and the
@@ -62,20 +63,37 @@ object ModelIO {
       .repartition(1).write.mode("overwrite").parquet(path)
   }
 
+  /** Loads a [[saveFitted]] artifact. An artifact of another shape
+    * fails with an error that names `path` and what is wrong: a
+    * weights-only [[save]] artifact (its second column is `row: int`,
+    * not `key: string`), or a missing featW, trans, shapeDefault or
+    * lambda matrix. */
   def loadFitted(spark: SparkSession, path: String)
       : graft.crf.FitCrf.FittedModel = {
-    val rows = spark.read.parquet(path).collect()
+    def fail(what: String) = throw new IllegalArgumentException(
+      s"fitted model artifact $path: $what")
+    val df = spark.read.parquet(path)
+    df.schema.fields.lift(1).filterNot(f =>
+      f.name == "key" && f.dataType == StringType).foreach(f =>
+      fail(s"column '${f.name}: ${f.dataType.simpleString}' where " +
+        "'key: string' belongs (a weights-only artifact written by " +
+        "ModelIO.save? load it with ModelIO.load)"))
+    val rows = df.collect()
       .map(r => (r.getString(0), r.getString(1),
         r.getSeq[Float](2).toArray))
-    def mat(name: String) = rows.filter(_._1 == name)
-      .sortBy(_._2.toInt).map(_._3)
+    def need(name: String) = {
+      val m = rows.filter(_._1 == name)
+      if (m.isEmpty) fail(s"matrix '$name' is missing")
+      m
+    }
+    def mat(name: String) = need(name).sortBy(_._2.toInt).map(_._3)
     graft.crf.FitCrf.FittedModel(
       mat("featW"),
       rows.filter(_._1 == "word").map(r => r._2 -> r._3).toMap,
       rows.filter(_._1 == "shape").map(r => r._2.toInt -> r._3).toMap,
-      rows.find(_._1 == "shapeDefault").get._3,
+      need("shapeDefault").head._3,
       mat("trans"),
-      rows.find(_._1 == "lambda").get._3(0),
+      need("lambda").head._3(0),
       // absent in pre-cluster artifacts → empty maps (back-compat)
       rows.filter(_._1 == "clusterOf")
         .map(r => r._2 -> r._3(0).toInt).toMap,

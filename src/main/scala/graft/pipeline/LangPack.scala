@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import graft.core.{Dict, Sentence, TaggedSentence}
-import graft.crf.{Crf, LangModel}
-import org.apache.spark.SparkContext
+import graft.core.Dict
+import graft.crf.{Crf, DecodeKernel, LangModel}
 
 /** Everything in the pipeline that varies by language, picked once.
   *
@@ -10,11 +9,9 @@ import org.apache.spark.SparkContext
   * of its six languages (main.py:485-565, keyed on `args.lang`), so
   * [[Pipeline]] states its stages once and takes the per-language
   * pieces from here:
-  *  - `decoder`: broadcasts the model and gaz on the driver and returns
-  *    the task-side factory, which reads the broadcasts once per
-  *    partition and yields the per-sentence decode of a fresh
-  *    [[graft.crf.DecodeKernel]] (its token memo lives for the task).
-  *    Only broadcast handles are captured, never the model itself.
+  *  - `decoder`: the language's [[DecodeKernel.Decoder]], the one
+  *    serve-time decode shell (broadcast model + gaz, one memoized
+  *    [[DecodeKernel]] per task).
   *  - `lookup`/`lookupIndex`: the post-process fix-up table and its
   *    first-token index (fix-up and insertion never consult English
   *    entries on a non-eng corpus).
@@ -26,7 +23,7 @@ import org.apache.spark.SparkContext
   * [[LangModel]] fit and tables derived from its reference gaz.
   */
 final class LangPack private (
-    val decoder: SparkContext => () => Sentence => TaggedSentence,
+    val decoder: DecodeKernel.Decoder,
     val lookup: Map[String, String],
     val lookupIndex: Map[String, Vector[(Vector[String], String)]],
     val index: Map[String, Vector[(Vector[String], String, Int)]],
@@ -36,22 +33,11 @@ object LangPack {
 
   def apply(lang: String): LangPack =
     if (lang == "eng")
-      new LangPack(
-        sc => {
-          val bW = sc.broadcast(Crf.emissionWeights)
-          val bT = sc.broadcast(Crf.transitions)
-          val bGaz = sc.broadcast(Dict.gazIndex)
-          () => Crf.kernel(bW.value, bT.value, bGaz.value).decode
-        },
+      new LangPack(DecodeKernel.crf(Crf.emissionWeights, Crf.transitions),
         Dict.lookupTable, Dict.lookupIndex, Dict.gazIndex, Dict.kbId)
     else {
       val gaz = LangModel.gazFor(lang)
-      new LangPack(
-        sc => {
-          val bM = sc.broadcast(LangModel.fitted(lang))
-          val bG = sc.broadcast(gaz)
-          () => LangModel.kernel(lang, bG.value, bM.value).decode
-        },
+      new LangPack(DecodeKernel.lang(lang, gaz, LangModel.fitted(lang)),
         LangModel.lookupTable(gaz), LangModel.lookupIndex(gaz),
         LangModel.linkIndex(gaz), LangModel.kbId(lang))
     }

@@ -14,7 +14,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `readStream` inputs with watermarked state, so ingest-time mention
   * extraction / quality filtering can run continuously at scale. All
   * operators are tested with MemoryStream (StreamingSpec) and produce
-  * byte-identical results to their batch twins.
+  * byte-identical results to their batch twins. The mention streams
+  * decode through the batch path's one decode seam
+  * ([[graft.crf.DecodeKernel.Decoder]]), so no stream has a decode of
+  * its own.
   */
 object StreamOps {
 
@@ -113,17 +116,18 @@ object StreamOps {
     graft.pipeline.Pipeline.mentions(files, lang)
 
   /** Streaming decode under ANY fitted model artifact
-    * ([[graft.io.ModelIO.loadFitted]] → here): the FittedModel serve
-    * kernel is the same stateless narrow mapPartitions as the default
-    * path, so a trained/fitted model tags an unbounded stream
-    * unchanged — load once, broadcast, `readStream` through. */
+    * ([[graft.io.ModelIO.loadFitted]] → here): the fitted model's
+    * [[graft.crf.DecodeKernel.fitted]] decoder is the same stateless
+    * narrow mapPartitions as the default path, so a trained/fitted model
+    * tags an unbounded stream unchanged — load once, broadcast,
+    * `readStream` through. */
   def streamingFittedMentions(
       files: org.apache.spark.sql.Dataset[graft.core.SourceFile],
       model: graft.crf.FitCrf.FittedModel)
       : org.apache.spark.sql.Dataset[graft.core.Mention] = {
     import files.sparkSession.implicits._
-    graft.crf.FitCrf
-      .tag(graft.segment.Segmenter.sentences(files), model)
+    graft.crf.DecodeKernel.tag(graft.segment.Segmenter.sentences(files),
+      graft.crf.DecodeKernel.fitted(model))
       .flatMap(graft.spans.Spans.extract _)
   }
 

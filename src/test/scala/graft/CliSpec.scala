@@ -70,7 +70,8 @@ class CliSpec extends SparkTestBase {
       n.get
     }
     val once = fileStages(
-      FitEval.perTypeConll(spark, test, FitCrf.tag(_, model)).collect())
+      FitEval.perTypeConll(spark, test, graft.crf.DecodeKernel.tag(_,
+        graft.crf.DecodeKernel.fitted(model))).collect())
     val out = new java.io.ByteArrayOutputStream
     val eval = fileStages(Console.withOut(out)(Cli.run(spark,
       Array("eval", "--model", s"$dir/m", "--test", test))))

@@ -1,16 +1,18 @@
 package graft
 
-import graft.core.{Dict, LangDict, Memo}
-import graft.crf.{Crf, Ensemble, LangModel}
+import graft.conll.ConllFixture
+import graft.core.{Corpus, Dict, LangDict, Memo, Sentence}
+import graft.crf.{Crf, DecodeKernel, Ensemble, FitCrf}
 import graft.features.{Features, LangFeatures}
-import org.scalatest.funsuite.AnyFunSuite
+import graft.io.ModelIO
 
 /** The memoized decode kernel ([[graft.crf.DecodeKernel]]) against the
-  * per-sentence definitions: [[Crf.emit]] on the full 24-bit mask, then
+  * per-sentence definitions: [[Crf.emit]] (weights-only models) or
+  * [[FitCrf.emit]] (fitted models) on the full 24-bit mask, then
   * [[Crf.bruteForce]] (short sentences) or [[Crf.viterbi]] (long ones,
   * past the kernel's initial buffer, and across a memo that clears
   * mid-task). Seeded generation — byte-identical inputs every run. */
-class DecodeKernelSpec extends AnyFunSuite {
+class DecodeKernelSpec extends SparkTestBase {
 
   private val K = Crf.K
   private val F = Features.numFeatures
@@ -78,7 +80,8 @@ class DecodeKernelSpec extends AnyFunSuite {
     (1 to 40).foreach { model =>
       val w = exactWeights(r)
       val tr = exactTrans(r)
-      val k = Crf.kernel(w, tr, Dict.gazIndex) // one memo across sentences
+      // one memo across sentences
+      val k = DecodeKernel.crfKernel(w, tr, Dict.gazIndex)
       (1 to 25).foreach { i =>
         val toks = sentence(r, 1 + r.nextInt(5))
         val masks = Features.sentenceBits(toks, Dict.gazIndex)
@@ -98,7 +101,7 @@ class DecodeKernelSpec extends AnyFunSuite {
     (1 to 8).foreach { model =>
       val w = orderedWeights(r)
       val tr = if (model % 2 == 0) Crf.transitions else exactTrans(r)
-      val k = Crf.kernel(w, tr, Dict.gazIndex)
+      val k = DecodeKernel.crfKernel(w, tr, Dict.gazIndex)
       // short, long, short again: the grown buffers must not leak rows
       Seq(7, 300, 1200, 5, 513).foreach { n =>
         val toks = sentence(r, n)
@@ -112,7 +115,7 @@ class DecodeKernelSpec extends AnyFunSuite {
     val r = new java.util.Random(612L)
     val w = orderedWeights(r)
     val tr = Crf.transitions
-    val k = Crf.kernel(w, tr, Dict.gazIndex)
+    val k = DecodeKernel.crfKernel(w, tr, Dict.gazIndex)
     val distinct = Memo.Cap + Memo.Cap / 2
     // the same early sentences before the clear, between and after it
     val early = Array.fill(40)(sentence(r, 6 + r.nextInt(20)))
@@ -150,7 +153,7 @@ class DecodeKernelSpec extends AnyFunSuite {
       "Ada Lovelace", "addis Ababa").map(_.split(' '))
     Seq("tir", "orm", "amh").foreach { lang =>
       val m = Ensemble.Model(orderedWeights(r), exactTrans(r))
-      val k = LangModel.kernel(lang, gaz, m)
+      val k = DecodeKernel.langKernel(lang, gaz, m)
       (1 to 60).foreach { i =>
         val toks = plant(r, Array.fill(
           1 + r.nextInt(if (i % 10 == 0) 400 else 12))(
@@ -162,6 +165,86 @@ class DecodeKernelSpec extends AnyFunSuite {
         assert(k.tags(toks).toSeq == want.toSeq,
           s"$lang case $i: ${toks.mkString(" ")}")
       }
+    }
+  }
+
+  /** A fitted model's decode as a per-sentence definition: the full
+    * masks, [[FitCrf.emit]] per token, then [[Crf.viterbi]]. */
+  private def fittedReference(toks: Array[String],
+      m: FitCrf.FittedModel): Array[Int] = {
+    val masks = Features.sentenceBits(toks, Dict.gazIndex)
+    Crf.viterbi(Array.tabulate(toks.length)(i =>
+      FitCrf.emit(toks(i), masks(i), m)), m.trans)
+  }
+
+  test("shipped models/eng.fitted: the fitted decoder == FitCrf.emit + " +
+      "DP over synthesized files and the CoNLL fixture") {
+    val s = spark
+    import s.implicits._
+    val m = ModelIO.loadFitted(spark, ModelIO.defaultFittedPath)
+    assert(m.clusters.nonEmpty && m.lambda != 0f)
+    val conll = ConllFixture.lines.mkString("\n").split("\n\n").toSeq
+      .zipWithIndex.map { case (block, i) =>
+        val toks = block.split('\n').map(_.split(' ')(0))
+        Sentence("conll", "fixture", i, toks, toks.indices.toArray,
+          toks.indices.map(_ + 1).toArray)
+      }
+    val sents = graft.segment.Segmenter.sentences(
+      Corpus.synthesize(spark, 200)).union(conll.toDS())
+    val got = DecodeKernel.tag(sents, DecodeKernel.fitted(m)).collect()
+    assert(got.length > 500 && got.exists(_.path == "fixture"))
+    got.foreach { ts =>
+      assert(ts.tags.toSeq ==
+        fittedReference(ts.tokens, m).map(Dict.tags).toSeq,
+        ts.tokens.mkString(" "))
+    }
+  }
+
+  test("random cluster-bearing fitted model, lambda = 0 and != 0: " +
+      "kernel == FitCrf.emit + DP (exact and lowercase vocab, OOV " +
+      "shapes, cluster hits, long sentences, a memo clear)") {
+    val r = new java.util.Random(614L)
+    def row(): Array[Float] =
+      Array.fill(K)((r.nextInt(2001) - 1000) / 37f)
+    // exact-case vocab, and words the vocab holds only in lowercase
+    val exact = Array("the", "of", "River", "Ada", "NATO", "Addis")
+    val lowerOnly = Array("lovelace", "ababa", "sort", "merge")
+    val oov = Array("Zorblax", "x9", "QQQ", "Mc-Fly", "ቀዳማይ", "a.b.c")
+    // clustered words: OOV ones (exact and lowercase-keyed) and one
+    // whose cluster has no weight row
+    val clustered = Map("Zorblax" -> 0, "qqq" -> 1, "apache" -> 2,
+      "Foundation" -> 1, "Kenya" -> 3)
+    val shapes = (exact ++ oov ++ vocab).map(Features.tokenBits).distinct
+    val base = FitCrf.FittedModel(orderedWeights(r),
+      (exact ++ lowerOnly).map(_ -> row()).toMap,
+      shapes.filter(_ => r.nextBoolean()).map(_ -> row()).toMap, row(),
+      exactTrans(r), 0f, clustered, (0 to 2).map(_ -> row()).toMap)
+    val words = vocab ++ exact ++ lowerOnly.map(_.capitalize) ++
+      lowerOnly.map(_.toUpperCase) ++ oov ++ clustered.keys ++
+      Array("QQQ", "Apache", "KENYA")
+    def toks(n: Int): Array[String] =
+      plant(r, Array.fill(n)(words(r.nextInt(words.length))), phrases)
+    Seq(0f, 0.37f, 1f).foreach { lambda =>
+      val m = base.copy(lambda = lambda)
+      val k = DecodeKernel.fittedKernel(m, Dict.gazIndex)
+      def check(t: Array[String]): Unit =
+        assert(k.tags(t).toSeq == fittedReference(t, m).toSeq,
+          s"lambda $lambda: ${t.mkString(" ")}")
+      val early = Seq(3, 12, 300, 1, 700, 9).map(toks)
+      early.foreach(check)
+      // fresh tokens until the memo clears, mixed with the vocab above
+      var next = 0
+      while (next < Memo.Cap + Memo.Cap / 4) {
+        val t = Array.fill(32) {
+          if (r.nextInt(3) == 0) words(r.nextInt(words.length))
+          else {
+            next += 1
+            if (next % 3 == 0) s"Oov$next" else s"oov$next"
+          }
+        }
+        check(t)
+      }
+      early.foreach(check)
     }
   }
 }

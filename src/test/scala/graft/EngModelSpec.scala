@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Dict
-import graft.crf.FitCrf
+import graft.crf.{DecodeKernel, FitCrf}
 import graft.io.ModelIO
 
 /** The round-1 verdict's top item: the English model is FITTED from
@@ -19,7 +19,8 @@ class EngModelSpec extends SparkTestBase {
       "eng.test (conlleval semantics, 5648 gold spans)") {
     assume(available)
     val model = FitEval.engModel(spark)
-    val c = FitEval.evalConll(spark, FitEval.testPath, FitCrf.tag(_, model))
+    val c = FitEval.evalConll(spark, FitEval.testPath,
+      DecodeKernel.tag(_, DecodeKernel.fitted(model)))
     val goldN = c.tp + c.fn
     assert(goldN == 5648L, s"gold span count drifted: $goldN")
     val f1 = c.f1
@@ -55,7 +56,7 @@ class EngModelSpec extends SparkTestBase {
     // 0.7483/0.7528 (vs closed form 0.7269) — see FitEval.trainFullModel
     val model = FitEval.trainFullModel(spark, epochs = 60)
     val f1 = FitEval.evalConll(spark, FitEval.testPath,
-      FitCrf.tag(_, model)).f1
+      DecodeKernel.tag(_, DecodeKernel.fitted(model))).f1
     info(f"train-full 60-epoch span F1=$f1%.4f")
     assert(f1 >= 0.70, f"train-full F1 $f1%.4f < 0.70")
   }
@@ -71,7 +72,8 @@ class EngModelSpec extends SparkTestBase {
     // (`Cli train --clusters 256`)
     assert(model.clusterW.nonEmpty && model.clusters.nonEmpty,
       "artifact must include the Brown-cluster feature block")
-    val c = FitEval.evalConll(spark, FitEval.testPath, FitCrf.tag(_, model))
+    val c = FitEval.evalConll(spark, FitEval.testPath,
+      DecodeKernel.tag(_, DecodeKernel.fitted(model)))
     val f1 = c.f1
     info(f"artifact eng.test micro P=${c.precision}%.4f R=${c.recall}%.4f " +
       f"F1=$f1%.4f")

@@ -46,6 +46,33 @@ class ModelIOSpec extends SparkTestBase {
     assert(m2.lambda == m.lambda)
   }
 
+  test("loadFitted of a weights-only artifact names the path and the " +
+      "mistyped column") {
+    val dir = graft.core.TempDirs.create("graft_model") + "/weights"
+    ModelIO.save(spark, Ensemble.Model(Crf.emissionWeights,
+      Crf.transitions), dir)
+    val e = intercept[IllegalArgumentException](
+      ModelIO.loadFitted(spark, dir))
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("'row: int'"), e.getMessage)
+  }
+
+  test("loadFitted of an artifact without shapeDefault or lambda names " +
+      "the path and the missing matrix") {
+    val root = graft.core.TempDirs.create("fitted-model")
+    graft.io.ModelIO.saveFitted(spark, graft.crf.DefaultModel.fitted,
+      s"$root/m")
+    Seq("shapeDefault", "lambda").foreach { name =>
+      val dir = s"$root/no-$name"
+      spark.read.parquet(s"$root/m").filter(col("matrix") =!= name)
+        .write.parquet(dir)
+      val e = intercept[IllegalArgumentException](
+        ModelIO.loadFitted(spark, dir))
+      assert(e.getMessage.contains(dir) &&
+        e.getMessage.contains(s"matrix '$name' is missing"), e.getMessage)
+    }
+  }
+
   test("token accuracy: exact fraction with rounding") {
     val s = spark
     import s.implicits._

@@ -191,8 +191,9 @@ class StreamingSpec extends SparkTestBase {
     val key = Seq("repo", "path", "sentIdx", "start")
     val stream = spark.table("sf").orderBy(key.head, key.tail: _*)
       .collect().map(_.toString).toSeq
-    val batch = graft.crf.FitCrf.tag(
-        graft.segment.Segmenter.sentences(files.toDS()), model)
+    val batch = graft.crf.DecodeKernel.tag(
+        graft.segment.Segmenter.sentences(files.toDS()),
+        graft.crf.DecodeKernel.fitted(model))
       .flatMap(graft.spans.Spans.extract _).toDF()
       .orderBy(key.head, key.tail: _*)
       .collect().map(_.toString).toSeq

@@ -21,7 +21,7 @@ import scala.jdk.CollectionConverters._
   *       [--rare-max 2] [--lambda 0]          closed-form fit (seconds)
   * train --out <modelDir> [--epochs 300] [--lr 1.0] [--l2 3e-5]
   *       [--clusters <C>]
-  *       discriminative trainWords over the in-tree eng data; with
+  *       discriminative CrfTrainer.train over the in-tree eng data; with
   *       --clusters, OOV-gated rows of C Brown clusters of eng.train
   *       (the shipped models/eng.fitted: --clusters 256)
   * tag   [--model <modelDir>] --in <conll> --out <dir>

@@ -91,10 +91,10 @@ object FitEval {
             .orElse(cmap.get(t.words(i).toLowerCase(java.util.Locale.ROOT)))
             .map(V + S + 1 + _).getOrElse(-1)
         }
-      graft.crf.CrfTrainer.WordSentence(masks, ids, t.tags, cids)
+      graft.crf.CrfTrainer.WordSentence(masks, t.tags, ids, cids)
     }
     val (w, wv, tr, _) =
-      graft.crf.CrfTrainer.trainWords(data, V + S + 1 + C, epochs, lr, l2)
+      graft.crf.CrfTrainer.train(data, V + S + 1 + C, epochs, lr, l2)
     // The catch-all OOV row V+S is never assigned to a training token
     // (every training word is in vocab or has a rare shape), so its
     // trained row only ever sees the l2 gradient of a zero init and

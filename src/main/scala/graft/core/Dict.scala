@@ -130,28 +130,53 @@ object Dict {
     * longest entries first (SURVEY.md §2.5 "broadcast hash join on
     * sequences"; reference sliding match segnerfts.py:55-85). */
   lazy val gazIndex: Map[String, Vector[(Vector[String], String, Int)]] =
-    gazetteer.zipWithIndex
-      .map { case ((toks, l), id) =>
-        (toks.map(_.toLowerCase(java.util.Locale.ROOT)), l, id)
-      }
-      .groupBy(_._1.head)
-      .view.mapValues(_.sortBy(e => (-e._1.length, e._3)).toVector)
-      .toMap
+    gazIndexOf(gazetteer)
 
   /** Span→label lookup table for post-process fix-up
     * (post_process.py:58-69), ambiguity already removed (50-55). */
-  val lookupTable: Map[String, String] =
-    gazetteer.map { case (toks, l) =>
-      toks.mkString(" ").toLowerCase(java.util.Locale.ROOT) -> l
-    }
-      .groupBy(_._1).collect { case (k, vs) if vs.map(_._2).distinct.size == 1 => k -> vs.head._2 }
+  val lookupTable: Map[String, String] = lookupTableOf(gazetteer)
 
   /** lookupTable re-indexed by first token for the span-insertion
     * probe: only positions whose token can start an entry pay any
     * allocation (same shape as [[gazIndex]]; building every n-gram
     * string and probing a flat map is allocation-bound at scale). */
   lazy val lookupIndex: Map[String, Vector[(Vector[String], String)]] =
-    lookupTable.toVector
+    lookupIndexOf(gazetteer)
+
+  // ---- the three dictionary tables of an ordered (tokens, label)
+  // entry list: the eng vals above pass `gazetteer`, every other
+  // language its gaz through graft.crf.LangModel ----
+
+  private def lower(s: String): String =
+    s.toLowerCase(java.util.Locale.ROOT)
+
+  /** [[gazIndex]]'s shape over `entries`: lowercased first token →
+    * (lowercased entry tokens, label, entry id = position in
+    * `entries`), longest entry first, then lowest id. */
+  def gazIndexOf(entries: Seq[(Vector[String], String)])
+      : Map[String, Vector[(Vector[String], String, Int)]] =
+    entries.zipWithIndex
+      .map { case ((toks, l), id) => (toks.map(lower), l, id) }
+      .groupBy(_._1.head)
+      .view.mapValues(_.sortBy(e => (-e._1.length, e._3)).toVector)
+      .toMap
+
+  /** [[lookupTable]]'s shape over `entries`: lowercased entry string →
+    * label, entries carrying more than one label dropped. */
+  def lookupTableOf(entries: Seq[(Vector[String], String)])
+      : Map[String, String] =
+    entries.map { case (toks, l) => lower(toks.mkString(" ")) -> l }
+      .groupBy(_._1)
+      .collect { case (k, vs) if vs.map(_._2).distinct.size == 1 =>
+        k -> vs.head._2
+      }
+
+  /** [[lookupIndex]]'s shape over `entries`: [[lookupTableOf]]
+    * re-indexed by first token, longest entry first, then entry
+    * string. */
+  def lookupIndexOf(entries: Seq[(Vector[String], String)])
+      : Map[String, Vector[(Vector[String], String)]] =
+    lookupTableOf(entries).toVector
       .map { case (text, tag) => (text.split(' ').toVector, tag) }
       .groupBy(_._1.head)
       .view.mapValues(_.sortBy(e => (-e._1.length, e._1.mkString(" "))))

@@ -33,7 +33,7 @@ object Crf {
   /** BIO/virtual-tag wall STRUCTURE — the constraint set of
     * decoders.py:17-25 / model_builder.py:13-22 plus the START-column /
     * END-row walls of decoders.py:48-58. A pure structural constant
-    * (no weights), shared by the fitted default, [[CrfTrainer]] and
+    * (no weights), shared by the fitted default, [[CrfTrainer.train]] and
     * [[FitCrf]]. Lives in [[Dict]] (a forwarding def, no monitor) so
     * the DefaultModel → FitCrf.weights path never re-enters Crf —
     * concurrent first access of Crf.emissionWeights and
@@ -86,7 +86,8 @@ object Crf {
       DecodeKernel.endTransitions(trans), new Array[Int](T * K))
   }
 
-  private def logSumExp(xs: Array[Double]): Double = {
+  /** Log-sum-exp of a K-vector, max-shifted; −∞ when every entry is. */
+  private[crf] def logSumExp(xs: Array[Double]): Double = {
     var mx = xs(0); var i = 1
     while (i < xs.length) { if (xs(i) > mx) mx = xs(i); i += 1 }
     if (mx == Double.NegativeInfinity) return mx
@@ -105,30 +106,38 @@ object Crf {
     * paths exactly — same value, cleaner math, and the brute-force
     * twin in CrfLossSpec enumerates the identical path space. */
   def forward(emissions: Array[Array[Float]],
-      trans: Array[Array[Float]]): Double = {
+      trans: Array[Array[Float]]): Double =
+    forward(emissions, trans, Array.ofDim[Double](emissions.length, K))
+
+  /** The one alpha recursion, shared with [[CrfTrainer]]'s gradient:
+    * fills `alpha` (T × K; alpha(t)(k) is the log mass of the real-tag
+    * paths that end in tag k at t, emissions up to t included) and
+    * returns log Z. */
+  def forward(emissions: Array[Array[Float]], trans: Array[Array[Float]],
+      alpha: Array[Array[Double]]): Double = {
     val T = emissions.length
     require(T > 0, "forward of an empty sentence is undefined")
-    var alpha = Array.tabulate(K)(to =>
-      (trans(START)(to) + emissions(0)(to)).toDouble)
+    var k = 0
+    while (k < K) {
+      alpha(0)(k) = (trans(START)(k) + emissions(0)(k)).toDouble; k += 1
+    }
     val buf = new Array[Double](K)
     var t = 1
     while (t < T) {
-      val next = new Array[Double](K)
       var to = 0
       while (to < K) {
         var from = 0
         while (from < K) {
-          buf(from) = alpha(from) + trans(from)(to)
+          buf(from) = alpha(t - 1)(from) + trans(from)(to)
           from += 1
         }
-        next(to) = logSumExp(buf) + emissions(t)(to)
+        alpha(t)(to) = logSumExp(buf) + emissions(t)(to)
         to += 1
       }
-      alpha = next
       t += 1
     }
-    var tag = 0
-    while (tag < K) { buf(tag) = alpha(tag) + trans(tag)(END); tag += 1 }
+    k = 0
+    while (k < K) { buf(k) = alpha(T - 1)(k) + trans(k)(END); k += 1 }
     logSumExp(buf)
   }
 
@@ -243,7 +252,8 @@ object Crf {
     tag(sentences, emissionWeights, transitions)
 
   /** Same decode with explicit weights — the serve path for a model
-    * trained by [[CrfTrainer]] / loaded via [[graft.io.ModelIO]]. */
+    * trained by [[CrfTrainer.train]] at `vocabSize = 0` / loaded via
+    * [[graft.io.ModelIO.load]]. */
   def tag(sentences: Dataset[Sentence], w: Array[Array[Float]],
       tr: Array[Array[Float]]): Dataset[TaggedSentence] =
     DecodeKernel.tag(sentences, DecodeKernel.crf(w, tr))

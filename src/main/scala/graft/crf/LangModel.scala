@@ -154,30 +154,21 @@ object LangModel {
 
   // ---- per-language dictionary surfaces for post-process + linking ---
 
-  private def lower(s: String): String =
-    s.toLowerCase(java.util.Locale.ROOT)
+  private def entries(gaz: LangDict.Gaz): Vector[(Vector[String], String)] =
+    orderedEntries(gaz).map(_.swap)
 
   /** Lookup table of a language's gaz (lowercased entry string →
     * label, multi-label entries dropped) — the per-language twin of
     * [[Dict.lookupTable]] for [[graft.postprocess.PostProcess]], so a
     * non-eng corpus is never fixed up against English entries. */
   def lookupTable(gaz: LangDict.Gaz): Map[String, String] =
-    orderedEntries(gaz)
-      .map { case (label, e) => lower(e.mkString(" ")) -> label }
-      .groupBy(_._1)
-      .collect { case (k, vs) if vs.map(_._2).distinct.size == 1 =>
-        k -> vs.head._2
-      }
+    Dict.lookupTableOf(entries(gaz))
 
   /** [[lookupTable]] re-indexed by first token (the shape
     * [[Dict.lookupIndex]] serves the insertion probe). */
   def lookupIndex(gaz: LangDict.Gaz)
       : Map[String, Vector[(Vector[String], String)]] =
-    lookupTable(gaz).toVector
-      .map { case (text, tag) => (text.split(' ').toVector, tag) }
-      .groupBy(_._1.head)
-      .view.mapValues(_.sortBy(e => (-e._1.length, e._1.mkString(" "))))
-      .toMap
+    Dict.lookupIndexOf(entries(gaz))
 
   /** Entity-link index of a language's gaz for [[graft.link.Linker]]:
     * lowercased-first-token → (lowercased entry tokens, label, id),
@@ -190,11 +181,7 @@ object LangModel {
     * exact-surface mention's argmax is unique at score 1.0. */
   def linkIndex(gaz: LangDict.Gaz)
       : Map[String, Vector[(Vector[String], String, Int)]] =
-    orderedEntries(gaz).zipWithIndex
-      .map { case ((label, e), id) => (e.map(lower), label, id) }
-      .groupBy(_._1.head)
-      .view.mapValues(_.sortBy(e => (-e._1.length, e._3)).toVector)
-      .toMap
+    Dict.gazIndexOf(entries(gaz))
 
   /** Language-scoped KB id: tir/orm entry ids both start at 0, so the
     * id space carries the language (`tir:Q00001`). */

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    the Brown class-bigram likelihood (Brown et al. 1992 eq. 13;
   *    Martin, Liermann & Ney 1998's exchange optimizer), a
   *    model-sized O(C²) driver computation exactly like the AdaGrad
-  *    steps in [[graft.crf.CrfTrainer]] — the corpus never leaves the
+  *    step of [[graft.crf.CrfTrainer.train]] — the corpus never leaves the
   *    cluster, the count tables do;
   *  - the flat C clusters are then merged agglomeratively under the
   *    same objective to a binary tree, whose root-to-leaf paths give

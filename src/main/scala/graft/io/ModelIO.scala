@@ -1,8 +1,8 @@
 package graft.io
 
 import graft.crf.Ensemble.Model
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 
 /** Model save/load as a Parquet artifact (replaces the reference's
   * DyNet model.save/populate, models/model_builder.py:30-43, and the
@@ -30,14 +30,34 @@ object ModelIO {
       .write.mode("overwrite").parquet(path)
   }
 
+  /** Loads a [[save]] artifact. A [[saveFitted]] artifact (its second
+    * column is `key: string`, not `row: int`) fails with an error that
+    * names `path` and the mistyped column. */
   def load(spark: SparkSession, path: String): Model = {
-    val rows = spark.read.parquet(path)
+    val rows = read(spark, path, "row", IntegerType, "fitted", "Fitted")
       .collect()
       .map(r => (r.getString(0), r.getInt(1),
         r.getSeq[Float](2).toArray))
     def mat(name: String) = rows.filter(_._1 == name)
       .sortBy(_._2).map(_._3)
     Model(mat("emissions"), mat("transitions"))
+  }
+
+  /** Reads the artifact at `path` after checking that its second
+    * column is `key: keyType`. An artifact of the other shape fails
+    * naming `path`, the mistyped column and the loader that reads it
+    * (`ModelIO.load<otherSuffix>`). */
+  private def read(spark: SparkSession, path: String, key: String,
+      keyType: DataType, other: String, otherSuffix: String): DataFrame = {
+    val df = spark.read.parquet(path)
+    df.schema.fields.lift(1).filterNot(f =>
+      f.name == key && f.dataType == keyType).foreach(f =>
+      throw new IllegalArgumentException(s"model artifact $path: column " +
+        s"'${f.name}: ${f.dataType.simpleString}' where " +
+        s"'$key: ${keyType.simpleString}' belongs (a $other artifact " +
+        s"written by ModelIO.save$otherSuffix? load it with " +
+        s"ModelIO.load$otherSuffix)"))
+    df
   }
 
   /** Persist a closed-form [[graft.crf.FitCrf.FittedModel]] (word and
@@ -72,13 +92,8 @@ object ModelIO {
       : graft.crf.FitCrf.FittedModel = {
     def fail(what: String) = throw new IllegalArgumentException(
       s"fitted model artifact $path: $what")
-    val df = spark.read.parquet(path)
-    df.schema.fields.lift(1).filterNot(f =>
-      f.name == "key" && f.dataType == StringType).foreach(f =>
-      fail(s"column '${f.name}: ${f.dataType.simpleString}' where " +
-        "'key: string' belongs (a weights-only artifact written by " +
-        "ModelIO.save? load it with ModelIO.load)"))
-    val rows = df.collect()
+    val rows = read(spark, path, "key", StringType, "weights-only", "")
+      .collect()
       .map(r => (r.getString(0), r.getString(1),
         r.getSeq[Float](2).toArray))
     def need(name: String) = {

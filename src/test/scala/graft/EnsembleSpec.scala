@@ -32,8 +32,9 @@ class EnsembleSpec extends SparkTestBase {
     val labeled = graft.crf.CrfTrainer.labeled(gold)
     val splits = graft.conll.Scans.ensembleSplit(labeled.toDF(), 3)
     val models = splits.toSeq.map { df =>
-      val (w, tr, _) = graft.crf.CrfTrainer.train(
-        df.as[graft.crf.CrfTrainer.LabeledSentence], epochs = 15)
+      val (w, _, tr, _) = graft.crf.CrfTrainer.train(
+        df.as[graft.crf.CrfTrainer.WordSentence], vocabSize = 0,
+        epochs = 15)
       Ensemble.Model(w, tr)
     }
     val avg = Ensemble.average(models)

@@ -57,6 +57,16 @@ class ModelIOSpec extends SparkTestBase {
       e.getMessage.contains("'row: int'"), e.getMessage)
   }
 
+  test("load of a fitted artifact names the path and the mistyped " +
+      "column") {
+    val dir = graft.core.TempDirs.create("fitted-model") + "/fitted"
+    ModelIO.saveFitted(spark, graft.crf.DefaultModel.fitted, dir)
+    val e = intercept[IllegalArgumentException](ModelIO.load(spark, dir))
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("'key: string'") &&
+      e.getMessage.contains("ModelIO.loadFitted"), e.getMessage)
+  }
+
   test("loadFitted of an artifact without shapeDefault or lambda names " +
       "the path and the missing matrix") {
     val root = graft.core.TempDirs.create("fitted-model")

@@ -81,6 +81,46 @@ class EngModelSpec extends SparkTestBase {
     assert(f1 >= 0.75, f"artifact span F1 $f1%.4f < 0.75")
   }
 
+  test("word-feature gradient matches finite differences") {
+    import graft.crf.{Crf, CrfTrainer}
+    // rows 0-1 are words, rows 2-3 Brown clusters: token 0 fires a word
+    // and a cluster row, token 1 a word only, token 2 a cluster only
+    val s = CrfTrainer.WordSentence(
+      Array(1 << graft.features.Features.CAPITALIZED, 0, 1 << 2),
+      Array(0, Crf.K - 1, 2), Array(0, 1, -1), Array(2, -1, 3))
+    val rows = 4
+    val w = Array.tabulate(Crf.K, graft.features.Features.numFeatures)(
+      (t, f) => ((t * 7 + f) % 5 - 2) * 0.1f)
+    val wv = Array.tabulate(rows, Crf.K)((v, t) => ((v + t) % 3 - 1) * 0.2f)
+    val tr = Array.tabulate(Crf.K + 2, Crf.K + 2) { (i, j) =>
+      if (Crf.walls(i)(j)) Crf.WALL else ((i + j) % 4 - 1) * 0.1f
+    }
+    def nllOf(wvX: Array[Array[Float]]): Double = {
+      val em = Array.tabulate(3) { t =>
+        val e = Crf.emit(s.masks(t), w)
+        for (id <- Seq(s.wordIds(t), s.clusterIds(t)) if id >= 0) {
+          var k = 0
+          while (k < Crf.K) { e(k) += wvX(id)(k); k += 1 }
+        }
+        e
+      }
+      Crf.forward(em, tr) - Crf.goldScore(em, tr, s.tags)
+    }
+    val aw = new Array[Double](Crf.K * graft.features.Features.numFeatures)
+    val at = new Array[Double]((Crf.K + 2) * (Crf.K + 2))
+    val av = new Array[Double](rows * Crf.K)
+    CrfTrainer.addSentenceGrad(s, w, wv, tr, aw, at, av)
+    val eps = 1e-3f
+    for (v <- 0 until rows; k <- 0 until Crf.K) {
+      val plus = wv.map(_.clone()); plus(v)(k) += eps
+      val minus = wv.map(_.clone()); minus(v)(k) -= eps
+      val numeric = (nllOf(plus) - nllOf(minus)) / (2 * eps)
+      assert(math.abs(numeric - av(v * Crf.K + k)) < 1e-2,
+        s"dNLL/dwv($v)($k): numeric $numeric vs analytic " +
+          av(v * Crf.K + k))
+    }
+  }
+
   test("distributed fit == driver-side fit (shared counts->weights " +
       "arithmetic)") {
     assume(available)

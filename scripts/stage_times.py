@@ -2,6 +2,7 @@
 """Per-stage timings of the last action in an uncompressed Spark event log.
 
     python3 scripts/stage_times.py <event log file or directory>
+    python3 scripts/stage_times.py --jobs <event log file or directory>
 
 For each stage of the last action it prints the wall time (submission to
 completion), task time (sum of executor run time), GC time, shuffle read
@@ -28,6 +29,18 @@ properties):
 On an untraced run the last action is the last timed `Pipeline.triples`
 digest, i.e. the fused path the headline runs. The traced run
 (`--trace 1`) times the Dataset-level stage list instead.
+
+With `--jobs` it lists every job of the log instead, in the order the
+jobs started: its start (seconds after the log's first job), its SQL
+execution id ("-" for a job outside any SQL execution, such as a Parquet
+schema-inference or file-listing job, which the per-stage view cannot
+show), its wall time (start to end), the tasks it ran (a stage belongs
+to the first job that lists it; later jobs skip it) and its call site.
+A checkpointed run's jobs are then counted line by line. A stage write
+whose plan has no exchange shows as `parquet at TableIO.scala`; adaptive
+execution runs each query stage of any other action (a write with an
+exchange or a subquery, a digest) as its own job, with a
+`CompletableFuture` call site.
 """
 import json
 import os
@@ -60,25 +73,68 @@ def execution_of(props):
     return int(ex) if ex not in (None, "") else None
 
 
+def events(paths):
+    for p in paths:
+        with open(p, encoding="utf-8") as f:
+            for line in f:
+                yield json.loads(line)
+
+
 def read(paths):
     """Per job its execution and stage ids; per stage its last completed
     attempt's info and its tasks' metrics."""
     jobs, stages, tasks = {}, {}, {}
-    for p in paths:
-        with open(p, encoding="utf-8") as f:
-            for line in f:
-                e = json.loads(line)
-                kind = e.get("Event", "")
-                if kind == "SparkListenerJobStart":
-                    jobs[e["Job ID"]] = (execution_of(e.get("Properties")),
-                                         e.get("Stage IDs", []))
-                elif kind == "SparkListenerStageCompleted":
-                    info = e["Stage Info"]
-                    stages[info["Stage ID"]] = info
-                elif kind == "SparkListenerTaskEnd" and e.get("Task Metrics"):
-                    tasks.setdefault(e["Stage ID"], []).append(
-                        e["Task Metrics"])
+    for e in events(paths):
+        kind = e.get("Event", "")
+        if kind == "SparkListenerJobStart":
+            jobs[e["Job ID"]] = (execution_of(e.get("Properties")),
+                                 e.get("Stage IDs", []))
+        elif kind == "SparkListenerStageCompleted":
+            info = e["Stage Info"]
+            stages[info["Stage ID"]] = info
+        elif kind == "SparkListenerTaskEnd" and e.get("Task Metrics"):
+            tasks.setdefault(e["Stage ID"], []).append(e["Task Metrics"])
     return jobs, stages, tasks
+
+
+def list_jobs(paths):
+    """One line per job, in start order (the `--jobs` mode)."""
+    start, end, info, ntasks = {}, {}, {}, {}
+    for e in events(paths):
+        kind = e.get("Event", "")
+        if kind == "SparkListenerJobStart":
+            j = e["Job ID"]
+            start[j] = e.get("Submission Time", 0)
+            sites = {s["Stage ID"]: s.get("Stage Name", "")
+                     for s in e.get("Stage Infos", [])}
+            info[j] = (execution_of(e.get("Properties")),
+                       e.get("Stage IDs", []),
+                       sites[max(sites)] if sites else "")
+        elif kind == "SparkListenerJobEnd":
+            end[e["Job ID"]] = e.get("Completion Time", 0)
+        elif kind == "SparkListenerTaskEnd":
+            ntasks[e["Stage ID"]] = ntasks.get(e["Stage ID"], 0) + 1
+    if not start:
+        raise SystemExit(f"stage_times: no job in {paths[0]}")
+    owner = {}
+    for j in sorted(info):
+        for s in info[j][1]:
+            owner.setdefault(s, j)
+    t0 = min(start.values())
+    order = sorted(start, key=lambda j: (start[j], j))
+    print(f"# {paths[0]}\n# {len(order)} jobs, "
+          f"{sum(1 for j in order if info[j][0] is None)} outside any SQL "
+          f"execution")
+    print("\t".join(["job", "start_s", "execution", "wall_s", "tasks",
+                     "call_site"]))
+    for j in order:
+        ex, sids, site = info[j]
+        wall = (end[j] - start[j]) / 1000.0 if j in end else None
+        tasks = sum(ntasks.get(s, 0) for s in sids if owner[s] == j)
+        print("\t".join(str(v) for v in [
+            j, round((start[j] - t0) / 1000.0, 3),
+            "-" if ex is None else ex,
+            "-" if wall is None else round(wall, 3), tasks, site]))
 
 
 def operators(info):
@@ -119,9 +175,12 @@ def stage_row(sid, info, metrics):
 
 
 def main():
-    if len(sys.argv) != 2:
+    args = sys.argv[1:]
+    if args[:1] == ["--jobs"] and len(args) == 2:
+        return list_jobs(log_files(args[1]))
+    if len(args) != 1:
         raise SystemExit(__doc__)
-    paths = log_files(sys.argv[1])
+    paths = log_files(args[0])
     jobs, stages, tasks = read(paths)
     ran = [j for j in sorted(jobs) if jobs[j][0] is not None]
     if not ran:

@@ -150,14 +150,15 @@ object Queries10 {
 
   // ---- q77: checkpointed pipeline end-to-end ---------------------------
 
-  /** [[graft.pipeline.Pipeline.triplesCheckpointed]] — raw decode →
-    * parquet stage; the fused per-file pass (decode, doc kernel,
-    * cross-doc vote) → stage; link → stage; triples partitioned by
-    * pred → read-back — over the eligible corpus, where
-    * post-processing is the identity (the q56-gated argument), so the
-    * q58 relational link+triples oracle pins the WHOLE resumable
-    * chain: any value/type loss in a stage checkpoint or a
-    * partition-column reorder on read-back breaks the hash. */
+  /** [[graft.pipeline.Pipeline.triplesCheckpointed]] — the per-file
+    * pass (decode, doc kernel) → `mentions_doc` stage; its decoded
+    * mentions → `mentions_raw`; the cross-doc vote over the stored
+    * table → `mentions_post`; link → stage; triples partitioned by
+    * pred → read-back with the recorded schema — over the eligible
+    * corpus, where post-processing is the identity (the q56-gated
+    * argument), so the q58 relational link+triples oracle pins the
+    * WHOLE resumable chain: any value/type loss in a stage checkpoint
+    * or a partition-column reorder on read-back breaks the hash. */
   private def q77(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val root = graft.core.TempDirs.create("graft_q77")

@@ -14,6 +14,14 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
+/** A row of [[Pipeline.triplesCheckpointed]]'s `mentions_doc` stage:
+  * a [[graft.postprocess.Flagged]] row of the per-file pass (its `n` is
+  * 1 there, so it is not kept) and `raw`, the tag the decode gave the
+  * mention (null on an insertion). */
+final case class DocMention(repo: String, path: String, sentIdx: Int,
+    start: Int, end: Int, text: String, tag: String, conf: Double,
+    inserted: Boolean, raw: String)
+
 /** End-to-end KG construction (SURVEY.md §3.1 lifecycle, §7.2 modules),
   * stated once for every language:
   *
@@ -38,9 +46,11 @@ import org.apache.spark.sql.functions._
   * ([[PostProcess.docKeys]]): the exchange, the vote, the link and the
   * explode carry one row per (document, text, tag, inserted), without
   * offsets, instead of one per mention (docs-x64: half the rows and half
-  * the exchange bytes). [[triplesCheckpointed]] runs the same pass
-  * unfolded and lands each stage boundary in a [[TableIO]] checkpoint
-  * (resume + per-partition lineage): `mentions_raw`, `mentions_post`,
+  * the exchange bytes). [[triplesCheckpointed]] runs the same per-file
+  * pass unfolded, lands it as a [[TableIO]] checkpoint (resume +
+  * per-partition lineage), `mentions_doc`, and runs the rest over
+  * stored tables: `mentions_raw` (its decoded mentions),
+  * `mentions_post` (the cross-doc vote over it, no exchange),
   * `mentions_linked`, `triples`.
   */
 object Pipeline {
@@ -147,28 +157,67 @@ object Pipeline {
   }
 
   /** The same pipeline, each stage landing in `root/<stage>` with a
-    * `_lineage.json` sidecar; a re-run with the same snapshot id
-    * resumes from the last committed stage, building no frame for it.
-    * `mentions_raw` is [[mentions]], `mentions_post` [[postProcessed]]'s
-    * frame (each write decodes once). No `authors`: the snapshot id
+    * `_lineage.json` sidecar. Each file is decoded once: the per-file
+    * pass ([[docPass]]) is written as `mentions_doc`, and every later
+    * stage reads stored tables:
+    *  - `mentions_raw`: its rows not inserted, with their decoded tag
+    *    ([[mentions]]'s rows);
+    *  - `mentions_post`: the cross-doc vote over it
+    *    ([[PostProcess.crossVote]]; [[postProcessed]]'s rows). The
+    *    stored table needs no (repo, path) exchange, so the vote's
+    *    relabel, the link and the triples' emit run one task per
+    *    written file;
+    *  - `mentions_linked`, then `triples` (partitioned by `pred`).
+    * Stages are chained lazily: a stage's input is read or built only
+    * when the stage is not committed under `snapshot`, so a re-run with
+    * the same snapshot id reads only the last committed stage it needs
+    * (only `triples` when the run finished) and starts no job before
+    * the caller's action. No `authors`: the snapshot id
     * ([[TableIO.snapshotId]]) hashes each row's (repo, path, commit,
     * sha256(content)) and nothing else, so an author set would resume
     * stale. */
   def triplesCheckpointed(files: Dataset[SourceFile], root: String,
       snapshot: String, lang: String = "eng"): DataFrame = {
     import files.sparkSession.implicits._
-    val pack = LangPack(lang)
-    def keep(df: => DataFrame, table: String,
-        partitionCols: Seq[String] = Nil) =
+    lazy val pack = LangPack(lang)
+    def keep(table: String, partitionCols: Seq[String] = Nil)(
+        df: => DataFrame) =
       TableIO.writeStage(df, root, table, snapshot, partitionCols)
-    keep(mentions(files, lang).toDF(), "mentions_raw")
-    val post = keep(fused(files, pack, Set.empty, fold = false).toDF(),
-      "mentions_post").as[Mention]
-    val linked = keep(Linker.link(post, index = pack.index,
-      kbId = pack.kbId).toDF(), "mentions_linked").as[Linker.LinkedMention]
-    keep(Triples.materialize(linked), "triples", Seq("pred"))
+    def post = {
+      val doc = keep("mentions_doc")(docPass(files, pack).toDF())
+      keep("mentions_raw")(doc.filter(!col("inserted")).select(
+        col("repo"), col("path"), col("sentIdx"), col("start"),
+        col("end"), col("text"), col("raw").as("tag"), col("conf")))
+      keep("mentions_post")(PostProcess.crossVote(doc).toDF())
+    }
+    def linked = keep("mentions_linked")(Linker.link(post.as[Mention],
+      index = pack.index, kbId = pack.kbId).toDF())
+    keep("triples", Seq("pred"))(
+      Triples.materialize(linked.as[Linker.LinkedMention]))
       // partitioned parquet moves `pred` last on read-back
       .select("subj", "pred", "obj")
+  }
+
+  /** The checkpointed per-file pass: [[perFile]] with
+    * [[PostProcess.docKernel]], each row with the tag its decode gave
+    * it. The kernel returns the decoded mentions first, in decode order
+    * (fix-up and the within-doc vote only relabel them), then the
+    * insertions, so a row that is not inserted takes the next decoded
+    * mention's tag. */
+  private def docPass(files: Dataset[SourceFile], pack: LangPack)
+      : Dataset[DocMention] = {
+    import files.sparkSession.implicits._
+    val kernel = PostProcess.docKernel(files.sparkSession.sparkContext,
+      Set.empty, pack.lookup, pack.lookupIndex)
+    perFile(texts(files), pack, () => {
+      val post = kernel()
+      (sents, ms) => {
+        val decoded = ms.iterator
+        post(sents, ms).map(f => DocMention(f.repo, f.path, f.sentIdx,
+          f.start, f.end, f.text, f.tag, f.conf, f.inserted,
+          if (f.inserted) null else decoded.next().tag))
+      }
+    })
   }
 
   /** Author set for [[PostProcess.lookupFixup]]'s DF-genre precedence

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   * [[docKernel]], which applies fix-up, within-doc vote and insertion to
   * one file inside the per-file decode pass, leaving the cross-doc count
   * as the only step that reads more than one document
-  * ([[crossDocVoteFlagged]]). The Dataset-level stages, chained by
+  * ([[crossDocVoteFlagged]]; the checkpointed pipeline runs its rule,
+  * [[crossVote]], over the stored per-file table). The Dataset-level
+  * stages, chained by
   * [[apply]], are the reference chain: they apply the same rules to a
   * stream keyed by (repo, path), and no pipeline action runs them
   * (callers: q51, q52, q56, q57, q70, PostProcessSpec, perfbench's
@@ -382,13 +384,16 @@ object PostProcess {
 
   /** The cross-doc vote over a mention frame with an `inserted`
     * column; `tally` aggregates a (key, tag) group's rows to its vote
-    * count. The at most `topK` winners become one `key → tag` map,
-    * computed by a scalar subquery over the same frame (which reuses
-    * its upstream exchange), and the relabel is a column expression
-    * over it: `try_element_at(map, key)` per row. No join, so no
-    * broadcast hash relation is built for a handful of rows. */
-  private def crossVote(df: DataFrame, topK: Int, tally: Column)
-      : Dataset[Mention] = {
+    * count (by default one vote a row). The at most `topK` winners
+    * become one `key → tag` map, computed by a scalar subquery over the
+    * same frame (which reuses its upstream exchange, if it has one), and
+    * the relabel is a column expression over it:
+    * `try_element_at(map, key)` per row. No join, so no broadcast hash
+    * relation is built for a handful of rows. Other columns of `df` are
+    * dropped. The checkpointed pipeline runs it over its stored
+    * per-file table. */
+  private[graft] def crossVote(df: DataFrame, topK: Int = TopK,
+      tally: Column = count(lit(1))): Dataset[Mention] = {
     import df.sparkSession.implicits._
     val keyed = df.withColumn("key", lower(col("text")))
     // per-(key, tag) counts, then per key its total frequency and its

@@ -1,11 +1,12 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to `private[sql]` classic API — the Column↔Expression
   * converters (the supported pattern for libraries that add native
-  * Catalyst expressions on Spark 4's connect-agnostic Column API) and
-  * the InternalRow DataFrame constructor. */
+  * Catalyst expressions on Spark 4's connect-agnostic Column API), the
+  * InternalRow DataFrame constructor, and `StructType.asNullable`. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression =
@@ -20,4 +21,8 @@ object GraftBridge {
     ds.sparkSession.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema)
       .as[T](ds.encoder)
+
+  /** `s` with every field, nested ones too, nullable: the schema a
+    * Parquet read gives a frame written with `s`. */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -73,4 +73,57 @@ class TableIOSnapshotSpec extends SparkTestBase {
       "{\"snapshot\": \"s\", \"partitions\": {\"a'b\\c\": 2}}")
     assert(TableIO.committedSnapshot(root, "t").isEmpty)
   }
+
+  test("footer lineage: null partitions, two partition levels and an " +
+      "empty table give the count-based sidecars; the recorded schema is " +
+      "the inferred one, and a sidecar without one still resumes") {
+    val s = spark
+    import s.implicits._
+    val root = graft.core.TempDirs.create("graft_lineage_footer")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def sidecar(t: String) = mapper.readTree(
+      java.nio.file.Paths.get(root, t, "_lineage.json").toFile)
+    // `rows` and `partitions` as the group-by count sidecars had them:
+    // a null or empty partition value keyed "null", levels joined by '/'
+    val tables = Seq(
+      ("n", Seq((1, null: String, 0), (2, null: String, 0), (3, "x", 0),
+        (4, "a\"b\\c", 0), (5, "", 0)).toDF("v", "part", "q"),
+        Seq("part"),
+        """{"a\"b\\c": 1, "null": 3, "x": 1}""", 5),
+      ("two", Seq((1, "a", 7), (2, null: String, 7), (3, "a", 8))
+        .toDF("v", "p", "q"), Seq("p", "q"),
+        """{"a/7": 1, "a/8": 1, "null/7": 1}""", 3),
+      ("e", Seq.empty[(Int, String, Int)].toDF("v", "part", "q"), Nil,
+        """{"<unpartitioned>": 0}""", 0))
+    for ((t, df, parts, want, rows) <- tables) {
+      val back = TableIO.writeStage(df, root, t, s"snap-$t", parts)
+      val json = sidecar(t)
+      assert(json.get("partitions") == mapper.readTree(want), t)
+      assert(json.get("rows").asLong() == rows, t)
+      assert(back.count() == rows, t)
+      // the schema a resume reads with is the one inference gives
+      val inferred = spark.read.parquet(s"$root/$t").schema
+      assert(back.schema == inferred, t)
+      assert(TableIO.read(spark, root, t).schema == inferred, t)
+    }
+    // an empty partitioned table has no data file to infer a schema
+    // from: it has no partition and reads back with the recorded schema
+    val ep = TableIO.writeStage(Seq.empty[(Int, String)].toDF("v", "part"),
+      root, "ep", "snap-ep", Seq("part"))
+    assert(sidecar("ep").get("partitions").size() == 0)
+    assert(sidecar("ep").get("rows").asLong() == 0)
+    assert(ep.count() == 0 && ep.columns.toSeq == Seq("v", "part"))
+    // a sidecar written before the schema was recorded still commits,
+    // and its table resumes, read with inference
+    val old = sidecar("two").asInstanceOf[
+      com.fasterxml.jackson.databind.node.ObjectNode]
+    old.remove("schema")
+    mapper.writeValue(
+      java.nio.file.Paths.get(root, "two", "_lineage.json").toFile, old)
+    assert(TableIO.committedSnapshot(root, "two").contains("snap-two"))
+    val resumed = TableIO.writeStage(spark.emptyDataFrame, root, "two",
+      "snap-two", Seq("p", "q"))
+    assert(resumed.count() == 3)
+    assert(resumed.schema == spark.read.parquet(s"$root/two").schema)
+  }
 }

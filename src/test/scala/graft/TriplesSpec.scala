@@ -6,6 +6,9 @@ import graft.io.TableIO
 import graft.link.Linker
 import graft.pipeline.Pipeline
 import graft.triples.Triples
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 class TriplesSpec extends SparkTestBase {
@@ -146,6 +149,57 @@ class TriplesSpec extends SparkTestBase {
       bag(Pipeline.postProcessed(files).collect()))
     assert(bag(table("mentions_linked").as[Linker.LinkedMention].collect())
       == bag(Linker.link(Pipeline.postProcessed(files)).collect()))
+  }
+
+  test("a resumed checkpointed run starts no job until its result is " +
+      "read, and a partial resume reads only the stages it needs") {
+    val sc = spark.sparkContext
+    val root = graft.core.TempDirs.create("graft_ckpt_lazy")
+    val files = Corpus.synthesize(spark, 40)
+    val cold = bag(Pipeline.triplesCheckpointed(files, root, "snapL")
+      .collect())
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      GraftTestBus.drain(sc)
+      jobs.set(0)
+      // a committed `triples` is read with its recorded schema: no
+      // schema-inference job, and no earlier stage is read
+      val resumed = Pipeline.triplesCheckpointed(files, root, "snapL")
+      GraftTestBus.drain(sc)
+      assert(jobs.get == 0)
+      assert(bag(resumed.collect()) == cold)
+    } finally sc.removeSparkListener(listener)
+    // with `triples` uncommitted, the resume rebuilds it from
+    // `mentions_linked` alone: the tables before it are not read
+    val dir = java.nio.file.Paths.get(root)
+    java.nio.file.Files.delete(dir.resolve("triples/_lineage.json"))
+    for (t <- Seq("mentions_doc", "mentions_raw", "mentions_post"))
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.resolve(t).toFile)
+    assert(bag(Pipeline.triplesCheckpointed(files, root, "snapL").collect())
+      == cold)
+    assert(TableIO.committedSnapshot(root, "triples").contains("snapL"))
+    assert(TableIO.committedSnapshot(root, "mentions_post").isEmpty)
+  }
+
+  test("a cold checkpointed run reads each input file once") {
+    val s = spark
+    import s.implicits._
+    val n = 40
+    val root = graft.core.TempDirs.create("graft_ckpt_once")
+    val reads = spark.sparkContext.longAccumulator("ckpt reads")
+    val files = Corpus.synthesize(spark, n).map { f => reads.add(1); f }
+    val got = Pipeline.triplesCheckpointed(files, root, "snapR").collect()
+    // one per-file pass feeds every stage: the decode is not rerun for
+    // the post-processed mentions
+    assert(reads.value == n)
+    assert(bag(got) == bag(Pipeline.triples(Corpus.synthesize(spark, n))
+      .collect()))
   }
 
   test("one input row is one document: two commits of one (repo, path) " +

@@ -2,7 +2,7 @@ package graft
 
 import graft.conll.ConllOps
 import graft.core.{RefData, Sentence}
-import graft.crf.{DecodeKernel, FitCrf}
+import graft.crf.{DecodeKernel, FitCrf, Model, TokenFeatures}
 import graft.eval.SpanPRF1
 import graft.features.Brown
 import graft.io.ModelIO
@@ -65,16 +65,16 @@ object Cli {
     arg(args, name).getOrElse(
       sys.error(s"missing required flag $name <value>"))
 
-  /** Decode a CoNLL file under a fitted model → tagged token table
-    * (sentId, tokenIdx, word, tag). */
-  def tagFile(spark: SparkSession, model: FitCrf.FittedModel,
+  /** Decode a CoNLL file under a model over the eng features → tagged
+    * token table (sentId, tokenIdx, word, tag). */
+  def tagFile(spark: SparkSession, model: Model,
       path: String): DataFrame = {
     import spark.implicits._
     val sents = ConllOps.conllFileSentences(spark, path)
       .map(s => Sentence("cli", "in", s.sentId.toInt, s.words,
         Array.tabulate(s.words.length)(i => i),
         Array.tabulate(s.words.length)(i => i + 1)))
-    DecodeKernel.tag(sents, DecodeKernel.fitted(model))
+    DecodeKernel.tag(sents, DecodeKernel.decoder(TokenFeatures.eng, model))
       .flatMap(ts => ts.tokens.indices.map(i =>
         (ts.sentIdx.toLong, i, ts.tokens(i), ts.tags(i))))
       .toDF("sentId", "tokenIdx", "word", "tag")
@@ -88,15 +88,15 @@ object Cli {
       .select("line")
       .coalesce(1).write.mode("overwrite").text(out)
 
-  /** Span P/R/F1 of a fitted model on a gold CoNLL file: prints the
+  /** Span P/R/F1 of a model on a gold CoNLL file: prints the
     * micro line and returns the per-type rows (same shape as
     * SpanPRF1.evaluate, ordered by tag) as a local frame. The rows are
     * collected once, so the micro line and a table printed from the
     * result decode the file once. */
-  def evalModel(spark: SparkSession, model: FitCrf.FittedModel,
+  def evalModel(spark: SparkSession, model: Model,
       testPath: String): DataFrame = {
     val perType = FitEval.perTypeConll(spark, testPath,
-      DecodeKernel.tag(_, DecodeKernel.fitted(model)))
+      DecodeKernel.tag(_, DecodeKernel.decoder(TokenFeatures.eng, model)))
     val rows = spark.createDataFrame(
       perType.collect().sortBy(_.getString(0)).toSeq.asJava, perType.schema)
     val c = SpanPRF1.micro(rows)
@@ -147,7 +147,7 @@ object Cli {
           minCount = arg(args, "--min-count").map(_.toLong).getOrElse(2L),
           rareMax = arg(args, "--rare-max").map(_.toLong).getOrElse(2L),
           lambda = arg(args, "--lambda").map(_.toFloat).getOrElse(0f))
-        ModelIO.saveFitted(spark, model, out)
+        ModelIO.save(spark, model, out)
         println(s"fitted model (vocab ${model.wordW.size}) -> $out")
       case "train" =>
         val out = req(args, "--out")
@@ -158,20 +158,20 @@ object Cli {
           clusters = arg(args, "--clusters")
             .map(c => FitEval.engClusters(spark, c.toInt))
             .getOrElse(Map.empty))
-        ModelIO.saveFitted(spark, model, out)
+        ModelIO.save(spark, model, out)
         println(s"trained model (vocab ${model.wordW.size}, clusters " +
           s"${model.clusterW.size}) -> $out")
       case "tag" =>
         // default = the shipped in-repo artifact, so the best trained
         // model serves without --model or retraining
-        val model = ModelIO.loadFitted(spark,
+        val model = ModelIO.load(spark,
           arg(args, "--model").getOrElse(ModelIO.defaultFittedPath))
         val out = req(args, "--out")
         writePredictions(tagFile(spark, model, req(args, "--in")),
           out)
         println(s"predictions -> $out")
       case "eval" =>
-        val model = ModelIO.loadFitted(spark,
+        val model = ModelIO.load(spark,
           arg(args, "--model").getOrElse(ModelIO.defaultFittedPath))
         evalModel(spark, model, req(args, "--test"))
           .show(20, truncate = false)

@@ -2,7 +2,7 @@ package graft
 
 import graft.conll.ConllOps
 import graft.core.{Dict, RefData, Sentence, TaggedSentence}
-import graft.crf.FitCrf
+import graft.crf.{FitCrf, Model}
 import graft.spans.Spans
 import graft.eval.SpanPRF1
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -31,7 +31,7 @@ object FitEval {
     * The discriminative [[trainFullModel]] edges past it (0.7483 at
     * 300 epochs, 0.7528 at 600) at iterative-training cost; the
     * closed-form fit stays the default (seconds, no iteration). */
-  def engModel(spark: SparkSession): FitCrf.FittedModel =
+  def engModel(spark: SparkSession): Model =
     FitCrf.fit(labeled(spark, RefData.engTrain.existing), k = 0.1,
       minCount = 2, rareMax = 2, lambda = 0f)
 
@@ -40,13 +40,13 @@ object FitEval {
     * words share per-shape-class ids, so the trainer fits the OOV
     * emission rows the way the closed-form fit estimates them from
     * rare words) ∪ optional Brown-cluster rows (`clusters`, see
-    * [[engClusters]]). Serves through the same [[FitCrf.FittedModel]]
-    * path. Measured on eng.test: F1 0.7230 @20 epochs, 0.7483 @300
+    * [[engClusters]]). Serves through the same [[Model]] path.
+    * Measured on eng.test: F1 0.7230 @20 epochs, 0.7483 @300
     * (lr=1, l2=3e-5), 0.7528 @600 — vs the closed form's 0.7269; with
     * 256 clusters, 0.7561 @300 (the shipped artifact). */
   def trainFullModel(spark: SparkSession, epochs: Int = 300,
       lr: Double = 1.0, l2: Double = 3e-5,
-      clusters: Map[String, Int] = Map.empty): FitCrf.FittedModel = {
+      clusters: Map[String, Int] = Map.empty): Model = {
     import spark.implicits._
     val train = labeled(spark, RefData.engTrain.existing)
     val wordFreq = train.flatMap(_.words).groupBy("value").count()
@@ -111,7 +111,7 @@ object FitEval {
       !vocabSet.contains(w2) &&
         !vocabSet.contains(w2.toLowerCase(java.util.Locale.ROOT))
     }
-    FitCrf.FittedModel(w,
+    Model(w,
       vocab.zipWithIndex.map { case (word, i) => word -> wv(i) }.toMap,
       rareShapes.zipWithIndex.map { case (sh, i) =>
         sh -> wv(V + i)

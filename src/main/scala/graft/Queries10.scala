@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.Sentence
-import graft.crf.Crf
 import graft.eval.SpanPRF1
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,8 +16,9 @@ object Queries10 {
 
   /** The OTHER conlleval number (token-level tag accuracy; span P/R/F1
     * is q13) gated through the REAL kernels end-to-end: per-token tags
-    * come from the real Viterbi decode ([[Crf.tag]]) over the eligible
-    * corpus, the "predictions" zero out every tag in doc_id % 7 == 0
+    * come from the real Viterbi decode (the eng
+    * [[graft.pipeline.LangPack]]'s decoder) over the eligible corpus,
+    * the "predictions" zero out every tag in doc_id % 7 == 0
     * docs (the q57 simulated-miss recipe), and the single corpus row
     * is computed by [[SpanPRF1.tokenAccuracy]]. The oracle recomputes
     * both sides relationally: total tokens over eligible clean docs,
@@ -31,7 +31,8 @@ object Queries10 {
       .join(eligD.select("path"), "path")
       .select(col("repo"), col("path"), col("sentIdx"), col("tokens"),
         col("starts"), col("ends")).as[Sentence]
-    val tokTags = Crf.tag(sentsE, Crf.emissionWeights, Crf.transitions)
+    val tokTags = graft.crf.DecodeKernel.tag(sentsE,
+        graft.pipeline.LangPack("eng").decoder)
       .toDF()
       .select(col("path"), col("sentIdx"), posexplode(col("tags")))
       .select(col("path").as("doc"), col("sentIdx").as("sent"),

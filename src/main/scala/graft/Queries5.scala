@@ -2,7 +2,7 @@ package graft
 
 import graft.conll.Scans
 import graft.core.{Corpus, SourceFile}
-import graft.crf.{Crf, Ensemble}
+import graft.crf.{Crf, Ensemble, Model}
 import graft.segment.Segmenter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -200,8 +200,8 @@ object Queries5 {
     * weights then Viterbi (decoders.py:202-238). */
   private def q44(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = Ensemble.Model(Crf.emissionWeights, Crf.transitions)
-    def perturb(scale: Float) = Ensemble.Model(
+    val base = Model.weights(Crf.emissionWeights, Crf.transitions)
+    def perturb(scale: Float) = Model.weights(
       Crf.emissionWeights.map(_.map(_ * scale)),
       Crf.transitions.map(_.map(v =>
         if (v == Crf.WALL) v else v * scale)))

@@ -557,9 +557,9 @@ object Queries7 {
     * machinery must be decode-equivalent here. */
   private def q60(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = graft.crf.Ensemble.Model(Crf.emissionWeights,
+    val base = graft.crf.Model.weights(Crf.emissionWeights,
       Crf.transitions)
-    def perturb(scale: Float) = graft.crf.Ensemble.Model(
+    def perturb(scale: Float) = graft.crf.Model.weights(
       Crf.emissionWeights.map(_.map(_ * scale)),
       Crf.transitions.map(_.map(v =>
         if (v == Crf.WALL) v else v * scale)))

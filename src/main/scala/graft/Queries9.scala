@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Sentence
-import graft.crf.{Crf, Ensemble}
+import graft.crf.{Crf, DecodeKernel, Ensemble, Model, TokenFeatures}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,8 @@ object Queries9 {
     * covers a genuinely-diverging routing case. */
   private def q67(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = Ensemble.Model(Crf.emissionWeights, Crf.transitions)
-    val sn = Ensemble.Model(
+    val base = Model.weights(Crf.emissionWeights, Crf.transitions)
+    val sn = Model.weights(
       Crf.emissionWeights.map(_.map(_ * 0.9f)),
       Crf.transitions.map(_.map(v => if (v == Crf.WALL) v else v * 0.9f)))
     def genreOf(path: String): Int = {
@@ -394,11 +394,11 @@ object Queries9 {
     import s.implicits._
     val path = graft.core.TempDirs.create("graft_q73") + "/model"
     graft.io.ModelIO.save(s,
-      Ensemble.Model(Crf.emissionWeights, Crf.transitions), path)
+      Model.weights(Crf.emissionWeights, Crf.transitions), path)
     val m = graft.io.ModelIO.load(s, path)
     val elig = Queries7.eligV(s, dir).select("path")
     val sents = Queries7.sentsV(s, dir).as[Sentence]
-    Crf.tag(sents, m.emissions, m.transitions)
+    DecodeKernel.tag(sents, DecodeKernel.decoder(TokenFeatures.eng, m))
       .flatMap(graft.spans.Spans.extract _).toDF()
       .join(elig, "path")
       .select("repo", "path", "start", "end", "text", "tag")

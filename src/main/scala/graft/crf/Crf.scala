@@ -6,11 +6,13 @@ import org.apache.spark.sql.Dataset
 
 /** Linear-CRF scoring + BIO-constrained Viterbi decoding.
   *
-  * Serving decodes through [[DecodeKernel]] (per-task token memo, flat
-  * Viterbi) for every model kind; [[emit]] and [[viterbi]] are the
-  * per-sentence definitions it is bit-identical to, kept for training
-  * and specs. [[emit]]'s one serve-time caller is the classifier rule
-  * ([[classifyTag]]), which has no Viterbi.
+  * Serving decodes every [[Model]] through [[DecodeKernel]] (per-task
+  * token memo, flat Viterbi); [[emit]] and [[viterbi]] are the
+  * per-sentence definitions it is bit-identical to for a weights-only
+  * model, kept for training and specs. [[emit]]'s one serve-time caller
+  * is the classifier rule ([[classifyTag]]), which has no Viterbi. The
+  * pipeline's eng model is `Model.weights(emissionWeights,
+  * transitions)`.
   *
   * Re-derivation of the reference's CRF decode path (SURVEY.md §2.8,
   * §7.3): emission scores are a linear model over the discrete feature
@@ -192,17 +194,20 @@ object Crf {
     s / tags.length
   }
 
-  /** Classifier decode over a sentence stream through the one decode
-    * shell ([[DecodeKernel.tag]]), transitions unused. */
+  /** Classifier decode over a sentence stream: one narrow map over the
+    * broadcast weights and eng gazetteer index, transitions unused. */
   def classifyTag(sentences: Dataset[Sentence],
-      w: Array[Array[Float]]): Dataset[TaggedSentence] =
-    DecodeKernel.tag(sentences, DecodeKernel.decoder((w, Dict.gazIndex)) {
-      case (w, gaz) => s =>
-        val path = classify(Features.sentenceBits(s.tokens, gaz)
-          .map(emit(_, w)))
-        TaggedSentence(s.repo, s.path, s.sentIdx, s.tokens, s.starts,
-          s.ends, path.map(Dict.tags))
-    })
+      w: Array[Array[Float]]): Dataset[TaggedSentence] = {
+    import sentences.sparkSession.implicits._
+    val b = sentences.sparkSession.sparkContext.broadcast((w, Dict.gazIndex))
+    sentences.map { s =>
+      val (w, gaz) = b.value
+      val path = classify(Features.sentenceBits(s.tokens, gaz)
+        .map(emit(_, w)))
+      TaggedSentence(s.repo, s.path, s.sentIdx, s.tokens, s.starts,
+        s.ends, path.map(Dict.tags))
+    }
+  }
 
   /** Brute-force exact decode for property tests (enumerates all K^T
     * paths). Tie-break matches the DP's first-max backtrace exactly:
@@ -246,15 +251,4 @@ object Crf {
     rec(0, START, 0f, Nil)
     (bestPath, bestScore)
   }
-
-  /** Decode with the default model ([[DecodeKernel.crf]]). */
-  def tag(sentences: Dataset[Sentence]): Dataset[TaggedSentence] =
-    tag(sentences, emissionWeights, transitions)
-
-  /** Same decode with explicit weights — the serve path for a model
-    * trained by [[CrfTrainer.train]] at `vocabSize = 0` / loaded via
-    * [[graft.io.ModelIO.load]]. */
-  def tag(sentences: Dataset[Sentence], w: Array[Array[Float]],
-      tr: Array[Array[Float]]): Dataset[TaggedSentence] =
-    DecodeKernel.tag(sentences, DecodeKernel.crf(w, tr))
 }

@@ -1,44 +1,41 @@
 package graft.crf
 
-import graft.core.{Dict, LangDict, Memo, Sentence, TaggedSentence}
-import graft.features.{Features, LangFeatures}
+import graft.core.{Dict, Memo, Sentence, TaggedSentence}
+import graft.features.Features
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.Dataset
-import scala.reflect.ClassTag
 
 /** The one serve-time decode, for every model kind: features →
   * emissions → Viterbi for one sentence at a time, with the per-token
-  * work memoized across the sentences of a task. [[DecodeKernel.Decoder]]
-  * is its one shell and [[DecodeKernel.tag]] the one map of a sentence
-  * stream through it.
+  * work memoized across the sentences of a task. It reads the text
+  * through a language's [[TokenFeatures]] and scores it with one
+  * [[Model]]. [[DecodeKernel.decoder]] is its one shell and
+  * [[DecodeKernel.tag]] the one map of a sentence stream through it.
   *
   * Per token string a [[Memo]] keeps its lowercase form and its partial
-  * emission: the model's `term` (zero for a weights-only model,
-  * [[FitCrf.tokenTerm]] for a fitted one) plus λ·w over its type bits
-  * (0–14, `typeBits`) in ascending order. Per sentence, λ·w of the
-  * gazetteer bits (15–23, `gazBits` over the tokens and their lowercase
-  * forms) is added in ascending order; λ = 0 adds no feature weight.
-  * Every type bit is below every gazetteer bit, so each emission is the
-  * float additions of [[Crf.emit]] (λ = 1) or [[FitCrf.emit]] over the
-  * full mask in the same order: paths are bit-identical to those
-  * followed by [[Crf.viterbi]].
+  * emission: the model's [[FitCrf.tokenTerm]] (zero for a weights-only
+  * model) plus λ·featW over its type bits (0–14) in ascending order.
+  * Per sentence, λ·featW of the gazetteer bits (15–23, over the tokens
+  * and their lowercase forms) is added in ascending order; λ = 0 adds
+  * no feature weight, and λ = 1 adds featW exactly. Every type bit is
+  * below every gazetteer bit, so each emission is the float additions
+  * of [[FitCrf.emit]] over the full mask in the same order ([[Crf.emit]]
+  * for a weights-only model): paths are bit-identical to those followed
+  * by [[Crf.viterbi]].
   *
   * The emission rows and back-pointers live in flat buffers reused
   * across sentences (grown for a longer one). Make one per task: the
   * memo and the buffers are not thread-safe.
   */
-final class DecodeKernel(typeBits: String => Int,
-    gazBits: (Array[String], Array[String]) => Array[Int],
-    term: (String, Int) => Array[Float],
-    w: Array[Array[Float]], lambda: Float, tr: Array[Array[Float]]) {
+final class DecodeKernel(features: TokenFeatures, model: Model) {
   import DecodeKernel._
 
   private val wT =
-    if (lambda == 0f) null
+    if (model.lambda == 0f) null
     else Array.tabulate(Features.numFeatures * K)(i =>
-      lambda * w(i % K)(i / K))
-  private val trans = realTransitions(tr)
-  private val toEnd = endTransitions(tr)
+      model.lambda * model.featW(i % K)(i / K))
+  private val trans = realTransitions(model.trans)
+  private val toEnd = endTransitions(model.trans)
   private val memo = new Memo[String, Tok]
   private var em = new Array[Float](InitTokens * K)
   private var back = new Array[Int](InitTokens * K)
@@ -56,12 +53,13 @@ final class DecodeKernel(typeBits: String => Int,
   }
 
   private def tok(s: String): Tok = memo.getOrElseUpdate(s, {
-    val bits = typeBits(s)
+    val bits = features.typeBits(s)
     require(bits >>> Features.B_GAZ == 0, s"type bits of '$s' reach " +
       s"the gazetteer range: ${bits.toBinaryString}")
-    val partial = term(s, bits)
+    val lower = s.toLowerCase(java.util.Locale.ROOT)
+    val partial = FitCrf.tokenTerm(s, lower, bits, model)
     addBits(partial, 0, bits)
-    new Tok(s.toLowerCase(java.util.Locale.ROOT), partial)
+    new Tok(lower, partial)
   })
   /** Tag ids of one sentence. */
   def tags(tokens: Array[String]): Array[Int] = {
@@ -72,7 +70,7 @@ final class DecodeKernel(typeBits: String => Int,
       em = new Array[Float](cap); back = new Array[Int](cap)
     }
     val toks = tokens.map(tok)
-    val gaz = gazBits(tokens, toks.map(_.lower))
+    val gaz = features.gazBits(tokens, toks.map(_.lower))
     var i = 0
     while (i < n) {
       System.arraycopy(toks(i).partial, 0, em, i * K, K)
@@ -99,28 +97,11 @@ object DecodeKernel {
     * model itself. */
   type Decoder = SparkContext => () => Sentence => TaggedSentence
 
-  /** The decoder over `parts`, which `open` turns into a task's
-    * per-sentence decode. */
-  def decoder[A: ClassTag](parts: A)(open: A => Sentence => TaggedSentence)
-      : Decoder = sc => {
-    val b = sc.broadcast(parts)
-    () => open(b.value)
+  /** The decoder of `model` over `features`. */
+  def decoder(features: TokenFeatures, model: Model): Decoder = sc => {
+    val b = sc.broadcast((features, model))
+    () => { val (f, m) = b.value; new DecodeKernel(f, m).decode }
   }
-
-  /** A weights-only eng CRF (the synthetic default, an [[Ensemble.Model]]
-    * or a [[graft.io.ModelIO]] artifact) over the eng gazetteer index. */
-  def crf(w: Array[Array[Float]], tr: Array[Array[Float]]): Decoder =
-    decoder((w, tr, Dict.gazIndex)) { case (w, tr, g) =>
-      crfKernel(w, tr, g).decode
-    }
-
-  /** A [[FitCrf.FittedModel]] artifact over the eng gazetteer index. */
-  def fitted(m: FitCrf.FittedModel): Decoder =
-    decoder((m, Dict.gazIndex)) { case (m, g) => fittedKernel(m, g).decode }
-
-  /** A language's [[LangModel]] fit over its gazetteer. */
-  def lang(lang: String, gaz: LangDict.Gaz, m: Ensemble.Model): Decoder =
-    decoder((gaz, m)) { case (g, m) => langKernel(lang, g, m).decode }
 
   /** The one map of a sentence stream through a decoder: one narrow
     * mapPartitions stage, no shuffle. */
@@ -130,34 +111,6 @@ object DecodeKernel {
     val open = d(sentences.sparkSession.sparkContext)
     sentences.mapPartitions { it => val decode = open(); it.map(decode) }
   }
-
-  private def zeroTerm(s: String, bits: Int): Array[Float] =
-    new Array[Float](K)
-
-  /** The eng kernel of [[crf]]: [[Features.tokenBits]] memoized per
-    * token, [[Features.gazMarks]] per sentence. */
-  def crfKernel(w: Array[Array[Float]], tr: Array[Array[Float]],
-      gaz: Map[String, Vector[(Vector[String], String, Int)]])
-      : DecodeKernel =
-    new DecodeKernel(Features.tokenBits,
-      (_, lower) => Features.gazMarks(lower, gaz), zeroTerm, w, 1f, tr)
-
-  /** The kernel of [[fitted]]: [[crfKernel]]'s features, the model's
-    * [[FitCrf.tokenTerm]] and λ-scaled feature weights. */
-  def fittedKernel(m: FitCrf.FittedModel,
-      gaz: Map[String, Vector[(Vector[String], String, Int)]])
-      : DecodeKernel =
-    new DecodeKernel(Features.tokenBits,
-      (_, lower) => Features.gazMarks(lower, gaz),
-      FitCrf.tokenTerm(_, _, m), m.featW, m.lambda, m.trans)
-
-  /** The kernel of [[lang]]: [[LangFeatures.typeTokenBits]] memoized per
-    * token, the case-sensitive [[LangFeatures.gazBits]] per sentence. */
-  def langKernel(lang: String, gaz: LangDict.Gaz, m: Ensemble.Model)
-      : DecodeKernel =
-    new DecodeKernel(LangFeatures.typeTokenBits(lang, _),
-      (tokens, _) => LangFeatures.gazBits(tokens, gaz), zeroTerm,
-      m.emissions, 1f, m.transitions)
 
   /** A token's lowercase form and its partial emission. */
   private final class Tok(val lower: String, val partial: Array[Float])

@@ -48,7 +48,7 @@ object DefaultModel {
   /** The fitted default model (featW feeds [[Crf.emissionWeights]],
     * trans feeds [[Crf.transitions]]). Deterministic: pure function of
     * (seed, nFiles, fit hyperparameters). */
-  lazy val fitted: FitCrf.FittedModel =
-    FitCrf.fitLocal(trainingData, k = 0.5, minCount = 2, rareMax = 1,
-      lambda = 1f)
+  lazy val fitted: Model =
+    FitCrf.weights(FitCrf.countLocal(trainingData, TokenFeatures.eng,
+      minCount = 2, rareMax = 1), k = 0.5, lambda = 1f)
 }

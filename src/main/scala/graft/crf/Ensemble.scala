@@ -17,41 +17,46 @@ import org.apache.spark.sql.Dataset
   *   by doc genre (main.py:379-482); here a selector function picks the
   *   model index per sentence inside the same fused kernel (no split /
   *   union / re-shuffle).
+  *
+  * Both decode the eng [[TokenFeatures]] through
+  * [[DecodeKernel.decoder]].
   */
 object Ensemble {
 
-  final case class Model(
-      emissions: Array[Array[Float]], transitions: Array[Array[Float]])
-
-  /** Element-wise mean of K models (decoders.py:210-213). */
+  /** Element-wise mean of K weights-only models (decoders.py:210-213).
+    * A model with a token term (word, shape or cluster rows, a nonzero
+    * `shapeDefault`) or λ ≠ 1 fails, naming what the mean would drop. */
   def average(models: Seq[Model]): Model = {
     require(models.nonEmpty)
+    models.zipWithIndex.foreach { case (m, i) =>
+      require(m.beyondWeights.isEmpty, s"Ensemble.average averages " +
+        s"weights-only models; model $i would lose " +
+        m.beyondWeights.mkString(", "))
+    }
     val k = models.size.toFloat
     val em = Array.tabulate(Dict.K, Features.numFeatures) { (t, f) =>
-      models.map(_.emissions(t)(f)).sum / k
+      models.map(_.featW(t)(f)).sum / k
     }
     val tr = Array.tabulate(Dict.K + 2, Dict.K + 2) { (a, b) =>
-      models.map(_.transitions(a)(b)).sum / k
+      models.map(_.trans(a)(b)).sum / k
     }
-    Model(em, tr)
+    Model.weights(em, tr)
   }
 
   def ensembleTag(sentences: Dataset[Sentence], models: Seq[Model])
-      : Dataset[TaggedSentence] = {
-    val avg = average(models)
+      : Dataset[TaggedSentence] =
     DecodeKernel.tag(sentences,
-      DecodeKernel.crf(avg.emissions, avg.transitions))
-  }
+      DecodeKernel.decoder(TokenFeatures.eng, average(models)))
 
   /** Route each sentence to one of `models` by `selector` (e.g. genre
     * from the doc id — main.py:388-401's SN check). One kernel per model
     * and task, no branching in the plan. */
   def routedTag(sentences: Dataset[Sentence], models: IndexedSeq[Model],
-      selector: Sentence => Int): Dataset[TaggedSentence] =
-    DecodeKernel.tag(sentences, DecodeKernel.decoder((models, Dict.gazIndex)) {
-      case (ms, gaz) =>
-        val ks = ms.map(m =>
-          DecodeKernel.crfKernel(m.emissions, m.transitions, gaz))
-        s => ks(selector(s)).decode(s)
+      selector: Sentence => Int): Dataset[TaggedSentence] = {
+    val ds = models.map(DecodeKernel.decoder(TokenFeatures.eng, _))
+    DecodeKernel.tag(sentences, sc => {
+      val opens = ds.map(_(sc))
+      () => { val decodes = opens.map(_()); s => decodes(selector(s))(s) }
     })
+  }
 }

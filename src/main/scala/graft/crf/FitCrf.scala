@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions.{col, count, lit, sum, first}
   * — partial aggregation map-side, one shuffle per count family, and
   * only model-sized results (vocab pruned by minCount, shape classes,
   * a (K+2)² bigram grid) ever reach the driver. The same
-  * counts→weights arithmetic backs [[fitLocal]], the driver-side twin
+  * counts→weights arithmetic backs [[countLocal]], the driver-side twin
   * used to derive the pipeline's default weights from the synthetic
   * labeled corpus without a SparkSession.
   */
@@ -41,24 +41,6 @@ object FitCrf {
       shapeTag: Map[Int, Array[Long]],      // rare-token shape → per-tag
       rareTag: Array[Long],                 // per-tag totals, rare tokens
       bigram: Array[Array[Long]])           // (K+2)²: tag-pair counts
-
-  /** The fitted model. `featW`/`trans` have the exact shapes
-    * [[Crf.emissionWeights]]/[[Crf.transitions]] serve; [[DecodeKernel]]
-    * serves it with [[tokenTerm]] as the memoized per-token term. */
-  final case class FittedModel(
-      featW: Array[Array[Float]],           // K × F log-odds
-      wordW: Map[String, Array[Float]],     // word → per-tag log-odds
-      shapeW: Map[Int, Array[Float]],       // OOV backoff by shape class
-      shapeDefault: Array[Float],           // unseen shape class
-      trans: Array[Array[Float]],           // (K+2)² log bigram + walls
-      lambda: Float,                        // feature-term mixing weight
-      // Brown-cluster features (features.py:16-29 consumed them as a
-      // model input; here they are extra φ dims): word → dense cluster
-      // id, and cluster id → per-tag weights, ADDITIVE on top of the
-      // word/shape backoff chain whenever the word's cluster is known.
-      // Both empty = the pre-cluster model, byte-identical behavior.
-      clusters: Map[String, Int] = Map.empty,
-      clusterW: Map[Int, Array[Float]] = Map.empty)
 
   /** Shape class of a token = its word-only feature bits (0-14).
     * Context-free by construction, so it is constant per surface. */
@@ -159,11 +141,12 @@ object FitCrf {
   private def shapeCol(mask: org.apache.spark.sql.Column) =
     mask.bitwiseAND(lit(0x7FFF))
 
-  /** Driver-side counting twin over in-memory labeled sentences —
-    * identical statistics, no SparkSession (used to derive the
-    * pipeline's default weights at class-init). */
-  def countLocal(data: Seq[TaggedTokens], minCount: Long = 2,
-      rareMax: Long = 1): Counts = {
+  /** Driver-side counting twin of [[countStats]] over in-memory labeled
+    * sentences and the masks of `features` — identical statistics for
+    * [[TokenFeatures.eng]], no SparkSession (used to derive the eng and
+    * per-language default weights at class-init). */
+  def countLocal(data: Seq[TaggedTokens], features: TokenFeatures,
+      minCount: Long = 2, rareMax: Long = 1): Counts = {
     val tagCount = new Array[Long](K)
     val featCount = Array.ofDim[Long](K, F)
     val wordTag = scala.collection.mutable.Map[String, Array[Long]]()
@@ -171,7 +154,7 @@ object FitCrf {
     val bigram = Array.ofDim[Long](N2, N2)
     data.foreach { s =>
       if (s.words.nonEmpty) {
-        val masks = Features.sentenceBits(s.words, Dict.gazIndex)
+        val masks = features.sentenceBits(s.words)
         var i = 0
         while (i < s.words.length) {
           val t = s.tags(i)
@@ -224,7 +207,7 @@ object FitCrf {
 
   /** Closed-form weights from counts (SURVEY.md §7.3). */
   def weights(c: Counts, k: Double = 0.5, lambda: Float = 1f)
-      : FittedModel = {
+      : Model = {
     val featW = Array.tabulate(K, F) { (t, f) =>
       val cf = (0 until K).map(c.featCount(_)(f)).sum
       logOdds(c.featCount(t)(f), c.tagCount(t),
@@ -246,7 +229,7 @@ object FitCrf {
       logOdds(c.rareTag(t), math.max(rareN, 1L),
         c.rareTag.sum - c.rareTag(t), math.max(rareN, 1L), k)
     }
-    FittedModel(featW, wordW, shapeW, shapeDefault,
+    Model(featW, wordW, shapeW, shapeDefault,
       transWeights(c.bigram, k), lambda)
   }
 
@@ -274,14 +257,8 @@ object FitCrf {
   /** fit = count → weights, distributed. */
   def fit(data: Dataset[TaggedTokens], k: Double = 0.5,
       minCount: Long = 2, rareMax: Long = 1, lambda: Float = 1f)
-      : FittedModel =
+      : Model =
     weights(countStats(data, minCount, rareMax), k, lambda)
-
-  /** fit on the driver (pipeline-default derivation; tests). */
-  def fitLocal(data: Seq[TaggedTokens], k: Double = 0.5,
-      minCount: Long = 2, rareMax: Long = 1, lambda: Float = 1f)
-      : FittedModel =
-    weights(countLocal(data, minCount, rareMax), k, lambda)
 
   /** Closed-form fit WITH Brown-cluster features: clusterW is the
     * per-cluster per-tag log-odds over the RARE population (count ≤
@@ -293,7 +270,7 @@ object FitCrf {
     * double-count). One extra distributed aggregation over [[fit]]. */
   def fitWithClusters(data: Dataset[TaggedTokens],
       clusters: Map[String, Int], k: Double = 0.5, minCount: Long = 2,
-      rareMax: Long = 1, lambda: Float = 1f): FittedModel = {
+      rareMax: Long = 1, lambda: Float = 1f): Model = {
     val spark = data.sparkSession
     import spark.implicits._
     val c = countStats(data, minCount, rareMax)
@@ -333,13 +310,15 @@ object FitCrf {
 
   // ---- serving ---------------------------------------------------------
 
-  /** The token term of a fitted model: word-identity score (exact
-    * surface, then lowercase fallback — util.py:97-110 policy — then
-    * shape-class backoff on the type bits), plus the Brown-cluster row
-    * (same exact-then-lowercase policy) when the word has one. The
-    * back-off chain [[emit]] and [[DecodeKernel.fittedKernel]] share. */
-  def tokenTerm(word: String, bits: Int, m: FittedModel): Array[Float] = {
-    val lower = word.toLowerCase(java.util.Locale.ROOT)
+  /** The token term of a model: word-identity score (exact surface,
+    * then lowercase fallback — util.py:97-110 policy — then shape-class
+    * backoff on the type bits, then `shapeDefault`), plus the
+    * Brown-cluster row (same exact-then-lowercase policy) when the word
+    * has one; `lower` is the word's lowercase form. Zero for a
+    * weights-only model. The back-off chain [[emit]] and
+    * [[DecodeKernel]] share. */
+  def tokenTerm(word: String, lower: String, bits: Int, m: Model)
+      : Array[Float] = {
     val out = m.wordW.getOrElse(word, m.wordW.getOrElse(lower,
       m.shapeW.getOrElse(shapeOf(bits), m.shapeDefault))).clone()
     m.clusters.get(word).orElse(m.clusters.get(lower))
@@ -348,12 +327,13 @@ object FitCrf {
     out
   }
 
-  /** Emission vector of one token under a fitted model: [[tokenTerm]]
+  /** Emission vector of one token under a model: [[tokenTerm]]
     * + λ · discrete-feature log-odds over the set bits of `mask`, lowest
     * first. The per-token definition [[DecodeKernel]] is bit-identical
     * to. */
-  def emit(word: String, mask: Int, m: FittedModel): Array[Float] = {
-    val out = tokenTerm(word, mask, m)
+  def emit(word: String, mask: Int, m: Model): Array[Float] = {
+    val out =
+      tokenTerm(word, word.toLowerCase(java.util.Locale.ROOT), mask, m)
     if (m.lambda != 0f)
       for (t <- 0 until K; f <- 0 until F if (mask >>> f & 1) != 0)
         out(t) += m.lambda * m.featW(t)(f)

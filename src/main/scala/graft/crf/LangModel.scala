@@ -29,9 +29,6 @@ import graft.features.LangFeatures
   */
 object LangModel {
 
-  import Crf.K
-  private val F = graft.features.Features.numFeatures
-
   val emptyGaz: LangDict.Gaz = Map("GPE" -> Vector(), "LOC" -> Vector(),
     "ORG" -> Vector(), "PER" -> Vector())
 
@@ -79,7 +76,7 @@ object LangModel {
     * dictionary semantics, exactly like [[DefaultModel]]'s synthetic
     * labels. */
   def trainingData(lang: String, gaz: LangDict.Gaz)
-      : Seq[(Array[String], Array[Int])] = {
+      : Seq[FitCrf.TaggedTokens] = {
     val entries = orderedEntries(gaz)
     val pool = fillerPool(lang, gaz)
     def tagsOf(label: String, len: Int): Array[Int] =
@@ -103,53 +100,26 @@ object LangModel {
         pool((i + j) % pool.size))
       (toks, Array.fill(toks.length)(Dict.O))
     }
-    planted ++ oSents
+    (planted ++ oSents).map { case (w, t) => FitCrf.TaggedTokens(w, t) }
   }
 
   /** Closed-form fit over the 24-dim mask features only (no
     * word-identity dictionaries — the per-language default decode is
     * mask-driven exactly like the eng [[DefaultModel]] path, which is
     * what makes it dictionary-provable on non-overlapping-match docs,
-    * the q55/q66 oracle enabler). Shares [[FitCrf.weights]]. */
-  def fit(lang: String, gaz: LangDict.Gaz): Ensemble.Model = {
-    val data = trainingData(lang, gaz)
-    val tagCount = new Array[Long](K)
-    val featCount = Array.ofDim[Long](K, F)
-    val bigram = Array.ofDim[Long](K + 2, K + 2)
-    data.foreach { case (words, tags) =>
-      if (words.nonEmpty) {
-        val gbits = LangFeatures.gazBits(words, gaz)
-        var i = 0
-        while (i < words.length) {
-          val t = tags(i)
-          tagCount(t) += 1
-          var m = LangFeatures.typeTokenBits(lang, words(i)) | gbits(i)
-          while (m != 0) {
-            val f = java.lang.Integer.numberOfTrailingZeros(m)
-            featCount(t)(f) += 1
-            m &= m - 1
-          }
-          i += 1
-        }
-        bigram(Crf.START)(tags(0)) += 1
-        i = 0
-        while (i < tags.length - 1) {
-          bigram(tags(i))(tags(i + 1)) += 1; i += 1
-        }
-        bigram(tags(tags.length - 1))(Crf.END) += 1
-      }
-    }
-    val counts = FitCrf.Counts(tagCount.sum, tagCount, featCount,
-      Map.empty, Map.empty, new Array[Long](K), bigram)
-    val m = FitCrf.weights(counts)
-    Ensemble.Model(m.featW, m.trans)
-  }
+    * the q55/q66 oracle enabler): [[FitCrf.countLocal]] over the
+    * language's [[TokenFeatures]], keeping no word (minCount beyond
+    * every count) and no shape row (rareMax 0), then
+    * [[FitCrf.weights]] — a weights-only [[Model]]. */
+  def fit(lang: String, gaz: LangDict.Gaz): Model =
+    FitCrf.weights(FitCrf.countLocal(trainingData(lang, gaz),
+      TokenFeatures.lang(lang, gaz), minCount = Long.MaxValue, rareMax = 0))
 
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Ensemble.Model]()
+    new java.util.concurrent.ConcurrentHashMap[String, Model]()
 
   /** Per-JVM memoized default model of a language (reference gaz). */
-  def fitted(lang: String): Ensemble.Model =
+  def fitted(lang: String): Model =
     cache.computeIfAbsent(lang, l => fit(l, gazFor(l)))
 
   // ---- per-language dictionary surfaces for post-process + linking ---

@@ -97,8 +97,8 @@ object Features {
     * tokens, via the broadcast n-gram index (longest entry first, all
     * matches marked — reference marks every matching entry's positions
     * independently, segnerfts.py:55-85). The one eng gazetteer marker:
-    * [[sentenceBits]] and the eng decode kernels
-    * ([[graft.crf.DecodeKernel.crfKernel]]) both call it. */
+    * [[sentenceBits]] and the eng decode kernel
+    * ([[graft.crf.TokenFeatures.eng]]) both call it. */
   def gazMarks(
       lower: Array[String],
       gazIndex: Map[String, Vector[(Vector[String], String, Int)]])

@@ -1,14 +1,21 @@
 package graft.io
 
-import graft.crf.Ensemble.Model
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import graft.crf.{Crf, Model}
+import graft.features.Features
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StringType
 
 /** Model save/load as a Parquet artifact (replaces the reference's
   * DyNet model.save/populate, models/model_builder.py:30-43, and the
-  * vocab pickle at utils/util.py:119-127): weights are rows
-  * (matrix, row, values) — engine-readable, diffable, versionable.
-  * Loaded driver-side and broadcast, as everywhere else. */
+  * vocab pickle at utils/util.py:119-127): one [[graft.crf.Model]] as
+  * rows (matrix, key, values) — engine-readable, diffable,
+  * versionable. Loaded driver-side and broadcast, as everywhere else.
+  *
+  * Matrices: `featW` (keys 0..K−1, F values each), `trans` (keys
+  * 0..K+1, K+2 values each), `word`/`shape`/`clusterW` rows and
+  * `shapeDefault` (K values each), `lambda` and `clusterOf` rows (one
+  * value each). A weights-only model has no word, shape or cluster
+  * rows. */
 object ModelIO {
 
   /** The shipped English model artifact: the 300-epoch discriminative
@@ -17,54 +24,7 @@ object ModelIO {
     * `Cli tag/eval` serve by default and EngModelSpec gates. */
   val defaultFittedPath = "models/eng.fitted"
 
-  def save(spark: SparkSession, model: Model, path: String): Unit = {
-    import spark.implicits._
-    val rows =
-      model.emissions.zipWithIndex.map { case (r, i) =>
-        ("emissions", i, r.toSeq)
-      } ++ model.transitions.zipWithIndex.map { case (r, i) =>
-        ("transitions", i, r.toSeq)
-      }
-    rows.toSeq.toDF("matrix", "row", "values")
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Loads a [[save]] artifact. A [[saveFitted]] artifact (its second
-    * column is `key: string`, not `row: int`) fails with an error that
-    * names `path` and the mistyped column. */
-  def load(spark: SparkSession, path: String): Model = {
-    val rows = read(spark, path, "row", IntegerType, "fitted", "Fitted")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1),
-        r.getSeq[Float](2).toArray))
-    def mat(name: String) = rows.filter(_._1 == name)
-      .sortBy(_._2).map(_._3)
-    Model(mat("emissions"), mat("transitions"))
-  }
-
-  /** Reads the artifact at `path` after checking that its second
-    * column is `key: keyType`. An artifact of the other shape fails
-    * naming `path`, the mistyped column and the loader that reads it
-    * (`ModelIO.load<otherSuffix>`). */
-  private def read(spark: SparkSession, path: String, key: String,
-      keyType: DataType, other: String, otherSuffix: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    df.schema.fields.lift(1).filterNot(f =>
-      f.name == key && f.dataType == keyType).foreach(f =>
-      throw new IllegalArgumentException(s"model artifact $path: column " +
-        s"'${f.name}: ${f.dataType.simpleString}' where " +
-        s"'$key: ${keyType.simpleString}' belongs (a $other artifact " +
-        s"written by ModelIO.save$otherSuffix? load it with " +
-        s"ModelIO.load$otherSuffix)"))
-    df
-  }
-
-  /** Persist a closed-form [[graft.crf.FitCrf.FittedModel]] (word and
-    * shape dictionaries included) as one generic (matrix, key, values)
-    * parquet — same diffable/versionable shape as [[save]]. */
-  def saveFitted(spark: SparkSession, m: graft.crf.FitCrf.FittedModel,
-      path: String): Unit = {
+  def save(spark: SparkSession, m: Model, path: String): Unit = {
     import spark.implicits._
     val rows: Seq[(String, String, Seq[Float])] =
       m.featW.zipWithIndex.map { case (r, i) =>
@@ -83,36 +43,71 @@ object ModelIO {
       .repartition(1).write.mode("overwrite").parquet(path)
   }
 
-  /** Loads a [[saveFitted]] artifact. An artifact of another shape
-    * fails with an error that names `path` and what is wrong: a
-    * weights-only [[save]] artifact (its second column is `row: int`,
-    * not `key: string`), or a missing featW, trans, shapeDefault or
-    * lambda matrix. */
-  def loadFitted(spark: SparkSession, path: String)
-      : graft.crf.FitCrf.FittedModel = {
+  /** Loads a [[save]] artifact, checked against the shapes above. An
+    * artifact of another shape fails with an error that names `path`
+    * and what is wrong: a mistyped second column (the older
+    * (matrix, row, values) layout has `row: int` there), an unknown or
+    * missing matrix, a row with the wrong number of values, or
+    * `featW`/`trans` keys that are not exactly 0..n−1. */
+  def load(spark: SparkSession, path: String): Model = {
     def fail(what: String) = throw new IllegalArgumentException(
-      s"fitted model artifact $path: $what")
-    val rows = read(spark, path, "key", StringType, "weights-only", "")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1),
-        r.getSeq[Float](2).toArray))
-    def need(name: String) = {
-      val m = rows.filter(_._1 == name)
-      if (m.isEmpty) fail(s"matrix '$name' is missing")
-      m
+      s"model artifact $path: $what")
+    val df = spark.read.parquet(path)
+    df.schema.fields.lift(1).filterNot(f =>
+      f.name == "key" && f.dataType == StringType).foreach(f =>
+      fail(s"column '${f.name}: ${f.dataType.simpleString}' where " +
+        "'key: string' belongs"))
+    val byMatrix = df.collect().map { r =>
+      if (r.isNullAt(1) || r.isNullAt(2))
+        fail(s"matrix '${r.getString(0)}' has a null key or values")
+      (r.getString(0), r.getString(1), r.getSeq[Float](2).toArray)
+    }.groupBy(_._1).map { case (k, rs) => k -> rs.map(r => r._2 -> r._3) }
+    val K = Crf.K
+    val widths = Map("featW" -> Features.numFeatures, "trans" -> (K + 2),
+      "word" -> K, "shape" -> K, "clusterW" -> K, "shapeDefault" -> K,
+      "lambda" -> 1, "clusterOf" -> 1)
+    byMatrix.keys.filterNot(widths.contains).foreach(n =>
+      fail(s"unknown matrix '$n'"))
+    def rows(name: String): Array[(String, Array[Float])] = {
+      val rs = byMatrix.getOrElse(name, Array.empty[(String, Array[Float])])
+      rs.find(_._2.length != widths(name)).foreach { case (k, v) =>
+        fail(s"matrix '$name' row '$k' has ${v.length} values where " +
+          s"${widths(name)} belong")
+      }
+      rs
     }
-    def mat(name: String) = need(name).sortBy(_._2.toInt).map(_._3)
-    graft.crf.FitCrf.FittedModel(
-      mat("featW"),
-      rows.filter(_._1 == "word").map(r => r._2 -> r._3).toMap,
-      rows.filter(_._1 == "shape").map(r => r._2.toInt -> r._3).toMap,
-      need("shapeDefault").head._3,
-      mat("trans"),
-      need("lambda").head._3(0),
+    def need(name: String) = {
+      val rs = rows(name)
+      if (rs.isEmpty) fail(s"matrix '$name' is missing")
+      rs
+    }
+    def dense(name: String, n: Int): Array[Array[Float]] = {
+      val rs = need(name)
+      val keys = rs.map(_._1)
+      val want = (0 until n).map(_.toString)
+      if (keys.length != n || keys.toSet != want.toSet)
+        fail(s"matrix '$name' has keys " +
+          keys.sortBy(k => (k.length, k)).mkString(",") +
+          s" where exactly 0..${n - 1} belong")
+      rs.sortBy(_._1.toInt).map(_._2)
+    }
+    def single(name: String): Array[Float] = need(name) match {
+      case Array((_, v)) => v
+      case rs => fail(s"matrix '$name' has ${rs.length} rows where 1 " +
+        "belongs")
+    }
+    def intKey(name: String, k: String): Int = k.toIntOption.getOrElse(
+      fail(s"matrix '$name' key '$k' is not an int"))
+    Model(
+      dense("featW", K),
+      rows("word").toMap,
+      rows("shape").map { case (k, v) => intKey("shape", k) -> v }.toMap,
+      single("shapeDefault"),
+      dense("trans", K + 2),
+      single("lambda")(0),
       // absent in pre-cluster artifacts → empty maps (back-compat)
-      rows.filter(_._1 == "clusterOf")
-        .map(r => r._2 -> r._3(0).toInt).toMap,
-      rows.filter(_._1 == "clusterW")
-        .map(r => r._2.toInt -> r._3).toMap)
+      rows("clusterOf").map { case (w, v) => w -> v(0).toInt }.toMap,
+      rows("clusterW").map { case (k, v) => intKey("clusterW", k) -> v }
+        .toMap)
   }
 }

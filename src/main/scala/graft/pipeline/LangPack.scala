@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.core.Dict
-import graft.crf.{Crf, DecodeKernel, LangModel}
+import graft.crf.{Crf, DecodeKernel, LangModel, Model, TokenFeatures}
 
 /** Everything in the pipeline that varies by language, picked once.
   *
@@ -9,35 +9,43 @@ import graft.crf.{Crf, DecodeKernel, LangModel}
   * of its six languages (main.py:485-565, keyed on `args.lang`), so
   * [[Pipeline]] states its stages once and takes the per-language
   * pieces from here:
-  *  - `decoder`: the language's [[DecodeKernel.Decoder]], the one
-  *    serve-time decode shell (broadcast model + gaz, one memoized
-  *    [[DecodeKernel]] per task).
+  *  - `features`/`model`: what the decode reads of the text
+  *    ([[TokenFeatures]]) and the one [[Model]] it scores with;
+  *    `decoder` is their [[DecodeKernel.Decoder]], the one serve-time
+  *    decode shell (broadcast model + gaz, one memoized [[DecodeKernel]]
+  *    per task).
   *  - `lookup`/`lookupIndex`: the post-process fix-up table and its
   *    first-token index (fix-up and insertion never consult English
   *    entries on a non-eng corpus).
   *  - `index`/`kbId`: the [[graft.link.Linker]] entity index and KB id
   *    space.
   *
-  * eng is one value of this type: the engine model ([[Crf]]) and
-  * dictionary ([[Dict]]). Every other language uses its
-  * [[LangModel]] fit and tables derived from its reference gaz.
+  * eng is one value of this type: the eng features, the weights-only
+  * engine model ([[Crf.emissionWeights]], [[Crf.transitions]]) and
+  * dictionary ([[Dict]]). Every other language uses its [[LangModel]]
+  * fit and tables derived from its reference gaz.
   */
-final class LangPack private (
-    val decoder: DecodeKernel.Decoder,
+final class LangPack(
+    val features: TokenFeatures,
+    val model: Model,
     val lookup: Map[String, String],
     val lookupIndex: Map[String, Vector[(Vector[String], String)]],
     val index: Map[String, Vector[(Vector[String], String, Int)]],
-    val kbId: Int => String)
+    val kbId: Int => String) {
+
+  def decoder: DecodeKernel.Decoder = DecodeKernel.decoder(features, model)
+}
 
 object LangPack {
 
   def apply(lang: String): LangPack =
     if (lang == "eng")
-      new LangPack(DecodeKernel.crf(Crf.emissionWeights, Crf.transitions),
+      new LangPack(TokenFeatures.eng,
+        Model.weights(Crf.emissionWeights, Crf.transitions),
         Dict.lookupTable, Dict.lookupIndex, Dict.gazIndex, Dict.kbId)
     else {
       val gaz = LangModel.gazFor(lang)
-      new LangPack(DecodeKernel.lang(lang, gaz, LangModel.fitted(lang)),
+      new LangPack(TokenFeatures.lang(lang, gaz), LangModel.fitted(lang),
         LangModel.lookupTable(gaz), LangModel.lookupIndex(gaz),
         LangModel.linkIndex(gaz), LangModel.kbId(lang))
     }

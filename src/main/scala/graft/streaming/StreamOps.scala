@@ -115,19 +115,19 @@ object StreamOps {
       : org.apache.spark.sql.Dataset[graft.core.Mention] =
     graft.pipeline.Pipeline.mentions(files, lang)
 
-  /** Streaming decode under ANY fitted model artifact
-    * ([[graft.io.ModelIO.loadFitted]] → here): the fitted model's
-    * [[graft.crf.DecodeKernel.fitted]] decoder is the same stateless
+  /** Streaming decode under ANY model artifact
+    * ([[graft.io.ModelIO.load]] → here): the model's eng
+    * [[graft.crf.DecodeKernel.decoder]] is the same stateless
     * narrow mapPartitions as the default path, so a trained/fitted model
     * tags an unbounded stream unchanged — load once, broadcast,
     * `readStream` through. */
   def streamingFittedMentions(
       files: org.apache.spark.sql.Dataset[graft.core.SourceFile],
-      model: graft.crf.FitCrf.FittedModel)
+      model: graft.crf.Model)
       : org.apache.spark.sql.Dataset[graft.core.Mention] = {
     import files.sparkSession.implicits._
     graft.crf.DecodeKernel.tag(graft.segment.Segmenter.sentences(files),
-      graft.crf.DecodeKernel.fitted(model))
+      graft.crf.DecodeKernel.decoder(graft.crf.TokenFeatures.eng, model))
       .flatMap(graft.spans.Spans.extract _)
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import graft.conll.ConllFixture
 import graft.core.TempDirs
-import graft.crf.FitCrf
+import graft.crf.{Crf, DecodeKernel, FitCrf, Model, TokenFeatures}
 import graft.eval.SpanPRF1
 import graft.io.ModelIO
 import java.nio.file.{Files, Paths}
@@ -27,8 +27,8 @@ class CliSpec extends SparkTestBase {
     val model = FitCrf.fit(FitEval.labeled(spark, testPath),
       k = 0.1, minCount = 2, rareMax = 2, lambda = 0f)
     val dir = TempDirs.create("cli")
-    ModelIO.saveFitted(spark, model, s"$dir/m")
-    val loaded = ModelIO.loadFitted(spark, s"$dir/m")
+    ModelIO.save(spark, model, s"$dir/m")
+    val loaded = ModelIO.load(spark, s"$dir/m")
     // tag writes the reference's prediction-line format — exercise the
     // ACTUAL write path (a multi-column frame through text() throws)
     val tagged = Cli.tagFile(spark, loaded, testPath)
@@ -52,7 +52,7 @@ class CliSpec extends SparkTestBase {
     Files.write(Paths.get(test), ConllFixture.lines.asJava)
     val model = FitCrf.fit(FitEval.labeled(spark, test),
       k = 0.1, minCount = 2, rareMax = 2, lambda = 0f)
-    ModelIO.saveFitted(spark, model, s"$dir/m")
+    ModelIO.save(spark, model, s"$dir/m")
     // stages that read the test file while `body` runs
     def fileStages(body: => Unit): Int = {
       val sc = spark.sparkContext
@@ -70,8 +70,8 @@ class CliSpec extends SparkTestBase {
       n.get
     }
     val once = fileStages(
-      FitEval.perTypeConll(spark, test, graft.crf.DecodeKernel.tag(_,
-        graft.crf.DecodeKernel.fitted(model))).collect())
+      FitEval.perTypeConll(spark, test, DecodeKernel.tag(_,
+        DecodeKernel.decoder(TokenFeatures.eng, model))).collect())
     val out = new java.io.ByteArrayOutputStream
     val eval = fileStages(Console.withOut(out)(Cli.run(spark,
       Array("eval", "--model", s"$dir/m", "--test", test))))
@@ -81,6 +81,46 @@ class CliSpec extends SparkTestBase {
     assert(printed.contains("micro P="), printed)
     Seq("LOC", "ORG", "PER").foreach(t =>
       assert(printed.contains(s"|$t"), printed))
+  }
+
+  test("tag --model serves a saved weights-only model: its tags equal " +
+      "the eng pack decoder's on the same sentences") {
+    val s = spark
+    import s.implicits._
+    val dir = TempDirs.create("clitag")
+    val in = s"$dir/in.conll"
+    Files.write(Paths.get(in), ConllFixture.lines.asJava)
+    // one `word\tNNP\tNP\ttag` line per token, in sentence order
+    def served(m: Model, name: String): Seq[(String, String)] = {
+      ModelIO.save(spark, m, s"$dir/$name")
+      Console.withOut(new java.io.ByteArrayOutputStream)(Cli.run(spark,
+        Array("tag", "--model", s"$dir/$name", "--in", in, "--out",
+          s"$dir/pred-$name")))
+      spark.read.text(s"$dir/pred-$name").as[String].collect()
+        .map(_.split('\t')).map(l => (l(0), l(3))).toSeq
+    }
+    val sents = ConllFixture.lines.mkString("\n").split("\n\n").toSeq
+      .zipWithIndex.map { case (block, i) =>
+        val toks = block.split('\n').map(_.split(' ')(0))
+        graft.core.Sentence("cli", "in", i, toks, toks.indices.toArray,
+          toks.indices.map(_ + 1).toArray)
+      }
+    def decoded(d: DecodeKernel.Decoder): Seq[(String, String)] =
+      DecodeKernel.tag(sents.toDS(), d).collect().sortBy(_.sentIdx)
+        .flatMap(ts => ts.tokens.zip(ts.tags)).toSeq
+    val default = Model.weights(Crf.emissionWeights, Crf.transitions)
+    assert(served(default, "default") ==
+      decoded(graft.pipeline.LangPack("eng").decoder))
+    // the default tags the fixture all O; a capitalized token leaning to
+    // B-ORG makes the comparison see entities
+    val org = graft.core.Dict.tagId("B-ORG")
+    val caps = Model.weights(Crf.emissionWeights.zipWithIndex.map {
+      case (r, t) =>
+        if (t == org) r.updated(graft.features.Features.CAPITALIZED, 20f)
+        else r
+    }, Crf.transitions)
+    val want = decoded(DecodeKernel.decoder(TokenFeatures.eng, caps))
+    assert(want.exists(_._2 != "O") && served(caps, "caps") == want, want)
   }
 
   test("specs make temp dirs through TempDirs, which deletes them on " +
@@ -100,7 +140,7 @@ class CliSpec extends SparkTestBase {
       "(tag without --model)") {
     assume(available)
     assume(new java.io.File(ModelIO.defaultFittedPath).exists())
-    val loaded = ModelIO.loadFitted(spark, ModelIO.defaultFittedPath)
+    val loaded = ModelIO.load(spark, ModelIO.defaultFittedPath)
     assert(loaded.clusterW.nonEmpty) // the Brown block rode along
     val tagged = Cli.tagFile(spark, loaded, testPath)
     assert(tagged.filter("tag <> 'O'").count() > 3000)

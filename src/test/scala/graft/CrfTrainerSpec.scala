@@ -1,9 +1,10 @@
 package graft
 
 import graft.core.{Corpus, Dict}
-import graft.crf.{Crf, CrfTrainer}
+import graft.crf.{Crf, CrfTrainer, DecodeKernel, Model, TokenFeatures}
 import graft.crf.CrfTrainer.WordSentence
 import graft.features.Features
+import graft.pipeline.LangPack
 import graft.segment.Segmenter
 
 class CrfTrainerSpec extends SparkTestBase {
@@ -108,7 +109,8 @@ class CrfTrainerSpec extends SparkTestBase {
     import s.implicits._
     val sentences = Segmenter.sentences(
       Corpus.synthesize(spark, 40).as[graft.core.SourceFile])
-    val gold = Crf.tag(sentences) // teacher = the hand-derived model
+    // teacher = the eng pack's default model
+    val gold = DecodeKernel.tag(sentences, LangPack("eng").decoder)
     val goldLocal = gold.collect()
     val gaz = Dict.gazIndex
     // features only, then with one word identity row per distinct token
@@ -144,9 +146,10 @@ class CrfTrainerSpec extends SparkTestBase {
     // train -> save -> load -> serve: the full model lifecycle
     val (w, tr) = models.head
     val dir = graft.core.TempDirs.create("graft-trained") + "/model"
-    graft.io.ModelIO.save(spark, graft.crf.Ensemble.Model(w, tr), dir)
+    graft.io.ModelIO.save(spark, Model.weights(w, tr), dir)
     val loaded = graft.io.ModelIO.load(spark, dir)
-    val served = Crf.tag(sentences, loaded.emissions, loaded.transitions)
+    val served = DecodeKernel.tag(sentences,
+        DecodeKernel.decoder(TokenFeatures.eng, loaded))
       .collect().sortBy(ts => (ts.path, ts.sentIdx))
       .map(_.tags.mkString(" ")).toSeq
     val direct = goldLocal.sortBy(ts => (ts.path, ts.sentIdx)).map { ts =>

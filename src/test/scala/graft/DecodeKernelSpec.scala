@@ -2,16 +2,17 @@ package graft
 
 import graft.conll.ConllFixture
 import graft.core.{Corpus, Dict, LangDict, Memo, Sentence}
-import graft.crf.{Crf, DecodeKernel, Ensemble, FitCrf}
+import graft.crf.{Crf, DecodeKernel, FitCrf, Model, TokenFeatures}
 import graft.features.{Features, LangFeatures}
 import graft.io.ModelIO
 
 /** The memoized decode kernel ([[graft.crf.DecodeKernel]]) against the
   * per-sentence definitions: [[Crf.emit]] (weights-only models) or
-  * [[FitCrf.emit]] (fitted models) on the full 24-bit mask, then
-  * [[Crf.bruteForce]] (short sentences) or [[Crf.viterbi]] (long ones,
-  * past the kernel's initial buffer, and across a memo that clears
-  * mid-task). Seeded generation — byte-identical inputs every run. */
+  * [[FitCrf.emit]] (models with a token term) on the full 24-bit mask,
+  * then [[Crf.bruteForce]] (short sentences) or [[Crf.viterbi]] (long
+  * ones, past the kernel's initial buffer, and across a memo that
+  * clears mid-task). Seeded generation — byte-identical inputs every
+  * run. */
 class DecodeKernelSpec extends SparkTestBase {
 
   private val K = Crf.K
@@ -68,6 +69,10 @@ class DecodeKernelSpec extends SparkTestBase {
       big(f) + (r.nextInt(2001) - 1000) / 97f))
   }
 
+  /** The eng kernel of the weights-only model (w, tr). */
+  private def engKernel(w: Array[Array[Float]], tr: Array[Array[Float]]) =
+    new DecodeKernel(TokenFeatures.eng, Model.weights(w, tr))
+
   private def reference(toks: Array[String], w: Array[Array[Float]],
       tr: Array[Array[Float]]): Array[Int] =
     Crf.viterbi(Features.sentenceBits(toks, Dict.gazIndex)
@@ -81,7 +86,7 @@ class DecodeKernelSpec extends SparkTestBase {
       val w = exactWeights(r)
       val tr = exactTrans(r)
       // one memo across sentences
-      val k = DecodeKernel.crfKernel(w, tr, Dict.gazIndex)
+      val k = engKernel(w, tr)
       (1 to 25).foreach { i =>
         val toks = sentence(r, 1 + r.nextInt(5))
         val masks = Features.sentenceBits(toks, Dict.gazIndex)
@@ -101,7 +106,7 @@ class DecodeKernelSpec extends SparkTestBase {
     (1 to 8).foreach { model =>
       val w = orderedWeights(r)
       val tr = if (model % 2 == 0) Crf.transitions else exactTrans(r)
-      val k = DecodeKernel.crfKernel(w, tr, Dict.gazIndex)
+      val k = engKernel(w, tr)
       // short, long, short again: the grown buffers must not leak rows
       Seq(7, 300, 1200, 5, 513).foreach { n =>
         val toks = sentence(r, n)
@@ -115,7 +120,7 @@ class DecodeKernelSpec extends SparkTestBase {
     val r = new java.util.Random(612L)
     val w = orderedWeights(r)
     val tr = Crf.transitions
-    val k = DecodeKernel.crfKernel(w, tr, Dict.gazIndex)
+    val k = engKernel(w, tr)
     val distinct = Memo.Cap + Memo.Cap / 2
     // the same early sentences before the clear, between and after it
     val early = Array.fill(40)(sentence(r, 6 + r.nextInt(20)))
@@ -152,8 +157,8 @@ class DecodeKernelSpec extends SparkTestBase {
     val nonEngPhrases = Array("Addis Ababa", "Red Sea Bank",
       "Ada Lovelace", "addis Ababa").map(_.split(' '))
     Seq("tir", "orm", "amh").foreach { lang =>
-      val m = Ensemble.Model(orderedWeights(r), exactTrans(r))
-      val k = DecodeKernel.langKernel(lang, gaz, m)
+      val m = Model.weights(orderedWeights(r), exactTrans(r))
+      val k = new DecodeKernel(TokenFeatures.lang(lang, gaz), m)
       (1 to 60).foreach { i =>
         val toks = plant(r, Array.fill(
           1 + r.nextInt(if (i % 10 == 0) 400 else 12))(
@@ -161,17 +166,17 @@ class DecodeKernelSpec extends SparkTestBase {
         val g = LangFeatures.gazBits(toks, gaz)
         val want = Crf.viterbi(toks.indices.toArray.map(j =>
           Crf.emit(LangFeatures.typeTokenBits(lang, toks(j)) | g(j),
-            m.emissions)), m.transitions)
+            m.featW)), m.trans)
         assert(k.tags(toks).toSeq == want.toSeq,
           s"$lang case $i: ${toks.mkString(" ")}")
       }
     }
   }
 
-  /** A fitted model's decode as a per-sentence definition: the full
-    * masks, [[FitCrf.emit]] per token, then [[Crf.viterbi]]. */
-  private def fittedReference(toks: Array[String],
-      m: FitCrf.FittedModel): Array[Int] = {
+  /** A model's decode as a per-sentence definition: the full masks,
+    * [[FitCrf.emit]] per token, then [[Crf.viterbi]]. */
+  private def fittedReference(toks: Array[String], m: Model)
+      : Array[Int] = {
     val masks = Features.sentenceBits(toks, Dict.gazIndex)
     Crf.viterbi(Array.tabulate(toks.length)(i =>
       FitCrf.emit(toks(i), masks(i), m)), m.trans)
@@ -181,7 +186,7 @@ class DecodeKernelSpec extends SparkTestBase {
       "DP over synthesized files and the CoNLL fixture") {
     val s = spark
     import s.implicits._
-    val m = ModelIO.loadFitted(spark, ModelIO.defaultFittedPath)
+    val m = ModelIO.load(spark, ModelIO.defaultFittedPath)
     assert(m.clusters.nonEmpty && m.lambda != 0f)
     val conll = ConllFixture.lines.mkString("\n").split("\n\n").toSeq
       .zipWithIndex.map { case (block, i) =>
@@ -191,7 +196,8 @@ class DecodeKernelSpec extends SparkTestBase {
       }
     val sents = graft.segment.Segmenter.sentences(
       Corpus.synthesize(spark, 200)).union(conll.toDS())
-    val got = DecodeKernel.tag(sents, DecodeKernel.fitted(m)).collect()
+    val got = DecodeKernel.tag(sents,
+      DecodeKernel.decoder(TokenFeatures.eng, m)).collect()
     assert(got.length > 500 && got.exists(_.path == "fixture"))
     got.foreach { ts =>
       assert(ts.tags.toSeq ==
@@ -215,7 +221,7 @@ class DecodeKernelSpec extends SparkTestBase {
     val clustered = Map("Zorblax" -> 0, "qqq" -> 1, "apache" -> 2,
       "Foundation" -> 1, "Kenya" -> 3)
     val shapes = (exact ++ oov ++ vocab).map(Features.tokenBits).distinct
-    val base = FitCrf.FittedModel(orderedWeights(r),
+    val base = Model(orderedWeights(r),
       (exact ++ lowerOnly).map(_ -> row()).toMap,
       shapes.filter(_ => r.nextBoolean()).map(_ -> row()).toMap, row(),
       exactTrans(r), 0f, clustered, (0 to 2).map(_ -> row()).toMap)
@@ -226,7 +232,7 @@ class DecodeKernelSpec extends SparkTestBase {
       plant(r, Array.fill(n)(words(r.nextInt(words.length))), phrases)
     Seq(0f, 0.37f, 1f).foreach { lambda =>
       val m = base.copy(lambda = lambda)
-      val k = DecodeKernel.fittedKernel(m, Dict.gazIndex)
+      val k = new DecodeKernel(TokenFeatures.eng, m)
       def check(t: Array[String]): Unit =
         assert(k.tags(t).toSeq == fittedReference(t, m).toSeq,
           s"lambda $lambda: ${t.mkString(" ")}")

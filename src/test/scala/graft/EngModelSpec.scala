@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Dict
-import graft.crf.{DecodeKernel, FitCrf}
+import graft.crf.{DecodeKernel, FitCrf, Model, TokenFeatures}
 import graft.io.ModelIO
 
 /** The round-1 verdict's top item: the English model is FITTED from
@@ -20,7 +20,7 @@ class EngModelSpec extends SparkTestBase {
     assume(available)
     val model = FitEval.engModel(spark)
     val c = FitEval.evalConll(spark, FitEval.testPath,
-      DecodeKernel.tag(_, DecodeKernel.fitted(model)))
+      DecodeKernel.tag(_, DecodeKernel.decoder(TokenFeatures.eng, model)))
     val goldN = c.tp + c.fn
     assert(goldN == 5648L, s"gold span count drifted: $goldN")
     val f1 = c.f1
@@ -42,7 +42,8 @@ class EngModelSpec extends SparkTestBase {
     info(f"NLL ${hist.head}%.3f -> ${hist.last}%.3f")
     assert(hist.last < hist.head / 2, "NLL must at least halve")
     val f1 = FitEval.evalConll(spark, FitEval.testPath,
-      graft.crf.Crf.tag(_, w, tr)).f1
+      DecodeKernel.tag(_, DecodeKernel.decoder(TokenFeatures.eng,
+        Model.weights(w, tr)))).f1
     // measured 0.278 at pin time — the 24 shape/gaz features carry no
     // word identity, which is exactly why SURVEY §7.3's φ includes the
     // word/shape dictionaries (closed-form fit: F1 0.727, gated above)
@@ -57,7 +58,7 @@ class EngModelSpec extends SparkTestBase {
     // 0.7483/0.7528 (vs closed form 0.7269) — see FitEval.trainFullModel
     val model = FitEval.trainFullModel(spark, epochs = 60)
     val f1 = FitEval.evalConll(spark, FitEval.testPath,
-      DecodeKernel.tag(_, DecodeKernel.fitted(model))).f1
+      DecodeKernel.tag(_, DecodeKernel.decoder(TokenFeatures.eng, model))).f1
     info(f"train-full 60-epoch span F1=$f1%.4f")
     assert(f1 >= 0.70, f"train-full F1 $f1%.4f < 0.70")
   }
@@ -68,13 +69,13 @@ class EngModelSpec extends SparkTestBase {
     assume(available)
     assume(new java.io.File(ModelIO.defaultFittedPath).exists(),
       "artifact not shipped in this checkout")
-    val model = ModelIO.loadFitted(spark, ModelIO.defaultFittedPath)
+    val model = ModelIO.load(spark, ModelIO.defaultFittedPath)
     // the artifact carries the Brown-cluster block
     // (`Cli train --clusters 256`)
     assert(model.clusterW.nonEmpty && model.clusters.nonEmpty,
       "artifact must include the Brown-cluster feature block")
     val c = FitEval.evalConll(spark, FitEval.testPath,
-      DecodeKernel.tag(_, DecodeKernel.fitted(model)))
+      DecodeKernel.tag(_, DecodeKernel.decoder(TokenFeatures.eng, model)))
     val f1 = c.f1
     info(f"artifact eng.test micro P=${c.precision}%.4f R=${c.recall}%.4f " +
       f"F1=$f1%.4f")
@@ -134,7 +135,8 @@ class EngModelSpec extends SparkTestBase {
       .limit(200).collect().toSeq
     val distAll = FitCrf.countStats(
       spark.createDataset(local).repartition(4), minCount = 2, rareMax = 1)
-    val locAll = FitCrf.countLocal(local, minCount = 2, rareMax = 1)
+    val locAll = FitCrf.countLocal(local, graft.crf.TokenFeatures.eng,
+      minCount = 2, rareMax = 1)
     assert(distAll.n == locAll.n)
     assert(distAll.tagCount.toSeq == locAll.tagCount.toSeq)
     assert(distAll.featCount.map(_.toSeq).toSeq ==

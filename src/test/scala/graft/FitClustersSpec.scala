@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Closed-form Brown-cluster fit (FitCrf.fitWithClusters): the served
   * cluster map is OOV-gated, clusterW is fitted on the rare
   * population, and the additive cluster term actually reaches the
-  * emission. Driver-local twin data (fitLocal semantics) via a Spark
+  * emission. Driver-local twin data (countLocal semantics) via a Spark
   * Dataset — small and deterministic. */
 class FitClustersSpec extends SparkTestBase {
 

@@ -25,10 +25,8 @@ class LangModelSpec extends SparkTestBase {
   test("fit is deterministic (pure function of the word lists)") {
     val m1 = LangModel.fit("tir", LangModel.gazFor("tir"))
     val m2 = LangModel.fit("tir", LangModel.gazFor("tir"))
-    assert(m1.emissions.map(_.toSeq).toSeq ==
-      m2.emissions.map(_.toSeq).toSeq)
-    assert(m1.transitions.map(_.toSeq).toSeq ==
-      m2.transitions.map(_.toSeq).toSeq)
+    assert(m1.featW.map(_.toSeq).toSeq == m2.featW.map(_.toSeq).toSeq)
+    assert(m1.trans.map(_.toSeq).toSeq == m2.trans.map(_.toSeq).toSeq)
   }
 
   test("linkIndex: no same-bucket same-label token-set collision " +

@@ -2,22 +2,22 @@ package graft
 
 import graft.conll.Scans
 import graft.core.Corpus
-import graft.crf.{Crf, Ensemble}
+import graft.crf.{Crf, Model}
 import graft.eval.SpanPRF1
 import graft.io.ModelIO
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ModelIOSpec extends SparkTestBase {
 
   test("model save/load round-trips exactly (model_builder.py:30-43)") {
     val dir = graft.core.TempDirs.create("graft_model") + "/m"
-    val m = Ensemble.Model(Crf.emissionWeights, Crf.transitions)
+    val m = Model.weights(Crf.emissionWeights, Crf.transitions)
     ModelIO.save(spark, m, dir)
     val back = ModelIO.load(spark, dir)
-    assert(back.emissions.map(_.toSeq).toSeq ==
-      m.emissions.map(_.toSeq).toSeq)
-    assert(back.transitions.map(_.toSeq).toSeq ==
-      m.transitions.map(_.toSeq).toSeq)
+    assert(back.featW.map(_.toSeq).toSeq == m.featW.map(_.toSeq).toSeq)
+    assert(back.trans.map(_.toSeq).toSeq == m.trans.map(_.toSeq).toSeq)
+    assert(back.beyondWeights.isEmpty, back.beyondWeights)
   }
 
   test("ensemble split shards deterministically and loses no rows") {
@@ -34,8 +34,8 @@ class ModelIOSpec extends SparkTestBase {
   test("fitted model save/load roundtrip (word + shape dictionaries)") {
     val m = graft.crf.DefaultModel.fitted
     val tmp = graft.core.TempDirs.create("fitted-model") + "/m"
-    graft.io.ModelIO.saveFitted(spark, m, tmp)
-    val m2 = graft.io.ModelIO.loadFitted(spark, tmp)
+    ModelIO.save(spark, m, tmp)
+    val m2 = ModelIO.load(spark, tmp)
     assert(m2.featW.map(_.toSeq).toSeq == m.featW.map(_.toSeq).toSeq)
     assert(m2.trans.map(_.toSeq).toSeq == m.trans.map(_.toSeq).toSeq)
     assert(m2.wordW.view.mapValues(_.toSeq).toMap ==
@@ -46,41 +46,61 @@ class ModelIOSpec extends SparkTestBase {
     assert(m2.lambda == m.lambda)
   }
 
-  test("loadFitted of a weights-only artifact names the path and the " +
-      "mistyped column") {
+  test("load of a legacy (matrix, row, values) artifact names the path " +
+      "and the 'row: int' column") {
+    val s = spark
+    import s.implicits._
     val dir = graft.core.TempDirs.create("graft_model") + "/weights"
-    ModelIO.save(spark, Ensemble.Model(Crf.emissionWeights,
-      Crf.transitions), dir)
-    val e = intercept[IllegalArgumentException](
-      ModelIO.loadFitted(spark, dir))
+    (Crf.emissionWeights.zipWithIndex.map { case (r, i) =>
+      ("emissions", i, r.toSeq) } ++
+     Crf.transitions.zipWithIndex.map { case (r, i) =>
+      ("transitions", i, r.toSeq) }).toSeq
+      .toDF("matrix", "row", "values").write.parquet(dir)
+    val e = intercept[IllegalArgumentException](ModelIO.load(spark, dir))
     assert(e.getMessage.contains(dir) &&
       e.getMessage.contains("'row: int'"), e.getMessage)
   }
 
-  test("load of a fitted artifact names the path and the mistyped " +
-      "column") {
-    val dir = graft.core.TempDirs.create("fitted-model") + "/fitted"
-    ModelIO.saveFitted(spark, graft.crf.DefaultModel.fitted, dir)
-    val e = intercept[IllegalArgumentException](ModelIO.load(spark, dir))
-    assert(e.getMessage.contains(dir) &&
-      e.getMessage.contains("'key: string'") &&
-      e.getMessage.contains("ModelIO.loadFitted"), e.getMessage)
+  /** `m` saved, then its rows rewritten by `edit` into a fresh artifact;
+    * the error of loading it. */
+  private def loadEdited(tag: String, m: graft.crf.Model)(
+      edit: DataFrame => DataFrame): (String, IllegalArgumentException) = {
+    val root = graft.core.TempDirs.create("fitted-model")
+    ModelIO.save(spark, m, s"$root/m")
+    val dir = s"$root/$tag"
+    edit(spark.read.parquet(s"$root/m")).write.parquet(dir)
+    (dir, intercept[IllegalArgumentException](ModelIO.load(spark, dir)))
   }
 
-  test("loadFitted of an artifact without shapeDefault or lambda names " +
+  test("load of an artifact without shapeDefault or lambda names " +
       "the path and the missing matrix") {
-    val root = graft.core.TempDirs.create("fitted-model")
-    graft.io.ModelIO.saveFitted(spark, graft.crf.DefaultModel.fitted,
-      s"$root/m")
     Seq("shapeDefault", "lambda").foreach { name =>
-      val dir = s"$root/no-$name"
-      spark.read.parquet(s"$root/m").filter(col("matrix") =!= name)
-        .write.parquet(dir)
-      val e = intercept[IllegalArgumentException](
-        ModelIO.loadFitted(spark, dir))
+      val (dir, e) = loadEdited(s"no-$name", graft.crf.DefaultModel.fitted)(
+        _.filter(col("matrix") =!= name))
       assert(e.getMessage.contains(dir) &&
         e.getMessage.contains(s"matrix '$name' is missing"), e.getMessage)
     }
+  }
+
+  test("load of an artifact with a short featW row names the path and " +
+      "the matrix") {
+    val (dir, e) = loadEdited("short-featW", graft.crf.DefaultModel.fitted)(
+      _.withColumn("values", when(col("matrix") === "featW" &&
+        col("key") === "3", slice(col("values"), 1, 23))
+        .otherwise(col("values"))))
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("matrix 'featW' row '3' has 23 values"),
+      e.getMessage)
+  }
+
+  test("load of an artifact with a missing trans key names the path and " +
+      "the matrix") {
+    val (dir, e) = loadEdited("no-trans-4",
+        Model.weights(Crf.emissionWeights, Crf.transitions))(
+      _.filter(!(col("matrix") === "trans" && col("key") === "4")))
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("matrix 'trans' has keys") &&
+      e.getMessage.contains("exactly 0..10"), e.getMessage)
   }
 
   test("token accuracy: exact fraction with rounding") {

@@ -172,14 +172,14 @@ class StreamingSpec extends SparkTestBase {
     // shipped artifact — parity must hold through both the cluster
     // emission term and the save/load path
     val dir = graft.core.TempDirs.create("stream-model")
-    graft.io.ModelIO.saveFitted(spark,
+    graft.io.ModelIO.save(spark,
       graft.crf.DefaultModel.fitted.copy(
         clusters = Map("customer" -> 0, "spark" -> 1),
         clusterW = Map(
           0 -> Array.tabulate(graft.crf.Crf.K)(t => 0.2f * t),
           1 -> Array.fill(graft.crf.Crf.K)(-0.1f))),
       s"$dir/m")
-    val model = graft.io.ModelIO.loadFitted(spark, s"$dir/m")
+    val model = graft.io.ModelIO.load(spark, s"$dir/m")
     assert(model.clusterW.size == 2)
     val files = graft.core.Corpus.synthesize(spark, 20).collect().toSeq
     val mem = MemoryStream[graft.core.SourceFile]
@@ -193,7 +193,7 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(_.toString).toSeq
     val batch = graft.crf.DecodeKernel.tag(
         graft.segment.Segmenter.sentences(files.toDS()),
-        graft.crf.DecodeKernel.fitted(model))
+        graft.crf.DecodeKernel.decoder(graft.crf.TokenFeatures.eng, model))
       .flatMap(graft.spans.Spans.extract _).toDF()
       .orderBy(key.head, key.tail: _*)
       .collect().map(_.toString).toSeq

@@ -1,7 +1,6 @@
 package graft.crf
 
 import graft.core.{Dict, LangDict}
-import graft.features.LangFeatures
 
 /** Per-language decode models for the language-generic KG pipeline
   * (r4 verdict #1).
@@ -11,11 +10,11 @@ import graft.features.LangFeatures
   * features dispatch per language at utils/features.py:5-13) with a
   * DyNet model trained per language on LDC packages that do not ship
   * in-tree. What DOES ship per language is the feature surface
-  * ([[LangFeatures]]) and the gazetteer (utils/gaz.csv → tir/orm
-  * columns), so the honest re-expression is the same scheme the eng
-  * default model uses ([[DefaultModel]]): a closed-form count-based
-  * fit over a deterministic planted corpus whose labels are the
-  * dictionary semantics. The fit runs on the 24-dim [[LangFeatures]]
+  * ([[graft.features.LangFeatures]]) and the gazetteer (utils/gaz.csv
+  * → tir/orm columns), so the honest re-expression is the same scheme
+  * the eng default model uses ([[DefaultModel]]): a closed-form
+  * count-based fit over a deterministic planted corpus whose labels are
+  * the dictionary semantics. The fit runs on the 24-dim LangFeatures
   * masks (15 per-language type/token features + 9 gaz B/I/O features)
   * and shares [[FitCrf.weights]]' counts→weights arithmetic, so the
   * served shapes are exactly [[Crf.emissionWeights]]/

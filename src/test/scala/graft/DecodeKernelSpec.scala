@@ -69,10 +69,6 @@ class DecodeKernelSpec extends SparkTestBase {
       big(f) + (r.nextInt(2001) - 1000) / 97f))
   }
 
-  /** The eng kernel of the weights-only model (w, tr). */
-  private def engKernel(w: Array[Array[Float]], tr: Array[Array[Float]]) =
-    new DecodeKernel(TokenFeatures.eng, Model.weights(w, tr))
-
   private def reference(toks: Array[String], w: Array[Array[Float]],
       tr: Array[Array[Float]]): Array[Int] =
     Crf.viterbi(Features.sentenceBits(toks, Dict.gazIndex)
@@ -86,7 +82,7 @@ class DecodeKernelSpec extends SparkTestBase {
       val w = exactWeights(r)
       val tr = exactTrans(r)
       // one memo across sentences
-      val k = engKernel(w, tr)
+      val k = new DecodeKernel(TokenFeatures.eng, Model.weights(w, tr))
       (1 to 25).foreach { i =>
         val toks = sentence(r, 1 + r.nextInt(5))
         val masks = Features.sentenceBits(toks, Dict.gazIndex)
@@ -106,7 +102,7 @@ class DecodeKernelSpec extends SparkTestBase {
     (1 to 8).foreach { model =>
       val w = orderedWeights(r)
       val tr = if (model % 2 == 0) Crf.transitions else exactTrans(r)
-      val k = engKernel(w, tr)
+      val k = new DecodeKernel(TokenFeatures.eng, Model.weights(w, tr))
       // short, long, short again: the grown buffers must not leak rows
       Seq(7, 300, 1200, 5, 513).foreach { n =>
         val toks = sentence(r, n)
@@ -120,7 +116,7 @@ class DecodeKernelSpec extends SparkTestBase {
     val r = new java.util.Random(612L)
     val w = orderedWeights(r)
     val tr = Crf.transitions
-    val k = engKernel(w, tr)
+    val k = new DecodeKernel(TokenFeatures.eng, Model.weights(w, tr))
     val distinct = Memo.Cap + Memo.Cap / 2
     // the same early sentences before the clear, between and after it
     val early = Array.fill(40)(sentence(r, 6 + r.nextInt(20)))
